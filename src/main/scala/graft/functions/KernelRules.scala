@@ -22,8 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType}
   * |array_intersect| (duplicates would diverge, custom comparators would
   * break the merge order).
   *
-  * Installed via [[GraftExtensions]] (`injectOptimizerRule`) or
-  * `VectorFunctions.register` (experimental.extraOptimizations).
+  * Listed in [[graft.GraftExtensions.rules]], so it runs only in a session
+  * built with the extension or given [[graft.GraftExtensions.install]]. No
+  * registry query needs it: graft operators call
+  * [[VectorFunctions.sortedIntersectSize]] themselves.
   */
 object IntersectKernelRule extends Rule[LogicalPlan] {
 

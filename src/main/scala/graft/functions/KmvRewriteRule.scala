@@ -34,10 +34,11 @@ import org.apache.spark.sql.types._
   *    construction); everything else is left for the built-in distinct
   *    planning.
   *
-  * Registered via [[graft.GraftExtensions]] (`injectOptimizerRule`) or
-  * per-session through `experimental.extraOptimizations`; both batches run
-  * before physical distinct-aggregate planning, while
-  * `AggregateExpression(isDistinct = true)` is still visible.
+  * Listed in [[graft.GraftExtensions.rules]]: injected by the extension or
+  * added by [[graft.GraftExtensions.install]] (which q284/q304 call on their
+  * session clone). Either way the rule runs before physical
+  * distinct-aggregate planning, while `AggregateExpression(isDistinct =
+  * true)` is still visible.
   */
 object KmvCountDistinctRewrite extends Rule[LogicalPlan] {
 

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.BinaryExpression
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -99,15 +99,7 @@ case class JaroWinkler(left: Expression, right: Expression) extends BinaryExpres
     copy(left = l, right = r)
 }
 
-/** Column/SQL API + registration (same extension point as
-  * [[VectorFunctions]]).
-  */
+/** Column API over [[JaroWinkler]], built directly like [[VectorFunctions]]. */
 object StringFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_jw",
-      exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-  }
-
-  def jaroWinkler(a: Column, b: Column): Column = call_function("graft_jw", a, b)
+  def jaroWinkler(a: Column, b: Column): Column = column(JaroWinkler(expression(a), expression(b)))
 }

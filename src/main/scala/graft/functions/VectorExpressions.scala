@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the vector/set hot loops.
@@ -267,68 +267,47 @@ case class SortedIntersectSize(left: Expression, right: Expression) extends Bina
     copy(left = l, right = r)
 }
 
-/** Column/SQL API over the native expressions. Registration goes through the
-  * session FunctionRegistry (the public extension point — also what a
-  * `SparkSessionExtensions.injectFunction` would do), which additionally
-  * makes `graft_dot` / `graft_intersect_size` callable from `spark.sql`.
+/** Column API over the graft expressions. Each helper builds its Catalyst
+  * expression directly, so it resolves on any session — a plain
+  * `builder()` session, a `newSession()` or `cloneSession` clone — with
+  * nothing in the function registry. The SQL names (`graft_dot`, …) live
+  * only in [[graft.GraftExtensions]], whose table lists the same
+  * expressions.
   */
 object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_intersect_size", exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dist2", exprs => SquaredDistance(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_topk",
-      exprs => TopKByScore(exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_avghash64",
-      exprs => AvgHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sigs",
-      exprs => MinhashSigs(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_ngrams",
-      exprs => NGrams(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_tdigest",
-      exprs => TDigestQuantiles(exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_mg",
-      exprs => MisraGries(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_kmv",
-      exprs => KmvSketch(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_srp16",
-      exprs => SrpSketch16(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_srp64",
-      exprs => SrpSketch64(exprs(0)), "built-in")
-    // idempotently install the optimizer rules (the KMV rewrite is inert
-    // until a session opts in via its conf flag)
-    if (!spark.experimental.extraOptimizations.contains(IntersectKernelRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ IntersectKernelRule
-    if (!spark.experimental.extraOptimizations.contains(KmvCountDistinctRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ KmvCountDistinctRewrite
-  }
-
-  /** Column API (requires [[register]] on the session first — the graft.ops
-    * entry points do this).
-    */
-  def dotp(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dotp(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 
   def sortedIntersectSize(a: Column, b: Column): Column =
-    call_function("graft_intersect_size", a, b)
+    column(SortedIntersectSize(expression(a), expression(b)))
 
-  def dist2(a: Column, b: Column): Column = call_function("graft_dist2", a, b)
+  def dist2(a: Column, b: Column): Column = column(SquaredDistance(expression(a), expression(b)))
 
-  def simhash64(hashes: Column): Column = call_function("graft_simhash64", hashes)
+  def simhash64(hashes: Column): Column = column(SimHash64(expression(hashes)))
 
-  def avghash64(payload: Column): Column = call_function("graft_avghash64", payload)
+  def avghash64(payload: Column): Column = column(AvgHash64(expression(payload)))
 
-  def minhashSigs(hashes: Column, k: Int): Column =
-    call_function("graft_minhash_sigs", hashes, org.apache.spark.sql.functions.lit(k))
+  def minhashSigs(hashes: Column, k: Int): Column = column(MinhashSigs(expression(hashes), k))
 
-  def ngrams(words: Column, n: Int): Column =
-    call_function("graft_ngrams", words, org.apache.spark.sql.functions.lit(n))
+  def ngrams(words: Column, n: Int): Column = column(NGrams(expression(words), n))
 
-  def srp16(embedding: Column): Column = call_function("graft_srp16", embedding)
+  def srp16(embedding: Column): Column = column(SrpSketch16(expression(embedding)))
 
-  def srp64(embedding: Column): Column = call_function("graft_srp64", embedding)
+  def srp64(embedding: Column): Column = column(SrpSketch64(expression(embedding)))
+
+  /** Per group, the `k` payloads with the highest score ([[TopKByScore]]). */
+  def topk(score: Column, payload: Column, k: Int): Column =
+    column(TopKByScore(expression(score), expression(payload), Literal(k)).toAggregateExpression())
+
+  /** Per group, t-digest estimates of `value` at `probs` ([[TDigestQuantiles]]). */
+  def tdigest(value: Column, probs: Column, compression: Column): Column =
+    column(TDigestQuantiles(expression(value), expression(probs), expression(compression))
+      .toAggregateExpression())
+
+  /** Per group, a Misra-Gries sketch of ≤ `k` counters ([[MisraGries]]). */
+  def mg(word: Column, k: Int): Column =
+    column(MisraGries(expression(word), Literal(k)).toAggregateExpression())
+
+  /** Per group, the ≤ `k` smallest distinct hashes ([[KmvSketch]]). */
+  def kmv(hash: Column, k: Int): Column =
+    column(KmvSketch(expression(hash), Literal(k)).toAggregateExpression())
 }

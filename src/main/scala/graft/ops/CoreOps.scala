@@ -493,11 +493,10 @@ object CoreOps {
     * deterministic hash-matchable sibling; q52 the exact baseline.
     */
   def tdigestQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     def pct(p: Double) = expr(s"percentile(l_extendedprice, $p)")
     Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"))
-      .agg(call_function("graft_tdigest", col("l_extendedprice"),
+      .agg(graft.functions.VectorFunctions.tdigest(col("l_extendedprice"),
           array(lit(0.5), lit(0.9)), lit(100.0)).as("qs"),
         pct(0.45).as("lo50"), pct(0.55).as("hi50"),
         pct(0.85).as("lo90"), pct(0.95).as("hi90"),

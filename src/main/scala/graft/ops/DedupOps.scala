@@ -278,7 +278,6 @@ object DedupOps {
     * does not apply — this query keeps the general path oracle-covered.
     */
   def ngramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     // Shingle sets via the generator + regroup, NOT a per-index lambda:
     // `transform(sequence(...), i -> concat(element_at(split(text),i), ...))`
     // re-evaluates the split inside every element_at (interpreted lambdas
@@ -347,7 +346,6 @@ object DedupOps {
   def deltaNearDup(spark: SparkSession, dir: String, threshold: Double = NearDupThreshold,
                    forceGeneral: Boolean = false): DataFrame = {
     import graft.functions.VectorFunctions.sortedIntersectSize
-    graft.functions.VectorFunctions.register(spark)
     val all = Tables.documents(spark, dir)
       .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws0"))
 
@@ -427,7 +425,6 @@ object DedupOps {
     */
   def containmentPairs(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.sortedIntersectSize
-    graft.functions.VectorFunctions.register(spark)
     val all = Tables.documents(spark, dir)
       .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws0"))
     // rarity dictionary via the PrefixSum two-pass rank (q231's treatment —
@@ -543,7 +540,6 @@ object DedupOps {
     */
   private[graft] def ppjoinCandidates(spark: SparkSession, docs: DataFrame,
                                       threshold: Double): (DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(spark)
 
     // Global rarity rank of every word (vocabulary-sized → broadcast). The
     // rank doubles as an integer token id: the verify step then merges sorted
@@ -627,7 +623,6 @@ object DedupOps {
     * everything.
     */
   def lshNearDupPairs(spark: SparkSession, dir: String, threshold: Double = NearDupThreshold): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val docsRaw = Tables.documents(spark, dir)
       .select(col("doc_id"), array_distinct(words(col("text"))).as("ws0"))
     smallVocab(docsRaw) match {
@@ -664,7 +659,6 @@ object DedupOps {
   private[graft] def lshRecallRollupBands(spark: SparkSession, dir: String,
       nBands: Int, threshold: Double): DataFrame = {
     import graft.functions.VectorFunctions.minhashSigs
-    graft.functions.VectorFunctions.register(spark)
     val k = nBands * LshRows
     val sigd = Tables.documents(spark, dir)
       .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws"))
@@ -1393,7 +1387,6 @@ object DedupOps {
     simhashBase(spark, dir).orderBy(col("doc_id"))
 
   private def simhashBase(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.VectorFunctions.simhash64(wordSetHashes(col("text"))).as("simhash"))

@@ -314,7 +314,6 @@ object LinkageOps {
     * only name/bal).
     */
   private def candidatesGraded(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.StringFunctions.register(spark)
     val u = sideA2(spark, dir).unionByName(sideB2(spark, dir)).persistTracked()
     val pairs = snPass(u, col("name"), LinkWindow)
       .unionByName(snPass(u, col("bal"), LinkWindow))

@@ -435,7 +435,6 @@ object MultimodalOps {
     // lambda frames per row while staying inside whole-stage codegen
     // (bench: 2.6 s → sub-second at sf0.1). The kernel's semantics are the
     // SQL formulation the DuckDB oracle still checks verbatim.
-    graft.functions.VectorFunctions.register(spark)
     Tables.documents(spark, dir)
       .filter(expr("octet_length(encode(text, 'UTF-8')) > 0"))
       .select(col("doc_id"),

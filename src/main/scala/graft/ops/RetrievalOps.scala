@@ -134,7 +134,6 @@ object RetrievalOps {
     * their global ranks.
     */
   def hybridRetrieval(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val rb = bm25PerDoc(spark, dir)
       .orderBy(col("score_total").desc, col("doc_id"))
       .limit(RrfCandidates.toInt)
@@ -207,7 +206,6 @@ object RetrievalOps {
     * is spec-testable without a second parquet fixture.
     */
   private[graft] def mmrRerankOn(spark: SparkSession, e: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val q = e.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
     val cand = e.filter(col("vec_id") =!= 0L)
       .crossJoin(broadcast(q))
@@ -330,7 +328,6 @@ object RetrievalOps {
     * any partitioning.
     */
   def embedContamination(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val eval  = e.filter(isEval).select(col("embedding").as("q_emb"))
@@ -418,7 +415,6 @@ object RetrievalOps {
     * the sets — not just the scores — are deterministic and engine-identical.
     */
   def ivfRecall(spark: SparkSession, dir: String, nprobe: Int = IvfNProbe): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -485,7 +481,6 @@ object RetrievalOps {
     */
   def ivfProbeCurve(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Caches.TrackedPersist
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -560,7 +555,6 @@ object RetrievalOps {
     */
   def sqRecallCurve(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Caches.TrackedPersist
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -693,7 +687,6 @@ object RetrievalOps {
     * exact [[NdcgIdcg]] constant and MRR's 1∕rank of small integers.
     */
   def retrievalRankMetrics(spark: SparkSession, dir: String, nprobe: Int = IvfNProbe): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val d18 = org.apache.spark.sql.types.DecimalType(18, 6)
     val e = Tables.embeddings(spark, dir)
     val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)

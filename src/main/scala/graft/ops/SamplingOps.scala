@@ -304,13 +304,12 @@ object SamplingOps {
     * Double and identical in DuckDB.
     */
   def uniformGroupSample(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val h = conv(substring(md5(col("event_id").cast("string")), 1, 12), 16, 10).cast("long")
     Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"), h.as("h"))
       .groupBy(col("event_type"))
-      .agg(call_function("graft_topk",
-          -col("h").cast("double"), col("event_id"), lit(k)).as("ids"),
+      .agg(graft.functions.VectorFunctions.topk(
+          -col("h").cast("double"), col("event_id"), k).as("ids"),
         count(lit(1)).as("n_events"))
       .select(col("event_type"), col("n_events"),
         posexplode(col("ids")).as(Seq("i", "event_id")))
@@ -423,14 +422,13 @@ object SamplingOps {
     * DuckDB twin reproduces the sketch EXACTLY by ranking distinct hashes.
     */
   def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10).cast("long")
     val est = when(col("n_kmv") < KmvK, col("n_kmv").cast("double"))
       .otherwise(lit((KmvK - 1).toDouble) * lit(281474976710656.0) / col("h_k").cast("double"))
     Tables.events(spark, dir)
       .select(col("event_type"), col("user_id"), h.as("h"))
       .groupBy(col("event_type"))
-      .agg(expr(s"graft_kmv(h, $KmvK)").as("kmv"),
+      .agg(graft.functions.VectorFunctions.kmv(col("h"), KmvK).as("kmv"),
         countDistinct(col("user_id")).as("n_exact"))
       .select(col("event_type"),
         size(col("kmv")).cast("long").as("n_kmv"),
@@ -482,12 +480,11 @@ object SamplingOps {
     * every sketch member, union slice and ρ exactly with list kernels.
     */
   def kmvOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10).cast("long")
     val sk = Tables.events(spark, dir)
       .select(col("event_type"), col("user_id"), h.as("h"))
       .groupBy(col("event_type"))
-      .agg(expr(s"graft_kmv(h, $KmvK)").as("kmv"),
+      .agg(graft.functions.VectorFunctions.kmv(col("h"), KmvK).as("kmv"),
         countDistinct(col("user_id")).as("n"))
     val a = sk.select(col("event_type").as("type_a"), col("kmv").as("kmv_a"), col("n").as("n_a"))
     val b = sk.select(col("event_type").as("type_b"), col("kmv").as("kmv_b"), col("n").as("n_b"))
@@ -583,9 +580,7 @@ object SamplingOps {
     import graft.functions.KmvCountDistinctRewrite
     val s2 = spark.newSession()
     s2.conf.set(KmvCountDistinctRewrite.FlagKey, "true")
-    if (!s2.experimental.extraOptimizations.contains(KmvCountDistinctRewrite))
-      s2.experimental.extraOptimizations =
-        s2.experimental.extraOptimizations :+ KmvCountDistinctRewrite
+    graft.GraftExtensions.install(s2)
     Tables.events(s2, dir)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("du_sketch"),
@@ -631,9 +626,7 @@ object SamplingOps {
     import graft.functions.KmvCountDistinctRewrite
     val s2 = spark.newSession()
     s2.conf.set(KmvCountDistinctRewrite.FlagKey, "true")
-    if (!s2.experimental.extraOptimizations.contains(KmvCountDistinctRewrite))
-      s2.experimental.extraOptimizations =
-        s2.experimental.extraOptimizations :+ KmvCountDistinctRewrite
+    graft.GraftExtensions.install(s2)
     Tables.events(s2, dir)
       .groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(countDistinct(col("user_id"), col("event_type")).as("du_pairs"),

@@ -37,7 +37,6 @@ object SimilarityOps {
     * row is a 1-row broadcast crossJoin; plan = scan → project → topK.
     */
   def knnBruteForce(spark: SparkSession, dir: String, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
     e.crossJoin(broadcast(q))
@@ -55,7 +54,6 @@ object SimilarityOps {
     * set).
     */
   def embeddingNearDup(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     // threshold calibrated to the testdata: the synthetic embeddings have no
     // true duplicate pairs (max pairwise cosine ≈ 0.44), so 0.35 selects the
     // "most similar" tail — in a real corpus this is 0.9+.
@@ -105,7 +103,6 @@ object SimilarityOps {
   private def planeCol(i: Int): Column = array(hyperplane(i).map(lit): _*)
 
   def annBuckets(spark: SparkSession, dir: String, bits: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val sigBits = (0 until bits).map { i =>
       when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
     }
@@ -148,7 +145,6 @@ object SimilarityOps {
     * carries a full hash-match oracle.
     */
   def annNearDup(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     annNearDupOn(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), threshold)
   }
 
@@ -252,7 +248,6 @@ object SimilarityOps {
     */
   def semanticClusters(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     // CANONICAL pairs persisted (r15, verdict #5 — the r14 incrementalCC
     // restructure ported to the initial CC): the cache used to hold the
     // symmetric explode (2× rows) that the union-find path immediately
@@ -292,7 +287,6 @@ object SimilarityOps {
   def semanticClustersIncremental(spark: SparkSession, dir: String,
       threshold: Double = 0.35): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     def even(c: Column): Column = c % 2 === 0
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"))
     val newNodes = emb.filter(!even(col("vec_id"))).select(col("vec_id").as("doc_id")).distinct()
@@ -329,7 +323,7 @@ object SimilarityOps {
     */
   /** The exact on-disk location of the q338/q341 yesterday-labels table for
     * `(dir, threshold)` — the single source of truth for the path formula,
-    * so diagnostics (Probe) resolve the same file the operator writes
+    * so diagnostics resolve the same file the operator writes
     * instead of prefix-globbing the tmpdir (r14 advice: a glob can pick a
     * stale pre-fingerprint dir or a leftover lock file).
     */
@@ -398,7 +392,6 @@ object SimilarityOps {
   def semanticClustersTwoDay(spark: SparkSession, dir: String,
       threshold: Double = 0.35): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"))
     val l0 = ensureYesterdayLabels(spark, dir, threshold)
     // persist (reps re-read the verified pair set through the cache) AND
@@ -469,7 +462,6 @@ object SimilarityOps {
     */
   def bandIndexRecall(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val isEval = pmod(col("vec_id") * lit(RetrievalOps.EvalHashMult), lit(100L)) <
       lit(RetrievalOps.EvalPct)
@@ -517,14 +509,13 @@ object SimilarityOps {
     * + sort-per-group (the oracle computes it that way; results match).
     */
   def topkPerLabel(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
     e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= 0L)
       .select(col("label"), col("vec_id"), OracleMath.stableRound(cosine(col("embedding"), col("q_emb")), 6).as("sim"))
       .groupBy(col("label"))
-      .agg(call_function("graft_topk", col("sim"), col("vec_id"), lit(k)).as("top"))
+      .agg(graft.functions.VectorFunctions.topk(col("sim"), col("vec_id"), k).as("top"))
       .select(col("label"), posexplode(col("top")).as(Seq("rank", "vec_id")))
       .withColumn("rank", col("rank").cast("long") + 1)
       .select(col("label"), col("rank"), col("vec_id"))
@@ -578,7 +569,6 @@ object SimilarityOps {
   }
 
   def ivfAssign(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     assignTable(spark, dir)
       .select(col("vec_id"), col("assigned"), col("label"),
         (col("assigned") === col("label")).as("correct"))
@@ -596,7 +586,6 @@ object SimilarityOps {
     */
   def ivfKnn(spark: SparkSession, dir: String, queryId: Long = 0L,
              k: Int = 10, nprobe: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
     // arg order (float, double): the kernel's supported type-cases; per-index
@@ -726,7 +715,6 @@ object SimilarityOps {
   private def pick(s: Int, c: Column): Column = max(when(col("s") === s, c))
 
   def pqCodes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     pqAssignments(spark, dir).groupBy(col("vec_id"))
       .agg(
         pick(0, col("c_label")).cast("long").as("c0"),
@@ -753,7 +741,6 @@ object SimilarityOps {
     * intentionally left out so the query demonstrates the pure-ADC path.
     */
   def pqAdcKnn(spark: SparkSession, dir: String, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val qdt = pqSubvectors(spark, dir)
       .filter(col("vec_id") === queryId)
       .join(broadcast(pqCodebook(spark, dir)), col("s") === col("cb_s"))
@@ -770,14 +757,15 @@ object SimilarityOps {
   }
 
   /** The `spark.sql` entry point exercised end-to-end: temp views + the
-    * graft codegen kernels registered in the session FunctionRegistry
-    * (`graft_dot` here), window ranking written in SQL text — the surface a
-    * SQL-first user of the library sees. Top-3 vectors by L2 norm per label;
+    * graft codegen kernels by their SQL names (`graft_dot` here, bound by
+    * [[graft.GraftExtensions.install]]), window ranking written in SQL text
+    * — the surface a SQL-first user of the library sees. Top-3 vectors by
+    * L2 norm per label;
     * the rounding expression is the SAME string on both engines
     * ([[OracleMath.stableRoundSql]] is valid Spark SQL and DuckDB SQL).
     */
   def sqlSurfaceTopNorms(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
+    graft.GraftExtensions.install(spark)
     Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings_v")
     spark.sql(
       s"""SELECT label, vec_id, rnk, l2
@@ -879,7 +867,6 @@ object SimilarityOps {
     */
   def kmeans(spark: SparkSession, dir: String, rounds: Int = KmRounds): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     val v = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     var cents = v.filter(col("vec_id") < KmK)
       .select(col("vec_id").as("cid"),
@@ -887,7 +874,7 @@ object SimilarityOps {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cid"))
     def assign(c: DataFrame): DataFrame = v.crossJoin(broadcast(c))
       .select(col("vec_id"), col("embedding"), col("cid"),
-        call_function("graft_dist2", col("embedding"), col("cent")).as("dist"))
+        graft.functions.VectorFunctions.dist2(col("embedding"), col("cent")).as("dist"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
     for (_ <- 1 to rounds) {
       val upd = assign(cents)
@@ -928,7 +915,6 @@ object SimilarityOps {
     * curator reviews.
     */
   def labelAffinity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val cent = centroidTable(spark, dir)
     cent.as("a").join(cent.as("b"), col("a.c_label") < col("b.c_label"))
       .select(col("a.c_label").as("label_a"), col("b.c_label").as("label_b"),
@@ -958,7 +944,6 @@ object SimilarityOps {
 
   def mutualNearestNeighbors(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     val s0 = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % MnnSubsetMod === 0)
       .select(col("vec_id"), col("embedding"), col("label"))
@@ -1525,7 +1510,6 @@ object SimilarityOps {
     * instead. The rollup is a ≤ 17-key aggregate.
     */
   def srpCalibration(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val d18 = org.apache.spark.sql.types.DecimalType(18, 6)
     val e = withSrpSketch(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding")))
@@ -1575,8 +1559,7 @@ object SimilarityOps {
     * frame with an `embedding` column — the codegen'd
     * [[graft.functions.SrpSketch16]] kernel (one static loop per row; the
     * original 16 × `aggregate(zip_with(...))` interpreted folds cost q307
-    * ~0.4 s at sf0.1). Requires `VectorFunctions.register` on the session,
-    * which every caller already does.
+    * ~0.4 s at sf0.1).
     */
   private[graft] def withSrpSketch(df: DataFrame): DataFrame =
     df.withColumn("srp", graft.functions.VectorFunctions.srp16(col("embedding")))
@@ -1726,7 +1709,6 @@ object SimilarityOps {
     * (q135's plan stays byte-identical — its digest snapshot is the pin).
     */
   def autoGatedDerivedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     annNearDupOn(derivedDupCorpus(spark, dir), 0.9)
   }
 
@@ -1813,7 +1795,6 @@ object SimilarityOps {
     * (breach < 10⁻⁸).
     */
   def nearExactAutoGatedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     annNearDupOn(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
         .unionByName(perturbedDeltaWith(spark, dir, NearExactMults, NearExactIdOffset)),
@@ -1832,7 +1813,6 @@ object SimilarityOps {
     * the preservation proof for both sides of the 16-vs-64 boundary.
     */
   def nearExact998GatedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     annNearDupOn(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
         .unionByName(perturbedDeltaWith(spark, dir, NearExactMults, NearExactIdOffset)),
@@ -1846,7 +1826,6 @@ object SimilarityOps {
     * output-preserving).
     */
   def derivedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     annNearDupOn(derivedDupCorpus(spark, dir), 0.9, autoGate = false)
   }
 
@@ -1858,7 +1837,6 @@ object SimilarityOps {
   def srp64GatedDerivedNearDup(spark: SparkSession, dir: String): DataFrame = {
     val s2 = org.apache.spark.sql.graftbridge.GraftSqlBridge.cloneSession(spark)
     s2.conf.set(Srp64GateConf, Srp64GateMaxH.toString)
-    graft.functions.VectorFunctions.register(s2)
     annNearDupOn(derivedDupCorpus(s2, dir), 0.9)
   }
 
@@ -1945,7 +1923,6 @@ object SimilarityOps {
   def deltaGatedNearDup(spark: SparkSession, dir: String): DataFrame = {
     val s2 = org.apache.spark.sql.graftbridge.GraftSqlBridge.cloneSession(spark)
     s2.conf.set(Srp64GateConf, Srp64GateMaxH.toString)
-    graft.functions.VectorFunctions.register(s2)
     deltaNearDupOn(
       Tables.embeddings(s2, dir).select(col("vec_id"), col("embedding")),
       perturbedDelta(s2, dir), 0.9)
@@ -1964,7 +1941,6 @@ object SimilarityOps {
     * corpus (q321/q322) instead.
     */
   def srpWidthReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val nBits = AnnBands * AnnRowsPerBand
     val sigBits = (0 until nBits).map { i =>
       when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
@@ -2037,7 +2013,6 @@ object SimilarityOps {
     * near-exact θ (q337).
     */
   def srpWidthDecisionReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val nBits = AnnBands * AnnRowsPerBand
     val sigBits = (0 until nBits).map { i =>
       when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
@@ -2105,7 +2080,6 @@ object SimilarityOps {
     */
   def indexProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession() // shares the persistent catalog + context
-    graft.functions.VectorFunctions.register(s)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (tIdx, _, _) = ensureBandIndex(s, dir, "idx", None)
     probeIndex(s, dir, tIdx)
@@ -2265,7 +2239,6 @@ object SimilarityOps {
     */
   def indexMergeProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (tIdx, path, _) =
       ensureBandIndex(s, dir, "idxm", Some(col("vec_id") % 2 === 0))
@@ -2317,8 +2290,8 @@ object SimilarityOps {
   val BandIndexBuckets = 8
 
   /** Compaction trigger: rewrite when the index holds MORE than this many
-    * data files per bucket. Measured at sf0.1 ([[graft.Probe]] `idxcurve`:
-    * the SAME rows rewritten at k×buckets upstream tasks so file count
+    * data files per bucket. Measured at sf0.1 on a local FS (the SAME rows
+    * rewritten at k×buckets upstream tasks so file count
     * varies at constant data volume; min-of-3 probe latency):
     * 1.0/2.0/4.0/7.3/9.9/12.6 files per bucket → 1.34 (cold) /0.91/0.92/
     * 0.88/1.01/0.81 s — FLAT on this local FS, parquet footer opens are
@@ -2532,7 +2505,6 @@ object SimilarityOps {
     */
   def indexCompactProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (tIdx, path, _) =
       ensureBandIndex(s, dir, "idxk", Some(col("vec_id") % 4 === 0))
@@ -2769,7 +2741,6 @@ object SimilarityOps {
     */
   def indexManifestProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (tIdx, root, _) =
       ensureManifestIndex(s, dir, "mfx", Some(col("vec_id") % 2 === 0))
@@ -2820,7 +2791,6 @@ object SimilarityOps {
     */
   def indexKnnDelta(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (tIdx, _, _) = ensureManifestIndex(s, dir, "knn", None)
     val cBands = s.table(tIdx).select(col("vec_id").as("id_c"),
@@ -2876,7 +2846,6 @@ object SimilarityOps {
   def nightlyDedupPipeline(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = spark.newSession() // shares the persistent catalog + context
-    graft.functions.VectorFunctions.register(s)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (tIdx, _, _) = ensureBandIndex(s, dir, "idx", None)
     val corpusDelta = probeIndex(s, dir, tIdx)
@@ -2928,7 +2897,6 @@ object SimilarityOps {
     * calibration the gate constant must clear). One row, fully replayable.
     */
   def srp64GateReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val nBits = AnnBands * AnnRowsPerBand
     val sigBits = (0 until nBits).map { i =>
       when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
@@ -3001,7 +2969,6 @@ object SimilarityOps {
     * (never N²) and roll up in one conditional aggregate.
     */
   def srpGateReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val thetas = Seq("0.35", "0.50", "0.65", "0.80") // exact decimal literals
     // bounded-collect: ≤ SrpPlanes+1 rows (one per Hamming bucket) — the
     // calibration rollup is a ≤ 17-key aggregate regardless of corpus size

@@ -578,7 +578,6 @@ object TextOps {
     * aggregates on, with map-side partial aggregation.
     */
   def bigramFreq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(graft.functions.VectorFunctions.ngrams(words(col("text")), 2).as("bigram"))
       .groupBy(col("bigram"))
@@ -734,7 +733,6 @@ object TextOps {
     * the raw gram here for exact engine-portable semantics.
     */
   def contamination(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val grams = Tables.documents(spark, dir)
       .filter(size(words(col("text"))) >= 3)
       .select(col("doc_id"),
@@ -768,7 +766,6 @@ object TextOps {
     * 100 TB.
     */
   def boilerplateGrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val grams = Tables.documents(spark, dir)
       .filter(size(words(col("text"))) >= 3)
       .select(col("doc_id"),
@@ -800,11 +797,10 @@ object TextOps {
     * broken merge violates the envelope and fails the driver's hash gate.
     */
   def heavyHitters(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val toks = Tables.documents(spark, dir)
       .select(col("source"), explode(words(col("text"))).as("word"))
     val mg = toks.groupBy(col("source"))
-      .agg(call_function("graft_mg", col("word"), lit(k)).as("sk"),
+      .agg(graft.functions.VectorFunctions.mg(col("word"), k).as("sk"),
         count(lit(1)).as("n"))
     val est = mg.select(col("source"), explode(col("sk")).as(Seq("word", "est")))
     val top3 = toks.groupBy(col("source"), col("word"))
@@ -2344,7 +2340,6 @@ object TextOps {
     * score plus the pair tiebreak so the K-boundary is engine-identical.
     */
   def collocations(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val toks = Tables.documents(spark, dir).select(words(col("text")).as("ws"))
     val uni = toks.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c_w"))
@@ -2419,7 +2414,6 @@ object TextOps {
     * integer rank.
     */
   def textRank(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val adj = Tables.documents(spark, dir)
       .select(graft.functions.VectorFunctions.ngrams(words(col("text")), 2).as("bg"))
       .select(split(col("bg"), " ").getItem(0).as("a"),
@@ -2674,7 +2668,6 @@ object TextOps {
     * out (same convention as the q53 gram family).
     */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.VectorFunctions.ngrams(words(col("text")), NoveltyGramN).as("g"))

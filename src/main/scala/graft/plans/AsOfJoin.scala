@@ -49,10 +49,9 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Injected by
-  * [[graft.GraftExtensions]] (`injectPlannerStrategy`) and, for sessions
-  * built without the extension, installed idempotently by [[AsOfJoin.asof]]
-  * via `spark.experimental.extraStrategies`.
+/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Listed in
+  * [[graft.GraftExtensions]], which [[AsOfJoin.asof]] installs on its
+  * session.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -171,27 +170,14 @@ case class AsOfJoinExec(
 
 /** DataFrame-level API for the as-of join. */
 object AsOfJoin {
-  /** Installs [[AsOfJoinStrategy]] on the session (idempotent) — the
-    * programmatic twin of `spark.sql.extensions=graft.GraftExtensions`.
-    */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(AsOfJoinFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsOfJoinFilterPushdown
-    if (!spark.experimental.extraOptimizations.contains(GraftJoinColumnPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftJoinColumnPruning
-  }
-
   /** `left ASOF [LEFT] JOIN right ON leftKey = rightKey AND leftTime >=
     * rightTime`. `outer = true` keeps unmatched left rows with nulls on the
     * right (DuckDB's `ASOF LEFT JOIN`).
     *
     * The caller must ensure the two plans share no attribute ids (alias the
     * right side's columns when self-joining — see [[graft.ops.EventOps]]).
+    * Installs [[graft.GraftExtensions]] on the session: the custom node needs
+    * [[AsOfJoinStrategy]] to plan and its pushdown/pruning rules to optimize.
     */
   def asof(left: DataFrame, right: DataFrame,
            leftKeys: Seq[Column], rightKeys: Seq[Column],
@@ -199,7 +185,7 @@ object AsOfJoin {
            outer: Boolean = false): DataFrame = {
     import org.apache.spark.sql.graftbridge.GraftSqlBridge
     val spark = left.sparkSession
-    install(spark)
+    graft.GraftExtensions.install(spark)
     val plan = AsOfJoinPlan(
       left.queryExecution.analyzed, right.queryExecution.analyzed,
       leftKeys.map(GraftSqlBridge.expression),

@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** MERGE interval join: every left "point" row joins every right interval
   * row with `start ≤ t < end` (equi-keys optional; inner / left / right /
   * full outer) — the second whole-operator extension (SURVEY §7.4 path c)
-  * reusing the [[AsOfJoinPlan]] scaffolding (LogicalPlan + Strategy + Exec
-  * via `SparkSessionExtensions` / `experimental.extraStrategies`).
+  * reusing the [[AsOfJoinPlan]] scaffolding (LogicalPlan + Strategy + Exec,
+  * listed in [[graft.GraftExtensions]]).
   *
   * Why an operator instead of the q64 composable encodings:
   *
@@ -418,21 +418,6 @@ case class IntervalJoinExec(
 
 /** DataFrame-level API for the merge interval join. */
 object IntervalJoin {
-  /** Installs [[IntervalJoinStrategy]] + the filter-pushdown rule on the
-    * session (idempotent).
-    */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(IntervalJoinFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ IntervalJoinFilterPushdown
-    if (!spark.experimental.extraOptimizations.contains(GraftJoinColumnPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftJoinColumnPruning
-  }
-
   /** `points INTERVAL JOIN intervals ON start <= t AND t < end` (inner,
     * keyless — the interval side must be broadcast-sized; the point side
     * never shuffles). The caller must ensure the two plans share no
@@ -771,7 +756,7 @@ object IntervalJoin {
         s"interval join type must be inner|left|right|full, got '$other'")
     }
     val spark = points.sparkSession
-    install(spark)
+    graft.GraftExtensions.install(spark)
     val tExpr = GraftSqlBridge.expression(pointTime)
     val sExpr = GraftSqlBridge.expression(start)
     val eExpr = GraftSqlBridge.expression(end)

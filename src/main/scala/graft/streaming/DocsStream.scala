@@ -87,14 +87,13 @@ object DocsStream {
     val name = "graft_stream_mg_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageDocsDirMulti(spark, dir, nFiles = 2)
     val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      graft.functions.VectorFunctions.register(s)
       val q = s.readStream
         .schema(docSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
         .select(explode(TextFunctions.words(col("text"))).as("word"))
         .groupBy()
-        .agg(call_function("graft_mg", col("word"), lit(k)).as("sk"),
+        .agg(graft.functions.VectorFunctions.mg(col("word"), k).as("sk"),
           count(lit(1)).as("n"))
         .writeStream
         .outputMode("complete")
@@ -135,7 +134,6 @@ object DocsStream {
     val name = "graft_stream_lsh_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageDocsDirMulti(spark, dir, nFiles = 2)
     val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      graft.functions.VectorFunctions.register(s)
       val hashes = transform(array_distinct(TextFunctions.words(col("text"))),
         w => TextFunctions.wordHash(w))
       val q = s.readStream

@@ -54,7 +54,6 @@ object EmbeddingStream {
     val name = "graft_stream_neardup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageDeltaDir(spark, dir)
     val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      graft.functions.VectorFunctions.register(s)
       import graft.ops.Caches.TrackedPersist
       // static side, built once: skinny banded corpus for the gate join +
       // the corpus vectors for the verify join

@@ -341,7 +341,6 @@ object EventsStream {
     val name = "graft_stream_kmv_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
     val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      graft.functions.VectorFunctions.register(s)
       val h = conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10).cast("long")
       val q = s.readStream
         .schema(rawSchema)
@@ -350,7 +349,7 @@ object EventsStream {
         .parquet(srcDir)
         .select(col("event_type"), h.as("h"))
         .groupBy(col("event_type"))
-        .agg(expr(s"graft_kmv(h, $k)").as("kmv"))
+        .agg(graft.functions.VectorFunctions.kmv(col("h"), k).as("kmv"))
         .writeStream
         .outputMode("complete")
         .format("memory")

@@ -48,16 +48,6 @@ object StreamJoinOps {
     * only on data). Append-mode windows (q131) and event-time timeouts
     * (q80) NEED the finalize batch and must not set it.
     */
-  /** Diagnostics-only hook (Probe `streamfloor`): a listener enrolled here is
-    * added to every graft streaming query's CLONED session before `f` runs,
-    * so per-batch progress (durationMs phases, state-operator commit times)
-    * of the REAL registry queries is observable without touching their
-    * dataflow. Never set by Verify/Bench.
-    */
-  private[graft] val probeListener =
-    new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.sql.streaming.StreamingQueryListener](null)
-
   private[graft] def withStatePartitions[T](spark: SparkSession, n: Int,
                                             skipFinalize: Boolean = false)
                                            (f: SparkSession => T): T = {
@@ -78,16 +68,7 @@ object StreamJoinOps {
     s.conf.set("spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone"))
     spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
       .foreach(s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.get("GRAFT_STREAM_STATE_PARTS").getOrElse(n.toString))
-    // measurement knob (r15 streamfloor): every warm rep of a streaming
-    // query recompiles 25-37 codegen units (~16-25 ms each) — per-batch
-    // plans carry fresh literals, so the codegen cache can never amortize
-    // them. "off" runs the microbatches interpreted for comparison.
-    sys.env.get("GRAFT_STREAM_CODEGEN").filter(_ == "off").foreach { _ =>
-      s.conf.set("spark.sql.codegen.wholeStage", "false")
-      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    }
+    s.conf.set("spark.sql.shuffle.partitions", n.toString)
     if (skipFinalize) s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // Checkpoints (offset log + state-store deltas, fsynced per microbatch)
     // go to RAM when the host has a tmpfs: an AvailableNow run over K files
@@ -101,7 +82,6 @@ object StreamJoinOps {
       if (shm.isDirectory && shm.canWrite) Some(s"/dev/shm/graft_ckpt_${java.util.UUID.randomUUID().toString.take(8)}")
       else None
     ckptBase.foreach(s.conf.set("spark.sql.streaming.checkpointLocation", _))
-    Option(probeListener.get()).foreach(s.streams.addListener)
     try f(s) finally {
       ckptBase.foreach { base =>
         val p = new org.apache.hadoop.fs.Path(base)

@@ -19,6 +19,12 @@ object GraftSqlBridge {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Column over a hand-built Catalyst expression — how the graft Column
+    * API binds its native expressions without a function registry entry.
+    */
+  def column(e: Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
   /** DataFrame over a hand-built logical plan (the `Dataset.ofRows` that
     * extension points like injected rules use internally).
     */

@@ -678,7 +678,6 @@ class ExtensionSpec extends AnyFunSuite {
 
   test("ANN near-dup: exact precision and >=90% recall on a true near-dup corpus (q135)") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // the testdata embeddings have no true near-dups (max cosine ≈ 0.44), so
     // the banding's recall claim needs a corpus WITH them: 150 seeded random
     // vectors plus 50 small perturbations (cosine vs their base ≥ ~0.95)
@@ -708,7 +707,6 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("native dot kernel equals the higher-order-function fold bit-for-bit") {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).limit(50)
     val diff = e.select(
         graft.functions.VectorFunctions.dotp(col("embedding"), col("embedding")).as("k"),
@@ -733,11 +731,10 @@ class ExtensionSpec extends AnyFunSuite {
 
   test("heap top-k aggregate equals row_number ranking; ties break by payload") {
     import TestSpark.spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val df = Seq((1, 5.0, 10L), (1, 5.0, 11L), (1, 7.0, 12L), (1, 3.0, 13L), (2, 1.0, 20L))
       .toDF("g", "score", "id")
     val got = df.groupBy(col("g"))
-      .agg(call_function("graft_topk", col("score"), col("id"), lit(2)).as("top"))
+      .agg(graft.functions.VectorFunctions.topk(col("score"), col("id"), 2).as("top"))
       .orderBy(col("g")).collect()
       .map(r => r.getInt(0) -> r.getSeq[Long](1))
     // g=1: 7.0->12 first, then tie at 5.0 -> smaller payload 10; g=2: k>size -> all
@@ -745,18 +742,17 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("KMV sketch: k smallest DISTINCT hashes, partition/merge-order invariant, exact under k") {
-    graft.functions.VectorFunctions.register(spark)
     // values 0..199 each duplicated 3x (dedup must hold), hashed by a
     // permutation h = (v*37) % 200 so the minima are NOT the smallest values
     val base = spark.range(600).select(((col("id") % 200) * 37 % 200).as("h"))
     val expect = (0L until 200L).map(v => v * 37 % 200).distinct.sorted.take(16)
     for (parts <- Seq(1, 3, 32)) {
-      val got = base.repartition(parts).agg(expr("graft_kmv(h, 16)")).head.getSeq[Long](0)
+      val got = base.repartition(parts).agg(graft.functions.VectorFunctions.kmv(col("h"), 16)).head.getSeq[Long](0)
       assert(got.toSeq === expect, s"parts=$parts")
     }
     // under-k group returns the full distinct set ascending
     val small = spark.range(30).select((col("id") % 5).as("h"))
-      .agg(expr("graft_kmv(h, 16)")).head.getSeq[Long](0)
+      .agg(graft.functions.VectorFunctions.kmv(col("h"), 16)).head.getSeq[Long](0)
     assert(small.toSeq === Seq(0L, 1L, 2L, 3L, 4L))
   }
 
@@ -1053,7 +1049,6 @@ class ExtensionSpec extends AnyFunSuite {
 
   test("ngram generator emits order-preserving shingles; short docs emit none") {
     import TestSpark.spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val df = Seq("a b c", "x", "p q").toDF("text")
     val got = df.select(graft.functions.VectorFunctions.ngrams(split(col("text"), " "), 2)
         .as("g")).collect().map(_.getString(0)).toSeq.sorted

@@ -348,7 +348,6 @@ class HardeningSpec extends AnyFunSuite {
   }
 
   test("ANN verify join degrades to shuffle-hash under a forced-low gate, same result") {
-    graft.functions.VectorFunctions.register(spark)
     val default = SimilarityOps.annNearDup(spark, sf).collect().toSeq
     val key = DedupOps.VerifyBroadcastConf
     try {
@@ -461,7 +460,6 @@ class HardeningSpec extends AnyFunSuite {
   test("adaptive banding hits the target recall on sf0.01's exact pair set") {
     import graft.ops.DedupOps
     import graft.functions.VectorFunctions.minhashSigs
-    graft.functions.VectorFunctions.register(spark)
     val dir01 = "/root/testdata/sf0.01" // the driver's correctness-gate SF
     val target = 0.95
     val b = DedupOps.chooseLshBands(spark, dir01, targetRecall = target, maxBands = 8)
@@ -539,14 +537,12 @@ class HardeningSpec extends AnyFunSuite {
   }
 
   test("band index identity: regenerated corpus forces a rebuild; valid index is reused") {
-    graft.functions.VectorFunctions.register(spark)
     // scratch corpus: a copy of sf0.001's embeddings the test can touch
     val scratch = java.nio.file.Files.createTempDirectory("graft_idx_corpus").toFile
     val src = new java.io.File(sf, "embeddings.parquet").toPath
     val dst = new java.io.File(scratch, "embeddings.parquet").toPath
     java.nio.file.Files.copy(src, dst)
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     try {
       val (t1, path, built1) =
         SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "idxt", None)
@@ -585,12 +581,10 @@ class HardeningSpec extends AnyFunSuite {
   }
 
   test("compaction swap is crash-safe at every step and mutators are mutually excluded") {
-    graft.functions.VectorFunctions.register(spark)
     val scratch = java.nio.file.Files.createTempDirectory("graft_idx_swap").toFile
     val src = new java.io.File(sf, "embeddings.parquet").toPath
     java.nio.file.Files.copy(src, new java.io.File(scratch, "embeddings.parquet").toPath)
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
@@ -679,12 +673,10 @@ class HardeningSpec extends AnyFunSuite {
   }
 
   test("manifest index identity: regenerated corpus flips to a fresh version; merge state cannot leak across generations") {
-    graft.functions.VectorFunctions.register(spark)
     val scratch = java.nio.file.Files.createTempDirectory("graft_idx_mident").toFile
     val dst = new java.io.File(scratch, "embeddings.parquet").toPath
     java.nio.file.Files.copy(new java.io.File(sf, "embeddings.parquet").toPath, dst)
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
@@ -719,12 +711,10 @@ class HardeningSpec extends AnyFunSuite {
   }
 
   test("manifest index: pointer flip retains the predecessor for in-flight readers; debris is swept; recovery is a no-op") {
-    graft.functions.VectorFunctions.register(spark)
     val scratch = java.nio.file.Files.createTempDirectory("graft_idx_mani").toFile
     java.nio.file.Files.copy(new java.io.File(sf, "embeddings.parquet").toPath,
       new java.io.File(scratch, "embeddings.parquet").toPath)
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
@@ -844,9 +834,7 @@ class HardeningSpec extends AnyFunSuite {
     // hashed over the wrong bucket count). appendBandRows must inherit the
     // table's own spec — proven here on a 4-bucket index (≠ the build
     // constant 8).
-    graft.functions.VectorFunctions.register(spark)
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     val nB = 4
     assert(nB !== SimilarityOps.BandIndexBuckets)
     val dir = java.nio.file.Files.createTempDirectory("graft_nb_idx").toFile
@@ -885,7 +873,6 @@ class HardeningSpec extends AnyFunSuite {
   }
 
   test("embeddingNearDup degrades to the banded ANN path past the row cap (q42 scale guard)") {
-    graft.functions.VectorFunctions.register(spark)
     val banded = SimilarityOps.annNearDup(spark, sf).collect().toSeq
     try {
       spark.conf.set(SimilarityOps.ExactPairRowsConf, "1")

@@ -43,7 +43,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("native kernels run inside whole-stage codegen (dotproduct in a *(n) stage)") {
-    graft.functions.VectorFunctions.register(spark)
     val df = SimilarityOps.knnBruteForce(spark, sf)
     df.collect() // AQE: codegen markers only exist in the post-execution final plan
     val p = plan(df)
@@ -231,12 +230,15 @@ class PlanSpec extends AnyFunSuite {
   test("optimizer rule rewrites built-in intersect-count to the kernel, same results") {
     import TestSpark.spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     // parquet-backed so ConvertToLocalRelation can't constant-fold the plan away
     val dir = java.nio.file.Files.createTempDirectory("graft_rule").toString
     Seq((Seq(3, 1, 2, 2), Seq(2, 3, 5)), (Seq(7, 8), Seq(9))).toDF("x", "y")
       .write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir).orderBy(size(col("x")).desc)
+    // the rule is installed only where asked for: a session clone, so the
+    // shared test session keeps the plans every registry query gets
+    val s = spark.newSession()
+    graft.GraftExtensions.install(s)
+    val df = s.read.parquet(dir).orderBy(size(col("x")).desc)
     val rewritten = df.select(
       size(array_intersect(
         sort_array(array_distinct(col("x"))), sort_array(array_distinct(col("y"))))).as("n"))
@@ -317,7 +319,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("SrpSketch16 kernel is bit-identical to the HOF formulation it replaced") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
     val xq = expr(
       "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))")
@@ -509,7 +510,6 @@ class PlanSpec extends AnyFunSuite {
     assert(Seq(1, 2, 3).forall(r => names.contains(s"_GRAFT_MERGED_q$r")))
     // idempotent: an already-compact index is returned untouched
     val s2 = spark.newSession()
-    graft.functions.VectorFunctions.register(s2)
     val (tIdx, path2, _) = SimilarityOps.ensureBandIndex(
       s2, sf, "idxk", Some(org.apache.spark.sql.functions.col("vec_id") % 4 === 0))
     assert(!SimilarityOps.compactBandIndex(s2, tIdx, path2))

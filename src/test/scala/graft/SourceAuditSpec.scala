@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structural source audit: corpus-sized driver materialization.
+/** Structural source audits over src/main.
   *
-  * The plan-level audits (PlanSpec) prove no unpartitioned windows and no
-  * cartesian products survive optimization; this one closes the remaining
+  * Corpus-sized driver materialization: the plan-level audits (PlanSpec)
+  * prove no unpartitioned windows and no cartesian products survive
+  * optimization; this one closes the remaining
   * manually-reviewed shape — `collect()`-style actions that pull rows onto
   * the driver. Every such site in src/main must carry a
   * `bounded-collect: <why the row count is bounded>` marker within the six
@@ -19,11 +20,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `Bench.scala` / `Verify.scala`: driver mains — materializing results
   *    is their contract (and their only `.collect {` uses are Scala
   *    partial-function collects on local Seqs, not Dataset actions).
-  *  - `Probe.scala`: documented dev-only scratch main, never on a query path.
+  *
+  * One extension route: only `GraftExtensions` binds SQL names, optimizer
+  * rules or planner strategies into a session, and no operator or streaming
+  * path reads an environment variable except the scratch-path override.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
-  private val SkipFiles = Set("Bench.scala", "Verify.scala", "Probe.scala")
+  private val SkipFiles = Set("Bench.scala", "Verify.scala")
   // Dataset driver materializations. `\.collect\(\)` does not match Scala's
   // partial-function `.collect { ... }`; collectAsList/toLocalIterator have
   // no common Scala-collection homonym; approxQuantile returns its result
@@ -96,5 +100,38 @@ class SourceAuditSpec extends AnyFunSuite {
       "\nShared-session shuffle-width mutation (use a session clone — " +
         "DedupOps.loopFrames or GraftSqlBridge.cloneSession — instead):\n" +
         offenders.mkString("\n"))
+  }
+
+  private def allMainSources: Seq[Path] =
+    Files.walk(Paths.get("src", "main", "scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+
+  private def matches(paths: Seq[Path], pattern: scala.util.matching.Regex): Seq[String] =
+    for {
+      path <- paths
+      (line, idx) <- Files.readAllLines(path).asScala.zipWithIndex
+      if pattern.findFirstIn(line).isDefined
+    } yield s"$path:${idx + 1}: ${line.trim}"
+
+  test("GraftExtensions is the only installer of SQL names, rules and strategies") {
+    val Installer = raw"createOrReplaceTempFunction|registerFunction|extraOptimizations|extraStrategies".r
+    val offenders = matches(
+      allMainSources.filterNot(_.getFileName.toString == "GraftExtensions.scala"), Installer)
+    assert(offenders.isEmpty,
+      "\nA second extension route (bind through GraftExtensions' table and call " +
+        "GraftExtensions.install where session state is needed):\n" + offenders.mkString("\n"))
+  }
+
+  test("operators and streaming read no environment variable but the scratch path") {
+    val EnvRead = raw"sys\.env|System\.getenv".r
+    val scoped = allMainSources.filter { p =>
+      val dir = p.getParent.getFileName.toString
+      (dir == "ops" || dir == "streaming") && p.getFileName.toString != "Staging.scala"
+    }
+    assert(scoped.nonEmpty)
+    val offenders = matches(scoped, EnvRead)
+    assert(offenders.isEmpty,
+      "\nEnvironment reads on an operator path (a leaked variable would silently " +
+        "change official runs):\n" + offenders.mkString("\n"))
   }
 }

@@ -48,7 +48,6 @@ class StringSimSpec extends AnyFunSuite {
 
   test("codegen Expression path equals the interpreted kernel and stays in codegen") {
     import spark.implicits._
-    graft.functions.StringFunctions.register(spark)
     // repartition first: a pure-literal local relation would constant-fold
     // into a LocalTableScan and never exercise the generated code
     val df = pinned.map { case (a, b, _) => (a, b) }.toDF("a", "b")
