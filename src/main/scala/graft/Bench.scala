@@ -58,7 +58,7 @@ object Bench {
         .join(broadcast(spark.range(100).toDF("b")), col("a") < col("b")).count()
       spark.range(1000).select((col("id") % 7).as("k"), col("id"))
         .groupBy(col("k")).agg(collect_list(col("id"))).count()
-      // PPJoin general path + CC-loop machinery on toy graphs: q101 sorts
+      // PPJoin general path + the CC operator on toy graphs: q101 sorts
       // first among the clustering family and otherwise absorbs their
       // one-time plan/codegen setup (measured ~5 s of its cold cost)
       locally {
@@ -68,10 +68,7 @@ object Bench {
             concat(lit("w"), col("doc_id") + 1), lit("common")))).as("ws0"))
         graft.ops.DedupOps.nearDupPairsOn(spark, docs, 0.5).count()
         val pairs = spark.range(4).select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-        val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-          .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        graft.ops.DedupOps.labelPropagation(spark.range(5).toDF("doc_id"), edges, 8)
-          .foreach(_.count())
+        graft.ops.DedupOps.components(spark.range(5).toDF("doc_id"), pairs).count()
       }
       // Streaming warmup: stage the landing dirs the streaming queries read
       // (one-time per tmp dir — a production landing dir pre-exists; creating

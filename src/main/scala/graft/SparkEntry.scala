@@ -235,7 +235,7 @@ object SparkEntry {
     "q142_delta_neardup"    -> ((s, d) => DedupOps.deltaNearDup(s, d)),
     // -- corpus-level boilerplate gram mass ---------------------------------
     "q143_boilerplate"      -> ((s, d) => TextOps.boilerplateGrams(s, d)),
-    // -- co-occurrence communities: second consumer of the CC machinery -----
+    // -- co-occurrence communities: DedupOps.components over user pairs -----
     "q144_user_communities" -> ((s, d) => EventOps.userCommunities(s, d)),
     // -- 2D patch-grid tiling (multimodal) ----------------------------------
     "q145_image_tiles"      -> ((s, d) => MultimodalOps.imageTiles(s, d)),

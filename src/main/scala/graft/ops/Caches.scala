@@ -6,15 +6,18 @@ import org.apache.spark.storage.StorageLevel
 /** Registry for operator-internal persisted intermediates (PrefixSum's
   * range-partitioned pass, the dedup families' token-id tables, …) so a long
   * sweep over the whole query registry doesn't accumulate corpus-sized cached
-  * datasets: Verify and Bench call [[release]] after each query's action
+  * datasets: Verify and Bench call [[releaseAll]] after each query's action
   * completes.
   *
-  * Contract: a released plan must not be RE-executed afterwards in a way that
-  * assumes the cached contents — for PrefixSum that is safe even on
-  * recompute (the offset CASE literals are pid-keyed against the exec's
-  * memoized shuffle, not re-sampled), and both Verify and Bench rebuild each
-  * query's DataFrame from scratch per execution anyway. Specs that hold a
-  * frame across assertions simply don't call release mid-test.
+  * Contract: a plan must not be executed after the frames it reads were
+  * released. A released `persist` only recomputes (for PrefixSum even that
+  * is exact: the offset CASE literals are pid-keyed against the exec's
+  * memoized shuffle, not re-sampled), but a released `localCheckpoint` (a
+  * [[trackCheckpoint]] frame, or one [[releaseAll]] sweeps, such as the
+  * [[DedupOps.components]] labels) has no lineage left and THROWS when
+  * re-read. Verify and Bench rebuild each query's DataFrame from scratch
+  * per execution, which honours this; specs that hold a frame across
+  * assertions simply don't call release mid-test.
   */
 object Caches {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -50,7 +53,10 @@ object Caches {
     def persistTracked(): DataFrame = Caches.persistTracked(df)
   }
 
-  /** Unpersist (non-blocking) everything enrolled since the last release. */
+  /** Unpersist (non-blocking) everything enrolled since the last release.
+    * A frame derived from a released checkpoint cannot be executed again
+    * (see the contract above).
+    */
   def release(): Unit = {
     var d = tracked.poll()
     while (d != null) {
@@ -66,8 +72,8 @@ object Caches {
 
   /** [[release]] plus a sweep of EVERY still-persisted RDD in the context —
     * the between-queries form Bench and Verify use. Operator-internal
-    * `localCheckpoint`s (label-propagation rounds, singleTaskUF, PrefixSum
-    * passes, incrementalCC roots…) persist RDDs that no unpersist call can
+    * `localCheckpoint`s (the [[DedupOps.components]] labels and loop
+    * rounds, PrefixSum passes…) persist RDDs that no unpersist call can
     * reach once the operator returns: checkpoint blocks are outside the
     * CacheManager, and ContextCleaner only reaps them after an organic GC
     * collects the RDD object — with `spark.cleaner.periodicGC.interval`

@@ -883,24 +883,11 @@ object DedupOps {
     * cluster (pairs alone can't: near-dup is not transitive, but the cluster
     * decision must be).
     *
-    * Algorithm: iterative min-label propagation. Every doc starts labelled
-    * with its own id; each round every node takes the minimum label in its
-    * neighborhood; fixpoint = each component labelled by its minimum doc_id.
-    * Rounds needed = graph diameter — near-dup components are dense
-    * (quasi-cliques by construction: members share ≥ t of their vocabulary),
-    * so diameter is small and 2-4 rounds converge. For high-diameter graphs
-    * at 100 TB the same loop upgrades to the large-star/small-star algorithm
-    * (Kiveris et al., O(log n) rounds); the per-round dataflow (join + min
-    * aggregate, two shuffles) is identical.
-    *
-    * Scale mechanics: `localCheckpoint` after each round truncates the
-    * lineage (an unbounded iterative plan re-executes every prior round at
-    * each action and eventually overflows the planner); convergence is
-    * detected from Σ(labels), which strictly decreases until fixpoint — one
-    * cheap aggregate per round instead of a change-count self-join.
+    * The pair graph is closed by [[components]]: single-task union-find at
+    * registry scales, min-label propagation with pointer jumping (and a
+    * large-star/small-star fallback) past its measured cutover.
     */
   def dedupClusters(spark: SparkSession, dir: String, threshold: Double = NearDupThreshold): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // Contract exact-duplicate groups FIRST (identical word sets have J = 1 ≥
     // t, so a group is always one clique): nodes become group representatives
     // and edges become rep-level near-dup pairs — measured 5000 docs / 965k
@@ -920,49 +907,10 @@ object DedupOps {
       .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("ids"))
       .persistTracked()
     val reps = groups.select(col("rep").as("doc_id"), col("ws0"))
-    // CANONICAL pairs persisted (r15, the r14 incrementalCC restructure
-    // ported per verdict #5): the symmetric explode used to be cached and
-    // counted here, doubling the cached rows — the union-find path (every
-    // graph under the cutover) immediately filtered it back to src < dst.
-    // ccLabelsFromPairs derives symmetric edges on demand in the loop
-    // branch only (a narrow explode per read of this cache).
-    val pairs = nearDupPairsOn(spark, reps, threshold)
-      .select(col("doc_a"), col("doc_b"))
-      .persistTracked()
-    // One round = propagate (min label over the neighborhood) then
-    // pointer-jump (label ← label(label), path halving). The jump turns
-    // O(diameter) rounds into O(log diameter) — the near-dup graph of a
-    // mutated corpus is a CHAIN (doc i ≈ doc i+1), not a clique: measured
-    // diameter ~7 at sf0.1. Every label is itself a rep id, so the jump
-    // self-join is total, and both steps are monotone ∧ component-internal,
-    // so the propagate-only fixpoint argument still applies.
-    //
-    // The loop's joins move |edges| rows — size the loop's shuffles from the
-    // MEASURED pair count (the persist above makes this count free) rather
-    // than the session default: the contracted rep graph is orders of
-    // magnitude smaller than the corpus, and running 5 rounds × 3 shuffles
-    // of a 57k-row graph through the full-width partitioning is pure
-    // scheduling overhead. ~2M edges per partition, floor 2; at a true
-    // 100 TB edge set this formula widens right back out.
-    val nPairs = pairs.count()
-    // propagate+jump is the fast path (near-dup components are quasi-cliques,
-    // 2-4 rounds); a pathological high-diameter graph that has not converged
-    // in LabelPropMaxRounds falls back to the alternating large-star/
-    // small-star contraction, whose round count is O(log n) on ANY shape.
-    // The loop runs under a NARROWED SESSION CLONE (loopFrames): the edge-
-    // count-sized shuffle width lives on the clone's SQLConf, so a concurrent
-    // query on the shared session can never observe — or be rescoped by —
-    // the override, and there is nothing to restore on failure.
-    val labels = try ccLabelsFromPairs(spark, nPairs, reps, pairs) finally {
-      // unpersist here, not after the consumers: a mid-loop failure must not
-      // leak the cached pair set (labels are localCheckpoint'ed, so the
-      // returned plan no longer depends on it)
-      pairs.unpersist()
-    }
+    val labels = components(reps, nearDupPairsOn(spark, reps, threshold))
     // expand reps back to member docs; a component's min doc IS a rep
-    // (group rep = min of group), so the propagated min-rep label is the
-    // min doc_id of the whole cluster. This runs OUTSIDE the narrowed
-    // clone (labels were rebound to the caller): it is corpus-sized again.
+    // (group rep = min of group), so the component's min-rep label is the
+    // min doc_id of the whole cluster.
     val docLabels = groups
       .select(col("rep"), explode(col("ids")).as("doc_id"))
       .join(labels.select(col("doc_id").as("rep_id"), col("label")),
@@ -974,105 +922,91 @@ object DedupOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Run a CC loop body against a session CLONE whose shuffle width is sized
-    * from the MEASURED edge count: the loop's joins move |edges| rows, and
-    * running a few-thousand-row rep graph through the corpus-width
-    * partitioning is pure scheduling overhead (~2M edges per partition,
-    * floor 2; at a true 100 TB edge set the formula widens right back out).
-    * The clone (same SparkContext, same CacheManager — persisted inputs
-    * still hit via canonicalized-plan matching) scopes the narrowing to the
-    * frames REBOUND into it, instead of mutating the shared session's conf,
-    * which would silently rescope any unrelated query planned in the window.
-    * The body's result is rebound to the caller's session, so downstream
-    * corpus-sized consumers plan at full width again.
-    */
-  private[graft] def loopFrames(spark: SparkSession, nEdges: Long,
-                                nodes: DataFrame, edges: DataFrame, pairs: DataFrame)
-                               (body: ((DataFrame, DataFrame, DataFrame)) => DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.GraftSqlBridge.{cloneSession, rebind}
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val loopParts = math.max(2L, math.min(sessionParts, nEdges / 2000000L + 1L))
-    val loop = cloneSession(spark)
-    loop.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    rebind(body((rebind(nodes, loop), rebind(edges, loop), rebind(pairs, loop))), spark)
-  }
-
-  /** Rounds of propagate+jump before [[dedupClusters]] abandons label
+  /** Rounds of propagate+jump before [[components]] abandons label
     * propagation for the star algorithm: pointer jumping converges in
     * ~log₂(diameter) rounds, so 8 rounds cover diameter ≈ 250 — any graph
     * still unconverged is genuinely high-diameter.
     */
   val LabelPropMaxRounds = 8
 
-  /** Measured cutover for [[ccLabels]]: at or below this many DIRECTED edge
-    * rows the component graph is solved by a SINGLE-TASK union-find instead
-    * of the distributed loop. 2M directed edges = 1M pairs → a specialized
-    * LongMap of ≤ 2M entries ≈ 32 MB in one task — comfortably inside any
-    * executor, and the honest price comparison is stark: the loop pays
-    * 3 materializations × O(log diameter) rounds of pure scheduling
-    * overhead on a graph this small (measured: 5 444 edges cost ~5 s and
-    * ~40 jobs through the loop, ~0.2 s and 2 jobs through the union-find).
-    * Past the cutover the loop takes over — at a genuine 100 TB edge set
-    * no single task can hold the graph, and the bound is what keeps this a
-    * measured decision rather than a benchmark special-case: the decision
-    * statistic (the edge count) is already measured by every caller to
-    * size the loop's shuffles.
+  /** Measured cutover for [[components]]: at or below this many DIRECTED
+    * edge rows (two per pair) the component graph is solved by a
+    * SINGLE-TASK union-find instead of the distributed loop. 2M directed
+    * edges = 1M pairs → a specialized LongMap of ≤ 2M entries ≈ 32 MB in
+    * one task — comfortably inside any executor, and the honest price
+    * comparison is stark: the loop pays 3 materializations × O(log
+    * diameter) rounds of pure scheduling overhead on a graph this small
+    * (measured: 5 444 edges cost ~5 s and ~40 jobs through the loop,
+    * ~0.2 s and 2 jobs through the union-find). Past the cutover the loop
+    * takes over — at a genuine 100 TB edge set no single task can hold the
+    * graph, and the bound keeps this a measured decision rather than a
+    * benchmark special-case: the decision statistic (the pair count) is
+    * taken anyway, once, on the persisted pair set.
     */
   val SingleTaskCCMaxEdges = 2000000L
 
-  /** Connected-component labels — the ONE entry point the CC consumers
-    * call (q101/q149/q315/q317 via their ops; q144 deliberately stays on
-    * the explicit loop — see [[graft.ops.EventOps]] — so the distributed
-    * path remains oracle-exercised in the registry at every SF). Input:
-    * the measured directed edge count, the node set (`doc_id`) and the
-    * symmetric edge frame (`src`/`dst`) — which every consumer PERSISTS,
-    * so the canonical pair set both algorithms need is derived here as
-    * `src < dst` over the cached frame rather than taken as a third
-    * parameter: passing the consumer's original pair frame would
-    * re-execute its whole candidate pipeline a second time (measured on
-    * q149: +5 MB shuffle — the exact cost the persist exists to avoid).
-    * Output: (doc_id, label = component-minimum id) for every node — all
-    * three algorithms (union-find, min-label propagation, star
-    * contraction) provably produce exactly this labeling, so the choice
-    * is invisible to oracles.
+  /** Connected components — the ONE operator every CC consumer calls
+    * (q101, q144, q149, q315 and the q338/q341 yesterday-labels build;
+    * [[incrementalCC]] shares its [[endpointLabels]] core). Input: `nodes`
+    * (`doc_id`) and `pairs` (the first two columns are the endpoints, in
+    * either orientation). Output: (doc_id, label = component-minimum id)
+    * for every node, a node in no pair labelling itself. All three
+    * algorithms (union-find, min-label propagation, star contraction)
+    * provably produce exactly this labelling, so the route is invisible to
+    * oracles. Callers neither persist nor count the pairs: this does.
     */
-  private[graft] def ccLabels(spark: SparkSession, nEdges: Long,
-                              nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val pairs = edges.filter(col("src") < col("dst"))
-      .select(col("src").as("doc_a"), col("dst").as("doc_b"))
-    // ceil: an ODD symmetric count past the cutover must stay on the loop
-    // (floor would round 2M+1 edges down to exactly the union-find bound)
-    ccLabelsFromPairs(spark, (nEdges + 1) / 2, nodes, pairs)
-  }
+  private[graft] def components(nodes: DataFrame, pairs: DataFrame): DataFrame =
+    nodes.select(col("doc_id"))
+      .join(endpointLabels(pairs), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
 
-  /** Pairs-based twin of [[ccLabels]] — the entry point for consumers that
-    * build CANONICAL pairs (`doc_a < doc_b`): persisting/counting the pair
-    * set instead of its symmetric explode halves the cached rows and the
-    * count action's scan, and the union-find fast path consumes pairs
-    * directly; only the distributed loop needs symmetric edges, so they are
-    * derived on demand in that branch (a narrow explode per read of the
-    * caller's persisted pairs). The r14 [[incrementalCC]] restructure,
-    * ported to the initial-CC entry point (r14 verdict #5) — q101, q149,
-    * q315 and the q338/q341 yesterday-labels build all enter here.
+  /** Component-minimum labels for every PAIR ENDPOINT:
+    *
+    *  1. canonicalise to (least, greatest) — the star fallback assumes
+    *     `doc_a < doc_b`; union-find and propagation are order-blind;
+    *  2. persist and count — every route reads the pairs more than once
+    *     (the loop twice per round), and the count is the cutover statistic;
+    *  3. route — single-task union-find when 2·pairs ≤
+    *     [[SingleTaskCCMaxEdges]] and both ids are `LongType` (its LongMap's
+    *     key); otherwise propagation with pointer jumping, falling back to
+    *     large-star/small-star after [[LabelPropMaxRounds]] rounds;
+    *  4. unpersist in a `finally`, so a mid-loop failure cannot leak the
+    *     cache. Every route returns labels cut from the pair lineage
+    *     (`localCheckpoint`), so a consumer running after the unpersist
+    *     never re-runs the caller's pair pipeline (the r12 lesson).
     */
-  private[graft] def ccLabelsFromPairs(spark: SparkSession, nPairs: Long,
-                                       nodes: DataFrame, pairs0: DataFrame): DataFrame = {
+  private def endpointLabels(pairs0: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge.{cloneSession, rebind}
     val Seq(ca, cb) = pairs0.columns.take(2).toSeq
-    val pairs = pairs0.select(col(ca).as("doc_a"), col(cb).as("doc_b"))
-    val longIds = pairs0.schema.fields.take(2)
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (nPairs * 2 <= SingleTaskCCMaxEdges && longIds) singleTaskCC(nodes, pairs)
-    else {
-      val edges = pairs.select(explode(array(
-          struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-          struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      loopFrames(spark, nPairs * 2, nodes, edges, pairs) {
-        case (n2, e2, p2) =>
-          labelPropagation(n2, e2, LabelPropMaxRounds)
-            .getOrElse(starLabels(n2.select(col("doc_id")), p2))
+    val pairs = pairs0
+      .select(least(col(ca), col(cb)).as("doc_a"), greatest(col(ca), col(cb)).as("doc_b"))
+      .persistTracked()
+    try {
+      val nPairs = pairs.count()
+      val longIds = pairs.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
+      if (nPairs * 2 <= SingleTaskCCMaxEdges && longIds) unionFind(pairs)
+      else {
+        // The loop's joins move |edges| rows, so its shuffles are sized from
+        // the measured count (~2M edges per partition, floor 2) instead of
+        // the corpus-width session default. The width lives on a session
+        // CLONE (same SparkContext and CacheManager, so the persisted pairs
+        // still hit), never on the caller's conf, which would rescope any
+        // unrelated query planned in the window; the labels are rebound to
+        // the caller's session.
+        val spark = pairs.sparkSession
+        val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+        val loop = cloneSession(spark)
+        loop.conf.set("spark.sql.shuffle.partitions",
+          math.max(2L, math.min(sessionParts, nPairs * 2 / 2000000L + 1L)).toString)
+        val p = rebind(pairs, loop)
+        val edges = p.select(explode(array(
+            struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+            struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        val ends = edges.select(col("src").as("doc_id")).distinct()
+        rebind(labelPropagation(ends, edges, LabelPropMaxRounds).getOrElse(starLabels(p)), spark)
       }
-    }
+    } finally pairs.unpersist()
   }
 
   /** INCREMENTAL connected components — the daily-dedup primitive: given
@@ -1080,20 +1014,22 @@ object DedupOps {
     * touching yesterday's edge set. Today's endpoints are projected onto
     * label space (an id unseen yesterday labels itself), giving a
     * CONTRACTED graph bounded by the delta size — each old component is
-    * one node — which [[ccLabels]] solves (union-find under the cutover,
-    * the loop past it); the solved roots then remap yesterday's corpus-
-    * sized label table with ONE join. Correctness: contracting a
-    * component to a vertex preserves connectivity, and since every old
-    * label is its component's minimum id, the contracted solution's root
-    * is the global minimum of the merged components — so the output is
-    * bit-identical to a full recompute over (old ∪ delta) edges (q338's
-    * oracle IS q149's full-recompute CTE). At 100 TB this is the
-    * difference between re-clustering billions of edges nightly and
-    * solving a delta-bounded graph + one broadcast-sized remap join.
+    * one node — which [[endpointLabels]] solves; the solved roots then
+    * remap yesterday's corpus-sized label table with ONE join.
+    * Correctness: contracting a component to a vertex preserves
+    * connectivity, and since every old label is its component's minimum
+    * id, the contracted solution's root is the global minimum of the
+    * merged components — so the output is bit-identical to a full
+    * recompute over (old ∪ delta) edges (q338's oracle IS q149's
+    * full-recompute CTE). At 100 TB this is the difference between
+    * re-clustering billions of edges nightly and solving a delta-bounded
+    * graph + one broadcast-sized remap join.
     */
-  private[graft] def incrementalCC(spark: SparkSession, oldLabels: DataFrame,
-      newNodes: DataFrame, deltaPairs: DataFrame): DataFrame = {
+  private[graft] def incrementalCC(oldLabels: DataFrame, newNodes: DataFrame,
+      deltaPairs: DataFrame): DataFrame = {
     val Seq(ca, cb) = deltaPairs.columns.take(2).toSeq
+    // canonical before the distinct, so both orientations of a contracted
+    // edge collapse to one row
     val contracted = deltaPairs
       .join(oldLabels.select(col("doc_id").as(ca), col("label").as("__la")), Seq(ca), "left")
       .join(oldLabels.select(col("doc_id").as(cb), col("label").as("__lb")), Seq(cb), "left")
@@ -1101,36 +1037,13 @@ object DedupOps {
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("doc_a"), greatest(col("a"), col("b")).as("doc_b"))
       .distinct()
-      .persistTracked()
-    // CANONICAL pairs are persisted/counted (not the symmetric explode, r14:
-    // the explode doubled the cached rows and the union-find path — the one
-    // every delta under [[SingleTaskCCMaxEdges]] takes — immediately
-    // filtered it back to src < dst; only the distributed loop needs
-    // symmetric edges, so they are derived on demand in that branch).
-    val nPairs = contracted.count()
-    val longIds = contracted.schema.fields.take(2)
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
     // roots of the contracted graph: old-label → merged component minimum.
-    // Checkpointed BEFORE the caches release: a lazy return would re-derive
-    // the contracted graph — and transitively the caller's whole pair
-    // pipeline — in the final action, after the cache is gone (measured: 2×
-    // the ann build, 40 vs 20 jobs on q338). The frame is delta-node-sized,
-    // so the eager cut is cheap. On the union-find path the node set is
-    // EXACTLY the pair endpoints (contracted nodes exist only inside pairs),
-    // so [[singleTaskCC]]'s singleton join-back is the identity here —
-    // [[singleTaskUF]] skips it and its extra checkpoint job outright.
-    val roots = try {
-      if (nPairs * 2 <= SingleTaskCCMaxEdges && longIds) singleTaskUF(contracted)
-      else {
-        val cEdges = contracted.select(explode(array(
-            struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-            struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        val cNodes = cEdges.select(col("src").as("doc_id")).distinct()
-        ccLabels(spark, nPairs * 2, cNodes, cEdges).localCheckpoint()
-      }
-    } finally contracted.unpersist()
-    val rootMap = roots.select(col("doc_id").as("__from"), col("label").as("__root"))
+    // Contracted nodes exist only inside pairs, so the endpoint labels need
+    // no join-back; they come back cut from the contraction's lineage, so
+    // the remap below never re-derives the caller's pair pipeline after the
+    // cache is gone (measured: 2× the ann build, 40 vs 20 jobs on q338).
+    val rootMap = endpointLabels(contracted)
+      .select(col("doc_id").as("__from"), col("label").as("__root"))
     val allNodes = oldLabels.select(col("doc_id"), col("label"))
       .unionByName(newNodes.select(col("doc_id"), col("doc_id").as("label")))
     allNodes
@@ -1138,37 +1051,20 @@ object DedupOps {
       .select(col("doc_id"), coalesce(col("__root"), col("label")).as("label"))
   }
 
-  /** Single-task union-find over the pair list (the [[ccLabels]] fast
-    * path): one exchange moves the ≤ [[SingleTaskCCMaxEdges]]-row pair set
-    * to one task (the pair BUILD upstream stays fully parallel — this is a
-    * repartition, not a coalesce, precisely so the exchange boundary
-    * isolates the narrow part), union-by-minimum with path compression
-    * labels every non-singleton node with its component minimum, and the
-    * tiny (≤ 2·pairs) result is checkpointed once and joined back to the
-    * node set, singletons labeling themselves. Union-by-min keeps the
-    * invariant "root = min of merged set" inductively, so the output is
-    * identical to the loop's fixpoint.
+  /** Single-task union-find over a `LongType` pair list (the
+    * [[endpointLabels]] fast path): one exchange moves the ≤
+    * [[SingleTaskCCMaxEdges]]-row pair set to one task (the pair BUILD
+    * upstream stays fully parallel — this is a repartition, not a
+    * coalesce, precisely so the exchange boundary isolates the narrow
+    * part), and union-by-minimum with path compression labels every
+    * endpoint with its component minimum. Union-by-min keeps the invariant
+    * "root = min of merged set" inductively, so the output is identical to
+    * the loop's fixpoint. The tiny (≤ 2·pairs) result is checkpointed.
     */
-  private[graft] def singleTaskCC(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    val lbl = singleTaskUF(pairs)
-    nodes.select(col("doc_id"))
-      .join(lbl, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
-  }
-
-  /** The union-find core of [[singleTaskCC]]: component-minimum labels for
-    * every PAIR ENDPOINT, localCheckpoint'ed (delta-sized, eager by
-    * design). Callers whose node set is exactly the endpoints — the
-    * [[incrementalCC]] contraction, where every contracted node exists only
-    * because it sits inside a pair — use this directly and skip the
-    * singleton join-back (which is the identity there) plus its extra
-    * checkpoint job.
-    */
-  private[graft] def singleTaskUF(pairs: DataFrame): DataFrame = {
+  private def unionFind(pairs: DataFrame): DataFrame = {
     val sess = pairs.sparkSession
     import sess.implicits._
-    val Seq(ca, cb) = pairs.columns.take(2).toSeq
-    pairs.select(col(ca), col(cb)).as[(Long, Long)]
+    pairs.as[(Long, Long)]
       .repartition(1)
       .mapPartitions { it =>
         val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -1195,8 +1091,10 @@ object DedupOps {
   /** Min-label propagation with pointer jumping over a symmetric edge set.
     * One round = propagate (min label over the neighborhood) then
     * pointer-jump (label ← label(label), path halving); `localCheckpoint`
-    * truncates the iterative lineage. Returns None if `maxRounds` rounds
-    * did not reach the fixpoint.
+    * truncates the iterative lineage. The jump turns O(diameter) rounds
+    * into O(log diameter) — a mutated corpus's near-dup graph is a CHAIN,
+    * not a clique (measured diameter ~7 on q101 at sf0.1). Returns None if
+    * `maxRounds` rounds did not reach the fixpoint.
     *
     * Convergence is detected at the PROPAGATE step, before the round's jump
     * joins ever run: propagate-no-change means `label(u) ≤ label(v)` for
@@ -1242,8 +1140,8 @@ object DedupOps {
 
   /** Alternating large-star / small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond") over a canonical
-    * undirected pair set `(doc_a < doc_b)` — the high-diameter fallback for
-    * [[dedupClusters]]: O(log n) rounds regardless of graph shape, each
+    * undirected pair set `(doc_a < doc_b)` — the high-diameter fallback of
+    * the [[components]] loop: O(log n) rounds regardless of graph shape, each
     * round two groupBy/join passes over the current edge set.
     *
     *  - large-star(u): every neighbor v > u re-attaches to
@@ -1253,10 +1151,9 @@ object DedupOps {
     *
     * Both preserve connectivity and monotonically shrink the potential;
     * at fixpoint every component is a star rooted at its minimum node.
-    * Returns (doc_id, label) for every node in `nodes` (singletons label
-    * themselves).
+    * Returns (doc_id, label) for every pair endpoint.
     */
-  private[graft] def starLabels(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+  private[graft] def starLabels(pairs: DataFrame): DataFrame = {
     var e = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .distinct().localCheckpoint()
     var done = e.isEmpty
@@ -1288,12 +1185,11 @@ object DedupOps {
       e = es
       done = same
     }
-    // at fixpoint every edge is (root=a, member=b): root is the component min
-    val lbl = e.select(col("b").as("doc_id"), col("a").as("label"))
+    // at fixpoint every edge is (root=a, member=b): root is the component
+    // min, and a root labels itself
+    e.select(col("b").as("doc_id"), col("a").as("label"))
+      .unionByName(e.select(col("a").as("doc_id"), col("a").as("label")))
       .groupBy(col("doc_id")).agg(min(col("label")).as("label"))
-    nodes.select(col("doc_id"))
-      .join(lbl, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
   }
 
   /** Fuzzy key matching: distinct-key pairs within a small edit distance —

@@ -1123,9 +1123,8 @@ object EventOps {
   /** Second iterative-graph consumer (STATUS roadmap): weakly-connected
     * communities over the user co-occurrence graph — users are linked when
     * they act in the same (event_type, minute) anchor, and communities are
-    * the transitive closure. Reuses [[DedupOps.labelPropagation]] /
-    * [[DedupOps.starLabels]] unchanged: the CC machinery is generic over any
-    * (nodes, edges) input, which is the point of exposing it.
+    * the transitive closure, closed by [[DedupOps.components]]: the CC
+    * operator is generic over any (nodes, pairs) input.
     *
     * The scale hazard in any co-occurrence projection is the hub anchor — a
     * minute shared by 10⁵ users emits 10¹⁰ pairs. The standard fix, applied
@@ -1138,32 +1137,8 @@ object EventOps {
     */
   def userCommunities(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = cooccurrencePairs(spark, dir)
-    // persist: the label-prop loop re-reads the edge set twice per round —
-    // without this the anchor-cap join + pair self-join re-execute each time
-    val edges = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persistTracked()
     val nodes = Tables.events(spark, dir).select(col("user_id").as("doc_id")).distinct()
-    // the user graph is distinct-user-sized (≪ events) — run the loop's
-    // shuffles narrow, same rationale as dedupClusters' edge-count sizing.
-    // The narrowing lives on a session clone (DedupOps.loopFrames), never on
-    // the shared session's conf.
-    val nEdges = edges.count()
-    // q144 stays on the EXPLICIT distributed loop on purpose: every other
-    // CC consumer routes through DedupOps.ccLabels, whose measured cutover
-    // takes the single-task union-find at registry scales — something must
-    // keep the 100 TB loop path (label propagation + star fallback +
-    // narrowed-clone plumbing) oracle-exercised at every SF, and the user
-    // graph is the natural pin (largest component population of the family)
-    val labels =
-      try DedupOps.loopFrames(spark, nEdges, nodes, edges, pairs) {
-        case (nodes2, edges2, pairs2) =>
-          DedupOps.labelPropagation(nodes2, edges2, DedupOps.LabelPropMaxRounds)
-            .getOrElse(DedupOps.starLabels(nodes2, pairs2))
-      } finally edges.unpersist()
+    val labels = DedupOps.components(nodes, cooccurrencePairs(spark, dir))
     labels.select(col("doc_id").as("user_id"), col("label").as("community_id"))
       .withColumn("community_size",
         count(lit(1)).over(Window.partitionBy(col("community_id"))))
@@ -1175,7 +1150,7 @@ object EventOps {
     * communities and q169's PageRank (one construction, two consumers, and
     * ONE `edges` CTE in both oracles so the twins cannot drift).
     */
-  private def cooccurrencePairs(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def cooccurrencePairs(spark: SparkSession, dir: String): DataFrame = {
     val au = Tables.events(spark, dir)
       .select(col("event_type"), date_trunc("minute", col("ts")).as("m"), col("user_id"))
       .distinct()
@@ -2131,7 +2106,7 @@ object EventOps {
     * (ranks are one row per NODE — the narrow side; with edges
     * pre-partitioned on src this is the co-partitioned standard), one
     * aggregate shuffle on `dst`, and a `localCheckpoint` to truncate the
-    * growing lineage (the same measured pattern as the q101/q144 CC loops).
+    * growing lineage (the same measured pattern as the CC loop).
     * Rounds are a fixed small constant: at 100 TB the edge table is the only
     * big operand and it is scanned once per round — the canonical Pregel
     * cost profile, expressed in plain DataFrame joins so AQE/codegen apply.

@@ -221,33 +221,22 @@ object LinkageOps {
   }
 
   /** q315 — golden records: the match decisions closed into entity CLUSTERS
-    * (connected components over match pairs — fourth consumer of the generic
-    * q101 CC machinery, loop shuffles sized from the measured match-edge
-    * count on a session clone) and collapsed by a deterministic survivorship
-    * rule: the minimum-uid record (the A-side original whenever one is in
-    * the cluster) donates the golden fields. Per cluster: size, how many
-    * A-records it absorbed, the survivor's name, and whether the members
-    * disagree on nation (the conflict a steward would review). This is the
-    * stage an entity-resolution pipeline actually ships — q312 scores
-    * pairs, q315 turns them into one row per real-world entity.
+    * (connected components over match pairs, [[DedupOps.components]]) and
+    * collapsed by a deterministic survivorship rule: the minimum-uid record
+    * (the A-side original whenever one is in the cluster) donates the
+    * golden fields. Per cluster: size, how many A-records it absorbed, the
+    * survivor's name, and whether the members disagree on nation (the
+    * conflict a steward would review). This is the stage an
+    * entity-resolution pipeline actually ships — q312 scores pairs, q315
+    * turns them into one row per real-world entity.
     */
   def goldenRecords(spark: SparkSession, dir: String): DataFrame = {
     val u = sideA(spark, dir).unionByName(sideB(spark, dir)).persistTracked()
     val cand = candidates(spark, dir).persistTracked()
-    // canonical pairs, not the symmetric explode (r15, verdict #5). uid_a
-    // is the A-side record, not the smaller id — least/greatest
-    // canonicalizes (union-find is order-blind, but the loop fallback's
-    // star contraction assumes doc_a < doc_b).
     val matches = scoredPairs(cand)
       .filter(col("score") >= lit(MatchThreshold).cast(d186))
-      .select(least(col("uid_a"), col("uid_b")).as("doc_a"),
-        greatest(col("uid_a"), col("uid_b")).as("doc_b"))
-      .persistTracked()
-    val nodes = u.select(col("uid").as("doc_id"))
-    val nPairs = matches.count()
-    val labels =
-      try DedupOps.ccLabelsFromPairs(spark, nPairs, nodes, matches)
-      finally matches.unpersist()
+      .select(col("uid_a"), col("uid_b"))
+    val labels = DedupOps.components(u.select(col("uid").as("doc_id")), matches)
     u.join(labels.select(col("doc_id").as("uid"), col("label").as("cluster_id")), "uid")
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_records"),

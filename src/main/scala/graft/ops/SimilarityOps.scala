@@ -234,39 +234,23 @@ object SimilarityOps {
     * [[graft.ops.DedupOps.dedupClusters]]: connected components over the
     * ANN-gated verified pair set ([[annNearDup]]'s edges — band-OR blocking,
     * exact cosine verify), one canonical representative (the min vec_id) per
-    * cluster. Third consumer of the generic CC machinery
-    * ([[DedupOps.labelPropagation]]/[[DedupOps.starLabels]] reused
-    * unchanged), and the full "semantic dedup" pipeline a training-data
-    * curator actually runs: block → verify → cluster → keep one per cluster.
+    * cluster, closed by [[DedupOps.components]] — the full "semantic
+    * dedup" pipeline a training-data curator actually runs: block → verify
+    * → cluster → keep one per cluster.
     *
-    * Scale shape: edges come from 8 band-key shuffles (never an N² join);
-    * the CC loop runs on the pair graph, whose size the banding already
-    * bounded; loop shuffles are narrowed to the measured edge count exactly
-    * like q101/q144. The oracle replays the banding arithmetic as SQL
+    * Scale shape: edges come from 8 band-key shuffles (never an N² join),
+    * so the CC input is the pair graph, whose size the banding already
+    * bounded. The oracle replays the banding arithmetic as SQL
     * (deterministic Weyl planes) and closes it with a recursive CTE — the
     * embedding graph is pair-bounded, so unlike q101 it runs at every SF.
     */
   def semanticClusters(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // CANONICAL pairs persisted (r15, verdict #5 — the r14 incrementalCC
-    // restructure ported to the initial CC): the cache used to hold the
-    // symmetric explode (2× rows) that the union-find path immediately
-    // filtered back; the loop branch re-derives symmetric edges on demand
-    // from this cache (so the band join + cosine verify still execute once).
     val pairs = annNearDupOn(
-        Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), threshold)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      .persistTracked()
+      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), threshold)
     val nodes = Tables.embeddings(spark, dir).select(col("vec_id").as("doc_id")).distinct()
-    // loop shuffles sized from the measured pair count (q101's rationale):
-    // the pair graph is candidate-bounded, far below the session default.
-    // The narrowing lives on a session clone (DedupOps.loopFrames), never on
-    // the shared session's conf.
-    val nPairs = pairs.count()
-    val labels =
-      try DedupOps.ccLabelsFromPairs(spark, nPairs, nodes, pairs)
-      finally pairs.unpersist()
-    labels.select(col("doc_id").as("vec_id"), col("label").as("cluster_id"))
+    DedupOps.components(nodes, pairs)
+      .select(col("doc_id").as("vec_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
       .withColumn("keep", col("vec_id") === col("cluster_id"))
@@ -299,7 +283,7 @@ object SimilarityOps {
         Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), threshold)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       .filter(!(even(col("doc_a")) && even(col("doc_b"))))
-    val labels = DedupOps.incrementalCC(spark, oldLabels, newNodes, deltaPairs)
+    val labels = DedupOps.incrementalCC(oldLabels, newNodes, deltaPairs)
     labels.select(col("doc_id").as("vec_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
@@ -313,13 +297,11 @@ object SimilarityOps {
     * (marker-last, the [[ensureBandIndex]] identity pattern — a
     * [[corpusSnapshot]] mismatch or a torn write both read as "marker
     * absent/stale" and trigger a rebuild). First build: band the even half
-    * against itself, solve with [[DedupOps.ccLabels]], and WRITE while the
-    * edge cache is still live (the r12 lesson: ccLabels' output is a lazy
-    * join against its node frame — unpersisting before the materializing
-    * action re-runs the whole upstream pipeline; the parquet write IS the
-    * materialization here). Every later run is a single parquet read —
-    * the shape a scheduled nightly actually has, where yesterday's labels
-    * are yesterday's OUTPUT.
+    * against itself and solve with [[DedupOps.components]], whose labels
+    * come back cut from the pair lineage, so the parquet write that
+    * materializes them never re-runs the banding (the r12 lesson). Every
+    * later run is a single parquet read — the shape a scheduled nightly
+    * actually has, where yesterday's labels are yesterday's OUTPUT.
     */
   /** The exact on-disk location of the q338/q341 yesterday-labels table for
     * `(dir, threshold)` — the single source of truth for the path formula,
@@ -359,14 +341,8 @@ object SimilarityOps {
         val evens = Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding")).filter(even(col("vec_id")))
         val oldNodes = evens.select(col("vec_id").as("doc_id")).distinct()
-        // canonical pairs, not the symmetric explode (r15, verdict #5)
-        val oldPairs = annNearDupOn(evens, threshold)
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-          .persistTracked()
-        val nOld = oldPairs.count()
-        try DedupOps.ccLabelsFromPairs(spark, nOld, oldNodes, oldPairs)
+        DedupOps.components(oldNodes, annNearDupOn(evens, threshold))
           .write.mode("overwrite").parquet(path.getAbsolutePath)
-        finally oldPairs.unpersist()
         java.nio.file.Files.write(markerF.toPath, snap.getBytes("UTF-8"))
       }
       spark.read.parquet(path.getAbsolutePath)
@@ -416,8 +392,8 @@ object SimilarityOps {
     val d2Pairs = pairs.filter(m4(col("doc_a"), 3) || m4(col("doc_b"), 3))
     val n1 = emb.filter(m4(col("vec_id"), 1)).select(col("vec_id").as("doc_id")).distinct()
     val n2 = emb.filter(m4(col("vec_id"), 3)).select(col("vec_id").as("doc_id")).distinct()
-    val l1 = DedupOps.incrementalCC(spark, l0, n1, d1Pairs).localCheckpoint()
-    val l2 = try DedupOps.incrementalCC(spark, l1, n2, d2Pairs)
+    val l1 = DedupOps.incrementalCC(l0, n1, d1Pairs).localCheckpoint()
+    val l2 = try DedupOps.incrementalCC(l1, n2, d2Pairs)
       finally pairs0.unpersist()
     l2.select(col("doc_id").as("vec_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size",
@@ -861,7 +837,7 @@ object SimilarityOps {
     * vector; the update is one shuffle of (cluster, dim, q) triples —
     * partial-aggregated map-side, so the shuffle moves K×64 rows per
     * partition, not the corpus. `localCheckpoint` truncates the per-round
-    * lineage (the q101/q144/q169 loop pattern). Empty clusters keep their
+    * lineage (the q169 / CC-loop pattern). Empty clusters keep their
     * previous centroid (left join + coalesce) — deterministic, no reseeding
     * randomness.
     */
@@ -2856,7 +2832,7 @@ object SimilarityOps {
     val oldLabels = Tables.embeddings(s, dir)
       .select(col("vec_id").as("doc_id"), col("vec_id").as("label"))
     val newNodes = perturbedDelta(s, dir).select(col("vec_id").as("doc_id"))
-    DedupOps.incrementalCC(s, oldLabels, newNodes, deltaPairs)
+    DedupOps.incrementalCC(oldLabels, newNodes, deltaPairs)
       .select(col("doc_id").as("vec_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))

@@ -598,6 +598,8 @@ class ExtensionSpec extends AnyFunSuite {
 
   test("dedup clusters: star fallback equals label propagation on a high-diameter chain") {
     import spark.implicits._
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // a 60-node chain: diameter 59 — the shape that defeats plain
     // propagation and exercises the large-star/small-star fallback
     val n = 60L
@@ -605,55 +607,46 @@ class ExtensionSpec extends AnyFunSuite {
     val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val edgesSym = chain.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(chain.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // a 2-round budget cannot converge -> the selection logic would fall back
+    // a 2-round budget cannot converge -> the loop would fall back to star
     assert(DedupOps.labelPropagation(nodes, edgesSym, 2).isEmpty)
-    val viaProp = DedupOps.labelPropagation(nodes, edgesSym, 50).get
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaStar = DedupOps.starLabels(nodes, chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaProp = labels(DedupOps.labelPropagation(nodes, edgesSym, 50).get)
+    val viaStar = labels(DedupOps.starLabels(chain))
     assert(viaProp === viaStar, "star contraction must agree with converged propagation")
     assert(viaStar.values.toSet === Set(0L), "one chain = one component rooted at its min")
-    // two chains + an isolated node: per-component minima, singleton keeps itself
+    // two chains + an isolated node: per-component minima; star labels the
+    // pair endpoints only
     val chain2 = ((0L until 30L).map(i => (i, i + 1)) ++ (40L until 59L).map(i => (i, i + 1)))
       .toDF("doc_a", "doc_b")
     val nodes2 = ((0L to 30L) ++ (40L to 59L) ++ Seq(100L)).toDF("doc_id")
-    val star2 = DedupOps.starLabels(nodes2, chain2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val star2 = labels(DedupOps.starLabels(chain2))
     assert((0L to 30L).forall(star2(_) == 0L))
     assert((40L to 59L).forall(star2(_) == 40L))
-    assert(star2(100L) === 100L)
-    // the single-task union-find (ccLabels' measured fast path) must agree
-    // with both distributed algorithms on the same graphs, singletons
-    // included — the three-way equivalence is what makes the edge-count
-    // cutover invisible to every oracle
-    val viaUf = DedupOps.singleTaskCC(nodes, chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(!star2.contains(100L))
+    // components on long ids takes the single-task union-find (both graphs
+    // are far under the cutover) and must agree with star, singletons
+    // included — it joins them back labelling themselves. This equivalence
+    // is what makes the cutover invisible to every oracle.
+    val viaUf = labels(DedupOps.components(nodes, chain))
     assert(viaUf === viaStar, "union-find must agree with star contraction")
-    val uf2 = DedupOps.singleTaskCC(nodes2, chain2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(uf2 === star2, "union-find must agree on multi-component + singleton")
-    // ccLabels routes by the measured edge count: tiny graph -> union-find
-    // result, and a forced loop (threshold 0 via huge nEdges) -> same labels
-    val viaCc = DedupOps.ccLabels(spark, nEdges = 118L, nodes, edgesSym)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaCcLoop = DedupOps.ccLabels(spark,
-        nEdges = DedupOps.SingleTaskCCMaxEdges + 1, nodes, edgesSym)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaCc === viaStar && viaCcLoop === viaStar)
+    val uf2 = labels(DedupOps.components(nodes2, chain2))
+    assert(uf2 === star2 + (100L -> 100L), "union-find must agree on multi-component + singleton")
+    // the full recompute every incremental result is checked against: star
+    // over all edges, ids in no edge labelling themselves
+    def fullRecompute(ids: Seq[Long], pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val star = labels(DedupOps.starLabels(pairs))
+      ids.map(i => i -> star.getOrElse(i, i)).toMap
+    }
     // incremental CC: yesterday = the two chains solved; today a bridge
     // edge merges them, a new chain (200..202) arrives, and node 300 is an
     // isolated newcomer — the contract-and-remap result must equal the
     // full recompute over ALL edges
-    val oldLabels = DedupOps.singleTaskCC(nodes2, chain2)
+    val oldLabels = DedupOps.components(nodes2, chain2)
     val delta = Seq((30L, 40L), (200L, 201L), (201L, 202L), (5L, 202L))
       .toDF("doc_a", "doc_b")
     val newNodes = Seq(200L, 201L, 202L, 300L).toDF("doc_id")
-    val inc = DedupOps.incrementalCC(spark, oldLabels, newNodes, delta)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fullNodes = ((0L to 30L) ++ (40L to 59L) ++ Seq(100L, 200L, 201L, 202L, 300L)).toDF("doc_id")
-    val full = DedupOps.starLabels(fullNodes,
-        chain2.unionByName(delta))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val inc = labels(DedupOps.incrementalCC(oldLabels, newNodes, delta))
+    val fullIds = (0L to 30L) ++ (40L to 59L) ++ Seq(100L, 200L, 201L, 202L, 300L)
+    val full = fullRecompute(fullIds, chain2.unionByName(delta))
     assert(inc === full, "incremental CC must equal the full recompute")
     assert(inc(300L) === 300L && inc(202L) === 0L && inc(45L) === 0L,
       "bridge merges everything through the new chain into component 0; isolates self-label")
@@ -661,19 +654,79 @@ class ExtensionSpec extends AnyFunSuite {
     // applied onto the first incremental OUTPUT must still equal the full
     // recompute — i.e. incrementalCC's output preserves the label-minimality
     // invariant its own input contract demands, so nights compose
-    val incLabels1 = DedupOps.incrementalCC(spark, oldLabels, newNodes, delta)
+    val incLabels1 = DedupOps.incrementalCC(oldLabels, newNodes, delta)
     val delta2 = Seq((100L, 300L), (400L, 401L)).toDF("doc_a", "doc_b")
     val newNodes2 = Seq(400L, 401L).toDF("doc_id")
-    val inc2 = DedupOps.incrementalCC(spark, incLabels1, newNodes2, delta2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fullNodes2 = ((0L to 30L) ++ (40L to 59L)
-      ++ Seq(100L, 200L, 201L, 202L, 300L, 400L, 401L)).toDF("doc_id")
-    val full2 = DedupOps.starLabels(fullNodes2,
-        chain2.unionByName(delta).unionByName(delta2))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val inc2 = labels(DedupOps.incrementalCC(incLabels1, newNodes2, delta2))
+    val full2 = fullRecompute(fullIds ++ Seq(400L, 401L),
+      chain2.unionByName(delta).unionByName(delta2))
     assert(inc2 === full2, "chained incremental CC must equal the full recompute")
     assert(inc2(300L) === 100L && inc2(401L) === 400L,
       "night-2 bridge merges night-1's newcomer with the old isolate; the new chain self-roots")
+  }
+
+  test("components: int ids take the distributed loop and agree with union-find") {
+    import spark.implicits._
+    // The cutover sends LongType ids under SingleTaskCCMaxEdges to the
+    // single-task union-find and everything else to the loop (propagation
+    // with pointer jumping, star fallback, narrowed session clone). Every
+    // registry graph is under the cutover, so casting the ids to int is how
+    // the loop stays exercised — on toy graphs and on q144's real pairs.
+    def asInt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.select(df.columns.toSeq.map(c => col(c).cast("int")): _*)
+    def check(nodes: org.apache.spark.sql.DataFrame, pairs: org.apache.spark.sql.DataFrame): Int = {
+      val viaUf = DedupOps.components(nodes, pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val loop = DedupOps.components(asInt(nodes), asInt(pairs))
+      // the union-find's LongMap labels are longs: int labels prove the loop ran
+      assert(loop.schema("label").dataType === org.apache.spark.sql.types.IntegerType)
+      val viaLoop = loop.collect().map(r => r.getInt(0).toLong -> r.getInt(1).toLong).toMap
+      assert(viaLoop === viaUf, "the loop must agree with union-find")
+      viaUf.values.toSet.size
+    }
+    val chain = (0L until 59L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    assert(check((0L until 60L).toDF("doc_id"), chain) === 1)
+    // two chains + singleton, one chain given in reverse orientation
+    val chain2 = ((0L until 30L).map(i => (i, i + 1)) ++ (40L until 59L).map(i => (i + 1, i)))
+      .toDF("doc_a", "doc_b")
+    assert(check(((0L to 30L) ++ (40L to 59L) ++ Seq(100L)).toDF("doc_id"), chain2) === 3)
+    // sf0.001's 15 users share no capped anchor (the empty-graph case);
+    // sf0.01's graph merges users into real communities
+    val merged = Seq(sf, sf.replace("sf0.001", "sf0.01")).map { dir =>
+      val users = Tables.events(spark, dir).select(col("user_id").as("doc_id")).distinct()
+      check(users, EventOps.cooccurrencePairs(spark, dir)) < users.count()
+    }
+    assert(merged === Seq(false, true))
+  }
+
+  test("components unpersists its pair cache and cuts its labels from the pair lineage") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.storage.StorageLevel
+    // every evaluation of the pair pipeline is counted
+    val evals = spark.sparkContext.longAccumulator("cc-pair-evals")
+    val tick = udf { (a: Long) => evals.add(1); a }
+    val raw = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
+      .select(tick(col("a")).as("a"), col("b"))
+    val nodes = (0L to 12L).toDF("doc_id")
+    for ((route, pairs) <- Seq("union-find" -> raw,
+        "loop" -> raw.select(col("a").cast("int").as("a"), col("b").cast("int").as("b")))) {
+      // the frame components caches: its canonicalised pairs (cached here
+      // first, so the lookup below names exactly that frame)
+      val canon = pairs
+        .select(least(col("a"), col("b")).as("doc_a"), greatest(col("a"), col("b")).as("doc_b"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      assert(canon.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      val out = DedupOps.components(nodes, pairs)
+      assert(canon.storageLevel === StorageLevel.NONE, s"$route: the pair cache must be released")
+      val seen = evals.value
+      val rows = out.collect()
+      assert(rows.length === 13 && rows.count(r => r.get(0) == r.get(1)) === 4)
+      assert(evals.value === seen,
+        s"$route: consuming the labels after the release must not re-run the pair pipeline")
+      assert(out.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.isEmpty,
+        s"$route: the returned plan must not read a cache")
+    }
   }
 
   test("ANN near-dup: exact precision and >=90% recall on a true near-dup corpus (q135)") {

@@ -24,6 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * One extension route: only `GraftExtensions` binds SQL names, optimizer
   * rules or planner strategies into a session, and no operator or streaming
   * path reads an environment variable except the scratch-path override.
+  * One connected-components route: only `DedupOps` names the CC algorithms
+  * and their cutover constants.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -82,7 +84,7 @@ class SourceAuditSpec extends AnyFunSuite {
 
   test("no operator mutates the shared session's shuffle width") {
     // Scoped shuffle-width overrides belong on a session CLONE
-    // (DedupOps.loopFrames / StreamJoinOps.withStatePartitions): a
+    // (the DedupOps.components loop / StreamJoinOps.withStatePartitions): a
     // set-and-restore on the caller's session silently rescopes any other
     // query planned inside the window, and is unsafe the moment two queries
     // share a session. Structural rule: the exact mutation call on a
@@ -98,7 +100,7 @@ class SourceAuditSpec extends AnyFunSuite {
     } yield s"$path:${idx + 1}: ${line.trim}"
     assert(offenders.isEmpty,
       "\nShared-session shuffle-width mutation (use a session clone — " +
-        "DedupOps.loopFrames or GraftSqlBridge.cloneSession — instead):\n" +
+        "GraftSqlBridge.cloneSession, as the DedupOps.components loop does — instead):\n" +
         offenders.mkString("\n"))
   }
 
@@ -120,6 +122,16 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "\nA second extension route (bind through GraftExtensions' table and call " +
         "GraftExtensions.install where session state is needed):\n" + offenders.mkString("\n"))
+  }
+
+  test("DedupOps.components is the only route into the connected-components algorithms") {
+    val CcInternals =
+      raw"labelPropagation|starLabels|endpointLabels|SingleTaskCCMaxEdges|LabelPropMaxRounds".r
+    val offenders = matches(
+      allMainSources.filterNot(_.getFileName.toString == "DedupOps.scala"), CcInternals)
+    assert(offenders.isEmpty,
+      "\nA second route into connected components (call DedupOps.components, or " +
+        "DedupOps.incrementalCC for a delta onto stored labels):\n" + offenders.mkString("\n"))
   }
 
   test("operators and streaming read no environment variable but the scratch path") {
