@@ -543,17 +543,21 @@ class HardeningSpec extends AnyFunSuite {
     val dst = new java.io.File(scratch, "embeddings.parquet").toPath
     java.nio.file.Files.copy(src, dst)
     val s = spark.newSession()
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
     try {
-      val (t1, path, built1) =
+      val (t1, root, built1) =
         SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "idxt", None)
       assert(built1, "first call must build")
       // an unchanged corpus: the snapshot marker validates, no rebuild
       val (_, _, built2) =
         SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "idxt", None)
       assert(!built2, "unchanged corpus must reuse the index")
-      // leave a merge marker so the rebuild can prove it clears batch state
-      val merged = new java.io.File(path, "_GRAFT_MERGED_test")
-      java.nio.file.Files.write(merged.toPath, Array.emptyByteArray)
+      // leave a merge marker so the rebuild can prove batch state is reset
+      java.nio.file.Files.write(new java.io.File(
+        SimilarityOps.activeVersionDir(root).get, "_GRAFT_MERGED_test").toPath,
+        Array.emptyByteArray)
       // in-place regeneration: same bytes, new mtime — the (name, length,
       // mtime) snapshot must change and force a rebuild (the r10-advice
       // stale-probe hole: the old tableExists||path.exists guard would
@@ -562,22 +566,15 @@ class HardeningSpec extends AnyFunSuite {
       val (t3, _, built3) =
         SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "idxt", None)
       assert(built3, "regenerated corpus must force a rebuild")
-      assert(!merged.exists(), "rebuild must clear per-batch merge markers")
+      assert(!new java.io.File(SimilarityOps.activeVersionDir(root).get,
+        "_GRAFT_MERGED_test").exists(), "rebuild must start without per-batch merge markers")
       assert(t1 === t3)
       // the rebuilt index still answers: every band row belongs to a corpus id
       val n = s.table(t3).count()
       assert(n > 0)
       s.sql(s"DROP TABLE $t3")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(path)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(scratch)
-    }
+      rm(root)
+    } finally rm(scratch)
   }
 
   test("compaction swap is crash-safe at every step and mutators are mutually excluded") {
@@ -588,50 +585,49 @@ class HardeningSpec extends AnyFunSuite {
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
+    def location(t: String) = org.apache.spark.sql.graftbridge.GraftSqlBridge
+      .tableLocation(s, t).map(u => new java.io.File(u).getAbsolutePath)
     try {
-      val (tIdx, path, _) =
+      val (tIdx, root, _) =
         SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "idxs", None)
       val rowsBefore = s.table(tIdx).count()
       assert(rowsBefore > 0)
-      val staging = new java.io.File(path.getParentFile, path.getName + "__compact")
-      val old = new java.io.File(path.getParentFile, path.getName + "__old")
+      val v1 = SimilarityOps.activeVersionDir(root).get
 
-      // --- torn swap, crash BETWEEN the two renames (the r11-advice hole):
-      // live index gone, complete staging left behind — recovery must
-      // finish the swap, never fall back to a rebuild
-      rm(staging)
-      org.apache.commons.io.FileUtils.copyDirectory(path, staging) // complete: has _GRAFT_SNAPSHOT
-      assert(path.renameTo(old)) // the rename-aside happened...
-      // ...and the process died here
-      SimilarityOps.recoverCompactSwap(path)
-      assert(path.exists() && !old.exists() && !staging.exists(),
-        "recovery must finish the swap and clear the leftovers")
-      s.sql(s"REFRESH TABLE $tIdx")
-      assert(s.table(tIdx).count() === rowsBefore, "no row may be lost by recovery")
+      // --- crash AFTER a compaction wrote its next version (complete, with
+      // its _GRAFT_SNAPSHOT marker) but BEFORE the pointer flip: the
+      // unflipped dir must be ignored — no rebuild, no re-registration
+      val torn = new java.io.File(root, "v_000002")
+      org.apache.commons.io.FileUtils.copyDirectory(v1, torn)
+      val (_, _, builtTorn) =
+        SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "idxs", None)
+      assert(!builtTorn, "an unflipped version must not force a rebuild")
+      assert(SimilarityOps.activeVersionDir(root).get === v1)
+      assert(location(tIdx) === Some(v1.getAbsolutePath))
+      assert(s.table(tIdx).count() === rowsBefore, "no row may be lost to the torn write")
 
-      // --- torn swap, crash AFTER the second rename (old dir left behind)
-      org.apache.commons.io.FileUtils.copyDirectory(path, old)
-      SimilarityOps.recoverCompactSwap(path)
-      assert(path.exists() && !old.exists())
-
-      // --- incomplete staging + rename-aside done: roll back to the old dir
-      rm(staging)
-      staging.mkdirs() // staged data dir WITHOUT the _GRAFT_SNAPSHOT marker
-      assert(path.renameTo(old))
-      SimilarityOps.recoverCompactSwap(path)
-      assert(path.exists() && !old.exists(), "incomplete staging must roll back")
-      s.sql(s"REFRESH TABLE $tIdx")
+      // --- crash AFTER the flip but BEFORE the catalog was re-pointed (or
+      // another process flipped): the catalog still names the predecessor,
+      // and the next ensureBandIndex must re-register, never rebuild
+      val flipped = new java.io.File(root, "v_000003")
+      org.apache.commons.io.FileUtils.copyDirectory(v1, flipped)
+      java.nio.file.Files.write(new java.io.File(root, "_GRAFT_MANIFEST").toPath,
+        "v_000003\n".getBytes("UTF-8"))
+      assert(location(tIdx) === Some(v1.getAbsolutePath))
+      val (_, _, builtFlipped) =
+        SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "idxs", None)
+      assert(!builtFlipped, "a flipped valid version must be re-registered, not rebuilt")
+      assert(location(tIdx) === Some(flipped.getAbsolutePath))
       assert(s.table(tIdx).count() === rowsBefore)
-      rm(staging)
 
       // --- mutator mutual exclusion: a merge attempting to append while a
       // compaction holds the index lock must WAIT until the lock releases
-      // (an unlocked merge would append into a directory about to be
-      // unlinked by the swap)
+      // (an unlocked merge would append into a version the flip is about
+      // to supersede)
       val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val inLock = new java.util.concurrent.CountDownLatch(1)
       val t1 = new Thread(() => {
-        SimilarityOps.withIndexLock(path) {
+        SimilarityOps.withIndexLock(root) {
           order.add("compact-start"); inLock.countDown()
           Thread.sleep(400)
           order.add("compact-end")
@@ -639,36 +635,40 @@ class HardeningSpec extends AnyFunSuite {
       })
       val t2 = new Thread(() => {
         inLock.await()
-        SimilarityOps.withIndexLock(path) { order.add("merge") }
+        SimilarityOps.withIndexLock(root) { order.add("merge") }
       })
       t1.start(); t2.start(); t1.join(10000); t2.join(10000)
       assert(order.toArray.toSeq === Seq("compact-start", "compact-end", "merge"),
         s"merge must serialize behind the compaction lock, got $order")
 
-      // --- a real compact under the new swap: force the trigger with
-      // per-bucket splits, compact, and prove rows + markers survive
+      // --- a real compact: force the trigger with per-bucket splits,
+      // compact, and prove rows + markers survive into the new version
+      val active = SimilarityOps.activeVersionDir(root).get
       java.nio.file.Files.write(
-        new java.io.File(path, "_GRAFT_MERGED_swaptest").toPath, Array.emptyByteArray)
+        new java.io.File(active, "_GRAFT_MERGED_swaptest").toPath, Array.emptyByteArray)
       s.table(tIdx).repartition(32, org.apache.spark.sql.functions.col("bk"),
           org.apache.spark.sql.functions.col("bv"))
         .write.format("parquet")
         .bucketBy(SimilarityOps.BandIndexBuckets, "bk", "bv").sortBy("bk", "bv")
-        .option("path", path.getAbsolutePath).mode("append").saveAsTable(tIdx)
-      val filesBefore = path.listFiles().count(_.getName.startsWith("part-"))
+        .option("path", active.getAbsolutePath).mode("append").saveAsTable(tIdx)
+      val filesBefore = active.listFiles().count(_.getName.startsWith("part-"))
       assert(filesBefore > SimilarityOps.BandIndexBuckets * SimilarityOps.CompactTriggerFilesPerBucket,
         s"test setup must exceed the trigger, got $filesBefore files")
-      assert(SimilarityOps.compactBandIndex(s, tIdx, path))
-      assert(path.listFiles().count(_.getName.startsWith("part-"))
+      assert(SimilarityOps.compactBandIndex(s, tIdx, root))
+      val compacted = SimilarityOps.activeVersionDir(root).get
+      assert(compacted.getName === "v_000004", "naming must skip past the unflipped dir")
+      assert(!torn.exists(), "the unflipped dir must be swept by the compaction's flip")
+      assert(compacted.listFiles().count(_.getName.startsWith("part-"))
         === SimilarityOps.BandIndexBuckets)
       assert(s.table(tIdx).count() === rowsBefore * 2) // append doubled the rows
-      assert(new java.io.File(path, "_GRAFT_MERGED_swaptest").exists(),
-        "merge markers must survive the swap")
-      assert(new java.io.File(path, "_GRAFT_SNAPSHOT").exists())
+      assert(new java.io.File(compacted, "_GRAFT_MERGED_swaptest").exists(),
+        "merge markers must be carried to the new version")
+      assert(new java.io.File(compacted, "_GRAFT_SNAPSHOT").exists())
       // the bucket spec was DERIVED from the catalog, not re-hardcoded
       val spec = org.apache.spark.sql.graftbridge.GraftSqlBridge.bucketSpec(s, tIdx)
       assert(spec === Some((SimilarityOps.BandIndexBuckets, Seq("bk", "bv"), Seq("bk", "bv"))))
       s.sql(s"DROP TABLE $tIdx")
-      rm(path)
+      rm(root)
     } finally rm(scratch)
   }
 
@@ -682,10 +682,10 @@ class HardeningSpec extends AnyFunSuite {
     }
     try {
       val (t1, root, built1) =
-        SimilarityOps.ensureManifestIndex(s, scratch.getAbsolutePath, "mide", None)
+        SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "mide", None)
       assert(built1, "first call must build")
       val (_, _, built2) =
-        SimilarityOps.ensureManifestIndex(s, scratch.getAbsolutePath, "mide", None)
+        SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "mide", None)
       assert(!built2, "unchanged corpus must resolve the active version")
       val v1 = SimilarityOps.activeVersionDir(root).get
       // a per-batch merge marker in the active version: the corpus
@@ -697,7 +697,7 @@ class HardeningSpec extends AnyFunSuite {
         new java.io.File(v1, "_GRAFT_MERGED_gen1").toPath, Array.emptyByteArray)
       assert(dst.toFile.setLastModified(dst.toFile.lastModified() + 2000))
       val (t3, _, built3) =
-        SimilarityOps.ensureManifestIndex(s, scratch.getAbsolutePath, "mide", None)
+        SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "mide", None)
       assert(built3, "regenerated corpus must force a rebuild")
       assert(t1 === t3)
       val v2 = SimilarityOps.activeVersionDir(root).get
@@ -720,7 +720,7 @@ class HardeningSpec extends AnyFunSuite {
     }
     try {
       val (tIdx, root, built) =
-        SimilarityOps.ensureManifestIndex(s, scratch.getAbsolutePath, "mani", None)
+        SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "mani", None)
       assert(built)
       val v1 = SimilarityOps.activeVersionDir(root).get
       assert(v1.getName === "v_000001")
@@ -735,7 +735,7 @@ class HardeningSpec extends AnyFunSuite {
       val pinnedReader = s.read.parquet(v1.getAbsolutePath)
       assert(pinnedReader.inputFiles.nonEmpty) // listing resolved, pre-flip
 
-      assert(SimilarityOps.compactManifestIndex(s, tIdx, root,
+      assert(SimilarityOps.compactBandIndex(s, tIdx, root,
         minFilesPerBucket = 0))
       val v2 = SimilarityOps.activeVersionDir(root).get
       assert(v2.getName === "v_000002")
@@ -754,7 +754,7 @@ class HardeningSpec extends AnyFunSuite {
       debris.mkdirs()
       java.nio.file.Files.write(new java.io.File(debris, "part-junk").toPath,
         Array[Byte](1, 2, 3))
-      assert(SimilarityOps.compactManifestIndex(s, tIdx, root,
+      assert(SimilarityOps.compactBandIndex(s, tIdx, root,
         minFilesPerBucket = 0))
       val v8 = SimilarityOps.activeVersionDir(root).get
       assert(v8.getName === "v_000008", "naming must skip past debris, not reuse it")
@@ -768,7 +768,7 @@ class HardeningSpec extends AnyFunSuite {
       // version WITHOUT a rebuild — the snapshot marker still matches
       s.sql(s"DROP TABLE $tIdx")
       val (_, _, built2) =
-        SimilarityOps.ensureManifestIndex(s, scratch.getAbsolutePath, "mani", None)
+        SimilarityOps.ensureBandIndex(s, scratch.getAbsolutePath, "mani", None)
       assert(!built2, "a valid manifest index must be re-registered, not rebuilt")
       val loc = org.apache.spark.sql.graftbridge.GraftSqlBridge
         .tableLocation(s, tIdx).map(u => new java.io.File(u).getAbsolutePath)

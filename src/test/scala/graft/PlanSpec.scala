@@ -451,68 +451,78 @@ class PlanSpec extends AnyFunSuite {
         "pmod\\(xxhash64\\([^)]*\\), \\d+\\)".r.findAllIn(p).mkString("\n"))
   }
 
+  /** The stored-index probe shape, asserted on the final (post-AQE) plan of
+    * an executed probe: the index is read AS BUCKETS — the scan itself
+    * satisfies the join's clustering, so the corpus side of the candidate
+    * join moves nothing (the whole point of paying the banding at ingest)
+    * — and the only band-key exchange is the delta side's.
+    */
+  private def assertBucketedProbe(df: DataFrame, what: String): Unit = {
+    val p = plan(df).split("== Initial Plan ==").head
+    assert(p.contains("Bucketed: true"),
+      s"$what index scan must use the bucketed layout:\n" + p.take(1500))
+    val bandEx = "Exchange hashpartitioning\\(bk#".r.findAllIn(p).size
+    assert(bandEx == 1,
+      s"$what: exactly one band-key exchange (the delta side) expected, got $bandEx:\n" +
+        "hashpartitioning\\([^)]*\\)".r.findAllIn(p).mkString("\n"))
+  }
+
   test("band-index probe: bucketed corpus scan, exchange only on the delta side (q327)") {
     val df = SimilarityOps.indexProbeNearDup(spark, sf)
     df.collect()
-    val p = plan(df).split("== Initial Plan ==").head
-    // the stored index is read AS BUCKETS — the scan itself satisfies the
-    // join's clustering, so the corpus side of the candidate join moves
-    // nothing (the whole point of paying the banding at ingest)
-    assert(p.contains("Bucketed: true"),
-      "index scan must use the bucketed layout:\n" + p.take(1500))
-    val bandEx = "Exchange hashpartitioning\\(bk#".r.findAllIn(p).size
-    assert(bandEx == 1,
-      s"exactly one band-key exchange (the delta side) expected, got $bandEx:\n" +
-        "hashpartitioning\\([^)]*\\)".r.findAllIn(p).mkString("\n"))
+    assertBucketedProbe(df, "q327")
   }
 
   test("band-index merge: probe of the merged index stays bucketed, delta-side exchange only (q330)") {
     val df = SimilarityOps.indexMergeProbeNearDup(spark, sf)
     df.collect()
-    val p = plan(df).split("== Initial Plan ==").head
     // after the append each bucket has 2+ files — the scan must STILL be
     // bucketed (the merged rows joined exchange-free is the whole point of
     // merging instead of rebuilding)
-    assert(p.contains("Bucketed: true"),
-      "merged index scan must use the bucketed layout:\n" + p.take(1500))
-    val bandEx = "Exchange hashpartitioning\\(bk#".r.findAllIn(p).size
-    assert(bandEx == 1,
-      s"exactly one band-key exchange (the delta side) expected, got $bandEx:\n" +
-        "hashpartitioning\\([^)]*\\)".r.findAllIn(p).mkString("\n"))
+    assertBucketedProbe(df, "q330 merged")
   }
 
   test("band-index compaction: one file per bucket, scan still bucketed, pairs unchanged (q333)") {
     val df = SimilarityOps.indexCompactProbeNearDup(spark, sf)
     val rows = df.collect()
-    val p = plan(df).split("== Initial Plan ==").head
-    // the swap must preserve the bucket DDL: probe plan shape identical to
-    // the merged-index probe (bucketed scan, only the delta side exchanges)
-    assert(p.contains("Bucketed: true"),
-      "compacted index scan must use the bucketed layout:\n" + p.take(1500))
-    val bandEx = "Exchange hashpartitioning\\(bk#".r.findAllIn(p).size
-    assert(bandEx == 1,
-      s"exactly one band-key exchange (the delta side) expected, got $bandEx:\n" +
-        "hashpartitioning\\([^)]*\\)".r.findAllIn(p).mkString("\n"))
+    // the compacted version is registered under the catalog-derived bucket
+    // DDL: probe plan shape identical to the merged-index probe
+    assertBucketedProbe(df, "q333 compacted")
     // compaction is physical-only: the build(¼)+3-merges index yields the
     // same pair set as the probe of the one-shot full index (q327)
     assert(rows.toSeq === SimilarityOps.indexProbeNearDup(spark, sf).collect().toSeq)
     // 32 data files (8 build + 3×8 merge) became exactly one per bucket
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_bkt_idxk_${SimilarityOps.bandIndexConstantsFp}_" +
+    val root = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_mfx_idxk_${SimilarityOps.bandIndexConstantsFp}_" +
         sf.replaceAll("[^A-Za-z0-9]", "_"))
-    val dataFiles = path.listFiles().filter(_.getName.startsWith("part-"))
+    val active = SimilarityOps.activeVersionDir(root).get
+    val dataFiles = active.listFiles().filter(_.getName.startsWith("part-"))
     assert(dataFiles.length === 8,
       s"expected one data file per bucket, got ${dataFiles.length}")
-    // markers survive the swap: a bench rep or a restarted job must see the
-    // merges as done (exactly-once) and the snapshot as current (no rebuild)
-    val names = path.listFiles().map(_.getName).toSet
+    // markers are carried into the compacted version: a bench rep or a
+    // restarted job must see the merges as done (exactly-once) and the
+    // snapshot as current (no rebuild)
+    val names = active.listFiles().map(_.getName).toSet
     assert(names.contains("_GRAFT_SNAPSHOT"))
     assert(Seq(1, 2, 3).forall(r => names.contains(s"_GRAFT_MERGED_q$r")))
     // idempotent: an already-compact index is returned untouched
     val s2 = spark.newSession()
-    val (tIdx, path2, _) = SimilarityOps.ensureBandIndex(
+    val (tIdx, root2, built) = SimilarityOps.ensureBandIndex(
       s2, sf, "idxk", Some(org.apache.spark.sql.functions.col("vec_id") % 4 === 0))
-    assert(!SimilarityOps.compactBandIndex(s2, tIdx, path2))
+    assert(!built && root2 === root)
+    assert(!SimilarityOps.compactBandIndex(s2, tIdx, root2))
+  }
+
+  test("band-index probes after a pointer flip and for k-NN keep the bucketed shape (q342, q343)") {
+    // q342 probes the version its compaction just flipped to; q343 probes
+    // its own index with no Hamming gate — both must read the corpus side
+    // as buckets with the delta side the only band-key exchange, as q327
+    val q342 = SimilarityOps.indexManifestProbeNearDup(spark, sf)
+    q342.collect()
+    assertBucketedProbe(q342, "q342")
+    val q343 = SimilarityOps.indexKnnDelta(spark, sf)
+    q343.collect()
+    assertBucketedProbe(q343, "q343")
   }
 
   test("adaptive salted agg: hot key arms the (key,salt) phase, uniform keys stay single-shuffle (q334)") {

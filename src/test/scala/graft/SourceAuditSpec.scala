@@ -25,7 +25,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * rules or planner strategies into a session, and no operator or streaming
   * path reads an environment variable except the scratch-path override.
   * One connected-components route: only `DedupOps` names the CC algorithms
-  * and their cutover constants.
+  * and their cutover constants. One stored band-index lifecycle: no
+  * rename-aside swap, and one function creates a band index.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -132,6 +133,17 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "\nA second route into connected components (call DedupOps.components, or " +
         "DedupOps.incrementalCC for a delta onto stored labels):\n" + offenders.mkString("\n"))
+  }
+
+  test("one band-index lifecycle: no rename-aside swap and a single band-index builder") {
+    val swap = matches(allMainSources, raw"recoverCompactSwap|__compact|__old".r)
+    assert(swap.isEmpty,
+      "\nA rename-aside swap is back (stored band indexes flip a manifest to a " +
+        "new version dir, see SimilarityOps.ensureBandIndex):\n" + swap.mkString("\n"))
+    val builders = matches(allMainSources, raw"bucketBy\(BandIndexBuckets".r)
+    assert(builders.size == 1,
+      "\nExpected exactly one band-index builder (SimilarityOps.ensureBandIndex); " +
+        "later writers derive the bucket spec from the catalog:\n" + builders.mkString("\n"))
   }
 
   test("operators and streaming read no environment variable but the scratch path") {
