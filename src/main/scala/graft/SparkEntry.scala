@@ -605,7 +605,7 @@ object SparkEntry {
     // -- ADAPTIVE salt, armed: measured hot key fans out, full-outer recovery ----
     "q331_salted_adaptive"     -> ((s, d) => CoreOps.adaptiveSaltedHotKeyAudit(s, d)),
     // -- AUTO gate width from θ alone: no flags, arms 64-bit@24 at θ=0.9 ---------
-    "q332_auto_gated_neardup"  -> ((s, d) => SimilarityOps.autoGatedDerivedNearDup(s, d)),
+    "q332_auto_gated_neardup"  -> ((s, d) => SimilarityOps.derivedAutoGatedNearDup(s, d)),
     // -- index COMPACTION: build → 3 merges → compact to 1 file/bucket → probe ---
     "q333_band_index_compact"  -> ((s, d) => SimilarityOps.indexCompactProbeNearDup(s, d)),
     // -- ADAPTIVE two-phase agg: measured straggler ratio arms the salt phase ----

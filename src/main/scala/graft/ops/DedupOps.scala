@@ -118,10 +118,8 @@ object DedupOps {
                      forceGeneral: Boolean = false): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), array_distinct(words(col("text"))).as("ws0"))
-    (if (forceGeneral) None else smallVocab(docs)) match {
-      case Some(vocab) => nearDupJaccardMask(docs, vocab, threshold)
-      case None        => nearDupJaccardGeneral(spark, docs, threshold)
-    }
+    if (forceGeneral) nearDupJaccardGeneral(spark, docs, threshold)
+    else nearDupPairsOn(spark, docs, threshold)
   }
 
   /** Bounded cardinality probe for the dense-domain path: collect the
@@ -151,8 +149,8 @@ object DedupOps {
   }
 
   /** Adaptive pair join over a prepared `(doc_id, ws0)` frame: probe the
-    * dictionary cardinality, then the bitmask or PPJoin path (same choice as
-    * [[nearDupJaccard]], reusable for pre-contracted inputs).
+    * dictionary cardinality, then the bitmask or PPJoin path (the choice
+    * behind [[nearDupJaccard]], reusable for pre-contracted inputs).
     */
   private[graft] def nearDupPairsOn(spark: SparkSession, docs: DataFrame,
                                     threshold: Double): DataFrame =
@@ -223,14 +221,9 @@ object DedupOps {
     */
   private def nearDupJaccardMask(docs: DataFrame, vocab: Array[String],
                                  threshold: Double): DataFrame = {
-    // dictionary as a literal map word → bit value (1L << index); the mask is
-    // an order-independent OR-fold, so no sort and no shuffle to build it
-    val bitMap = map(vocab.zipWithIndex.toIndexedSeq.flatMap {
-      case (w, i) => Seq(lit(w), lit(1L << i))
-    }: _*)
-    val masks = docs.select(col("doc_id"),
-      aggregate(transform(col("ws0"), w => element_at(bitMap, w)),
-        lit(0L), (acc, b) => acc.bitwiseOR(b)).as("mask"))
+    // the mask is an order-independent OR-fold over a literal dictionary
+    // map, so no sort and no shuffle to build it
+    val masks = docs.select(col("doc_id"), maskExpr(vocab, col("ws0")).as("mask"))
     val groups = masks.groupBy(col("mask"))
       .agg(collect_list(col("doc_id")).as("ids"), count(lit(1)).as("n"))
 

@@ -102,12 +102,18 @@ object SimilarityOps {
   }
   private def planeCol(i: Int): Column = array(hyperplane(i).map(lit): _*)
 
-  def annBuckets(spark: SparkSession, dir: String, bits: Int = 8): DataFrame = {
-    val sigBits = (0 until bits).map { i =>
+  /** The packed `nBits`-plane sign signature of `embedding`: bit i =
+    * sign(⟨v, g_i⟩) over the Weyl planes [[hyperplane]] — q45's 8-bit
+    * bucket and the 32-bit ANN band signature alike.
+    */
+  private def planeSignature(nBits: Int): Column =
+    (0 until nBits).map { i =>
       when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
+    }.reduce(_ + _)
+
+  def annBuckets(spark: SparkSession, dir: String, bits: Int = 8): DataFrame = {
     Tables.embeddings(spark, dir)
-      .select(col("vec_id"), sigBits.reduce(_ + _).as("bucket"))
+      .select(col("vec_id"), planeSignature(bits).as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_vectors"))
       .orderBy(col("bucket"))
@@ -153,61 +159,36 @@ object SimilarityOps {
     * `knownRowCount` lets a caller that already ran a count() job (the
     * [[embeddingNearDup]] cap gate) thread it through instead of paying a
     * second full-table job for the byte-gate estimate.
+    *
+    * `gate` = (sketch bits, max Hamming) arms the SRP Hamming prefilter:
+    * every vector also gets the 16- or 64-bit packed sign sketch, the band
+    * rows carry it (one extra long on the skinny shuffle), and candidate
+    * pairs whose sketch Hamming distance exceeds the width are dropped
+    * INSIDE the band join — before the dedup shuffle and the wide exact
+    * verify. Without a `gate`, the overload below takes
+    * [[srpAutoGate]]`(threshold)`, the cheapest sketch whose
+    * output-preserving width still cuts: 64 bits at θ = 0.9 (q332), 16 bits
+    * only at near-exact θ ≳ 0.9993 (q337), none at θ = 0.35 (q135's plan
+    * carries no sketch). q319 passes `None` as the ungated control; q307
+    * and q321 pass their calibrated constants.
     */
   private[graft] def annNearDupOn(e0: DataFrame, threshold: Double,
-      knownRowCount: Option[Long] = None, autoGate: Boolean = true): DataFrame = {
-    val nBits = AnnBands * AnnRowsPerBand
-    val sigBits = (0 until nBits).map { i =>
-      when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    // Opt-in SRP Hamming prefilter (the q306 calibration's consumer): when
-    // the session carries [[SrpGateConf]], every vector additionally gets
-    // the 16-bit packed sign sketch, the band rows carry it (one extra long
-    // on the skinny shuffle), and candidate pairs whose sketch Hamming
-    // distance exceeds the gate are dropped INSIDE the band join — before
-    // the dedup shuffle and before the (wide) exact-verify joins ever see
-    // them. Output-preserving by the gate's calibration contract
-    // ([[SrpGateMaxH]]); enforced cross-engine by q307 hash-matching q135's
-    // ungated oracle.
-    val gate16 = e0.sparkSession.conf.getOption(SrpGateConf).map(_.toInt)
-    val gate64conf = e0.sparkSession.conf.getOption(Srp64GateConf).map(_.toInt)
-    require(gate16.isEmpty || gate64conf.isEmpty,
-      "arm at most one SRP gate (16- or 64-bit) per session clone")
-    // Threshold-aware automatic gate (the q322/q329 decision rule as code,
-    // not prose): with no explicit gate conf, [[srpAutoGate]] picks the
-    // CHEAPEST sketch whose safe width still cuts — 16-bit at near-exact
-    // thresholds (θ ≳ 0.998, q337), 64-bit at θ ≳ 0.88 (q332), none below
-    // — so annNearDup(0.9) gets the paying gate and annNearDup(0.35) the
-    // byte-identical ungated plan, no session flags. `autoGate = false` is
-    // the measurement hook: q319 stays the ungated control the q321/q332
-    // preservation proofs compare against.
-    val auto = if (autoGate && gate16.isEmpty && gate64conf.isEmpty)
-      srpAutoGate(threshold) else None
-    val gate64 = gate64conf.orElse(auto.collect { case (64, w) => w })
-    val gateMaxH = gate16.orElse(gate64)
-      .orElse(auto.collect { case (16, w) => w })
-    val use16 = gate16.isDefined || auto.exists(_._1 == 16)
+      knownRowCount: Option[Long], gate: Option[(Int, Int)]): DataFrame = {
     // signature + norm computed once per vector; persisted: band explode and
     // both verify sides would re-derive 32 dot products per vector each
-    val eBase = e0.select(col("vec_id"), col("embedding"),
-        sigBits.reduce(_ + _).as("sig"),
-        sqrt(dotp(col("embedding"), col("embedding"))).as("nrm"))
-    val e = (if (gate64.isDefined) withSrpSketch64(eBase)
-      else if (use16) withSrpSketch(eBase)
-      else eBase).persistTracked()
+    val signed = withBandSignature(e0)
+    val e = (gate match {
+      case Some((64, _)) => withSrpSketch64(signed)
+      case Some((16, _)) => withSrpSketch(signed)
+      case Some((bits, _)) => throw new IllegalArgumentException(s"no $bits-bit SRP sketch (16 or 64)")
+      case None => signed
+    }).persistTracked()
     // band keys: 4-bit slices of the signature; candidates share any band.
     // The join moves three longs per row (8 rows per vector), never vectors.
-    val bandStruct = e.select(col("vec_id") +: gateMaxH.map(_ => col("srp")).toSeq :+ explode(expr(
-        s"transform(sequence(0, ${AnnBands - 1}), b -> struct(b AS bk, shiftright(sig, CAST(b AS INT) * $AnnRowsPerBand) & ${(1 << AnnRowsPerBand) - 1} AS bv))")).as("b"): _*)
-    val banded = bandStruct.select(
-      col("vec_id") +: gateMaxH.map(_ => col("srp")).toSeq
-        :+ col("b.bk").as("bk") :+ col("b.bv").as("bv"): _*)
-    val bandCond = col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv") &&
-      col("a.vec_id") < col("b.vec_id")
-    val joinCond = gateMaxH match {
-      case Some(m) => bandCond &&
-        call_function("bit_count", col("a.srp").bitwiseXOR(col("b.srp"))) <= lit(m)
-      case None => bandCond
+    val banded = explodeBands(e, gate.map(_ => "srp").toSeq)
+    val joinCond = gate match {
+      case Some((_, maxH)) => selfBandCond && hamming(col("a.srp"), col("b.srp")) <= lit(maxH)
+      case None => selfBandCond
     }
     val cands = banded.as("a").join(banded.as("b"), joinCond)
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
@@ -219,7 +200,7 @@ object SimilarityOps {
     // (no shuffle of the candidate multiset); past the byte gate → shuffle
     // hash join on vec_id, whose volume scales with the candidate count —
     // never the 8 GB broadcast wall at 100× vector counts.
-    val estBytes = knownRowCount.getOrElse(e.count()) * (64L * 4L + 64L) // 64 float dims + row overhead
+    val estBytes = knownRowCount.getOrElse(e.count()) * VecRowBytes
     val va = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
     val vb = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
     cands.join(DedupOps.gatedVerifySide(va, estBytes), "id_a")
@@ -229,6 +210,27 @@ object SimilarityOps {
       .select(col("id_a"), col("id_b"), OracleMath.stableRound(col("sim"), 6).as("sim"))
       .orderBy(col("id_a"), col("id_b"))
   }
+
+  /** [[annNearDupOn]] gated by [[srpAutoGate]]`(threshold)`. */
+  private[graft] def annNearDupOn(e0: DataFrame, threshold: Double,
+      knownRowCount: Option[Long] = None): DataFrame =
+    annNearDupOn(e0, threshold, knownRowCount, srpAutoGate(threshold))
+
+  /** Estimated in-memory bytes of one (vec_id, embedding, nrm) verify-side
+    * row: 64 float dims + row overhead.
+    */
+  private val VecRowBytes = 64L * 4L + 64L
+
+  /** The self-join band condition: two band rows agree on (band key, band
+    * value), ordered ids so each unordered pair is probed once.
+    */
+  private def selfBandCond: Column =
+    col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv") &&
+      col("a.vec_id") < col("b.vec_id")
+
+  /** Hamming distance of two packed sketch columns. */
+  private[graft] def hamming(a: Column, b: Column): Column =
+    call_function("bit_count", a.bitwiseXOR(b))
 
   /** Semantic dedup clusters — the embedding-space analog of
     * [[graft.ops.DedupOps.dedupClusters]]: connected components over the
@@ -441,8 +443,8 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val isEval = pmod(col("vec_id") * lit(RetrievalOps.EvalHashMult), lit(100L)) <
       lit(RetrievalOps.EvalPct)
-    val qsk = withBandSketch64(e.filter(isEval))
-    val trn = withBandSketch64(e.filter(!isEval)).persistTracked()
+    val qsk = withBandSignature(e.filter(isEval))
+    val trn = withBandSignature(e.filter(!isEval)).persistTracked()
     val qBands = explodeBands(qsk, Seq.empty)
       .select(col("vec_id").as("q_id"), col("bk"), col("bv"))
     val tBands = explodeBands(trn, Seq.empty)
@@ -1494,10 +1496,8 @@ object SimilarityOps {
     val qs = e.filter(isEval)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("srp").as("q_srp"))
     val tr = e.filter(!isEval)
-    val hamming = call_function("bit_count",
-      col("q_srp").bitwiseXOR(col("srp"))).cast("long")
     tr.crossJoin(broadcast(qs))
-      .select(hamming.as("h"),
+      .select(hamming(col("q_srp"), col("srp")).cast("long").as("h"),
         OracleMath.stableRound(cosine(col("embedding"), col("q_emb")), 6)
           .cast(d18).as("cos_q"))
       .groupBy(col("h"))
@@ -1511,13 +1511,8 @@ object SimilarityOps {
       .orderBy(col("h"))
   }
 
-  /** Session conf (max Hamming distance, bits) that arms the SRP sketch
-    * prefilter inside [[annNearDupOn]]'s band join. Opt-in (the q284 flag
-    * pattern): unset ⇒ the candidate path is byte-identical to round 8.
-    */
-  private[graft] val SrpGateConf = "graft.sim.srpGateMaxH"
-
-  /** The output-preserving gate width for the corpus threshold (0.35):
+  /** The output-preserving 16-bit gate width for the corpus threshold
+    * (0.35), which q307 passes to [[annNearDupOn]] as `Some((16, 14))`:
     * measured true-pair sketch Hamming maxima are 11 (sf0.001), 12 (sf0.01),
     * 13 (sf0.1) — monotone in corpus size because more pairs sample the
     * binomial tail — and the +1 margin covers the next unobserved bucket
@@ -1527,7 +1522,8 @@ object SimilarityOps {
     * (θ ≈ 69°, flip-prob 0.39/bit) the safe gate only trims the far tail —
     * exactly what the q306 decision table says; q308 quantifies the cut at
     * this and at tighter thresholds, where the same sketch removes most of
-    * the candidate space.
+    * the candidate space. Calibrated for θ = 0.35 only; every other
+    * threshold takes its width from [[srpAutoGate]].
     */
   val SrpGateMaxH = 14
 
@@ -1540,13 +1536,11 @@ object SimilarityOps {
   private[graft] def withSrpSketch(df: DataFrame): DataFrame =
     df.withColumn("srp", graft.functions.VectorFunctions.srp16(col("embedding")))
 
-  /** Session conf arming the 64-bit SRP gate inside [[annNearDupOn]] (same
-    * clone-scoped opt-in as [[SrpGateConf]]; at most one gate per clone).
-    */
-  private[graft] val Srp64GateConf = "graft.sim.srp64GateMaxH"
-
   /** Output-preserving 64-bit gate width for the θ = 0.9 near-dup corpus
-    * ([[derivedDupCorpus]]): measured max true-pair Hamming is 12 / 11 / 14
+    * ([[derivedDupCorpus]]), passed as the gate `Some((64, 24))` by q321 and
+    * hard-wired into the delta probes (q324, [[probeIndex]], q325); at
+    * θ = 0.9 [[srpAutoGate]] derives the same width (q332). Measured max
+    * true-pair Hamming is 12 / 11 / 14
     * (sf0.001 / 0.01 / 0.1 — [[srp64GateReport]]'s `max_true_h`), and the
     * margin to 24 covers ~4σ of the true-pair binomial (cos ≥ 0.9578 ⇒
     * flip-prob ≤ 0.093/bit ⇒ H ~ Binom(64, ≤0.093), mean ≤ 6, σ ≈ 2.4;
@@ -1634,7 +1628,7 @@ object SimilarityOps {
 
   /** Threshold-driven automatic SRP gate — the decision rule the q322/q329
     * measurements established, derived from θ alone so [[annNearDup]]
-    * callers get the right gate without session flags. Returns
+    * callers get the right gate from the threshold alone. Returns
     * `(sketchBits, gateWidth)` for the CHEAPEST sketch whose exact-tail
     * width ([[srpExactWidth]]) still cuts, or None:
     *
@@ -1668,23 +1662,16 @@ object SimilarityOps {
         (n, srpExactWidth(n, threshold))
     }
 
-  /** 64-bit-only view of [[srpAutoGate]] (the q332 pin and the historical
-    * rule name): the width the auto rule would arm the 64-bit sketch at.
-    */
-  private[graft] def srp64AutoWidth(threshold: Double): Option[Int] = {
-    val w = srpExactWidth(64, threshold)
-    if (w <= srpArmCutoff(64)) Some(w) else None
-  }
-
   /** q332 — the automatic gate's registry consumer: [[annNearDupOn]] over
-    * the derived duplicate corpus at θ = 0.9 with NO session flags — the
-    * [[srp64AutoWidth]] rule arms the 64-bit gate at width 24 from the
-    * threshold alone (plan-pinned), and the result hash-matches q319's
-    * UNGATED oracle at every SF: a user calling the one entry point gets
-    * q321's 93 % candidate cut for free, or no gate at all at θ = 0.35
-    * (q135's plan stays byte-identical — its digest snapshot is the pin).
+    * the derived duplicate corpus at θ = 0.9 with the gate argument left at
+    * its default — [[srpAutoGate]]`(0.9)` arms the 64-bit gate at width 24
+    * from the threshold alone (plan-pinned), and the result hash-matches
+    * q319's UNGATED oracle at every SF: a user calling the one entry point
+    * gets q321's 93 % candidate cut for free, or no gate at all at
+    * θ = 0.35 (q135's plan stays byte-identical — its digest snapshot is
+    * the pin).
     */
-  def autoGatedDerivedNearDup(spark: SparkSession, dir: String): DataFrame = {
+  def derivedAutoGatedNearDup(spark: SparkSession, dir: String): DataFrame = {
     annNearDupOn(derivedDupCorpus(spark, dir), 0.9)
   }
 
@@ -1760,8 +1747,8 @@ object SimilarityOps {
   val MidSimThreshold = 0.65
 
   /** q337 — the 16-bit auto gate's registry consumer: [[annNearDupOn]] over
-    * the NEAR-EXACT corpus at θ = [[NearExactThreshold]] = 0.9995 with no
-    * session flags — [[srpAutoGate]] arms the 16-BIT sketch at width 4
+    * the NEAR-EXACT corpus at θ = [[NearExactThreshold]] = 0.9995 with the
+    * default gate — [[srpAutoGate]] arms the 16-BIT sketch at width 4
     * (plan-pinned: the plan carries `graft_srp16`, not `graft_srp64`), the
     * cheapest gate that still cuts, and the result hash-matches the
     * ungated oracle at every SF. Preservation now holds by the SAME exact
@@ -1797,42 +1784,40 @@ object SimilarityOps {
 
   /** q319 — ANN near-dup at the REAL dedup threshold (0.9) over the derived
     * duplicate corpus: the same band-OR blocking + exact-cosine verify as
-    * q135, UNGATED — the oracle twin replays derivation, banding and verify,
-    * and is also q321's oracle (the cross-engine proof the 64-bit gate is
-    * output-preserving).
+    * q135, UNGATED (gate `None`) — the oracle twin replays derivation,
+    * banding and verify, and is also q321's oracle (the cross-engine proof
+    * the 64-bit gate is output-preserving).
     */
   def derivedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    annNearDupOn(derivedDupCorpus(spark, dir), 0.9, autoGate = false)
+    annNearDupOn(derivedDupCorpus(spark, dir), 0.9, None, gate = None)
   }
 
-  /** q321 — q319 with the 64-bit SRP Hamming gate ARMED (clone-scoped conf,
-    * the q307 pattern at the width and threshold where the gate finally
+  /** q321 — q319 with the 64-bit SRP Hamming gate ARMED by argument
+    * (`Some((64, Srp64GateMaxH))`, the width and threshold where the gate
     * PAYS): candidates drop inside the band join before the dedup shuffle
     * and the wide verify; output hash-matches q319's ungated oracle.
     */
   def srp64GatedDerivedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val s2 = org.apache.spark.sql.graftbridge.GraftSqlBridge.cloneSession(spark)
-    s2.conf.set(Srp64GateConf, Srp64GateMaxH.toString)
-    annNearDupOn(derivedDupCorpus(s2, dir), 0.9)
+    annNearDupOn(derivedDupCorpus(spark, dir), 0.9, None, gate = Some((64, Srp64GateMaxH)))
   }
 
-  /** (vec_id, embedding) + the ANN banding signature, L2 norm, and the
-    * 64-bit SRP sketch — the row-local sketch block shared by the batch
-    * delta path and the streaming lane (stateless projections: safe in a
-    * streaming plan).
+  /** (vec_id, embedding) + the 32-bit ANN band signature `sig` and the L2
+    * norm `nrm` — the per-vector projection every band explode starts from.
     */
-  private[graft] def withBandSketch64(df: DataFrame): DataFrame = {
-    val nBits = AnnBands * AnnRowsPerBand
-    val sigBits = (0 until nBits).map { i =>
-      when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    withSrpSketch64(df.select(col("vec_id"), col("embedding"),
-      sigBits.reduce(_ + _).as("sig"),
-      sqrt(dotp(col("embedding"), col("embedding"))).as("nrm")))
-  }
+  private[graft] def withBandSignature(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding"),
+      planeSignature(AnnBands * AnnRowsPerBand).as("sig"),
+      sqrt(dotp(col("embedding"), col("embedding"))).as("nrm"))
 
-  /** Explode a [[withBandSketch64]] frame to one row per (band key, band
-    * value), carrying the listed extra columns.
+  /** [[withBandSignature]] + the 64-bit SRP sketch `srp` — the row-local
+    * sketch block of every 64-bit-gated delta path (q324, the index probes,
+    * the streaming lane: stateless projections, safe in a streaming plan).
+    */
+  private[graft] def withBandSketch64(df: DataFrame): DataFrame =
+    withSrpSketch64(withBandSignature(df))
+
+  /** Explode a frame carrying `sig` to one row per (band key, band value),
+    * carrying the listed extra columns.
     */
   private[graft] def explodeBands(df: DataFrame, carry: Seq[String]): DataFrame =
     df.select(col("vec_id") +: carry.map(col) :+ explode(expr(
@@ -1843,43 +1828,23 @@ object SimilarityOps {
   /** Two-sided (delta × corpus) band-OR near-dup core — the INCREMENTAL
     * shape: band keys computed for both sides, candidates from the per-band
     * equi-joins (no self-join triangle constraint — the sides are disjoint
-    * id spaces), optional 64-bit Hamming gate inside the band join, exact
-    * cosine verify. Cost ∝ delta × bucket sizes, never corpus² — the shape
-    * a daily-ingest dedup actually runs at 100 TB: the corpus side's
-    * sig/sketch columns are computed once per batch here, and would be
-    * precomputed-and-stored in a standing deployment.
+    * id spaces), the 64-bit Hamming gate at [[Srp64GateMaxH]] inside the
+    * band join, exact cosine verify. Cost ∝ delta × bucket sizes, never
+    * corpus² — the shape a daily-ingest dedup actually runs at 100 TB: the
+    * corpus side's sig/sketch columns are computed once per batch here, and
+    * would be precomputed-and-stored in a standing deployment.
     */
   private[graft] def deltaNearDupOn(corpus0: DataFrame, delta0: DataFrame,
       threshold: Double): DataFrame = {
-    val gate64 = corpus0.sparkSession.conf.getOption(Srp64GateConf).map(_.toInt)
-    val nBits = AnnBands * AnnRowsPerBand
-    val sigBits = (0 until nBits).map { i =>
-      when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    def prep(df: DataFrame): DataFrame = {
-      val base = df.select(col("vec_id"), col("embedding"),
-        sigBits.reduce(_ + _).as("sig"),
-        sqrt(dotp(col("embedding"), col("embedding"))).as("nrm"))
-      (if (gate64.isDefined) withSrpSketch64(base) else base).persistTracked()
-    }
-    val c = prep(corpus0)
-    val d = prep(delta0)
-    def bands(e: DataFrame): DataFrame = e.select(
-      col("vec_id") +: gate64.map(_ => col("srp")).toSeq :+ explode(expr(
-        s"transform(sequence(0, ${AnnBands - 1}), b -> struct(b AS bk, shiftright(sig, CAST(b AS INT) * $AnnRowsPerBand) & ${(1 << AnnRowsPerBand) - 1} AS bv))")).as("b"): _*)
-      .select(col("vec_id") +: gate64.map(_ => col("srp")).toSeq
-        :+ col("b.bk").as("bk") :+ col("b.bv").as("bv"): _*)
-    val bandCond = col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv")
-    val joinCond = gate64 match {
-      case Some(m) => bandCond &&
-        call_function("bit_count", col("a.srp").bitwiseXOR(col("b.srp"))) <= lit(m)
-      case None => bandCond
-    }
-    val cands = bands(c).as("a").join(bands(d).as("b"), joinCond)
+    val c = withBandSketch64(corpus0).persistTracked()
+    val d = withBandSketch64(delta0).persistTracked()
+    val cands = explodeBands(c, Seq("srp")).as("a").join(explodeBands(d, Seq("srp")).as("b"),
+        col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv") &&
+          hamming(col("a.srp"), col("b.srp")) <= lit(Srp64GateMaxH))
       .select(col("a.vec_id").as("id_c"), col("b.vec_id").as("id_d"))
       .dropDuplicates("id_c", "id_d")
-    val estC = c.count() * (64L * 4L + 64L)
-    val estD = d.count() * (64L * 4L + 64L)
+    val estC = c.count() * VecRowBytes
+    val estD = d.count() * VecRowBytes
     val vc = c.select(col("vec_id").as("id_c"), col("embedding").as("emb_c"), col("nrm").as("nrm_c"))
     val vd = d.select(col("vec_id").as("id_d"), col("embedding").as("emb_d"), col("nrm").as("nrm_d"))
     cands.join(DedupOps.gatedVerifySide(vc, estC), "id_c")
@@ -1892,16 +1857,39 @@ object SimilarityOps {
 
   /** q324 — INCREMENTAL near-dup with the 64-bit gate armed: today's batch
     * (the perturbed re-observations) against the standing corpus at
-    * θ = 0.9. The oracle replays the UNGATED two-sided banding + verify —
-    * the same cross-engine output-preservation proof as q321, now on the
-    * daily-ingest shape whose cost scales with the delta.
+    * θ = 0.9 through [[deltaNearDupOn]]. The oracle replays the UNGATED
+    * two-sided banding + verify — the same cross-engine
+    * output-preservation proof as q321, now on the daily-ingest shape whose
+    * cost scales with the delta.
     */
   def deltaGatedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val s2 = org.apache.spark.sql.graftbridge.GraftSqlBridge.cloneSession(spark)
-    s2.conf.set(Srp64GateConf, Srp64GateMaxH.toString)
     deltaNearDupOn(
-      Tables.embeddings(s2, dir).select(col("vec_id"), col("embedding")),
-      perturbedDelta(s2, dir), 0.9)
+      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
+      perturbedDelta(spark, dir), 0.9)
+  }
+
+  /** The band candidates of q329/q336's width comparison over `corpus`'s
+    * (vec_id, embedding): returns the persisted vectors, each with its
+    * signature, both sketches (`s16`, `s64`) and its norm, and the
+    * persisted candidate pairs with both Hamming distances (`h16`, `h64`).
+    */
+  private def widthCandidates(corpus: DataFrame): (DataFrame, DataFrame) = {
+    val base = corpus
+      .select(col("vec_id"), col("embedding"), planeSignature(AnnBands * AnnRowsPerBand).as("sig"))
+    val e = withSrpSketch64(withSrpSketch(base).withColumnRenamed("srp", "s16"))
+      .withColumnRenamed("srp", "s64")
+      .select(col("vec_id"), col("sig"), col("s16"), col("s64"),
+        col("embedding"),
+        sqrt(dotp(col("embedding"), col("embedding"))).as("nrm"))
+      .persistTracked()
+    val banded = explodeBands(e, Seq("s16", "s64"))
+    val ch = banded.as("a").join(banded.as("b"), selfBandCond)
+      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
+        hamming(col("a.s16"), col("b.s16")).as("h16"),
+        hamming(col("a.s64"), col("b.s64")).as("h64"))
+      .dropDuplicates("id_a", "id_b")
+      .persistTracked()
+    (e, ch)
   }
 
   /** q329 — the WIDTH question answered with data: is the 16-bit gate's
@@ -1917,29 +1905,7 @@ object SimilarityOps {
     * corpus (q321/q322) instead.
     */
   def srpWidthReport(spark: SparkSession, dir: String): DataFrame = {
-    val nBits = AnnBands * AnnRowsPerBand
-    val sigBits = (0 until nBits).map { i =>
-      when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    val base = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), sigBits.reduce(_ + _).as("sig"))
-    val e = withSrpSketch64(withSrpSketch(base).withColumnRenamed("srp", "s16"))
-      .withColumnRenamed("srp", "s64")
-      .select(col("vec_id"), col("sig"), col("s16"), col("s64"),
-        col("embedding"),
-        sqrt(dotp(col("embedding"), col("embedding"))).as("nrm"))
-      .persistTracked()
-    val banded = e.select(col("vec_id"), col("s16"), col("s64"), explode(expr(
-        s"transform(sequence(0, ${AnnBands - 1}), b -> struct(b AS bk, shiftright(sig, CAST(b AS INT) * $AnnRowsPerBand) & ${(1 << AnnRowsPerBand) - 1} AS bv))")).as("b"))
-      .select(col("vec_id"), col("s16"), col("s64"), col("b.bk").as("bk"), col("b.bv").as("bv"))
-    val ch = banded.as("a").join(banded.as("b"),
-        col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        call_function("bit_count", col("a.s16").bitwiseXOR(col("b.s16"))).as("h16"),
-        call_function("bit_count", col("a.s64").bitwiseXOR(col("b.s64"))).as("h64"))
-      .dropDuplicates("id_a", "id_b")
-      .persistTracked()
+    val (e, ch) = widthCandidates(Tables.embeddings(spark, dir))
     // true pairs = the candidates the exact verify keeps at θ = 0.35
     val va = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
     val vb = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
@@ -1989,30 +1955,8 @@ object SimilarityOps {
     * near-exact θ (q337).
     */
   def srpWidthDecisionReport(spark: SparkSession, dir: String): DataFrame = {
-    val nBits = AnnBands * AnnRowsPerBand
-    val sigBits = (0 until nBits).map { i =>
-      when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .unionByName(perturbedDeltaWith(spark, dir, MidSimMults, MidSimIdOffset))
-      .select(col("vec_id"), col("embedding"), sigBits.reduce(_ + _).as("sig"))
-    val e = withSrpSketch64(withSrpSketch(base).withColumnRenamed("srp", "s16"))
-      .withColumnRenamed("srp", "s64")
-      .select(col("vec_id"), col("sig"), col("s16"), col("s64"),
-        col("embedding"),
-        sqrt(dotp(col("embedding"), col("embedding"))).as("nrm"))
-      .persistTracked()
-    val banded = e.select(col("vec_id"), col("s16"), col("s64"), explode(expr(
-        s"transform(sequence(0, ${AnnBands - 1}), b -> struct(b AS bk, shiftright(sig, CAST(b AS INT) * $AnnRowsPerBand) & ${(1 << AnnRowsPerBand) - 1} AS bv))")).as("b"))
-      .select(col("vec_id"), col("s16"), col("s64"), col("b.bk").as("bk"), col("b.bv").as("bv"))
-    val ch = banded.as("a").join(banded.as("b"),
-        col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        call_function("bit_count", col("a.s16").bitwiseXOR(col("b.s16"))).as("h16"),
-        call_function("bit_count", col("a.s64").bitwiseXOR(col("b.s64"))).as("h64"))
-      .dropDuplicates("id_a", "id_b")
-      .persistTracked()
+    val (e, ch) = widthCandidates(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+      .unionByName(perturbedDeltaWith(spark, dir, MidSimMults, MidSimIdOffset)))
     val va = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
     val vb = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
     val withSim = ch.join(va, "id_a").join(vb, "id_b")
@@ -2119,8 +2063,7 @@ object SimilarityOps {
     val dBands = explodeBands(delta, Seq("srp"))
       .select(col("vec_id").as("id_d"), col("srp").as("srp_d"), col("bk"), col("bv"))
     val cands = dBands.join(cBands, Seq("bk", "bv"))
-      .filter(call_function("bit_count",
-        col("srp_c").bitwiseXOR(col("srp_d"))) <= lit(Srp64GateMaxH))
+      .filter(hamming(col("srp_c"), col("srp_d")) <= lit(Srp64GateMaxH))
       .select(col("id_c"), col("id_d"))
       .dropDuplicates("id_c", "id_d")
     // corpus verify side needs ONLY (embedding, norm) — the band keys and
@@ -2626,7 +2569,7 @@ object SimilarityOps {
     val (tIdx, _, _) = ensureBandIndex(s, dir, "knn", None)
     val cBands = s.table(tIdx).select(col("vec_id").as("id_c"),
       col("bk"), col("bv"))
-    val delta = withBandSketch64(perturbedDelta(s, dir)).persistTracked()
+    val delta = withBandSignature(perturbedDelta(s, dir)).persistTracked()
     val dBands = explodeBands(delta, Seq.empty)
       .select(col("vec_id").as("id_d"), col("bk"), col("bv"))
     val cands = dBands.join(cBands, Seq("bk", "bv"))
@@ -2728,22 +2671,14 @@ object SimilarityOps {
     * calibration the gate constant must clear). One row, fully replayable.
     */
   def srp64GateReport(spark: SparkSession, dir: String): DataFrame = {
-    val nBits = AnnBands * AnnRowsPerBand
-    val sigBits = (0 until nBits).map { i =>
-      when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
     val e = withSrpSketch64(derivedDupCorpus(spark, dir)
-        .select(col("vec_id"), col("embedding"), sigBits.reduce(_ + _).as("sig")))
+        .select(col("vec_id"), col("embedding"), planeSignature(AnnBands * AnnRowsPerBand).as("sig")))
       .select(col("vec_id"), col("sig"), col("srp"))
       .persistTracked()
-    val banded = e.select(col("vec_id"), col("srp"), explode(expr(
-        s"transform(sequence(0, ${AnnBands - 1}), b -> struct(b AS bk, shiftright(sig, CAST(b AS INT) * $AnnRowsPerBand) & ${(1 << AnnRowsPerBand) - 1} AS bv))")).as("b"))
-      .select(col("vec_id"), col("srp"), col("b.bk").as("bk"), col("b.bv").as("bv"))
-    val ch = banded.as("a").join(banded.as("b"),
-        col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv")
-          && col("a.vec_id") < col("b.vec_id"))
+    val banded = explodeBands(e, Seq("srp"))
+    val ch = banded.as("a").join(banded.as("b"), selfBandCond)
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        call_function("bit_count", col("a.srp").bitwiseXOR(col("b.srp"))).as("hd"))
+        hamming(col("a.srp"), col("b.srp")).as("hd"))
       .dropDuplicates("id_a", "id_b")
     val truth = e.filter(col("vec_id") < PerturbIdOffset
         && col("vec_id") % PerturbEvery === 0)
@@ -2774,13 +2709,13 @@ object SimilarityOps {
     * calibration deployed as a candidate gate): identical output to q135 —
     * the oracle is q135's ungated twin, so a single dropped true pair fails
     * the hash — with tail candidates cut before the dedup shuffle and the
-    * exact verify. Flag scoping follows q284: the conf lives on a session
-    * CLONE, so nothing else in the session ever sees the gate.
+    * exact verify. The gate is the argument `Some((16, SrpGateMaxH))`
+    * to [[annNearDupOn]]; q135 leaves it at its default, which disarms at
+    * θ = 0.35.
     */
   def srpGatedNearDup(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
-    val s2 = org.apache.spark.sql.graftbridge.GraftSqlBridge.cloneSession(spark)
-    s2.conf.set(SrpGateConf, SrpGateMaxH.toString)
-    annNearDup(s2, dir, threshold)
+    annNearDupOn(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
+      threshold, None, gate = Some((16, SrpGateMaxH)))
   }
 
   /** q308 — the SRP gate's decision report: for each near-dup threshold θ,
@@ -2811,22 +2746,14 @@ object SimilarityOps {
       val qualifying = calib.filter(_._2 >= th).map(_._1)
       (t, if (qualifying.isEmpty) -1L else qualifying.max + 1L)
     }
-    val nBits = AnnBands * AnnRowsPerBand
-    val sigBits = (0 until nBits).map { i =>
-      when(dotp(col("embedding"), planeCol(i)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }
     val e = withSrpSketch(Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"), sigBits.reduce(_ + _).as("sig")))
+        .select(col("vec_id"), col("embedding"), planeSignature(AnnBands * AnnRowsPerBand).as("sig")))
       .select(col("vec_id"), col("sig"), col("srp"))
       .persistTracked()
-    val banded = e.select(col("vec_id"), col("srp"), explode(expr(
-        s"transform(sequence(0, ${AnnBands - 1}), b -> struct(b AS bk, shiftright(sig, CAST(b AS INT) * $AnnRowsPerBand) & ${(1 << AnnRowsPerBand) - 1} AS bv))")).as("b"))
-      .select(col("vec_id"), col("srp"), col("b.bk").as("bk"), col("b.bv").as("bv"))
-    val ch = banded.as("a").join(banded.as("b"),
-        col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv")
-          && col("a.vec_id") < col("b.vec_id"))
+    val banded = explodeBands(e, Seq("srp"))
+    val ch = banded.as("a").join(banded.as("b"), selfBandCond)
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        call_function("bit_count", col("a.srp").bitwiseXOR(col("b.srp"))).as("hd"))
+        hamming(col("a.srp"), col("b.srp")).as("hd"))
       .dropDuplicates("id_a", "id_b")
     val keptCols = gates.map { case (t, g) =>
       sum(when(col("hd") <= lit(g), 1L).otherwise(0L)).as("kept_" + t.replace(".", "_"))

@@ -76,8 +76,7 @@ object EmbeddingStream {
           col("embedding").as("emb_d"), col("nrm").as("nrm_d"), col("bk"), col("bv"))
       val q = sBands.join(cBands,
           Seq("bk", "bv")) // stream-static inner
-        .filter(call_function("bit_count",
-          col("srp_c").bitwiseXOR(col("srp_d"))) <= lit(SimilarityOps.Srp64GateMaxH))
+        .filter(SimilarityOps.hamming(col("srp_c"), col("srp_d")) <= lit(SimilarityOps.Srp64GateMaxH))
         .select(col("id_c"), col("id_d"), col("emb_d"), col("nrm_d"))
         .dropDuplicates("id_c", "id_d") // band-collision dups, per-run state
         .join(cVecs, "id_c") // second stream-static join: the wide verify

@@ -184,11 +184,11 @@ class HardeningSpec extends AnyFunSuite {
     assert(SimilarityOps.SrpBreachStandard > 1.0e-6
       && SimilarityOps.SrpBreachStandard < 1.1e-6)
     // at the calibration point the exact width IS the deployed constant
-    assert(SimilarityOps.srp64AutoWidth(0.9) === Some(SimilarityOps.Srp64GateMaxH))
-    assert(SimilarityOps.srp64AutoWidth(0.95) === Some(20))
-    assert(SimilarityOps.srp64AutoWidth(0.35) === None)
-    assert(SimilarityOps.srp64AutoWidth(0.5) === None)
-    assert(SimilarityOps.srp64AutoWidth(0.8) === None)
+    assert(SimilarityOps.srpAutoGate(0.9) === Some((64, SimilarityOps.Srp64GateMaxH)))
+    assert(SimilarityOps.srpAutoGate(0.95) === Some((64, 20)))
+    assert(SimilarityOps.srpAutoGate(0.35) === None)
+    assert(SimilarityOps.srpAutoGate(0.5) === None)
+    assert(SimilarityOps.srpAutoGate(0.8) === None)
     // the arming cutoff is DERIVED from the noise binomial (n/2 − √n), not
     // a carried literal — and must still equal the deployed 64-bit constant
     assert(SimilarityOps.srpArmCutoff(64) === SimilarityOps.Srp64GateMaxH)
@@ -197,9 +197,7 @@ class HardeningSpec extends AnyFunSuite {
     // cuts — 16-bit only in the near-exact regime (q337), 64-bit at the
     // dedup threshold (q332), none in the mid band (q336 measures why)
     assert(SimilarityOps.srpAutoGate(SimilarityOps.NearExactThreshold) === Some((16, 4)))
-    assert(SimilarityOps.srpAutoGate(0.9) === Some((64, SimilarityOps.Srp64GateMaxH)))
     assert(SimilarityOps.srpAutoGate(SimilarityOps.MidSimThreshold) === None)
-    assert(SimilarityOps.srpAutoGate(0.35) === None)
     // the r12-advice boundary: at θ = 0.998 the width-4 16-bit gate's exact
     // breach mass is ~1.2e-5 — ~11x the standard — so the 16-bit sketch
     // must NOT arm there (its exact width, 5, exceeds the cutoff) and the
@@ -883,5 +881,25 @@ class HardeningSpec extends AnyFunSuite {
     // of it (band-OR blocking only loses pairs, never invents them)
     val exact = SimilarityOps.embeddingNearDup(spark, sf).collect().toSeq
     assert(banded.toSet.subsetOf(exact.toSet))
+  }
+
+  test("Verify records a failed query in verify_failures.tsv and still writes the others") {
+    val out = java.nio.file.Files.createTempDirectory("graft_verify_fail").toFile
+    try {
+      val queries = Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
+        "qa_ok" -> ((s, _) => s.range(3).toDF("id")),
+        "qb_throws" -> ((_, _) => throw new IllegalStateException("boom\tsecond\nline")))
+      Verify.dumpQueries(spark, sf, out.getPath, queries)
+      assert(spark.read.parquet(new java.io.File(out, "qa_ok").getPath).count() === 3L)
+      assert(!new java.io.File(out, "qb_throws").exists())
+      val lines = java.nio.file.Files.readAllLines(
+        new java.io.File(out, Verify.FailuresFile).toPath).toArray.toSeq
+      assert(lines === Seq("qb_throws\tjava.lang.IllegalStateException\tboom second line"))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(out)
+    }
   }
 }

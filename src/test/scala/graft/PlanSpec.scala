@@ -315,6 +315,16 @@ class PlanSpec extends AnyFunSuite {
     val off = ungated.queryExecution.executedPlan.toString
     assert(!off.contains("bit_count") && !off.contains("srp"),
       "ungated q135 must be byte-identical to the round-8 candidate path")
+    // the gate is an argument, not session state: a session carrying the
+    // former gate keys (at a width that would drop every pair) leaves q135
+    // ungated and row-identical
+    val keyed = org.apache.spark.sql.graftbridge.GraftSqlBridge.cloneSession(spark)
+    keyed.conf.set("graft.sim.srpGateMaxH", "0")
+    keyed.conf.set("graft.sim.srp64GateMaxH", "0")
+    val onKeyed = SimilarityOps.annNearDup(keyed, sf)
+    assert(!plan(onKeyed).contains("bit_count"),
+      "session conf keys must not arm a gate on q135")
+    assert(onKeyed.collect().toSeq === ungated.collect().toSeq)
   }
 
   test("SrpSketch16 kernel is bit-identical to the HOF formulation it replaced") {

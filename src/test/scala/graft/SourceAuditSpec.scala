@@ -26,7 +26,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * path reads an environment variable except the scratch-path override.
   * One connected-components route: only `DedupOps` names the CC algorithms
   * and their cutover constants. One stored band-index lifecycle: no
-  * rename-aside swap, and one function creates a band index.
+  * rename-aside swap, and one function creates a band index. One ANN
+  * banding core: no SRP gate conf key, one band explode, one plane-sign
+  * signature.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -144,6 +146,21 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(builders.size == 1,
       "\nExpected exactly one band-index builder (SimilarityOps.ensureBandIndex); " +
         "later writers derive the bucket spec from the catalog:\n" + builders.mkString("\n"))
+  }
+
+  test("one ANN banding core: the gate is an argument and the band code is written once") {
+    val confs = matches(allMainSources, raw"graft\.sim\.srp".r)
+    assert(confs.isEmpty,
+      "\nAn SRP gate read from a session conf (pass it as annNearDupOn's `gate` " +
+        "argument instead):\n" + confs.mkString("\n"))
+    for ((what, text) <- Seq(
+        "band-explode template" -> "transform(sequence(0, ${AnnBands - 1})",
+        "plane-sign formula" -> "dotp(col(\"embedding\"), planeCol(i))")) {
+      val sites = matches(allMainSources, scala.util.matching.Regex.quote(text).r)
+      assert(sites.size == 1,
+        s"\nExpected the $what exactly once (SimilarityOps.explodeBands / " +
+          s"planeSignature), found ${sites.size}:\n" + sites.mkString("\n"))
+    }
   }
 
   test("operators and streaming read no environment variable but the scratch path") {
