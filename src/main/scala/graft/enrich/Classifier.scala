@@ -16,14 +16,14 @@ final case class Classified(original: String, category: String, specialization: 
   *
   * Contract: `classify(batch)` MAY return results out of order, MAY drop
   * items (parse failure), MAY return keys that were never asked for
-  * (hallucination), and MAY throw. [[Enrichment.classifyKeys]] layers the
+  * (hallucination), and MAY throw. [[Enrichment.enrich]] layers the
   * reference's defensive semantics (retry, per-batch dedup, semi-join guard,
   * default-fill) on top, so implementations stay simple.
   *
-  * Implementations must be Serializable: they are shipped to executors and
-  * invoked inside `mapPartitions`, never inside a Catalyst expression (the
-  * call is side-effecting, batched and retrying — it must not be re-executed
-  * by codegen or speculative tasks silently; SURVEY.md §2.8).
+  * `classify` runs on the driver, not inside `mapPartitions` or a Catalyst
+  * expression (the side-effecting, retrying call must not be re-run by
+  * codegen or speculative tasks; SURVEY.md §2.8), and MAY be called from
+  * several threads at once ([[Enrichment.enrich]]'s window): be thread-safe.
   */
 trait Classifier extends Serializable {
   def classify(batch: Seq[String]): Seq[Classified]
@@ -91,8 +91,8 @@ object Defaults {
   * the first `failures` calls that include a key whose hash lands in the
   * failing residue drop that key from the reply (simulating an
   * unparseable/partial LLM response, dag:269-278), and optionally hallucinate
-  * an extra key (dag:590-603's guard case). Per-key state is in a mutable map
-  * on the executor — single-JVM only.
+  * an extra key (dag:590-603's guard case). Attempts are counted per key in
+  * a concurrent map: under concurrent calls each key has one first attempt.
   *
   * Lives in src/main deliberately (the r9-verdict "move to src/test" was
   * considered and rejected): it is LOAD-BEARING for the production registry —
@@ -106,12 +106,12 @@ final class FlakyClassifier(
     dropEveryNth: Int = 3,
     hallucinate: Boolean = true,
 ) extends Classifier {
-  private val attempts = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+  private val attempts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   override def classify(batch: Seq[String]): Seq[Classified] = {
     val (dropped, kept) = batch.partition { k =>
-      val a = attempts(k); attempts(k) = a + 1
-      a == 0 && math.floorMod(k.hashCode, dropEveryNth) == 0
+      val n = attempts.merge(k, 1, (a: Integer, b: Integer) => a + b)
+      n == 1 && math.floorMod(k.hashCode, dropEveryNth) == 0
     }
     val real = inner.classify(kept)
     val extra = if (hallucinate && dropped.nonEmpty)

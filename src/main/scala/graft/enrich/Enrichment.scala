@@ -1,6 +1,7 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The batched-enrichment operator (SURVEY.md §2.8) — the reference pipeline's
@@ -11,22 +12,31 @@ import org.apache.spark.sql.functions._
   * it is the pipeline's defining optimization, dag:147-159 + :384-396):
   *
   * {{{
-  *   distinct(trim(key)) filter nonEmpty          // O(distinct) not O(rows)
-  *     .repartition(ceil(n / keysPerPartition))   // bound batches per task
-  *     .mapPartitions(grouped(batchSize) -> classifyWithRetry)
+  *   distinct(trim(key)) filter nonEmpty, collected and sorted   // O(distinct)
+  *   driver rounds over the pending keys:
+  *     grouped(batchSize) -> classify, ≤ inFlight calls at once
   *     -> dropDuplicates(original)                // D5, dag:359-366
-  *     -> left_semi guard against asked keys      // J3, dag:590-603
+  *     -> drop keys not asked                     // J3, dag:590-603
+  *     misses re-batched at full size next round, ≤ maxRetries + 1 rounds
   *   rows left-join broadcast(mapping) on trim(key)
   *     coalesce(category, 'Не определена')        // default fill, dag:395
   * }}}
   *
   * Scale notes: the expensive external call runs once per distinct key — at
   * 100 TB the distinct-key set (job titles, field names) stays tiny relative
-  * to the fact rows, and the mapping broadcast keeps the map-back join
-  * shuffle-free. If the distinct set ever outgrew the broadcast threshold the
-  * same code degrades gracefully to a shuffled join by dropping `broadcast()`.
+  * to the fact rows, and the broadcast map-back needs it on the driver
+  * anyway, so classifying there moves no extra data. Calls in flight are one
+  * fixed window, not the task slots, so no queued task serializes the tail.
   */
 object Enrichment {
+
+  /** Upper bound on concurrent classifier calls per enrichment. The window
+    * is `min(defaultParallelism, MaxCallsInFlight)`: a cluster-sized
+    * `defaultParallelism` must not burst an external (rate-limited) endpoint
+    * or spawn hundreds of driver threads. 8 is a chosen safety bound, not a
+    * measured one: no endpoint's rate limit or driver-thread cost set it.
+    */
+  private val MaxCallsInFlight = 8
 
   /** Retry semantics around one batch, mirroring dag:283-318: items missing
     * from the reply are re-batched up to `maxRetries` times; still-missing
@@ -38,54 +48,41 @@ object Enrichment {
       classifier: Classifier,
       batch: Seq[String],
       maxRetries: Int,
-      retryOther: Boolean): Seq[Classified] = {
-    var pending = batch
-    var acc = Map.empty[String, Classified]
-    var attempt = 0
-    while (pending.nonEmpty && attempt <= maxRetries) {
-      val replies =
-        try classifier.classify(pending)
-        catch { case scala.util.control.NonFatal(_) => Nil } // dag:302-307: exception == empty reply
-      val asked = pending.toSet
-      // D5 per-batch dedup (keep first) + J3 semi-join guard (drop hallucinated keys)
-      val valid = replies.filter(r => asked.contains(r.original))
-        .groupBy(_.original).map { case (_, vs) => vs.head }
-      val ok = valid.filter(r =>
-        r.category != Defaults.Unclassified && (!retryOther || r.category != Defaults.Other))
-      acc ++= ok.map(r => r.original -> r)
-      pending = pending.filterNot(k => acc.contains(k))
-      attempt += 1
-    }
-    // exhausted -> stub records, never dropped rows (dag:310-326)
-    batch.map(k => acc.getOrElse(k, Classified(k, Defaults.Unclassified, "")))
-  }
+      retryOther: Boolean): Seq[Classified] =
+    classifyAll(classifier, batch, batch.size max 1, maxRetries, retryOther, 1)
 
-  /** Distinct-key classification as a Dataset op. The repartition bounds how
-    * many keys land in one task so external-API batches parallelize evenly;
-    * `grouped(batchSize)` amortizes the per-call fixed cost exactly like the
-    * reference's 15/10-key batches (dag:330, :669).
+  /** Classifies `keys` in at most `maxRetries + 1` rounds; each round
+    * re-batches every pending key at `batchSize` and runs the batches on
+    * `inFlight` daemon threads. Keeps input order. What `classify` throws
+    * past the empty-reply rule (fatal errors, interrupts) reaches the caller
+    * unwrapped.
     */
-  def classifyKeys(
-      keys: Dataset[String],
-      classifier: Classifier,
-      batchSize: Int = 15,
-      maxRetries: Int = 1,
-      retryOther: Boolean = false,
-      keysPerPartition: Int = 300): Dataset[Classified] = {
-    val spark = keys.sparkSession
-    import spark.implicits._
-    // the count below is an unavoidable action (partition sizing needs n);
-    // persist first so the distinct-key plan — and everything under it —
-    // materializes once instead of once for the count and again for the
-    // classify pass
-    val cached = keys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count()
-    val parts = math.max(1, math.min(cached.rdd.getNumPartitions, (n / keysPerPartition).toInt + 1))
-    cached
-      .repartition(parts)
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(b => classifyBatchWithRetry(classifier, b.toSeq, maxRetries, retryOther))
+  private def classifyAll(classifier: Classifier, keys: Seq[String], batchSize: Int,
+      maxRetries: Int, retryOther: Boolean, inFlight: Int): Seq[Classified] = {
+    def attempt(batch: Seq[String]): Iterable[Classified] = {
+      val replies =
+        try classifier.classify(batch)
+        catch { case scala.util.control.NonFatal(_) => Nil } // dag:302-307: exception == empty reply
+      val asked = batch.toSet
+      // D5 per-batch dedup (keep first) + J3 semi-join guard (drop hallucinated keys)
+      replies.filter(r => asked.contains(r.original)).groupBy(_.original).map { case (_, vs) => vs.head }
+        .filter(r => r.category != Defaults.Unclassified && (!retryOther || r.category != Defaults.Other))
+    }
+    val pool = Executors.newFixedThreadPool(
+      inFlight max 1, (r: Runnable) => { val t = new Thread(r, "graft-classify"); t.setDaemon(true); t })
+    try {
+      var pending = keys
+      var acc = Map.empty[String, Classified]
+      for (_ <- 0 to maxRetries if pending.nonEmpty) {
+        pending.grouped(batchSize).toVector
+          .map(b => pool.submit((() => attempt(b)): Callable[Iterable[Classified]]))
+          .foreach(f => try f.get.foreach(r => acc += r.original -> r)
+            catch { case e: ExecutionException => throw e.getCause })
+        pending = pending.filterNot(acc.contains)
       }
+      // exhausted -> stub records, never dropped rows (dag:310-326)
+      keys.map(k => acc.getOrElse(k, Classified(k, Defaults.Unclassified, "")))
+    } finally pool.shutdownNow()
   }
 
   /** Full enrichment: J1/J2 broadcast map-back with default-fill.
@@ -107,14 +104,13 @@ object Enrichment {
     val spark = df.sparkSession
     import spark.implicits._
 
-    val keys = df
-      .select(trim(col(keyCol)).as("original"))
-      .filter(col("original") =!= "")
-      .distinct()
-      .as[String]
-
-    val classified = classifyKeys(keys, classifier, batchSize, maxRetries, retryOther)
-    val mapping = classified.toDF("original", "__cat", "__spec")
+    // bounded-collect: the distinct classifier keys, broadcast back below;
+    // sorted so batch composition repeats run to run
+    val keys = df.select(trim(col(keyCol)).as("original")).filter(col("original") =!= "")
+      .distinct().as[String].collect().sorted.toSeq
+    val inFlight = math.min(spark.sparkContext.defaultParallelism, MaxCallsInFlight)
+    val mapping = classifyAll(classifier, keys, batchSize, maxRetries, retryOther, inFlight)
+      .toDF("original", "__cat", "__spec")
 
     val joined = df.join(broadcast(mapping), trim(col(keyCol)) === col("original"), "left")
     val withCat = joined.withColumn(

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *
   * Exists in two forms with identical semantics: [[cleaned]]/[[parsedArray]]
   * as codegen'd Column expressions (for in-plan parsing at scale) and
-  * [[SafeJsonParse.parseScala]] for executor-side use inside the classifier's
-  * `mapPartitions` (where the HTTP reply is a plain String).
+  * [[SafeJsonParse.parseScala]] for the classifier's own calls on the driver
+  * (where the HTTP reply is a plain String).
   */
 object SafeJsonParse {
 

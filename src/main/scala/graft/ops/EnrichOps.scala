@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** Enrichment operators over the testdata (SURVEY.md §2.8 + A1-A6 stats),
   * all flowing through the full [[Enrichment]] engine: distinct keys →
-  * repartition → mapPartitions(batched classify + retry + guard) → broadcast
+  * batched classify + retry + guard in a bounded driver window → broadcast
   * map-back with default fill.
   */
 object EnrichOps {

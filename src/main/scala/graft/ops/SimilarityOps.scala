@@ -2711,12 +2711,11 @@ object SimilarityOps {
     * the hash — with tail candidates cut before the dedup shuffle and the
     * exact verify. The gate is the argument `Some((16, SrpGateMaxH))`
     * to [[annNearDupOn]]; q135 leaves it at its default, which disarms at
-    * θ = 0.35.
+    * θ = 0.35. θ is fixed at 0.35, the only θ `SrpGateMaxH` was measured at.
     */
-  def srpGatedNearDup(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
+  def srpGatedNearDup(spark: SparkSession, dir: String): DataFrame =
     annNearDupOn(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
-      threshold, None, gate = Some((16, SrpGateMaxH)))
-  }
+      0.35, None, gate = Some((16, SrpGateMaxH)))
 
   /** q308 — the SRP gate's decision report: for each near-dup threshold θ,
     * the calibration-derived gate (max Hamming bucket whose OBSERVED max

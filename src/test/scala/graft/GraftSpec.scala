@@ -20,6 +20,12 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `n` zero-padded enrichment keys, so their sorted order (the batch order) is known. */
+  def keyFrame(n: Int): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (0 until n).map(i => f"k$i%03d").toDF("title")
+  }
 }
 
 /** Per-operator specs (SURVEY.md §5): golden checks of quirk semantics kept
@@ -287,6 +293,55 @@ class EnrichmentSpec extends AnyFunSuite {
     calls = 0
     Enrichment.classifyBatchWithRetry(other, Seq("x"), maxRetries = 2, retryOther = true)
     assert(calls === 3) // field mode: retried until budget exhausted
+  }
+
+  test("enrich sends no key more than maxRetries + 1 times") {
+    val sent = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val counting = new Classifier {
+      def classify(b: Seq[String]) = {
+        b.foreach(k => sent.merge(k, 1, (x: Integer, y: Integer) => x + y))
+        b.filterNot(_.endsWith("7")).map(Classified(_, "C", "")) // *7 keys never answered
+      }
+    }
+    val out = Enrichment.enrich(keyFrame(100), "title", counting, "cat", batchSize = 15, maxRetries = 2)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(sent.size === 100)
+    sent.forEach((k, n) => assert(n.intValue === (if (k.endsWith("7")) 3 else 1), k))
+    assert(out.count(_._2 == Defaults.Unclassified) === 10)
+  }
+
+  test("enrich coalesces each round's misses into full batches") {
+    // every 5th key misses its first try: 20 misses spread over all 7 batches
+    // of 15, re-asked as ceil(20/15) = 2 calls, not one call per batch
+    val tries = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val dropsFirst = new Classifier {
+      def classify(b: Seq[String]) = {
+        calls.incrementAndGet()
+        b.filter(k => tries.merge(k, 1, (x: Integer, y: Integer) => x + y) > 1 || k.takeRight(2).toInt % 5 != 0)
+          .map(Classified(_, "C", ""))
+      }
+    }
+    val out = Enrichment.enrich(keyFrame(100), "title", dropsFirst, "cat", batchSize = 15, maxRetries = 1)
+    assert(out.filter(col("cat") =!= "C").count() === 0)
+    assert(calls.get === 7 + 2)
+  }
+
+  test("FlakyClassifier called concurrently drops each residue key exactly once") {
+    val keys = (0 until 200).map(i => s"key $i")
+    val flaky = new FlakyClassifier(Rules.partNameClassifier, dropEveryNth = 3, hallucinate = false)
+    val threads = 8
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val replies = (1 to threads).map(_ => pool.submit(() => { start.await(); flaky.classify(keys) }))
+      start.countDown()
+      val seen = replies.flatMap(_.get.map(_.original)).groupBy(identity).map { case (k, v) => k -> v.size }
+      for (k <- keys) {
+        val residue = math.floorMod(k.hashCode, 3) == 0
+        assert(seen.getOrElse(k, 0) === (if (residue) threads - 1 else threads), k)
+      }
+    } finally pool.shutdownNow()
   }
 }
 

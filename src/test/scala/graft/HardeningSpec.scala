@@ -1,5 +1,6 @@
 package graft
 
+import graft.enrich.{Classified, Classifier, Defaults, Enrichment}
 import graft.ops.{DedupOps, SimilarityOps}
 import graft.streaming.{EventsStream, SessionStream, StreamJoinOps}
 import org.apache.spark.sql.functions._
@@ -901,5 +902,60 @@ class HardeningSpec extends AnyFunSuite {
       }
       rm(out)
     }
+  }
+
+  private def classifyThreadsGone(): Boolean = {
+    import scala.jdk.CollectionConverters._
+    def alive = Thread.getAllStackTraces.keySet.asScala.exists(t => t.getName == "graft-classify" && t.isAlive)
+    val deadline = System.nanoTime() + 2000000000L
+    while (alive && System.nanoTime() < deadline) Thread.sleep(10)
+    !alive
+  }
+
+  /** Runs `body` with the live context's `spark.default.parallelism` at `n`;
+    * local mode reads that key on every `defaultParallelism` call. */
+  private def withDefaultParallelism[A](n: Int)(body: => A): A = {
+    val conf = classOf[org.apache.spark.SparkContext].getMethod("conf")
+      .invoke(spark.sparkContext).asInstanceOf[org.apache.spark.SparkConf]
+    val key = "spark.default.parallelism"
+    val before = conf.getOption(key)
+    conf.set(key, n.toString)
+    try body finally before.fold(conf.remove(key))(conf.set(key, _))
+  }
+
+  test("enrich keeps calls in flight above 1 and within min(defaultParallelism, 8)") {
+    for (parallelism <- Seq(2, spark.sparkContext.defaultParallelism, 16)) {
+      val now, peak = new java.util.concurrent.atomic.AtomicInteger
+      val slow = new Classifier {
+        def classify(b: Seq[String]) = {
+          peak.accumulateAndGet(now.incrementAndGet(), math.max)
+          try { Thread.sleep(20); b.map(Classified(_, "C", "")) }
+          finally now.decrementAndGet()
+        }
+      }
+      withDefaultParallelism(parallelism) {
+        assert(spark.sparkContext.defaultParallelism === parallelism)
+        Enrichment.enrich(keyFrame(64), "title", slow, "cat", batchSize = 2).collect()
+      }
+      val window = math.min(parallelism, 8)
+      assert(peak.get > 1 && peak.get <= window, s"defaultParallelism $parallelism: peak ${peak.get}, window $window")
+      assert(classifyThreadsGone())
+    }
+  }
+
+  test("enrich leaves no classifier thread behind, even when every call throws") {
+    val failing = new Classifier {
+      def classify(b: Seq[String]) = throw new RuntimeException("endpoint down")
+    }
+    val out = Enrichment.enrich(keyFrame(40), "title", failing, "cat", batchSize = 4)
+    assert(out.filter(col("cat") =!= Defaults.Unclassified).count() === 0)
+    assert(classifyThreadsGone(), "a NonFatal failure must still shut the window down")
+    // an interrupted call is not an empty reply: it escapes unwrapped, at every window size
+    val interrupted = new Classifier {
+      def classify(b: Seq[String]) = throw new InterruptedException("cancelled")
+    }
+    intercept[InterruptedException](Enrichment.enrich(keyFrame(40), "title", interrupted, "cat", batchSize = 4))
+    intercept[InterruptedException](Enrichment.classifyBatchWithRetry(interrupted, Seq("a"), 1, retryOther = false))
+    assert(classifyThreadsGone(), "an escaping failure must still shut the window down")
   }
 }

@@ -171,6 +171,8 @@ class HttpClassifierSpec extends AnyFunSuite {
     }
   }
 
+  // The name predates the driver-side window: the classifier calls now run
+  // from Enrichment's bounded window of driver threads, not from executors.
   test("end-to-end: Enrichment.enrich drives the HTTP classifier from executors (batched, map-back, default fill)") {
     import TestSpark._
     import spark.implicits._

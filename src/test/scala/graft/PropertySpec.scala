@@ -5,7 +5,7 @@ import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 /** Property-based invariants (SURVEY.md §5): totality and robustness of the
-  * pure executor-side pieces over arbitrary inputs.
+  * pure enrichment pieces over arbitrary inputs.
   */
 object EnrichmentProps extends Properties("Enrichment") {
 

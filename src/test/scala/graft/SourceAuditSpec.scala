@@ -28,7 +28,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and their cutover constants. One stored band-index lifecycle: no
   * rename-aside swap, and one function creates a band index. One ANN
   * banding core: no SRP gate conf key, one band explode, one plane-sign
-  * signature.
+  * signature. One enrichment route: `Enrichment` classifies on the driver,
+  * through one retry loop, never inside a Spark task.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -174,5 +175,19 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "\nEnvironment reads on an operator path (a leaked variable would silently " +
         "change official runs):\n" + offenders.mkString("\n"))
+  }
+
+  test("enrichment classifies on the driver: no task-bound classify stage, one classify call") {
+    val src = Paths.get("src", "main", "scala", "graft", "enrich", "Enrichment.scala")
+    for (banned <- Seq("mapPartitions", "repartition(", "persist(", "keysPerPartition")) {
+      val sites = matches(Seq(src), scala.util.matching.Regex.quote(banned).r)
+      assert(sites.isEmpty,
+        s"\nEnrichment is back on the Spark task slots ($banned; classify through " +
+          "Enrichment.classifyAll's window instead):\n" + sites.mkString("\n"))
+    }
+    val calls = matches(Seq(src), raw"\.classify\(".r)
+    assert(calls.size == 1,
+      s"\nExpected exactly one classifier call site (the retry loop), found ${calls.size}:\n" +
+        calls.mkString("\n"))
   }
 }
