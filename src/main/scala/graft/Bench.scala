@@ -75,7 +75,6 @@ object Bench {
       // it is not part of any query) and run one trivial AvailableNow stream
       // so the streaming planner / state-store machinery is hot. Without
       // this, whichever streaming query runs first absorbs ~5-10 s.
-      import org.apache.spark.sql.streaming.Trigger
       // the exact (nFiles, mode) variants the streaming queries read — a
       // mismatch here silently moves one-time staging into a query's timing
       graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir) // q100 (3, time)
@@ -83,14 +82,13 @@ object Bench {
       graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir, nFiles = 2, byTime = false) // q72
       graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir, nFiles = 3) // q80 (same as q100)
       graft.streaming.EmbeddingStream.stageDeltaDir(spark, sfDir) // q325
-      val wq = spark.readStream
-        .schema(graft.streaming.SessionStream.rawSchema)
-        .parquet(graft.streaming.EventsStream.stageStreamDirShared(spark, sfDir))
-        .filter(col("event_id") < 0L)
-        .groupBy(col("event_type")).count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_warmup_stream").trigger(Trigger.AvailableNow()).start()
-      wq.awaitTermination()
+      graft.streaming.StreamJoinOps.runToCompletion(spark, "complete") { s =>
+        s.readStream
+          .schema(graft.streaming.SessionStream.rawSchema)
+          .parquet(graft.streaming.EventsStream.stageStreamDirShared(spark, sfDir))
+          .filter(col("event_id") < 0L)
+          .groupBy(col("event_type")).count()
+      }
     } catch { case _: Throwable => }
 
     // Dev-only subset filter (driver never sets it): SPARK_GRAFT_ONLY=q38,q59

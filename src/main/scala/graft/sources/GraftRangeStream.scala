@@ -95,20 +95,12 @@ class GraftMicroBatchStream(total: Long, rowsPerBatch: Long)
   */
 object GraftStreamQueries {
   def streamSourceAgg(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val name = "graft_stream_src_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // state partitions narrowed like every other stateful streaming query
-    // (one store per shuffle partition per batch; 20k rows want 4, not 32)
-    val drained = graft.streaming.StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      val q = s.readStream.format("graft.sources.GraftRangeStream")
+    val drained = graft.streaming.StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
+      s.readStream.format("graft.sources.GraftRangeStream")
         .option("end", "20000").option("rowsPerBatch", "7000")
         .load()
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.StreamJoinOps.drainMemorySink(s, name)
     }
     drained.orderBy(col("bucket"))
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming face of the near-dup dedup family: MinHash-LSH banding run as a
@@ -31,42 +30,12 @@ object DocsStream {
                                        nFiles: Int = 2): String = {
     val base = sys.props("java.io.tmpdir") +
       s"/graft_stream_docs_${math.abs(dir.hashCode)}_$nFiles"
-    graft.ops.Staging.ensure(spark, base,
-      (0 until nFiles).map(k => f"docs_$k%02d.parquet")) {
+    EventsStream.stageLanding(spark, base, "docs", nFiles) {
       val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      (0 until nFiles).foreach { k =>
-        EventsStream.writeOneFile(spark,
-          docs.filter(pmod(col("doc_id"), lit(nFiles)) === k),
-          base, f"docs_$k%02d.parquet", 1000L * (k + 1))
-      }
+      (0 until nFiles).map(k => docs.filter(pmod(col("doc_id"), lit(nFiles)) === k))
     }
   }
 
-  /** Streaming MinHash-LSH near-dup pairs — q39's banded sweep as a stateful
-    * streaming aggregation, hash-matched against the SAME oracle as batch
-    * q39 ([[graft.ops.DedupOps.lshPairsOracleSql]]).
-    *
-    * Dataflow: each microbatch computes per-doc band keys row-locally (the
-    * one-pass [[graft.functions.MinhashSigs]] codegen kernel — identical to
-    * the batch operator), explodes to (band, key, doc_id), and folds into a
-    * streaming aggregation keyed on (band, key) whose state value is the
-    * bucket's member set. `collect_set` is a mergeable declarative aggregate,
-    * so cross-batch accumulation is set-union in state — order-independent,
-    * which is what makes the streaming result DETERMINISTIC and equal to the
-    * batch banding regardless of arrival order. Candidate expansion and the
-    * exact-Jaccard verify run batch-side on the drained buckets (only
-    * buckets with ≥ 2 members expand; precision is exact because every
-    * candidate is re-verified on true word sets).
-    *
-    * Scale honesty: complete-mode bucket state is the corpus's banded
-    * membership — the right shape for proving batch≡streaming equality, and
-    * bounded by (docs × bands) longs, but a production 100 TB stream would
-    * run update-mode with `flatMapGroupsWithState` emitting each NEW
-    * (arrival × existing-member) candidate per batch and watermark-expiring
-    * cold buckets; the banding math, state key, and verify are unchanged.
-    * State lives in the state store (2 partitions here; RocksDB-provider
-    * equality is covered by StreamScaleSpec for the events family).
-    */
   /** Streaming Misra-Gries heavy hitters — the q147 sketch as STREAMING
     * aggregation state: each microbatch's word stream folds into one ≤k-entry
     * MG counter table held in the state store (the same
@@ -84,10 +53,9 @@ object DocsStream {
   def mgHeavyHittersStreaming(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
     import graft.ops.TextFunctions
     import org.apache.spark.sql.expressions.Window
-    val name = "graft_stream_mg_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageDocsDirMulti(spark, dir, nFiles = 2)
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      val q = s.readStream
+    val drained = StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
+      s.readStream
         .schema(docSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
@@ -95,14 +63,6 @@ object DocsStream {
         .groupBy()
         .agg(graft.functions.VectorFunctions.mg(col("word"), k).as("sk"),
           count(lit(1)).as("n"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
     val est = drained.select(col("n"), explode(col("sk")).as(Seq("word", "est")))
     val top10 = graft.Tables.documents(spark, dir)
@@ -129,28 +89,44 @@ object DocsStream {
       |  WHERE rk <= 10)
       |SELECT word, cnt_exact, TRUE AS mg_ok FROM top10 ORDER BY word""".stripMargin
 
+  /** Streaming MinHash-LSH near-dup pairs — q39's banded sweep as a stateful
+    * streaming aggregation, hash-matched against the SAME oracle as batch
+    * q39 ([[graft.ops.DedupOps.lshPairsOracleSql]]).
+    *
+    * Dataflow: each microbatch computes per-doc band keys row-locally (the
+    * one-pass [[graft.functions.MinhashSigs]] codegen kernel — identical to
+    * the batch operator), explodes to (band, key, doc_id), and folds into a
+    * streaming aggregation keyed on (band, key) whose state value is the
+    * bucket's member set. `collect_set` is a mergeable declarative aggregate,
+    * so cross-batch accumulation is set-union in state — order-independent,
+    * which is what makes the streaming result DETERMINISTIC and equal to the
+    * batch banding regardless of arrival order. Candidate expansion and the
+    * exact-Jaccard verify run batch-side on the drained buckets (only
+    * buckets with ≥ 2 members expand; precision is exact because every
+    * candidate is re-verified on true word sets).
+    *
+    * Scale honesty: complete-mode bucket state is the corpus's banded
+    * membership — the right shape for proving batch≡streaming equality, and
+    * bounded by (docs × bands) longs, but a production 100 TB stream would
+    * run update-mode with `flatMapGroupsWithState` emitting each NEW
+    * (arrival × existing-member) candidate per batch and watermark-expiring
+    * cold buckets; the banding math, state key, and verify are unchanged.
+    * State lives in the state store (2 partitions here; RocksDB-provider
+    * equality is covered by StreamScaleSpec for the events family).
+    */
   def lshNearDupStreaming(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.{DedupOps, OracleMath, TextFunctions}
-    val name = "graft_stream_lsh_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageDocsDirMulti(spark, dir, nFiles = 2)
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
       val hashes = transform(array_distinct(TextFunctions.words(col("text"))),
         w => TextFunctions.wordHash(w))
-      val q = s.readStream
+      s.readStream
         .schema(docSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
         .select(col("doc_id"), posexplode(DedupOps.bandKeys(hashes)).as(Seq("band", "key")))
         .groupBy(col("band"), col("key"))
         .agg(collect_set(col("doc_id")).as("ids"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
     // batch-side: expand buckets to candidate pairs and verify. r15 (verdict
     // #4): the verify now follows batch q39's MASK-GROUP CONTRACTION, not

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.{OracleMath, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 /** Streaming lane for the INCREMENTAL gated near-dup (q325): today's
@@ -39,21 +38,16 @@ object EmbeddingStream {
   private[graft] def stageDeltaDir(spark: SparkSession, dir: String): String = {
     val base = sys.props("java.io.tmpdir") +
       s"/graft_stream_emb_${math.abs(dir.hashCode)}"
-    graft.ops.Staging.ensure(spark, base, Seq("emb_00.parquet", "emb_01.parquet")) {
+    EventsStream.stageLanding(spark, base, "emb", 2) {
       val d = SimilarityOps.perturbedDelta(spark, dir)
-      (0 until 2).foreach { k =>
-        EventsStream.writeOneFile(spark,
-          d.filter(pmod(col("vec_id"), lit(2)) === k),
-          base, f"emb_$k%02d.parquet", 1000L * (k + 1))
-      }
+      (0 until 2).map(k => d.filter(pmod(col("vec_id"), lit(2)) === k))
     }
   }
 
   /** q325 — the q324 incremental gated near-dup as a streaming query. */
   def deltaGatedNearDupStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_neardup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageDeltaDir(spark, dir)
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "append", skipFinalize = true) { s =>
       import graft.ops.Caches.TrackedPersist
       // static side, built once: skinny banded corpus for the gate join +
       // the corpus vectors for the verify join
@@ -74,7 +68,7 @@ object EmbeddingStream {
         SimilarityOps.withBandSketch64(stream), Seq("srp", "embedding", "nrm"))
         .select(col("vec_id").as("id_d"), col("srp").as("srp_d"),
           col("embedding").as("emb_d"), col("nrm").as("nrm_d"), col("bk"), col("bv"))
-      val q = sBands.join(cBands,
+      sBands.join(cBands,
           Seq("bk", "bv")) // stream-static inner
         .filter(SimilarityOps.hamming(col("srp_c"), col("srp_d")) <= lit(SimilarityOps.Srp64GateMaxH))
         .select(col("id_c"), col("id_d"), col("emb_d"), col("nrm_d"))
@@ -85,14 +79,6 @@ object EmbeddingStream {
             (col("nrm_c") * col("nrm_d")))
         .filter(col("sim") >= 0.9)
         .select(col("id_c"), col("id_d"), OracleMath.stableRound(col("sim"), 6).as("sim"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
     drained.orderBy(col("id_c"), col("id_d"))
   }

@@ -1,8 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Structured Streaming twin of the batch event analytics: the same
@@ -35,44 +35,43 @@ object EventsStream {
   private def canonicalEvents(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.events(spark, dir).withColumn("ts", unix_micros(col("ts")))
 
-  /** Write `df` as a single parquet file at `base/fileName` (FileStreamSource
-    * treats each file as one arrival; `mtime` > 0 pins modification time so
-    * arrival order is deterministic under `latestFirst=false`).
+  /** Stage a landing dir at `base`: part k of `parts` becomes the single
+    * parquet file `<prefix>_kk.parquet` (FileStreamSource treats each file as
+    * one arrival) with modification time 1000·(k+1), so the files arrive in
+    * order under `latestFirst=false`. Marker-validated via
+    * [[graft.ops.Staging.ensure]] so a half-staged dir (crashed run, tmp
+    * reclamation) self-heals instead of poisoning reads; `parts` is only
+    * evaluated when the dir has to be (re)written, and must hold `nFiles`
+    * frames.
     */
-  private[streaming] def writeOneFile(spark: SparkSession, df: DataFrame, base: String,
-                           fileName: String, mtime: Long): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(conf)
-    val scratch = base + "/_tmp_" + fileName
-    df.coalesce(1).write.mode("overwrite").parquet(scratch)
-    val part = fs.globStatus(new Path(scratch + "/part-*.parquet"))(0).getPath
-    val dst = new Path(base + "/" + fileName)
-    // rename returns false on failure (e.g. two stagers racing on the same
-    // tmp base — Staging.ensure is per-dir idempotent, not cross-thread
-    // atomic): abort LOUDLY before the _STAGED marker is written, or this
-    // run reads a missing landing file and only self-heals next call
-    require(fs.rename(part, dst), s"staging rename failed: $part -> $dst")
-    fs.delete(new Path(scratch), true)
-    if (mtime > 0L) fs.setTimes(dst, mtime, -1)
+  private[streaming] def stageLanding(spark: SparkSession, base: String, prefix: String, nFiles: Int)
+                                     (parts: => Seq[DataFrame]): String = {
+    val names = (0 until nFiles).map(k => f"${prefix}_$k%02d.parquet")
+    graft.ops.Staging.ensure(spark, base, names) {
+      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      for (((df, fileName), k) <- parts.zip(names).zipWithIndex) {
+        val scratch = base + "/_tmp_" + fileName
+        df.coalesce(1).write.mode("overwrite").parquet(scratch)
+        val part = fs.globStatus(new Path(scratch + "/part-*.parquet"))(0).getPath
+        val dst = new Path(base + "/" + fileName)
+        // rename returns false on failure (e.g. two stagers racing on the same
+        // tmp base — Staging.ensure is per-dir idempotent, not cross-thread
+        // atomic): abort LOUDLY before the _STAGED marker is written, or this
+        // run reads a missing landing file and only self-heals next call
+        require(fs.rename(part, dst), s"staging rename failed: $part -> $dst")
+        fs.delete(new Path(scratch), true)
+        fs.setTimes(dst, 1000L * (k + 1), -1)
+      }
+    }
   }
 
-  /** Run the streaming hourly aggregation to completion and return the
-    * final (static) result. Unique sink name per invocation so repeated
-    * calls in one session don't collide.
-    */
   /** FileStreamSource requires a *directory*; the testdata ships one parquet
     * file per table, so stage a per-sf scratch directory holding the events
     * re-encoded canonically — the shape a streaming ingest dir would have.
-    * Marker-validated via [[graft.ops.Staging.ensure]] so a half-staged dir
-    * (crashed run, tmp reclamation) self-heals instead of poisoning reads.
     */
-  private[graft] def stageStreamDirShared(spark: SparkSession, dir: String): String = {
-    val base = sys.props("java.io.tmpdir") + s"/graft_stream_us_${math.abs(dir.hashCode)}"
-    graft.ops.Staging.ensure(spark, base, Seq("events_00.parquet")) {
-      writeOneFile(spark, canonicalEvents(spark, dir), base, "events_00.parquet", 0L)
-    }
-  }
+  private[graft] def stageStreamDirShared(spark: SparkSession, dir: String): String =
+    stageLanding(spark, sys.props("java.io.tmpdir") + s"/graft_stream_us_${math.abs(dir.hashCode)}",
+      "events", 1)(Seq(canonicalEvents(spark, dir)))
 
   /** Multi-file staging: the events table split into `nFiles` time-ordered
     * parquet files with strictly increasing modification times — the shape of
@@ -88,37 +87,33 @@ object EventsStream {
     val mode = if (byTime) "time" else "hash"
     val base = sys.props("java.io.tmpdir") +
       s"/graft_stream_multi_us_${math.abs(dir.hashCode)}_${nFiles}_$mode"
-    graft.ops.Staging.ensure(spark, base,
-      (0 until nFiles).map(k => f"events_$k%02d.parquet")) {
+    stageLanding(spark, base, "events", nFiles) {
       val ev = canonicalEvents(spark, dir) // ts = long micros
       // byTime: in-order arrival (well-formed landing dir). byHash: events of
       // every user scattered across files regardless of time — deliberately
       // OUT-OF-ORDER arrival for the late-data operator.
-      val splits: Seq[org.apache.spark.sql.DataFrame] =
-        if (byTime) {
-          // bounded-collect: ≤ nFiles−1 quantile boundaries (2–3 here), one
-          // sketch pass — sizes the staged landing files, not a data path
-          val bounds = ev.stat.approxQuantile("ts",
-            (1 until nFiles).map(_.toDouble / nFiles).toArray, 0.0)
-          val edges = (Long.MinValue +: bounds.map(_.toLong)) :+ Long.MaxValue
-          (0 until nFiles).map(k =>
-            ev.filter(col("ts") >= edges(k) && col("ts") < edges(k + 1)))
-        } else {
-          (0 until nFiles).map(k => ev.filter(pmod(col("event_id"), lit(nFiles)) === k))
-        }
-      splits.zipWithIndex.foreach { case (df, k) =>
-        // mtime 1000·(k+1): strict arrival order for the source
-        writeOneFile(spark, df, base, f"events_$k%02d.parquet", 1000L * (k + 1))
+      if (byTime) {
+        // bounded-collect: ≤ nFiles−1 quantile boundaries (2–3 here), one
+        // sketch pass — sizes the staged landing files, not a data path
+        val bounds = ev.stat.approxQuantile("ts",
+          (1 until nFiles).map(_.toDouble / nFiles).toArray, 0.0)
+        val edges = (Long.MinValue +: bounds.map(_.toLong)) :+ Long.MaxValue
+        (0 until nFiles).map(k =>
+          ev.filter(col("ts") >= edges(k) && col("ts") < edges(k + 1)))
+      } else {
+        (0 until nFiles).map(k => ev.filter(pmod(col("event_id"), lit(nFiles)) === k))
       }
     }
   }
 
+  /** Run the streaming hourly aggregation to completion and return the
+    * final (static) result.
+    */
   def hourlyByTypeStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_hourly_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      val stream = s.readStream
+    val drained = StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
+      s.readStream
         .schema(rawSchema)
         .parquet(srcDir)
         .withColumn("ts", timestamp_micros(col("ts"))) // canonical staged micros
@@ -127,15 +122,6 @@ object EventsStream {
         .agg(
           count(lit(1)).as("n"),
           round(sum(col("value").cast(DecimalType(18, 2))).cast("double"), 2).as("sum_value"))
-
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     drained
@@ -155,10 +141,9 @@ object EventsStream {
     * are NOT emitted — the oracle applies exactly that cutoff.
     */
   def hourlyAppendStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_append_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirMulti(spark, dir, nFiles = 2)
-    val drained = StreamJoinOps.withStatePartitions(spark, 2) { s =>
-      val q = s.readStream
+    val drained = StreamJoinOps.runToCompletion(spark, "append") { s =>
+      s.readStream
         .schema(rawSchema)
         .option("maxFilesPerTrigger", 1)
         // 2 files: the emitted-window set depends only on the FINAL
@@ -171,14 +156,6 @@ object EventsStream {
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("value").cast(DecimalType(18, 2))).cast("double"), 2).as("sum_value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
     drained
       .select(col("window.start").as("hour"), col("event_type"), col("n"), col("sum_value"))
@@ -223,10 +200,9 @@ object EventsStream {
     * predicate is `gap > 30 min`, not `≥`.
     */
   def sessionWindowStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_sesswin_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirMulti(spark, dir, nFiles = 2)
-    val drained = StreamJoinOps.withStatePartitions(spark, 2) { s =>
-      val q = s.readStream
+    val drained = StreamJoinOps.runToCompletion(spark, "append") { s =>
+      s.readStream
         .schema(rawSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
@@ -235,14 +211,6 @@ object EventsStream {
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("spend_cents"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
     drained
       .select(col("user_id"), col("session_window.start").as("session_start"),
@@ -289,10 +257,9 @@ object EventsStream {
     * StreamScaleSpec.
     */
   def bitmapDistinctStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_bmdist_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      val q = s.readStream
+    val drained = StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
+      s.readStream
         .schema(rawSchema)
         .parquet(srcDir)
         .withColumn("ts", timestamp_micros(col("ts")))
@@ -300,14 +267,6 @@ object EventsStream {
         .groupBy(window(col("ts"), "1 day"), col("event_type"),
           expr("bitmap_bucket_number(user_id)").as("bkt"))
         .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
     drained
       .groupBy(col("window.start").as("day"), col("event_type"))
@@ -338,11 +297,10 @@ object EventsStream {
   def kmvDistinctStreaming(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.{OracleMath, SamplingOps}
     val k = SamplingOps.KmvK
-    val name = "graft_stream_kmv_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
       val h = conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10).cast("long")
-      val q = s.readStream
+      s.readStream
         .schema(rawSchema)
         .option("maxFilesPerTrigger", 1) // one staged file per microbatch: the
         // sketch state genuinely partial-merges across 3 batches, not 1
@@ -350,14 +308,6 @@ object EventsStream {
         .select(col("event_type"), h.as("h"))
         .groupBy(col("event_type"))
         .agg(graft.functions.VectorFunctions.kmv(col("h"), k).as("kmv"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
     val exact = graft.Tables.events(spark, dir)
       .groupBy(col("event_type"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Out-of-order stateful sessionization: `flatMapGroupsWithState` with a
   * per-user event BUFFER, against a landing directory whose files are split
@@ -50,10 +50,9 @@ object LateSessionStream {
 
   def sessionsLateStreaming(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_late_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 2, byTime = false)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "update", skipFinalize = true) { s =>
       val evs: Dataset[SessionStream.Ev] = s.readStream
         .schema(SessionStream.rawSchema)
         .option("maxFilesPerTrigger", 1) // one hash-split file = one microbatch
@@ -63,16 +62,8 @@ object LateSessionStream {
           col("event_id"))
         .as[SessionStream.Ev]
 
-      val q = evs.groupByKey(_.user_id)
+      evs.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(updateBuffer)
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     // last emission per user = counts over the complete buffer

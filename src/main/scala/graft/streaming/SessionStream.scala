@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Custom-state streaming: per-user sessionization with
@@ -70,10 +70,9 @@ object SessionStream {
     */
   def sessionsStreaming(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 2)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "update", skipFinalize = true) { s =>
       val evs: Dataset[Ev] = s.readStream
         .schema(rawSchema)
         .option("maxFilesPerTrigger", 1) // one landing file = one microbatch
@@ -83,16 +82,8 @@ object SessionStream {
           col("event_id"))
         .as[Ev]
 
-      val q = evs.groupByKey(_.user_id)
+      evs.groupByKey(_.user_id)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateState)
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     // update-mode emits once per key per microbatch; AvailableNow over one

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.UUID
+import graft.ops.Staging
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -26,21 +29,26 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamJoinOps {
   import EventsStream.{stageStreamDirShared, stageStreamDirMulti}
 
-  /** Run `f` with `spark.sql.shuffle.partitions` lowered to `n`: streaming
-    * state stores are created one per shuffle partition PER stateful
-    * operator PER microbatch — at 32 partitions a 3-batch run pays ~100
-    * store open/commit cycles for ~100k rows, pure overhead; at the 100k
-    * rows/trigger these queries see, 2 stores keep every shuffle task in
-    * the tens of milliseconds while removing ~30 store cycles per run
-    * (measured: the streaming family's bench cost is store/commit machinery,
-    * not data). The stream executes eagerly inside `f` (awaitTermination),
-    * so restoring the conf afterwards is safe — unlike lazy batch plans.
-    * State-store count is a real cluster knob too: it is fixed at first run
-    * by this conf and should be sized to rows-per-trigger (state shards
+  /** Run one streaming query to completion and return its result: `build`
+    * makes the stream on a cloned session ([[withStatePartitions]]), which
+    * starts it into a memory sink under a fresh name with
+    * `Trigger.AvailableNow`, waits for it, and drains the sink — an eager,
+    * lineage-free local frame (`localCheckpoint`), with the sink's temp view
+    * dropped so a session that runs the query many times (bench, tests)
+    * holds no orphaned table per run.
+    *
+    * State partitions: streaming state stores are created one per shuffle
+    * partition PER stateful operator PER microbatch — at 32 partitions a
+    * 3-batch run pays ~100 store open/commit cycles for ~100k rows, pure
+    * overhead; at the 100k rows/trigger these queries see, 2 stores keep
+    * every shuffle task in the tens of milliseconds while removing ~30 store
+    * cycles per run (measured: the streaming family's bench cost is
+    * store/commit machinery, not data). The count is fixed at a query's
+    * first run and should be sized to rows-per-trigger (state shards
     * rebalance across executors regardless) — a production firehose wants
-    * tens-to-hundreds here, a batched landing dir wants few.
-    */
-  /** `skipFinalize = true` disables the trailing no-data microbatch — valid
+    * tens-to-hundreds, a batched landing dir wants few.
+    *
+    * `skipFinalize = true` disables the trailing no-data microbatch — valid
     * ONLY for queries whose OUTPUT cannot depend on the final watermark
     * advance: complete-mode aggregations (whole result re-emitted every data
     * batch), streaming dedup (first-seen rows emit in their own batch), and
@@ -48,8 +56,30 @@ object StreamJoinOps {
     * only on data). Append-mode windows (q131) and event-time timeouts
     * (q80) NEED the finalize batch and must not set it.
     */
-  private[graft] def withStatePartitions[T](spark: SparkSession, n: Int,
-                                            skipFinalize: Boolean = false)
+  private[graft] def runToCompletion(spark: SparkSession, mode: String,
+                                     skipFinalize: Boolean = false)
+                                    (build: SparkSession => Dataset[_]): DataFrame =
+    withStatePartitions(spark, skipFinalize) { s =>
+      val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
+      build(s).writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      val out = s.table(name).localCheckpoint()
+      s.catalog.dropTempView(name)
+      out
+    }
+
+  private val StatePartitions = 2
+
+  /** Run `f` on a cloned session tuned for one streaming run (see
+    * [[runToCompletion]]); `f` must start the stream AND wait for it, so
+    * the clone and its checkpoint base are done with when `f` returns.
+    */
+  private[graft] def withStatePartitions[T](spark: SparkSession, skipFinalize: Boolean = false)
                                            (f: SparkSession => T): T = {
     // Concurrency safety: the tuned confs live on a CLONED session
     // (`newSession()` — same SparkContext and catalog metadata, fresh
@@ -68,39 +98,17 @@ object StreamJoinOps {
     s.conf.set("spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone"))
     spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
       .foreach(s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
+    s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     if (skipFinalize) s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // Checkpoints (offset log + state-store deltas, fsynced per microbatch)
-    // go to RAM when the host has a tmpfs: an AvailableNow run over K files
-    // commits ~K·(stores + 2 logs) small files, and on a disk-backed
-    // java.io.tmpdir those syncs dominate the microbatch floor. The base is
-    // unique per run and deleted after the (eagerly executed) run. On a real
-    // cluster this knob is the same decision: checkpoint to the fast
-    // reliable store.
-    val shm = new java.io.File("/dev/shm")
-    val ckptBase =
-      if (shm.isDirectory && shm.canWrite) Some(s"/dev/shm/graft_ckpt_${java.util.UUID.randomUUID().toString.take(8)}")
-      else None
-    ckptBase.foreach(s.conf.set("spark.sql.streaming.checkpointLocation", _))
-    try f(s) finally {
-      ckptBase.foreach { base =>
-        val p = new org.apache.hadoop.fs.Path(base)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(p, true)
-      }
-    }
-  }
-
-  /** Drain a memory-sink table: eagerly collect it into a lineage-free
-    * local frame (`localCheckpoint`) and DROP the temp view. Memory sinks
-    * register a driver-held table per query start; without the drop, a
-    * session that runs each streaming query several times (bench, tests)
-    * accumulates one orphaned table per run for the session lifetime.
-    */
-  private[graft] def drainMemorySink(spark: SparkSession, name: String): DataFrame = {
-    val out = spark.table(name).localCheckpoint()
-    spark.catalog.dropTempView(name)
-    out
+    // Checkpoints (offset log + state-store deltas, one set per microbatch)
+    // are per-run scratch, so they go where Staging places all per-run
+    // scratch: an AvailableNow run over K files commits ~K·(stores + 2 logs)
+    // small files, which is why that root prefers a tmpfs with headroom. The
+    // base is unique per run and deleted after the (eagerly executed) run.
+    val ckpt = new Path(Staging.perRunRoot + "/graft_ckpt_" + UUID.randomUUID().toString.take(8))
+    s.conf.set("spark.sql.streaming.checkpointLocation", ckpt.toString)
+    try f(s)
+    finally ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ckpt, true)
   }
 
   private def eventsStream(spark: SparkSession, srcDir: String): DataFrame =
@@ -115,12 +123,11 @@ object StreamJoinOps {
     * pass it), so the oracle is the identical batch interval join.
     */
   def clickAttributionStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_join_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
 
     // inner join: pairs emit in the batch they match (the finalize batch
     // only evicts state), so it is output-invariant to skip
-    val drained = withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = runToCompletion(spark, "append", skipFinalize = true) { s =>
       val purchases = eventsStream(s, srcDir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
@@ -130,19 +137,10 @@ object StreamJoinOps {
         .select(col("event_id").as("click_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
         .withWatermark("c_ts", "1 hour")
 
-      val joined = purchases.join(clicks,
+      purchases.join(clicks,
         col("user_id") === col("c_user")
           && col("c_ts") <= col("p_ts")
           && col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES"))
-
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      drainMemorySink(s, name)
     }
 
     drained
@@ -165,9 +163,8 @@ object StreamJoinOps {
     * Null click columns coalesce to −1 (null-vs-NaN dtype drift).
     */
   def clickAttributionOuterStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_ojoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
-    val drained = withStatePartitions(spark, 2) { s =>
+    val drained = runToCompletion(spark, "append") { s =>
       val purchases = eventsStream(s, srcDir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
@@ -176,19 +173,11 @@ object StreamJoinOps {
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
         .withWatermark("c_ts", "1 hour")
-      val joined = purchases.join(clicks,
+      purchases.join(clicks,
         col("user_id") === col("c_user")
           && col("c_ts") <= col("p_ts")
           && col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES"),
         "left_outer")
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      drainMemorySink(s, name)
     }
     drained
       .select(col("purchase_id"), col("user_id"),
@@ -212,9 +201,8 @@ object StreamJoinOps {
     * coalesce to −1.
     */
   def clickAttributionFullOuterStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_fojoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
-    val drained = withStatePartitions(spark, 2) { s =>
+    val drained = runToCompletion(spark, "append") { s =>
       val purchases = eventsStream(s, srcDir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
@@ -223,19 +211,11 @@ object StreamJoinOps {
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
         .withWatermark("c_ts", "1 hour")
-      val joined = purchases.join(clicks,
+      purchases.join(clicks,
         col("user_id") === col("c_user")
           && col("c_ts") <= col("p_ts")
           && col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES"),
         "full_outer")
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      drainMemorySink(s, name)
     }
     drained
       .select(coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
@@ -254,13 +234,12 @@ object StreamJoinOps {
     * reference data at ingest. The oracle is the identical batch join.
     */
   def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_static_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirShared(spark, dir)
 
-    val drained = withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = runToCompletion(spark, "complete", skipFinalize = true) { s =>
       val cust = broadcast(graft.Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment")))
-      val agg = s.readStream
+      s.readStream
         .schema(SessionStream.rawSchema)
         .parquet(srcDir)
         .select(col("user_id"), col("value"))
@@ -269,19 +248,17 @@ object StreamJoinOps {
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
             .cast("double").as("sum_value"))
-
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      drainMemorySink(s, name)
     }
 
     drained.orderBy(col("c_mktsegment"))
   }
+
+  /** Where [[streamParquetSink]] writes; the spec inspects batch provenance
+    * here (batch count is staging-dependent, so it is spec-checked, not
+    * oracled).
+    */
+  private[graft] def sinkOutDir(dir: String): String =
+    Staging.perRunRoot + s"/graft_ssink_${math.abs(dir.hashCode)}/out"
 
   /** Streaming parquet SINK via `foreachBatch`: the write half of a
     * continuously-fed pipeline (everything else here exercises sources and
@@ -296,23 +273,15 @@ object StreamJoinOps {
     * reading the written files back and aggregating matches the plain batch
     * oracle over the source table.
     */
-  /** Where [[streamParquetSink]] writes; the spec inspects batch provenance
-    * here (batch count is staging-dependent, so it is spec-checked, not
-    * oracled).
-    */
-  private[graft] def sinkOutDir(dir: String): String =
-    graft.ops.Staging.perRunRoot + s"/graft_ssink_${math.abs(dir.hashCode)}/out"
-
   def streamParquetSink(spark: SparkSession, dir: String): DataFrame = {
     val srcDir = stageStreamDirMulti(spark, dir)
-    val base = graft.ops.Staging.perRunRoot + s"/graft_ssink_${math.abs(dir.hashCode)}"
+    val base = Staging.perRunRoot + s"/graft_ssink_${math.abs(dir.hashCode)}"
     val out = sinkOutDir(dir)
     val chk = base + "/_chk"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true) // fresh run each call
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(base), true) // fresh run each call
 
-    withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    withStatePartitions(spark, skipFinalize = true) { s =>
       val q = s.readStream
         .schema(SessionStream.rawSchema)
         .option("maxFilesPerTrigger", 1)
@@ -347,14 +316,13 @@ object StreamJoinOps {
     * counts surviving keys per type against the batch DISTINCT oracle.
     */
   def dedupStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // 2 landing files: one cross-batch arrival is enough to exercise keyed
     // dedup state; the result (a DISTINCT) is batch-count-invariant and the
     // run saves a full microbatch of machinery
     val srcDir = stageStreamDirMulti(spark, dir, nFiles = 2)
 
-    val drained = withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      val deduped = s.readStream
+    val drained = runToCompletion(spark, "append", skipFinalize = true) { s =>
+      s.readStream
         .schema(SessionStream.rawSchema)
         .option("maxFilesPerTrigger", 1) // one landing file = one microbatch
         .parquet(srcDir)
@@ -362,15 +330,6 @@ object StreamJoinOps {
           date_trunc("minute", timestamp_micros(col("ts"))).as("m"))
         .withWatermark("m", "1 hour")
         .dropDuplicates("user_id", "event_type", "m")
-
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      drainMemorySink(s, name)
     }
 
     drained
@@ -393,10 +352,9 @@ object StreamJoinOps {
     * emit).
     */
   def dedupThenHourly(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_chain_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirMulti(spark, dir, nFiles = 2)
-    val drained = withStatePartitions(spark, 2) { s =>
-      val agg = s.readStream
+    val drained = runToCompletion(spark, "append") { s =>
+      s.readStream
         .schema(SessionStream.rawSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
@@ -406,14 +364,6 @@ object StreamJoinOps {
         .dropDuplicates("user_id", "event_type", "m")
         .groupBy(window(col("m"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_active"))
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      drainMemorySink(s, name)
     }
     drained
       .select(col("window.start").as("hour"), col("event_type"), col("n_active"))
@@ -442,11 +392,10 @@ object StreamJoinOps {
     * same oracle as q88.
     */
   def dedupWithinWatermarkStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_dedup_wm_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = stageStreamDirMulti(spark, dir, nFiles = 2) // see dedupStreaming
 
-    val drained = withStatePartitions(spark, 2, skipFinalize = true) { s =>
-      val deduped = s.readStream
+    val drained = runToCompletion(spark, "append", skipFinalize = true) { s =>
+      s.readStream
         .schema(SessionStream.rawSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
@@ -454,15 +403,6 @@ object StreamJoinOps {
           date_trunc("minute", timestamp_micros(col("ts"))).as("m"))
         .withWatermark("m", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type", "m")
-
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      drainMemorySink(s, name)
     }
 
     drained

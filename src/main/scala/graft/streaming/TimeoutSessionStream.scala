@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-time-timeout sessionization: `flatMapGroupsWithState` with
   * `EventTimeTimeout` — the production shape for unbounded keyspaces, where
@@ -75,12 +75,11 @@ object TimeoutSessionStream {
     */
   private[graft] def run(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val name = "graft_stream_timeout_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // 5 time-ordered files = 5 microbatches = 4 watermark advances that can
     // fire timeouts mid-stream (more incarnations than users, spec-asserted)
     val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 3)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "update") { s =>
       val evs: Dataset[TEv] = s.readStream
         .schema(SessionStream.rawSchema)
         .option("maxFilesPerTrigger", 1)
@@ -92,17 +91,9 @@ object TimeoutSessionStream {
           col("event_id"), col("ts"))
         .as[TEv]
 
-      val q = evs.groupByKey(_.user_id)
+      evs.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update(),
           GroupStateTimeout.EventTimeTimeout())(updateWithTimeout)
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     // last (= max, emissions are cumulative) per incarnation, summed per user

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, Trigger, TTLConfig, ListState}
+  TimerValues, TTLConfig, ListState}
 
 /** `ListState` through Spark 4's `transformWithState` — the third state
   * primitive after [[TwsSpendStream]]'s ValueState and
@@ -51,10 +51,9 @@ object TwsLastKStream {
 
   def lastKStreaming(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_twslastk_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = EventsStream.stageStreamDirShared(spark, dir)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "update", skipFinalize = true) { s =>
       import s.implicits._
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -67,16 +66,8 @@ object TwsLastKStream {
           expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
         .as[PIn]
 
-      val q = evs.groupByKey(_.user_id)
+      evs.groupByKey(_.user_id)
         .transformWithState(new LastKProcessor, TimeMode.None(), OutputMode.Update())
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     val w = org.apache.spark.sql.expressions.Window

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, Trigger, TTLConfig}
+  TimeMode, TimerValues, TTLConfig}
 
 /** `transformWithState` with a typed **MapState** handle — the fourth and
   * last Spark 4 state primitive after ValueState ([[TwsSpendStream]] q205),
@@ -58,10 +58,9 @@ object TwsMapStateStream {
     * key — counts are monotone so max(n) is the last write).
     */
   def typeProfileStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_twsmap_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 2)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "update", skipFinalize = true) { s =>
       import s.implicits._
       // MapState lives in its own RocksDB column family — pin the provider
       // on the cloned session (same constraint as the rest of the tws family)
@@ -75,16 +74,8 @@ object TwsMapStateStream {
           expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
         .as[TypeIn]
 
-      val q = evs.groupByKey(_.user_id)
+      evs.groupByKey(_.user_id)
         .transformWithState(new TypeProfileProcessor, TimeMode.None(), OutputMode.Update())
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     val w = org.apache.spark.sql.expressions.Window

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, Trigger, TTLConfig, ValueState}
+  TimerValues, TTLConfig, ValueState}
 
 /** Arbitrary stateful streaming via Spark 4's `transformWithState` — the
   * successor API to `mapGroupsWithState` ([[SessionStream]] keeps the classic
@@ -50,10 +50,9 @@ object TwsSpendStream {
     */
   def spendStreaming(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_tws_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 2)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2, skipFinalize = true) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "update", skipFinalize = true) { s =>
       import s.implicits._
       // transformWithState stores each state variable in its own column
       // family — a RocksDB-provider capability the default HDFS-backed
@@ -71,16 +70,8 @@ object TwsSpendStream {
           expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
         .as[SpendIn]
 
-      val q = evs.groupByKey(_.user_id)
+      evs.groupByKey(_.user_id)
         .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Update())
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     val w = org.apache.spark.sql.expressions.Window

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Event-time TIMERS through Spark 4's `transformWithState` — the timer half
   * of the new stateful API ([[TwsSpendStream]] covers typed state): the q80
@@ -62,10 +62,9 @@ object TwsTimerSessionStream {
 
   def sessionsTimerStreaming(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_twstimer_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 3)
 
-    val drained = StreamJoinOps.withStatePartitions(spark, 2) { s =>
+    val drained = StreamJoinOps.runToCompletion(spark, "update") { s =>
       import s.implicits._
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -80,16 +79,8 @@ object TwsTimerSessionStream {
           col("event_id"))
         .as[TEv]
 
-      val q = evs.groupByKey(_.user_id)
+      evs.groupByKey(_.user_id)
         .transformWithState(new SessionProcessor, TimeMode.EventTime(), OutputMode.Update())
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamJoinOps.drainMemorySink(s, name)
     }
 
     // last (= max, emissions are cumulative) per incarnation, summed per user

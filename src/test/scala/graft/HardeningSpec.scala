@@ -312,6 +312,22 @@ class HardeningSpec extends AnyFunSuite {
       "staged landing files must be the batch events re-encoded, row for row")
   }
 
+  test("a missing or non-directory SPARK_GRAFT_SCRATCH fails fast with the path named") {
+    import java.nio.file.Files
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = Files.createTempDirectory("graft_scratch_spec")
+    val missing = root.resolve("missing").toString
+    val plainFile = Files.createFile(root.resolve("plain")).toString
+    for (bad <- Seq(missing, plainFile)) {
+      val e = intercept[IllegalArgumentException](graft.ops.Staging.checkedScratch(bad, conf))
+      assert(e.getMessage.contains("SPARK_GRAFT_SCRATCH") && e.getMessage.contains(bad),
+        e.getMessage)
+    }
+    // a usable root passes and keeps no probe file
+    assert(graft.ops.Staging.checkedScratch(root.toString, conf) === root.toString)
+    assert(root.toFile.list().sorted.toSeq === Seq("plain"))
+  }
+
   test("shared streaming stage self-heals from a half-staged dir") {
     import org.apache.hadoop.fs.Path
     val staged = EventsStream.stageStreamDirShared(spark, sf)

@@ -29,7 +29,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * rename-aside swap, and one function creates a band index. One ANN
   * banding core: no SRP gate conf key, one band explode, one plane-sign
   * signature. One enrichment route: `Enrichment` classifies on the driver,
-  * through one retry loop, never inside a Spark task.
+  * through one retry loop, never inside a Spark task. One streaming run
+  * scaffold: `StreamJoinOps.runToCompletion` is the only memory-sink run,
+  * and per-run scratch placement (tmpfs or not) is decided in `Staging`
+  * alone.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -189,5 +192,31 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(calls.size == 1,
       s"\nExpected exactly one classifier call site (the retry loop), found ${calls.size}:\n" +
         calls.mkString("\n"))
+  }
+
+  test("one streaming run scaffold and one per-run scratch placement") {
+    val streamingAndSources = allMainSources.filter { p =>
+      val dir = p.getParent.getFileName.toString
+      dir == "streaming" || dir == "sources"
+    }
+    for ((what, pattern, paths, expected) <- Seq(
+        ("memory-sink start (StreamJoinOps.runToCompletion)", raw"""format\("memory"\)""",
+          allMainSources, 1),
+        ("tmpfs path (Staging.perRunRoot)", "\"/dev/shm\"", allMainSources, 1),
+        ("awaitTermination (runToCompletion and q100's foreachBatch sink)",
+          raw"awaitTermination", allMainSources, 2))) {
+      val sites = matches(paths, pattern.r)
+      assert(sites.size == expected,
+        s"\nExpected $expected $what, found ${sites.size}:\n" + sites.mkString("\n"))
+    }
+    val shm = matches(allMainSources, "\"/dev/shm\"".r)
+    assert(shm.forall(_.contains("Staging.scala")), shm.mkString("\n"))
+    val uuids = matches(streamingAndSources, raw"randomUUID".r)
+    assert(uuids.size <= 2,
+      "\nA streaming path names its own query or checkpoint (run through " +
+        "StreamJoinOps.runToCompletion):\n" + uuids.mkString("\n"))
+    val widths = matches(allMainSources, raw"withStatePartitions\(spark, \d".r)
+    assert(widths.isEmpty,
+      "\nA caller passes a state-partition count (it is a constant):\n" + widths.mkString("\n"))
   }
 }

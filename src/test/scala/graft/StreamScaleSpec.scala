@@ -208,9 +208,44 @@ class StreamScaleSpec extends AnyFunSuite {
     spark.conf.set(key, rocks)
     try {
       val inClone = graft.streaming.StreamJoinOps
-        .withStatePartitions(spark, 2)(s => s.conf.getOption(key))
+        .withStatePartitions(spark)(s => s.conf.getOption(key))
       assert(inClone.contains(rocks), s"provider not carried into clone: $inClone")
     } finally spark.conf.unset(key)
+  }
+
+  test("stream checkpoints sit under Staging.perRunRoot and are deleted, also on failure") {
+    import graft.streaming.{EventsStream, SessionStream, StreamJoinOps}
+    val staged = EventsStream.stageStreamDirShared(spark, sf)
+    // Runs one query whose rows record whether the checkpoint base exists
+    // while a microbatch executes (local mode: tasks share the driver's
+    // file system); returns the drained (live, count) rows.
+    def run(failRows: Boolean, failBuild: Boolean): Seq[(Boolean, Long)] = {
+      var base: String = null
+      val rows = scala.util.Try {
+        StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
+          base = s.conf.get("spark.sql.streaming.checkpointLocation")
+          if (failBuild) sys.error("build failed")
+          val b = base
+          val live = udf { (id: Long) =>
+            if (failRows) sys.error(s"row $id failed")
+            new java.io.File(b).isDirectory
+          }
+          s.readStream.schema(SessionStream.rawSchema).parquet(staged)
+            .select(live(col("event_id")).as("live"))
+            .groupBy(col("live")).count()
+        }.collect().map(r => (r.getBoolean(0), r.getLong(1))).toSeq
+      }
+      assert(rows.isFailure == (failRows || failBuild), rows)
+      assert(base != null && base.startsWith(Staging.perRunRoot + "/graft_ckpt_"),
+        s"checkpoint base $base is not under the staging root ${Staging.perRunRoot}")
+      assert(!new java.io.File(base).exists(), s"checkpoint base $base left behind")
+      rows.getOrElse(Seq.empty)
+    }
+    val rows = run(failRows = false, failBuild = false)
+    assert(rows.size == 1 && rows.head._1 && rows.head._2 > 0L,
+      s"checkpoint base must exist while the run executes: $rows")
+    run(failRows = true, failBuild = false)
+    run(failRows = false, failBuild = true)
   }
 
   test("stateful streaming is state-store-provider agnostic (RocksDB = default HDFS-backed)") {
