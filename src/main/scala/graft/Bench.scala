@@ -77,7 +77,7 @@ object Bench {
       // this, whichever streaming query runs first absorbs ~5-10 s.
       // the exact (nFiles, mode) variants the streaming queries read — a
       // mismatch here silently moves one-time staging into a query's timing
-      graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir) // q100 (3, time)
+      graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir) // q100/q207/q311 (3, time)
       graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir, nFiles = 2) // q51/q88/q111/q131
       graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir, nFiles = 2, byTime = false) // q72
       graft.streaming.EventsStream.stageStreamDirMulti(spark, sfDir, nFiles = 3) // q80 (same as q100)

@@ -23,6 +23,7 @@ object Caches {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
   private val trackedRdds =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+  private val trackedDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   /** Enroll a `localCheckpoint()`ed frame's backing RDD for the next
     * [[release]]: checkpoint blocks live outside the CacheManager, so
@@ -53,9 +54,23 @@ object Caches {
     def persistTracked(): DataFrame = Caches.persistTracked(df)
   }
 
-  /** Unpersist (non-blocking) everything enrolled since the last release.
-    * A frame derived from a released checkpoint cannot be executed again
-    * (see the contract above).
+  /** Enroll a per-run scratch dir ([[Staging.perRunDir]]) that a returned
+    * frame reads lazily — q100's sink output, q130's overwritten table — for
+    * deletion at the next [[release]]. Same contract as a checkpoint: the
+    * frame must not be executed after the release.
+    */
+  def deleteOnRelease(dir: String): String = {
+    trackedDirs.add(dir)
+    dir
+  }
+
+  private def activeSession: Option[org.apache.spark.sql.SparkSession] =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+
+  /** Unpersist (non-blocking) everything enrolled since the last release,
+    * and delete the enrolled scratch dirs. A frame derived from a released
+    * checkpoint or dir cannot be executed again (see the contract above).
     */
   def release(): Unit = {
     var d = tracked.poll()
@@ -67,6 +82,12 @@ object Caches {
     while (r != null) {
       r.unpersist(blocking = false)
       r = trackedRdds.poll()
+    }
+    var dir = trackedDirs.poll()
+    while (dir != null) {
+      val path = new org.apache.hadoop.fs.Path(dir)
+      activeSession.foreach(s => path.getFileSystem(s.sparkContext.hadoopConfiguration).delete(path, true))
+      dir = trackedDirs.poll()
     }
   }
 
@@ -87,9 +108,7 @@ object Caches {
     */
   def releaseAll(): Unit = {
     release()
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(_.sparkContext.getPersistentRDDs.values
+    activeSession.foreach(_.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false)))
   }
 }

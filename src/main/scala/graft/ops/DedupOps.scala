@@ -141,11 +141,43 @@ object DedupOps {
     * path's one-long set representation; Jaccard = two popcounts).
     */
   private[graft] def maskExpr(vocab: Array[String], ws: Column): Column = {
-    val bitMap = map(vocab.zipWithIndex.toIndexedSeq.flatMap {
-      case (w, i) => Seq(lit(w), lit(1L << i))
+    val bitMap = map(vocab.toIndexedSeq.zip(vocabBits(vocab)).flatMap {
+      case (w, b) => Seq(lit(w), b)
     }: _*)
     aggregate(transform(ws, w => element_at(bitMap, w)),
       lit(0L), (acc, b) => acc.bitwiseOR(b))
+  }
+
+  /** The mask bit of each vocabulary word: word i ↦ `1L << i`. */
+  private def vocabBits(vocab: Array[String]): Seq[Column] =
+    vocab.indices.map(i => lit(1L << i))
+
+  /** Identical-set groups of `(doc_id, mask)` rows: `(mask, ids, n)`.
+    * Every mask-path join then runs over DISTINCT masks only.
+    */
+  private[graft] def maskGroups(masks: DataFrame): DataFrame =
+    masks.groupBy(col("mask"))
+      .agg(collect_list(col("doc_id")).as("ids"), count(lit(1)).as("n"))
+
+  /** Doc pairs of the mask-group pairs `(ids_a, ids_b, j)`: a group pair
+    * expands to the cross product of its members, and every group of
+    * n > 1 identical masks adds its internal pairs at J = 1 exactly.
+    * Returns `(doc_a, doc_b, jaccard)` with `doc_a < doc_b`, sorted.
+    */
+  private def maskGroupDocPairs(groupPairs: DataFrame, groups: DataFrame): DataFrame = {
+    val crossPairs = groupPairs
+      .select(explode(col("ids_a")).as("x"), col("ids_b"), col("j"))
+      .select(col("x"), explode(col("ids_b")).as("y"), col("j"))
+      .select(least(col("x"), col("y")).as("doc_a"),
+        greatest(col("x"), col("y")).as("doc_b"), col("j"))
+    val withinPairs = groups.filter(col("n") > 1)
+      .select(explode(col("ids")).as("x"), col("ids"))
+      .select(col("x"), explode(col("ids")).as("y"))
+      .filter(col("x") < col("y"))
+      .select(col("x").as("doc_a"), col("y").as("doc_b"), lit(1.0).as("j"))
+    crossPairs.unionByName(withinPairs)
+      .select(col("doc_a"), col("doc_b"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Adaptive pair join over a prepared `(doc_id, ws0)` frame: probe the
@@ -223,9 +255,7 @@ object DedupOps {
                                  threshold: Double): DataFrame = {
     // the mask is an order-independent OR-fold over a literal dictionary
     // map, so no sort and no shuffle to build it
-    val masks = docs.select(col("doc_id"), maskExpr(vocab, col("ws0")).as("mask"))
-    val groups = masks.groupBy(col("mask"))
-      .agg(collect_list(col("doc_id")).as("ids"), count(lit(1)).as("n"))
+    val groups = maskGroups(docs.select(col("doc_id"), maskExpr(vocab, col("ws0")).as("mask")))
 
     // all-pairs over DISTINCT masks only; Jaccard inline in the join
     // condition (AND/OR + two popcounts, codegen) — the double division
@@ -239,26 +269,11 @@ object DedupOps {
     val a = groups.repartition(par)
       .select(col("mask").as("mask_a"), col("ids").as("ids_a"))
     val b = groups.select(col("mask").as("mask_b"), col("ids").as("ids_b"))
-    val j = bit_count(col("mask_a").bitwiseAND(col("mask_b"))).cast("double") /
-      bit_count(col("mask_a").bitwiseOR(col("mask_b")))
-    val crossPairs = a.join(broadcast(b),
+    val j = Banding.maskJaccard(col("mask_a"), col("mask_b"))
+    val groupPairs = a.join(broadcast(b),
         col("mask_a") < col("mask_b") && j >= lit(threshold))
       .select(col("ids_a"), col("ids_b"), j.as("j"))
-      .select(explode(col("ids_a")).as("x"), col("ids_b"), col("j"))
-      .select(col("x"), explode(col("ids_b")).as("y"), col("j"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col("j"))
-
-    // identical-set groups contribute their internal pairs at J = 1 exactly
-    val withinPairs = groups.filter(col("n") > 1)
-      .select(explode(col("ids")).as("x"), col("ids"))
-      .select(col("x"), explode(col("ids")).as("y"))
-      .filter(col("x") < col("y"))
-      .select(col("x").as("doc_a"), col("y").as("doc_b"), lit(1.0).as("j"))
-
-    crossPairs.unionByName(withinPairs)
-      .select(col("doc_a"), col("doc_b"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    maskGroupDocPairs(groupPairs, groups)
   }
 
   /** N-gram (shingle) Jaccard near-dup pairs: the order-sensitive member of
@@ -299,25 +314,29 @@ object DedupOps {
     */
   private def nearDupJaccardGeneral(spark: SparkSession, docs: DataFrame,
                                     threshold: Double): DataFrame = {
-    import graft.functions.VectorFunctions.sortedIntersectSize
     val (cands, ids) = ppjoinCandidates(spark, docs, threshold)
+    verifyPairs(cands, ids, threshold)
+  }
 
-    // Verify FIRST (cheap codegen kernel on the attached arrays — broadcast
-    // when the id table is small, shuffle hash join when it is not; see
-    // [[gatedVerifySide]]), dedupe the multiplicity only on the small
-    // passing set: a shared-k-prefix-tokens pair costs k kernel calls but
-    // avoids shuffling the full candidate multiset, which dominated the
-    // wall clock.
+  /** Exact verify of candidate pairs `(a, b)` against the token-id table
+    * `ids` = `(doc_id, ws, sz)`: `(a, b, jaccard)` with Jaccard ≥ `threshold`,
+    * once per pair, sorted. Verifies FIRST on the [[gatedVerifySide]]-attached
+    * arrays and dedupes only the small passing set: a pair found k times
+    * costs k kernel calls but the candidate multiset is never shuffled.
+    */
+  private def verifyPairs(cands: DataFrame, ids: DataFrame, threshold: Double,
+                          a: String = "doc_a", b: String = "doc_b"): DataFrame = {
+    import graft.functions.VectorFunctions.sortedIntersectSize
     val est = estIdBytes(ids)
-    val docA = ids.select(col("doc_id").as("doc_a"), col("ws").as("ws_a"), col("sz").as("sz_a"))
-    val docB = ids.select(col("doc_id").as("doc_b"), col("ws").as("ws_b"), col("sz").as("sz_b"))
-    cands.join(gatedVerifySide(docA, est), "doc_a").join(gatedVerifySide(docB, est), "doc_b")
-      .withColumn("inter", sortedIntersectSize(col("ws_a"), col("ws_b")))
-      .withColumn("j", col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+    def side(id: String) =
+      gatedVerifySide(ids.select(col("doc_id").as(id), col("ws").as(s"ws_$id"), col("sz").as(s"sz_$id")), est)
+    cands.join(side(a), a).join(side(b), b)
+      .withColumn("inter", sortedIntersectSize(col(s"ws_$a"), col(s"ws_$b")))
+      .withColumn("j", col("inter").cast("double") / (col(s"sz_$a") + col(s"sz_$b") - col("inter")))
       .filter(col("j") >= threshold)
-      .select(col("doc_a"), col("doc_b"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
-      .dropDuplicates("doc_a", "doc_b")
-      .orderBy(col("doc_a"), col("doc_b"))
+      .select(col(a), col(b), OracleMath.stableRound(col("j"), 4).as("jaccard"))
+      .dropDuplicates(a, b)
+      .orderBy(col(a), col(b))
   }
 
   /** Incremental (delta-batch) near-dup: match a NEW batch of documents
@@ -338,7 +357,6 @@ object DedupOps {
     */
   def deltaNearDup(spark: SparkSession, dir: String, threshold: Double = NearDupThreshold,
                    forceGeneral: Boolean = false): DataFrame = {
-    import graft.functions.VectorFunctions.sortedIntersectSize
     val all = Tables.documents(spark, dir)
       .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws0"))
 
@@ -351,23 +369,15 @@ object DedupOps {
     }
 
     // global-rarity dictionary over corpus ∪ delta (vocabulary-sized; the
-    // per-batch refresh of the persisted index's dictionary) — ranked by the
-    // PrefixSum two-pass, never a one-task vocabulary sort
-    val (ranks, vocabRows) = PrefixSum.rarityRanksCounted(
-      all.select(explode(col("ws0")).as("word")), "word")
-    val ids = all.select(col("doc_id"), explode(col("ws0")).as("word"))
-      .join(gatedDictSide(ranks, vocabRows), "word")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("tok"))).as("ws"), count(lit(1)).as("sz"))
-      .persistTracked()
+    // per-batch refresh of the persisted index's dictionary)
+    val ids = rarityTokenIds(all)
 
     // exact integer prefix/length bounds — see ppjoinCandidates for why the
     // float forms lose boundary pairs
     val tNum = math.round(threshold * 1000).toInt
     val tDen = 1000
-    val prefixLen = (col("sz") - floor((col("sz") * tNum + (tDen - 1)) / tDen) + 1).cast("int")
     def prefixes(side: DataFrame) = side.select(col("doc_id"), col("sz"),
-      explode(slice(col("ws"), lit(1), prefixLen)).as("tok"))
+      explode(slice(col("ws"), lit(1), prefixLen(tNum, tDen))).as("tok"))
 
     val cands = prefixes(ids.filter(col("doc_id") % 5 === 0)).as("d")
       .join(prefixes(ids.filter(col("doc_id") % 5 =!= 0)).as("c"),
@@ -376,17 +386,7 @@ object DedupOps {
           && col("c.sz") * tDen >= col("d.sz") * tNum)
       .select(col("d.doc_id").as("doc_delta"), col("c.doc_id").as("doc_corpus"))
 
-    val est = estIdBytes(ids)
-    val dSide = ids.select(col("doc_id").as("doc_delta"), col("ws").as("ws_d"), col("sz").as("sz_d"))
-    val cSide = ids.select(col("doc_id").as("doc_corpus"), col("ws").as("ws_c"), col("sz").as("sz_c"))
-    cands.join(gatedVerifySide(dSide, est), "doc_delta")
-      .join(gatedVerifySide(cSide, est), "doc_corpus")
-      .withColumn("inter", sortedIntersectSize(col("ws_d"), col("ws_c")))
-      .withColumn("j", col("inter").cast("double") / (col("sz_d") + col("sz_c") - col("inter")))
-      .filter(col("j") >= threshold)
-      .select(col("doc_delta"), col("doc_corpus"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
-      .dropDuplicates("doc_delta", "doc_corpus")
-      .orderBy(col("doc_delta"), col("doc_corpus"))
+    verifyPairs(cands, ids, threshold, "doc_delta", "doc_corpus")
   }
 
   /** Containment threshold + contained-side size cap for
@@ -420,28 +420,19 @@ object DedupOps {
     import graft.functions.VectorFunctions.sortedIntersectSize
     val all = Tables.documents(spark, dir)
       .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws0"))
-    // rarity dictionary via the PrefixSum two-pass rank (q231's treatment —
-    // a web-scale vocabulary never collapses into one window task)
-    val (ranks, vocabRows) = PrefixSum.rarityRanksCounted(
-      all.select(explode(col("ws0")).as("word")), "word")
-    // persist, NOT localCheckpoint (r15, measured): a checkpoint leaf here
+    // persisted, NOT localCheckpoint (r15, measured): a checkpoint leaf here
     // would cut ~0.8 s of driver re-analysis gaps, but it also erases the
     // id table's statistics — the candidate join re-planned against a
     // stats-less LogicalRDD leaf and collapsed into a 14 s two-stage job
     // (8× the persisted plan's whole wall). The lineage-bearing persist is
     // what keeps the prefix-join planning right; the driver gaps are the
     // price and stay.
-    val ids = all.select(col("doc_id"), explode(col("ws0")).as("word"))
-      .join(gatedDictSide(ranks, vocabRows), "word")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("tok"))).as("ws"), count(lit(1)).as("sz"))
-      .persistTracked()
+    val ids = rarityTokenIds(all)
     val tNum = math.round(ContainThreshold * 1000).toInt
     val tDen = 1000
-    val prefixLenA = (col("sz") - floor((col("sz") * tNum + (tDen - 1)) / tDen) + 1).cast("int")
     val aPref = ids.filter(col("sz").between(ContainMinSrcTokens, ContainMaxSrcTokens))
       .select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
-        explode(slice(col("ws"), lit(1), prefixLenA)).as("tok"))
+        explode(slice(col("ws"), lit(1), prefixLen(tNum, tDen))).as("tok"))
     val postings = ids.select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
       explode(col("ws")).as("tok"))
     val cands = aPref.join(postings, "tok")
@@ -502,23 +493,15 @@ object DedupOps {
     */
   private def deltaNearDupMask(docs: DataFrame, vocab: Array[String],
                                threshold: Double): DataFrame = {
-    val bitMap = map(vocab.zipWithIndex.toIndexedSeq.flatMap {
-      case (w, i) => Seq(lit(w), lit(1L << i))
-    }: _*)
-    val masks = docs.select(col("doc_id"),
-      aggregate(transform(col("ws0"), w => element_at(bitMap, w)),
-        lit(0L), (acc, b) => acc.bitwiseOR(b)).as("mask"))
-    def groups(side: DataFrame) = side.groupBy(col("mask"))
-      .agg(collect_list(col("doc_id")).as("ids"))
+    val masks = docs.select(col("doc_id"), maskExpr(vocab, col("ws0")).as("mask"))
     // repartition pins the quadratic probe's parallelism (see
     // nearDupJaccardMask — AQE would coalesce the KB-sized side to 1 task)
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    val d = groups(masks.filter(col("doc_id") % 5 === 0)).repartition(par)
+    val d = maskGroups(masks.filter(col("doc_id") % 5 === 0)).repartition(par)
       .select(col("mask").as("mask_d"), col("ids").as("ids_d"))
-    val c = groups(masks.filter(col("doc_id") % 5 =!= 0))
+    val c = maskGroups(masks.filter(col("doc_id") % 5 =!= 0))
       .select(col("mask").as("mask_c"), col("ids").as("ids_c"))
-    val j = bit_count(col("mask_d").bitwiseAND(col("mask_c"))).cast("double") /
-      bit_count(col("mask_d").bitwiseOR(col("mask_c")))
+    val j = Banding.maskJaccard(col("mask_d"), col("mask_c"))
     d.join(broadcast(c), j >= lit(threshold))
       .select(explode(col("ids_d")).as("doc_delta"), col("ids_c"), j.as("j"))
       .select(col("doc_delta"), explode(col("ids_c")).as("doc_corpus"), col("j"))
@@ -527,34 +510,35 @@ object DedupOps {
       .orderBy(col("doc_delta"), col("doc_corpus"))
   }
 
+  /** Dictionary-encode `(doc_id, ws0)` word sets as `(doc_id, ws, sz)`, `ws`
+    * the sorted global rarity ranks (PrefixSum two-pass, no one-task window
+    * sort): verification merges sorted int arrays, the shuffle moves ~4 B per
+    * token, and a doc's PPJoin prefix is its first elements. Persisted: the
+    * prefix explode and both verify sides would each re-derive it.
+    */
+  private def rarityTokenIds(docs: DataFrame): DataFrame = {
+    val (ranks, vocabRows) = PrefixSum.rarityRanksCounted(
+      docs.select(explode(col("ws0")).as("word")), "word")
+    docs.select(col("doc_id"), explode(col("ws0")).as("word"))
+      .join(gatedDictSide(ranks, vocabRows), "word")
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("tok"))).as("ws"), count(lit(1)).as("sz"))
+      .persistTracked()
+  }
+
+  /** PPJoin prefix length of a rarity-sorted set of size `sz` at threshold
+    * t = tNum/tDen: sz − ⌈t·sz⌉ + 1, in exact integer arithmetic.
+    */
+  private def prefixLen(tNum: Int, tDen: Int): Column =
+    (col("sz") - floor((col("sz") * tNum + (tDen - 1)) / tDen) + 1).cast("int")
+
   /** PPJoin candidate generation + the persisted token-id table (exposed for
     * the shuffle-volume spec: the verify join's work must be bounded by the
     * candidate multiset returned here, not by corpus²).
     */
   private[graft] def ppjoinCandidates(spark: SparkSession, docs: DataFrame,
                                       threshold: Double): (DataFrame, DataFrame) = {
-
-    // Global rarity rank of every word (vocabulary-sized → broadcast). The
-    // rank doubles as an integer token id: the verify step then merges sorted
-    // int arrays (codegen kernel) instead of intersecting string arrays, and
-    // the shuffle moves ~4B per token instead of whole words. The rank itself
-    // is the PrefixSum two-pass — exact and fully distributed even for a
-    // web-scale vocabulary (no one-task window sort).
-    val (ranks, vocabRows) = PrefixSum.rarityRanksCounted(
-      docs.select(explode(col("ws0")).as("word")), "word")
-
-    // int-ified ascending word-set: rarest tokens get the smallest ids, so a
-    // doc's prefix (PPJoin) is simply the first ⌊(1-t)·sz⌋+1 array elements.
-    // Persisted: three consumers (prefix explode + both verify sides) would
-    // otherwise re-derive the explode→join→regroup chain — and with it the
-    // upstream tokenization — once each. A few MB per 10^6 docs; at 100 TB
-    // this is the classic cache-the-dictionary-encoded-view step.
-    val ids = docs
-      .select(col("doc_id"), explode(col("ws0")).as("word"))
-      .join(gatedDictSide(ranks, vocabRows), "word")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("tok"))).as("ws"), count(lit(1)).as("sz"))
-      .persistTracked()
+    val ids = rarityTokenIds(docs)
 
     // EXACT integer arithmetic for the filter bounds — float forms are wrong
     // at boundaries: 1-0.9 = 0.0999…8 makes floor(sz·0.1)+1 one too short for
@@ -564,9 +548,8 @@ object DedupOps {
     // prefix length = sz - ceil(t·sz) + 1, length filter tDen·a >= tNum·b.
     val tNum = math.round(threshold * 1000).toInt
     val tDen = 1000
-    val prefixLen = (col("sz") - floor((col("sz") * tNum + (tDen - 1)) / tDen) + 1).cast("int")
     val prefixes = ids.select(col("doc_id"), col("sz"),
-      explode(slice(col("ws"), lit(1), prefixLen)).as("tok"))
+      explode(slice(col("ws"), lit(1), prefixLen(tNum, tDen))).as("tok"))
 
     // Candidate pairs share >=1 prefix token (lossless for J >= t), with the
     // PPJoin length filter applied at the join: J >= t forces
@@ -658,9 +641,8 @@ object DedupOps {
       .withColumn("sig", minhashSigs(transform(col("ws"), w => wordHash(w)), k))
       .persistTracked()
     val banded = sigd.select(col("doc_id"),
-        explode(transform(sequence(lit(0), lit(nBands - 1)),
-          b => struct(b.cast("long").as("band"),
-            slice(col("sig"), b * LshRows + lit(1), lit(LshRows)).as("key")))).as("bk"))
+        explode(Banding.minhashBands(col("sig"), nBands, LshRows)(
+          (b, key) => struct(b.cast("long").as("band"), key.as("key")))).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
     // each doc has exactly one key per band, so a pair appears at most once
     // per band — no dedup needed inside a band
@@ -721,12 +703,6 @@ object DedupOps {
       .map(_.getLong(0).toInt + 1).getOrElse(maxBands)
   }
 
-  /** Band-key column for [[lshNearDupPairs]]: one long per band —
-    * xxhash64(band index, the band's `rows` signature values). The k
-    * signature values come from ONE codegen pass over the word-hash array
-    * ([[graft.functions.MinhashSigs]] kernel) instead of k interpreted
-    * array_min∘transform scans.
-    */
   /** Shared q39/q170 oracle: banded MinHash candidates + exact-Jaccard
     * verification at the default threshold — the batch and streaming LSH
     * operators are held to the SAME SQL twin.
@@ -755,11 +731,16 @@ object DedupOps {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
+  /** Band-key column for [[lshNearDupPairs]]: one long per band —
+    * xxhash64(band index, the band's `rows` signature values). The k
+    * signature values come from ONE codegen pass over the word-hash array
+    * ([[graft.functions.MinhashSigs]] kernel) instead of k interpreted
+    * array_min∘transform scans.
+    */
   private[graft] def bandKeys(hashes: Column): Column = {
     import graft.functions.VectorFunctions.minhashSigs
     val sig = minhashSigs(hashes, LshBands * LshRows)
-    transform(sequence(lit(0), lit(LshBands - 1)),
-      b => xxhash64(b, slice(sig, b * LshRows + 1, lit(LshRows))))
+    Banding.minhashBands(sig, LshBands, LshRows)((b, key) => xxhash64(b, key))
   }
 
   /** Scala twin of [[TextFunctions.wordHash]] (only sketch-internal — q39 is
@@ -780,94 +761,79 @@ object DedupOps {
     */
   private def lshNearDupMask(docsRaw: DataFrame, vocab: Array[String],
                              threshold: Double): DataFrame = {
-    val groups = docsRaw.select(col("doc_id"),
-        maskExpr(vocab, col("ws0")).as("mask"))
-      .groupBy(col("mask"))
-      .agg(collect_list(col("doc_id")).as("ids"), count(lit(1)).as("n"))
+    val groups = maskGroups(docsRaw.select(col("doc_id"), maskExpr(vocab, col("ws0")).as("mask")))
 
     // MinHash signatures recomputed from the mask: reconstruct the word-hash
     // set from precomputed vocabulary hashes (array literal + bit test), then
     // the same one-pass kernel. Runs once per DISTINCT mask.
     val vocabHashes = array(vocab.toIndexedSeq.map(w => lit(wordHashScala(w))): _*)
-    val vocabBits = array(vocab.indices.map(i => lit(1L << i)): _*)
     val hsFromMask = filter(
-      zip_with(vocabHashes, vocabBits,
+      zip_with(vocabHashes, array(vocabBits(vocab): _*),
         (h, b) => when(col("mask").bitwiseAND(b) =!= 0L, h)),
       h => h.isNotNull)
-    // band rows carry ONLY (mask, band): the ~17M-candidate join must not
-    // materialize member-id arrays (measured: arrays through the join cost
-    // as much as the whole query). Jaccard sits in the join condition, so
-    // only passing pairs ever become rows.
     val banded = groups.select(col("mask"), explode(bandKeys(hsFromMask)).as("band"))
-    val jCond = bit_count(col("a.mask").bitwiseAND(col("b.mask"))).cast("double") /
-      bit_count(col("a.mask").bitwiseOR(col("b.mask")))
-    val j = bit_count(col("mask_a").bitwiseAND(col("mask_b"))).cast("double") /
-      bit_count(col("mask_a").bitwiseOR(col("mask_b")))
-    val groupPairs = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.mask") < col("b.mask")
-          && jCond >= lit(threshold))
+    lshMaskPairs(banded, groups, threshold)
+  }
+
+  /** Dense-domain LSH candidate-and-verify over band rows `(mask, <bucket
+    * key columns>)`: q39's `(mask, band)`, q170's `(band, key, mask)`. Masks
+    * sharing a bucket and passing the popcount Jaccard in the join condition
+    * become group pairs, deduped before expansion through `groups`. Band
+    * rows carry no id arrays (measured: arrays through the ~17M-candidate
+    * join cost as much as the whole query).
+    */
+  private[graft] def lshMaskPairs(bandMasks: DataFrame, groups: DataFrame,
+                                  threshold: Double): DataFrame = {
+    val sameBucket = bandMasks.columns.filterNot(_ == "mask")
+      .map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    val groupPairs = bandMasks.as("a").join(bandMasks.as("b"),
+        sameBucket && col("a.mask") < col("b.mask")
+          && Banding.maskJaccard(col("a.mask"), col("b.mask")) >= lit(threshold))
       .select(col("a.mask").as("mask_a"), col("b.mask").as("mask_b"))
-      .dropDuplicates("mask_a", "mask_b") // ≤ bands duplicates, deduped pre-expansion
+      .dropDuplicates("mask_a", "mask_b")
       .join(broadcast(groups.select(col("mask").as("mask_a"), col("ids").as("ids_a"))), "mask_a")
       .join(broadcast(groups.select(col("mask").as("mask_b"), col("ids").as("ids_b"))), "mask_b")
-      .select(col("ids_a"), col("ids_b"), j.as("j"))
-      .select(explode(col("ids_a")).as("x"), col("ids_b"), col("j"))
-      .select(col("x"), explode(col("ids_b")).as("y"), col("j"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col("j"))
-
-    // identical-mask groups: every band collides, J = 1 exactly
-    val withinPairs = groups.filter(col("n") > 1)
-      .select(explode(col("ids")).as("x"), col("ids"))
-      .select(col("x"), explode(col("ids")).as("y"))
-      .filter(col("x") < col("y"))
-      .select(col("x").as("doc_a"), col("y").as("doc_b"), lit(1.0).as("j"))
-
-    groupPairs.unionByName(withinPairs)
-      .select(col("doc_a"), col("doc_b"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+      .select(col("ids_a"), col("ids_b"), Banding.maskJaccard(col("mask_a"), col("mask_b")).as("j"))
+    maskGroupDocPairs(groupPairs, groups)
   }
 
   /** General-vocabulary LSH path. Word hashes double as integer token ids
     * (hash collisions would perturb Jaccard by < 1e-3 at realistic vocabulary
-    * sizes; acceptable for an approximate operator). Candidates stay SKINNY
-    * (two longs) through the band self-join; arrays attach afterwards via
-    * broadcast map-joins. An exactly-once-emission variant (per-band joins
-    * guarded by "earlier bands differ", arrays carried through the join) was
-    * measured 2× slower on collision-dense data — array materialization at
-    * the join dominates.
+    * sizes; acceptable for an approximate operator).
     */
-  private def lshNearDupGeneral(docsRaw: DataFrame, threshold: Double): DataFrame = {
-    import graft.functions.VectorFunctions.sortedIntersectSize
+  private[graft] def lshNearDupGeneral(docsRaw: DataFrame, threshold: Double): DataFrame = {
+    val docs = lshTokenIds(docsRaw, hs => Seq(bandKeys(hs).as("bands")))
+    lshGeneralPairs(docs.select(col("doc_id"), explode(col("bands")).as("band")), docs, threshold)
+  }
+
+  /** Persisted `(doc_id, ws, sz)` table of `(doc_id, ws0)` word sets for
+    * [[lshGeneralPairs]]: word hashes as sorted int ids, plus `extra`
+    * columns computed from the word-hash array.
+    */
+  private[graft] def lshTokenIds(docsRaw: DataFrame,
+                                 extra: Column => Seq[Column] = _ => Nil): DataFrame = {
     val hs = transform(col("ws0"), wordHash(_))
-    // persisted: four consumers (band explode, both verify sides, and the
-    // broadcast-gate size probe) would each re-derive the hash/sort pass
-    val docs = docsRaw
-      .select(col("doc_id"), sort_array(transform(hs, _.cast("int"))).as("ws"),
-        bandKeys(hs).as("bands"))
+    docsRaw.select(Seq(col("doc_id"), sort_array(transform(hs, _.cast("int"))).as("ws")) ++ extra(hs): _*)
       .withColumn("sz", size(col("ws")))
       .persistTracked()
+  }
 
-    val banded = docs.select(col("doc_id"), explode(col("bands")).as("band"))
-    val cands = banded.as("a").join(banded.as("b"), Seq("band"))
+  /** General-vocabulary LSH candidate-and-verify over band rows
+    * `(doc_id, <bucket key columns>)` — q39's `(doc_id, band)` and q170's
+    * streamed `(band, key, doc_id)` — against the [[lshTokenIds]] table
+    * `docs`. Candidates stay SKINNY (two longs) through the band self-join;
+    * arrays attach afterwards in [[verifyPairs]], which verifies before it
+    * dedupes (at most `LshBands` duplicate verifications per pair). An
+    * exactly-once-emission variant (per-band joins guarded by "earlier bands
+    * differ", arrays carried through the join) was measured 2× slower on
+    * collision-dense data — array materialization at the join dominates.
+    */
+  private[graft] def lshGeneralPairs(bandDocs: DataFrame, docs: DataFrame,
+                                     threshold: Double): DataFrame = {
+    val cands = bandDocs.as("a").join(bandDocs.as("b"), bandDocs.columns.filterNot(_ == "doc_id").toSeq)
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-
-    // verify-then-dedupe: at most `LshBands` duplicate verifications per
-    // pair, and the kernel verify is cheaper than shuffling the candidate
-    // multiset for an early distinct. The attach joins are broadcast only
-    // while the id table fits [[gatedVerifySide]]'s size gate — past it they
-    // degrade to shuffle hash joins on doc_id.
-    val est = estIdBytes(docs)
-    val docA = docs.select(col("doc_id").as("doc_a"), col("ws").as("ws_a"), col("sz").as("sz_a"))
-    val docB = docs.select(col("doc_id").as("doc_b"), col("ws").as("ws_b"), col("sz").as("sz_b"))
-    cands.join(gatedVerifySide(docA, est), "doc_a").join(gatedVerifySide(docB, est), "doc_b")
-      .withColumn("inter", sortedIntersectSize(col("ws_a"), col("ws_b")))
-      .withColumn("j", col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("j") >= threshold)
-      .select(col("doc_a"), col("doc_b"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
-      .dropDuplicates("doc_a", "doc_b")
-      .orderBy(col("doc_a"), col("doc_b"))
+    verifyPairs(cands, docs, threshold)
   }
 
   /** Dedup-cluster resolution: connected components over the near-duplicate
@@ -1284,39 +1250,15 @@ object DedupOps {
   /** SimHash near-dup pairs via bit-band blocking: split the 64-bit
     * fingerprint into 4 × 16-bit bands; pairs within Hamming distance ≤ 3
     * must agree on at least one band (pigeonhole — lossless blocking), so
-    * candidates come from 4 band-bucket self-joins, then exact popcount
-    * verification. The whole pipeline runs on one long per doc — the
-    * cheapest near-dup operator at 100 TB (no arrays shuffled at all).
-    * Rows-check (bit-level sketch, no SQL twin); spec-checked lossless
-    * against the brute-force Hamming join.
+    * candidates come from the band-bucket self-join of
+    * [[Banding.hammingNearDup]], then exact popcount verification. The
+    * whole pipeline runs on one long per doc — the cheapest near-dup
+    * operator at 100 TB (no arrays shuffled at all). Rows-check (bit-level
+    * sketch, no SQL twin); spec-checked lossless against the brute-force
+    * Hamming join.
     */
-  def simhashNearDup(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
-    val sh = simhashBase(spark, dir) // (doc_id, simhash)
-    def band(c: Column, i: Int): Column = shiftright(c, i * 16).bitwiseAND(lit(0xFFFFL))
-    // ONE equi self-join on the exploded (band index, band value) key —
-    // every row is three longs, the shuffle moves |docs|·4 of them, and
-    // there is no broadcast machinery to pay for (an earlier 4-separate-
-    // broadcast-join formulation showed multi-second wall-clock variance in
-    // long sessions). Exactly-once emission via the "all earlier bands
-    // differ" guard, computed from the carried fingerprints — no dedup
-    // shuffle of the candidate multiset.
-    val banded = sh.select(col("doc_id"), col("simhash"),
-        explode(expr(
-          "transform(sequence(0, 3), k -> struct(k AS bk, shiftright(simhash, CAST(16*k AS INT)) & 65535 AS bv))")).as("b"))
-      .select(col("doc_id"), col("simhash"), col("b.bk").as("bk"), col("b.bv").as("bv"))
-    val earlierDiffer = (0 until 3).map { i =>
-      when(col("a.bk") > i, band(col("a.simhash"), i) =!= band(col("b.simhash"), i))
-        .otherwise(lit(true))
-    }.reduce(_ && _)
-    banded.as("a").join(banded.as("b"),
-        col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv")
-          && col("a.doc_id") < col("b.doc_id") && earlierDiffer)
-      .withColumn("hamming",
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), col("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+  def simhashNearDup(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
+    Banding.hammingNearDup(simhashBase(spark, dir), "simhash", maxHamming)
 
   // ---------------------------------------------------------------------------
 

@@ -402,14 +402,11 @@ object EventOps {
     * aggregate proves the surgical scope: only 2024-01-05 changed, and the
     * oracle reproduces the corrected table directly from the source facts.
     * Fresh table per call (not Staging.ensure): the overwrite IS the
-    * operator; a cached mutated table would break re-runs.
+    * operator; a cached mutated table would break re-runs. The table lives
+    * in a per-run dir, deleted at the next `Caches.release`.
     */
   def partitionOverwrite(spark: SparkSession, dir: String): DataFrame = {
-    val base = Staging.perRunRoot + s"/graft_dynpo_${math.abs(dir.hashCode)}"
-    val tbl = base + "/events_days"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val tbl = Caches.deleteOnRelease(Staging.perRunDir("graft_dynpo")) + "/events_days"
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))

@@ -441,20 +441,11 @@ object MultimodalOps {
         graft.functions.VectorFunctions.avghash64(col("text")).as("phash"))
   }
 
-  def phashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val hashed = phashes(spark, dir)
-    val banded = hashed.select(col("doc_id"), col("phash"),
-        explode(expr("transform(sequence(0, 3), k -> struct(k AS band, shiftright(phash, CAST(k * 16 AS INT)) & 65535L AS key))")).as("bk"))
-      .select(col("doc_id"), col("phash"), col("bk.band").as("band"), col("bk.key").as("key"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.phash ^ b.phash)").cast("long").as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
-      .dropDuplicates("doc_a", "doc_b")
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+  /** pHash near-dup pairs: [[Banding.hammingNearDup]] over [[phashes]] at
+    * distance ≤ [[PhashMaxHamming]].
+    */
+  def phashNearDup(spark: SparkSession, dir: String): DataFrame =
+    Banding.hammingNearDup(phashes(spark, dir), "phash", PhashMaxHamming)
 
   def oracle: Map[String, String] = Map(
     "q190_scene_cuts" ->

@@ -26,6 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityOps {
   import graft.functions.VectorFunctions.dotp
+  import Banding.hamming
 
   /** cosine via the native [[graft.functions.DotProduct]] kernel (same
     * left-to-right double fold as the SQL oracle, codegen'd).
@@ -227,10 +228,6 @@ object SimilarityOps {
   private def selfBandCond: Column =
     col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv") &&
       col("a.vec_id") < col("b.vec_id")
-
-  /** Hamming distance of two packed sketch columns. */
-  private[graft] def hamming(a: Column, b: Column): Column =
-    call_function("bit_count", a.bitwiseXOR(b))
 
   /** Semantic dedup clusters — the embedding-space analog of
     * [[graft.ops.DedupOps.dedupClusters]]: connected components over the
@@ -1817,13 +1814,10 @@ object SimilarityOps {
     withSrpSketch64(withBandSignature(df))
 
   /** Explode a frame carrying `sig` to one row per (band key, band value),
-    * carrying the listed extra columns.
+    * carrying `vec_id` and the listed extra columns.
     */
   private[graft] def explodeBands(df: DataFrame, carry: Seq[String]): DataFrame =
-    df.select(col("vec_id") +: carry.map(col) :+ explode(expr(
-        s"transform(sequence(0, ${AnnBands - 1}), b -> struct(b AS bk, shiftright(sig, CAST(b AS INT) * $AnnRowsPerBand) & ${(1 << AnnRowsPerBand) - 1} AS bv))")).as("b"): _*)
-      .select(col("vec_id") +: carry.map(col)
-        :+ col("b.bk").as("bk") :+ col("b.bv").as("bv"): _*)
+    Banding.explodeBits(df, "vec_id" +: carry, "sig", AnnBands, AnnRowsPerBand)
 
   /** Two-sided (delta × corpus) band-OR near-dup core — the INCREMENTAL
     * shape: band keys computed for both sides, candidates from the per-band

@@ -41,6 +41,15 @@ object Staging {
       }
   }
 
+  /** A fresh per-run dir under [[perRunRoot]]: `<prefix>_<uuid>`. Unique per
+    * call, so two runs of one query — in one JVM or in two on the same host —
+    * never share scratch. The caller deletes it when its run is done, or
+    * enrolls it in [[Caches.deleteOnRelease]] when a returned frame still
+    * reads it lazily.
+    */
+  def perRunDir(prefix: String): String =
+    perRunRoot + "/" + prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+
   /** Fail fast on an unusable `SPARK_GRAFT_SCRATCH`: `root` must exist, be a
     * directory and accept a probe file, checked through the Hadoop
     * FileSystem so `hdfs://` and `s3a://` roots work too. A typo'd or

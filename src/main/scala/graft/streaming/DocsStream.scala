@@ -101,9 +101,9 @@ object DocsStream {
     * so cross-batch accumulation is set-union in state — order-independent,
     * which is what makes the streaming result DETERMINISTIC and equal to the
     * batch banding regardless of arrival order. Candidate expansion and the
-    * exact-Jaccard verify run batch-side on the drained buckets (only
-    * buckets with ≥ 2 members expand; precision is exact because every
-    * candidate is re-verified on true word sets).
+    * exact-Jaccard verify run batch-side on the drained buckets, through
+    * batch q39's own candidate-and-verify code (only buckets with ≥ 2
+    * members expand).
     *
     * Scale honesty: complete-mode bucket state is the corpus's banded
     * membership — the right shape for proving batch≡streaming equality, and
@@ -115,7 +115,37 @@ object DocsStream {
     * equality is covered by StreamScaleSpec for the events family).
     */
   def lshNearDupStreaming(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.{DedupOps, OracleMath, TextFunctions}
+    import graft.ops.{DedupOps, TextFunctions}
+    // batch-side: the drained buckets go through batch q39's candidate-and-
+    // verify code. Identical word sets have identical masks AND identical
+    // band keys (MinHash is order-independent over the set), so on a dense
+    // (≤ 64-word) vocabulary the bucket membership collapses to DISTINCT
+    // MASKS per bucket and q39's mask-group path runs on it — the duplicate-
+    // heavy corpus never expands its doc-level buckets quadratically. The
+    // streamed `key` hashes the band index, exactly as q39's `band` does, so
+    // a (band, key) bucket is a q39 bucket. A general vocabulary takes
+    // q39's general verify.
+    val members = streamedBandMembers(spark, dir)
+    val docs = graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), array_distinct(TextFunctions.words(col("text"))).as("ws0"))
+    DedupOps.smallVocab(docs) match {
+      case Some(vocab) =>
+        val docMask = docs.select(col("doc_id"), DedupOps.maskExpr(vocab, col("ws0")).as("mask"))
+        val bucketMasks = members
+          .join(broadcast(docMask), "doc_id")
+          .select(col("band"), col("key"), col("mask"))
+          .dropDuplicates("band", "key", "mask")
+        DedupOps.lshMaskPairs(bucketMasks, DedupOps.maskGroups(docMask), DedupOps.NearDupThreshold)
+      case None =>
+        DedupOps.lshGeneralPairs(members, DedupOps.lshTokenIds(docs), DedupOps.NearDupThreshold)
+    }
+  }
+
+  /** The streamed half of [[lshNearDupStreaming]]: the drained band buckets
+    * with ≥ 2 members, one `(band, key, doc_id)` row per member.
+    */
+  private[graft] def streamedBandMembers(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.{DedupOps, TextFunctions}
     val srcDir = stageDocsDirMulti(spark, dir, nFiles = 2)
     val drained = StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
       val hashes = transform(array_distinct(TextFunctions.words(col("text"))),
@@ -128,72 +158,7 @@ object DocsStream {
         .groupBy(col("band"), col("key"))
         .agg(collect_set(col("doc_id")).as("ids"))
     }
-    // batch-side: expand buckets to candidate pairs and verify. r15 (verdict
-    // #4): the verify now follows batch q39's MASK-GROUP CONTRACTION, not
-    // just its skinny-row discipline — the duplicate-heavy corpus used to
-    // expand ~27M doc-level candidates per run (identical word sets share
-    // every band, so their buckets explode quadratically in doc count).
-    // Identical word sets have identical masks AND identical band keys
-    // (MinHash is order-independent over the set), so the bucket membership
-    // collapses to DISTINCT MASKS per bucket: the candidate self-join runs
-    // at mask level with the popcount Jaccard INLINE in the join condition
-    // (only passing pairs become rows), mask pairs dedupe pre-expansion
-    // (≤ LshBands duplicates), and doc pairs are produced by exploding the
-    // two mask groups' id lists — identical-mask pairs are J = 1 ≥ t by
-    // definition and always co-bucketed, exactly batch q39's withinPairs.
-    // A general (> 64-word) vocabulary degrades to the r14 doc-level path.
-    val members = drained.filter(size(col("ids")) >= 2)
+    drained.filter(size(col("ids")) >= 2)
       .select(col("band"), col("key"), explode(col("ids")).as("doc_id"))
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), array_distinct(TextFunctions.words(col("text"))).as("ws0"))
-    DedupOps.smallVocab(docs) match {
-      case Some(vocab) =>
-        val docMask = docs.select(col("doc_id"), DedupOps.maskExpr(vocab, col("ws0")).as("mask"))
-        val groups = docMask.groupBy(col("mask"))
-          .agg(collect_list(col("doc_id")).as("ids"), count(lit(1)).as("n"))
-        val bucketMasks = members
-          .join(broadcast(docMask), "doc_id")
-          .select(col("band"), col("key"), col("mask"))
-          .dropDuplicates("band", "key", "mask")
-        val jCond = bit_count(col("a.mask").bitwiseAND(col("b.mask"))).cast("double") /
-          bit_count(col("a.mask").bitwiseOR(col("b.mask")))
-        val j = bit_count(col("mask_a").bitwiseAND(col("mask_b"))).cast("double") /
-          bit_count(col("mask_a").bitwiseOR(col("mask_b")))
-        val crossPairs = bucketMasks.as("a").join(bucketMasks.as("b"),
-            col("a.band") === col("b.band") && col("a.key") === col("b.key")
-              && col("a.mask") < col("b.mask") && jCond >= lit(DedupOps.NearDupThreshold))
-          .select(col("a.mask").as("mask_a"), col("b.mask").as("mask_b"))
-          .dropDuplicates("mask_a", "mask_b")
-          .join(broadcast(groups.select(col("mask").as("mask_a"), col("ids").as("ids_a"))), "mask_a")
-          .join(broadcast(groups.select(col("mask").as("mask_b"), col("ids").as("ids_b"))), "mask_b")
-          .select(explode(col("ids_a")).as("x"), col("ids_b"), j.as("j"))
-          .select(col("x"), explode(col("ids_b")).as("y"), col("j"))
-          .select(least(col("x"), col("y")).as("doc_a"),
-            greatest(col("x"), col("y")).as("doc_b"), col("j"))
-        val withinPairs = groups.filter(col("n") > 1)
-          .select(explode(col("ids")).as("x"), col("ids"))
-          .select(col("x"), explode(col("ids")).as("y"))
-          .filter(col("x") < col("y"))
-          .select(col("x").as("doc_a"), col("y").as("doc_b"), lit(1.0).as("j"))
-        crossPairs.unionByName(withinPairs)
-          .select(col("doc_a"), col("doc_b"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
-          .orderBy(col("doc_a"), col("doc_b"))
-      case None =>
-        val cand = members.as("a").join(members.as("b"),
-            col("a.band") === col("b.band") && col("a.key") === col("b.key")
-              && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        val ws = docs.select(col("doc_id"), array_sort(col("ws0")).as("v"))
-        val jac = size(array_intersect(col("v_a"), col("v_b"))).cast("double") /
-          size(array_union(col("v_a"), col("v_b")))
-        cand
-          .join(broadcast(ws.select(col("doc_id").as("doc_a"), col("v").as("v_a"))), "doc_a")
-          .join(broadcast(ws.select(col("doc_id").as("doc_b"), col("v").as("v_b"))), "doc_b")
-          .withColumn("j", jac)
-          .filter(col("j") >= DedupOps.NearDupThreshold)
-          .select(col("doc_a"), col("doc_b"), OracleMath.stableRound(col("j"), 4).as("jaccard"))
-          .dropDuplicates("doc_a", "doc_b")
-          .orderBy(col("doc_a"), col("doc_b"))
-    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{OracleMath, SimilarityOps}
+import graft.ops.{Banding, OracleMath, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
@@ -70,7 +70,7 @@ object EmbeddingStream {
           col("embedding").as("emb_d"), col("nrm").as("nrm_d"), col("bk"), col("bv"))
       sBands.join(cBands,
           Seq("bk", "bv")) // stream-static inner
-        .filter(SimilarityOps.hamming(col("srp_c"), col("srp_d")) <= lit(SimilarityOps.Srp64GateMaxH))
+        .filter(Banding.hamming(col("srp_c"), col("srp_d")) <= lit(SimilarityOps.Srp64GateMaxH))
         .select(col("id_c"), col("id_d"), col("emb_d"), col("nrm_d"))
         .dropDuplicates("id_c", "id_d") // band-collision dups, per-run state
         .join(cVecs, "id_c") // second stream-static join: the wide verify

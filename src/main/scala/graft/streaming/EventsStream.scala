@@ -297,7 +297,7 @@ object EventsStream {
   def kmvDistinctStreaming(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.{OracleMath, SamplingOps}
     val k = SamplingOps.KmvK
-    val srcDir = stageStreamDirShared(spark, dir)
+    val srcDir = stageStreamDirMulti(spark, dir, nFiles = 3)
     val drained = StreamJoinOps.runToCompletion(spark, "complete", skipFinalize = true) { s =>
       val h = conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10).cast("long")
       s.readStream

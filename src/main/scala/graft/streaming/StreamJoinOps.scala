@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.util.UUID
-import graft.ops.Staging
+import graft.ops.{Caches, Staging}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -105,7 +105,7 @@ object StreamJoinOps {
     // scratch: an AvailableNow run over K files commits ~K·(stores + 2 logs)
     // small files, which is why that root prefers a tmpfs with headroom. The
     // base is unique per run and deleted after the (eagerly executed) run.
-    val ckpt = new Path(Staging.perRunRoot + "/graft_ckpt_" + UUID.randomUUID().toString.take(8))
+    val ckpt = new Path(Staging.perRunDir("graft_ckpt"))
     s.conf.set("spark.sql.streaming.checkpointLocation", ckpt.toString)
     try f(s)
     finally ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ckpt, true)
@@ -253,13 +253,6 @@ object StreamJoinOps {
     drained.orderBy(col("c_mktsegment"))
   }
 
-  /** Where [[streamParquetSink]] writes; the spec inspects batch provenance
-    * here (batch count is staging-dependent, so it is spec-checked, not
-    * oracled).
-    */
-  private[graft] def sinkOutDir(dir: String): String =
-    Staging.perRunRoot + s"/graft_ssink_${math.abs(dir.hashCode)}/out"
-
   /** Streaming parquet SINK via `foreachBatch`: the write half of a
     * continuously-fed pipeline (everything else here exercises sources and
     * state). `foreachBatch` hands each microbatch to arbitrary batch code —
@@ -271,15 +264,17 @@ object StreamJoinOps {
     * _spark_metadata log). The staged landing dir arrives as 3 microbatches
     * (`maxFilesPerTrigger=1`), so the sink genuinely appends across batches;
     * reading the written files back and aggregating matches the plain batch
-    * oracle over the source table.
+    * oracle over the source table. Sink and checkpoint live in a fresh
+    * per-run dir, deleted at the next `Caches.release` (the returned frame
+    * reads the sink lazily); the spec inspects batch provenance through the
+    * frame's input files (batch count is staging-dependent, so it is
+    * spec-checked, not oracled).
     */
   def streamParquetSink(spark: SparkSession, dir: String): DataFrame = {
     val srcDir = stageStreamDirMulti(spark, dir)
-    val base = Staging.perRunRoot + s"/graft_ssink_${math.abs(dir.hashCode)}"
-    val out = sinkOutDir(dir)
+    val base = Caches.deleteOnRelease(Staging.perRunDir("graft_ssink"))
+    val out = base + "/out"
     val chk = base + "/_chk"
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true) // fresh run each call
 
     withStatePartitions(spark, skipFinalize = true) { s =>
       val q = s.readStream

@@ -75,8 +75,9 @@ object TimeoutSessionStream {
     */
   private[graft] def run(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    // 5 time-ordered files = 5 microbatches = 4 watermark advances that can
-    // fire timeouts mid-stream (more incarnations than users, spec-asserted)
+    // 3 time-ordered files = 3 microbatches (plus the finalize batch): the
+    // watermark advances between them fire timeouts mid-stream (more
+    // incarnations than users, spec-asserted)
     val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 3)
 
     val drained = StreamJoinOps.runToCompletion(spark, "update") { s =>

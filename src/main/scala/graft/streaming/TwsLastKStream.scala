@@ -51,7 +51,9 @@ object TwsLastKStream {
 
   def lastKStreaming(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val srcDir = EventsStream.stageStreamDirShared(spark, dir)
+    // 3 time-ordered files = 3 microbatches: the ListState merge of kept
+    // and incoming purchases runs across batches
+    val srcDir = EventsStream.stageStreamDirMulti(spark, dir, nFiles = 3)
 
     val drained = StreamJoinOps.runToCompletion(spark, "update", skipFinalize = true) { s =>
       import s.implicits._

@@ -414,14 +414,40 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("simhash band blocking is lossless for hamming <= 3 (equals brute force)") {
-    val blocked = DedupOps.simhashNearDup(spark, sf, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val rows = DedupOps.simhashNearDup(spark, sf, 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val blocked = rows.toSet
+    assert(rows.length === blocked.size, "a pair was emitted more than once")
     val sh = DedupOps.simhash(spark, sf).collect().map(r => (r.getLong(0), r.getLong(1)))
     val brute = (for {
       (ida, sa) <- sh; (idb, sb) <- sh if ida < idb
       d = java.lang.Long.bitCount(sa ^ sb) if d <= 3
     } yield (ida, idb, d.toLong)).toSet
     assert(blocked === brute)
+  }
+
+  test("the 64-bit Hamming core emits each pair once, also when it shares all four bands") {
+    import spark.implicits._
+    val base = 0x0123456789ABCDEFL
+    val fps = Seq(
+      1L -> base,
+      2L -> base,                                // = 1: shares all four bands
+      3L -> (base ^ 0x3L),                       // band 0 differs: shares three
+      4L -> (base ^ (1L << 16) ^ (1L << 48)),    // bands 1 and 3 differ: shares two
+      5L -> (base ^ 0x0001000100010001L),        // every band differs from 1: distance 4
+      6L -> ~base)                               // far from everything
+    val got = graft.ops.Banding.hammingNearDup(fps.toDF("doc_id", "fp"), "fp", 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    def bands(x: Long) = (0 until 4).map(k => (x >>> (k * 16)) & 0xffffL)
+    val expect = (for {
+      (ida, a) <- fps; (idb, b) <- fps if ida < idb
+      if bands(a).zip(bands(b)).exists { case (x, y) => x == y }
+      h = java.lang.Long.bitCount(a ^ b) if h <= 4
+    } yield (ida, idb, h.toLong)).toSet
+    assert(got.size === got.distinct.size, s"a pair was emitted more than once: $got")
+    assert(got.toSet === expect)
+    assert(got.contains((1L, 2L, 0L)) && got.contains((1L, 3L, 2L)) && got.contains((1L, 4L, 2L)))
+    assert(!got.exists(p => p._1 == 1L && p._2 == 5L), "a pair sharing no band is not a candidate")
   }
 
   test("dedup clusters equal union-find over the near-dup pair graph (q101)") {
@@ -1981,8 +2007,10 @@ class ProfilingSpec extends AnyFunSuite {
       h = java.lang.Long.bitCount(a ^ b)
       if h <= MultimodalOps.PhashMaxHamming
     } yield (ida, idb, h.toLong)).toSet
-    val got = MultimodalOps.phashNearDup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val rows = MultimodalOps.phashNearDup(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val got = rows.toSet
+    assert(rows.length === got.size, "a pair was emitted more than once")
     assert(got === expect)
   }
 

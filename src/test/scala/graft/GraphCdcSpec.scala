@@ -327,4 +327,22 @@ class GraphCdcSpec extends AnyFunSuite {
         s"${(batch diff streaming).size} missing")
     assert(streaming.nonEmpty)
   }
+
+  test("q170's general-vocabulary verify over its streamed band rows equals q39's general path") {
+    import graft.ops.{DedupOps, TextFunctions}
+    // the test corpus has a ≤ 64-word vocabulary, so both operators take the
+    // mask path; this drives the > 64-word branch's shared code directly
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), array_distinct(TextFunctions.words(col("text"))).as("ws0"))
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard")))
+    val members = graft.streaming.DocsStream.streamedBandMembers(spark, sf)
+    val streamed = pairs(DedupOps.lshGeneralPairs(members, DedupOps.lshTokenIds(docs),
+      DedupOps.NearDupThreshold))
+    val batch = pairs(DedupOps.lshNearDupGeneral(docs, DedupOps.NearDupThreshold))
+    assert(streamed.length === streamed.distinct.length)
+    assert(streamed.toSet == batch.toSet,
+      s"${(streamed.toSet diff batch.toSet).size} extra, ${(batch.toSet diff streamed.toSet).size} missing")
+    assert(streamed.nonEmpty)
+  }
 }

@@ -27,8 +27,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * One connected-components route: only `DedupOps` names the CC algorithms
   * and their cutover constants. One stored band-index lifecycle: no
   * rename-aside swap, and one function creates a band index. One ANN
-  * banding core: no SRP gate conf key, one band explode, one plane-sign
-  * signature. One enrichment route: `Enrichment` classifies on the driver,
+  * banding core: no SRP gate conf key, one plane-sign signature. One
+  * banding core for every sketch family (`Banding`): the bit-band split,
+  * the popcount, the mask Jaccard, the MinHash band slice and the band
+  * explode are written once, and so are `DedupOps`' mask bit map and
+  * mask-group expansion. One enrichment route: `Enrichment` classifies on the driver,
   * through one retry loop, never inside a Spark task. One streaming run
   * scaffold: `StreamJoinOps.runToCompletion` is the only memory-sink run,
   * and per-run scratch placement (tmpfs or not) is decided in `Staging`
@@ -157,13 +160,34 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(confs.isEmpty,
       "\nAn SRP gate read from a session conf (pass it as annNearDupOn's `gate` " +
         "argument instead):\n" + confs.mkString("\n"))
-    for ((what, text) <- Seq(
-        "band-explode template" -> "transform(sequence(0, ${AnnBands - 1})",
-        "plane-sign formula" -> "dotp(col(\"embedding\"), planeCol(i))")) {
-      val sites = matches(allMainSources, scala.util.matching.Regex.quote(text).r)
+    val planeSign = matches(allMainSources,
+      scala.util.matching.Regex.quote("dotp(col(\"embedding\"), planeCol(i))").r)
+    assert(planeSign.size == 1,
+      s"\nExpected the plane-sign formula exactly once (SimilarityOps.planeSignature), " +
+        s"found ${planeSign.size}:\n" + planeSign.mkString("\n"))
+  }
+
+  test("one banding core for every sketch family: each template is written once") {
+    // DuckDB oracle SQL is exempt: its `bit_count(xor(...))` twins are the
+    // independent reference, not a second Spark-side copy
+    for ((what, pattern) <- Seq(
+        // a bit-band split masks a shifted sketch with a band-width mask
+        // (a single-bit test such as `shiftright(mask, b) & 1` is not one)
+        "bit-band shiftright split (Banding.explodeBits)" ->
+          raw"shiftright\(.*(& *(\$$\{|\d{2,})|bitwiseAND\(lit\(0x)",
+        "Column-side bit_count (Banding.popcount)" -> raw"bit_count\((?!xor\()|\"bit_count\"",
+        "mask Jaccard (Banding.maskJaccard)" -> raw"bitwiseAND\(.*\)\.cast\(\"double\"\)",
+        "MinHash band slice (Banding.minhashBands)" -> raw"slice\([^,]+, [^,]*\* *(rows|LshRows)",
+        "mask-group expansion (DedupOps.maskGroupDocPairs)" ->
+          raw"explode\(col\(\"ids_a\"\)\)",
+        "within-group J = 1 term (DedupOps.maskGroupDocPairs)" ->
+          raw"explode\(col\(\"ids\"\)\)\.as\(\"x\"\)",
+        "maskExpr bit map (DedupOps.vocabBits)" ->
+          raw"lit\(w\), lit\(1L << i\)|indices\.map\(i => lit\(1L << i\)",
+        "band-explode template (Banding.explodeBits)" -> raw"->\s*struct\(\w+ AS (bk|band)\b")) {
+      val sites = matches(allMainSources, pattern.r)
       assert(sites.size == 1,
-        s"\nExpected the $what exactly once (SimilarityOps.explodeBands / " +
-          s"planeSignature), found ${sites.size}:\n" + sites.mkString("\n"))
+        s"\nExpected the $what exactly once, found ${sites.size}:\n" + sites.mkString("\n"))
     }
   }
 

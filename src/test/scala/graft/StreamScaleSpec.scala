@@ -433,10 +433,62 @@ class StreamScaleSpec extends AnyFunSuite {
     assert(sunk.exceptAll(direct).count() === 0)
     assert(direct.exceptAll(sunk).count() === 0)
     // provenance: all 3 staged landing files arrived as separate batches
-    val batches = spark.read
-      .parquet(graft.streaming.StreamJoinOps.sinkOutDir(sf))
+    val batches = spark.read.parquet(sunk.inputFiles: _*)
       .select(col("batch_id")).distinct().count()
     assert(batches === 3L, s"expected 3 microbatches, got $batches")
+  }
+
+  test("per-run scratch dirs are unique per call and deleted at release (q100, q130)") {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(Staging.perRunRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listed = Option(fs.globStatus(new Path(Staging.perRunRoot + "/graft_{dynpo,ssink}_*")))
+      .getOrElse(Array.empty).map(_.getPath.toUri.getPath).toSet
+    val before = listed
+    val runs = Seq(EventOps.partitionOverwrite(spark, sf), EventOps.partitionOverwrite(spark, sf),
+      graft.streaming.StreamJoinOps.streamParquetSink(spark, sf),
+      graft.streaming.StreamJoinOps.streamParquetSink(spark, sf))
+    val dirs = runs.map { df =>
+      raw"/.*/graft_(dynpo|ssink)_[0-9a-f]+".r.findFirstIn(new Path(df.inputFiles.head).toUri.getPath)
+        .getOrElse(fail(s"no per-run dir in ${df.inputFiles.head}"))
+    }
+    assert(dirs.distinct.size === 4, s"two calls on one data dir shared a per-run dir: $dirs")
+    // the first call's frame still reads its own table after the second call ran
+    assert(runs(0).collect().toSeq === runs(1).collect().toSeq)
+    assert(runs(2).collect().toSeq === runs(3).collect().toSeq)
+    dirs.foreach(d => assert(fs.exists(new Path(d)), s"$d missing before release"))
+    Caches.releaseAll()
+    dirs.foreach(d => assert(!fs.exists(new Path(d)), s"$d left behind after releaseAll"))
+    assert((listed -- before).isEmpty, s"per-run dirs left behind: ${listed -- before}")
+  }
+
+  test("q311 and q207 stream their landing dir as three microbatches") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    // progress events of every session's streams reach the context's bus
+    val dataBatches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent if p.progress.numInputRows > 0 =>
+          dataBatches.add(p.progress.batchId)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((name, run) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "q311" -> (() => graft.streaming.EventsStream.kmvDistinctStreaming(spark, sf)),
+          "q207" -> (() => graft.streaming.TwsLastKStream.lastKStreaming(spark, sf)))) {
+        dataBatches.clear()
+        assert(run().collect().nonEmpty)
+        eventually(timeout(30.seconds), interval(100.millis)) {
+          val n = dataBatches.asScala.toSeq.distinct.size
+          assert(n === 3, s"$name ran $n microbatches with input rows")
+        }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("CSV round trip is lossless for the projected events table (q92)") {
