@@ -34,17 +34,15 @@ object Banding {
   private def bitBand(packed: String, i: Int, width: Int): Column =
     expr(bandSql(packed, i.toString, width))
 
-  private def popcount(c: Column): Column = bit_count(c)
-
   /** Hamming distance of two packed sketch columns. */
-  private[graft] def hamming(a: Column, b: Column): Column = popcount(a.bitwiseXOR(b))
+  private[graft] def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Jaccard of two word sets encoded as 64-bit membership masks: two
     * popcounts. The double division matches the oracles'
     * `CAST(len AS DOUBLE) / len` exactly.
     */
   private[graft] def maskJaccard(a: Column, b: Column): Column =
-    popcount(a.bitwiseAND(b)).cast("double") / popcount(a.bitwiseOR(b))
+    bit_count(a.bitwiseAND(b)).cast("double") / bit_count(a.bitwiseOR(b))
 
   /** `f(b, slice)` for each MinHash band b = 0 until `nBands`, where
     * `slice` is the band's `rows` consecutive signature values — the one

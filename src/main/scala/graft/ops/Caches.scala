@@ -86,7 +86,11 @@ object Caches {
     var dir = trackedDirs.poll()
     while (dir != null) {
       val path = new org.apache.hadoop.fs.Path(dir)
-      activeSession.foreach(s => path.getFileSystem(s.sparkContext.hadoopConfiguration).delete(path, true))
+      // without a live session a default Hadoop conf still reaches the
+      // local scratch root, so no enrolled dir outlives its release
+      val conf = activeSession.map(_.sparkContext.hadoopConfiguration)
+        .getOrElse(new org.apache.hadoop.conf.Configuration())
+      path.getFileSystem(conf).delete(path, true)
       dir = trackedDirs.poll()
     }
   }

@@ -516,7 +516,7 @@ object DedupOps {
     * token, and a doc's PPJoin prefix is its first elements. Persisted: the
     * prefix explode and both verify sides would each re-derive it.
     */
-  private def rarityTokenIds(docs: DataFrame): DataFrame = {
+  private[graft] def rarityTokenIds(docs: DataFrame): DataFrame = {
     val (ranks, vocabRows) = PrefixSum.rarityRanksCounted(
       docs.select(explode(col("ws0")).as("word")), "word")
     docs.select(col("doc_id"), explode(col("ws0")).as("word"))
@@ -775,8 +775,8 @@ object DedupOps {
     lshMaskPairs(banded, groups, threshold)
   }
 
-  /** Dense-domain LSH candidate-and-verify over band rows `(mask, <bucket
-    * key columns>)`: q39's `(mask, band)`, q170's `(band, key, mask)`. Masks
+  /** Dense-domain LSH candidate-and-verify over `(mask, band)` rows, `band`
+    * a [[bandKeys]] bucket key (q39's, and q170's streamed buckets). Masks
     * sharing a bucket and passing the popcount Jaccard in the join condition
     * become group pairs, deduped before expansion through `groups`. Band
     * rows carry no id arrays (measured: arrays through the ~17M-candidate
@@ -784,10 +784,8 @@ object DedupOps {
     */
   private[graft] def lshMaskPairs(bandMasks: DataFrame, groups: DataFrame,
                                   threshold: Double): DataFrame = {
-    val sameBucket = bandMasks.columns.filterNot(_ == "mask")
-      .map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
     val groupPairs = bandMasks.as("a").join(bandMasks.as("b"),
-        sameBucket && col("a.mask") < col("b.mask")
+        col("a.band") === col("b.band") && col("a.mask") < col("b.mask")
           && Banding.maskJaccard(col("a.mask"), col("b.mask")) >= lit(threshold))
       .select(col("a.mask").as("mask_a"), col("b.mask").as("mask_b"))
       .dropDuplicates("mask_a", "mask_b")
@@ -797,43 +795,33 @@ object DedupOps {
     maskGroupDocPairs(groupPairs, groups)
   }
 
-  /** General-vocabulary LSH path. Word hashes double as integer token ids
-    * (hash collisions would perturb Jaccard by < 1e-3 at realistic vocabulary
-    * sizes; acceptable for an approximate operator).
+  /** General-vocabulary LSH path: word hashes only feed the band keys; the
+    * verify runs on exact rarity token ids, so two words whose hashes
+    * collide still count as two.
     */
   private[graft] def lshNearDupGeneral(docsRaw: DataFrame, threshold: Double): DataFrame = {
-    val docs = lshTokenIds(docsRaw, hs => Seq(bandKeys(hs).as("bands")))
-    lshGeneralPairs(docs.select(col("doc_id"), explode(col("bands")).as("band")), docs, threshold)
+    val bands = docsRaw.select(col("doc_id"),
+      explode(bandKeys(transform(col("ws0"), wordHash(_)))).as("band"))
+    lshGeneralPairs(bands, rarityTokenIds(docsRaw), threshold)
   }
 
-  /** Persisted `(doc_id, ws, sz)` table of `(doc_id, ws0)` word sets for
-    * [[lshGeneralPairs]]: word hashes as sorted int ids, plus `extra`
-    * columns computed from the word-hash array.
-    */
-  private[graft] def lshTokenIds(docsRaw: DataFrame,
-                                 extra: Column => Seq[Column] = _ => Nil): DataFrame = {
-    val hs = transform(col("ws0"), wordHash(_))
-    docsRaw.select(Seq(col("doc_id"), sort_array(transform(hs, _.cast("int"))).as("ws")) ++ extra(hs): _*)
-      .withColumn("sz", size(col("ws")))
-      .persistTracked()
-  }
-
-  /** General-vocabulary LSH candidate-and-verify over band rows
-    * `(doc_id, <bucket key columns>)` — q39's `(doc_id, band)` and q170's
-    * streamed `(band, key, doc_id)` — against the [[lshTokenIds]] table
-    * `docs`. Candidates stay SKINNY (two longs) through the band self-join;
-    * arrays attach afterwards in [[verifyPairs]], which verifies before it
-    * dedupes (at most `LshBands` duplicate verifications per pair). An
+  /** General-vocabulary LSH candidate-and-verify over `(doc_id, band)` rows,
+    * `band` a [[bandKeys]] bucket key (q39's, and q170's streamed buckets),
+    * against the [[rarityTokenIds]] table `ids` of the same docs: every
+    * candidate is verified on its true word sets. Candidates stay SKINNY
+    * (two longs) through the band self-join; arrays attach afterwards in
+    * [[verifyPairs]], which verifies before it dedupes (at most `LshBands`
+    * duplicate verifications per pair). An
     * exactly-once-emission variant (per-band joins guarded by "earlier bands
     * differ", arrays carried through the join) was measured 2× slower on
     * collision-dense data — array materialization at the join dominates.
     */
-  private[graft] def lshGeneralPairs(bandDocs: DataFrame, docs: DataFrame,
+  private[graft] def lshGeneralPairs(bandDocs: DataFrame, ids: DataFrame,
                                      threshold: Double): DataFrame = {
-    val cands = bandDocs.as("a").join(bandDocs.as("b"), bandDocs.columns.filterNot(_ == "doc_id").toSeq)
+    val cands = bandDocs.as("a").join(bandDocs.as("b"), "band")
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    verifyPairs(cands, docs, threshold)
+    verifyPairs(cands, ids, threshold)
   }
 
   /** Dedup-cluster resolution: connected components over the near-duplicate

@@ -95,15 +95,16 @@ object DocsStream {
     *
     * Dataflow: each microbatch computes per-doc band keys row-locally (the
     * one-pass [[graft.functions.MinhashSigs]] codegen kernel — identical to
-    * the batch operator), explodes to (band, key, doc_id), and folds into a
-    * streaming aggregation keyed on (band, key) whose state value is the
+    * the batch operator), explodes to (band, doc_id), and folds into a
+    * streaming aggregation keyed on the band key whose state value is the
     * bucket's member set. `collect_set` is a mergeable declarative aggregate,
     * so cross-batch accumulation is set-union in state — order-independent,
     * which is what makes the streaming result DETERMINISTIC and equal to the
     * batch banding regardless of arrival order. Candidate expansion and the
     * exact-Jaccard verify run batch-side on the drained buckets, through
     * batch q39's own candidate-and-verify code (only buckets with ≥ 2
-    * members expand).
+    * members expand; precision is exact because every candidate is
+    * re-verified on true word sets).
     *
     * Scale honesty: complete-mode bucket state is the corpus's banded
     * membership — the right shape for proving batch≡streaming equality, and
@@ -121,10 +122,8 @@ object DocsStream {
     // band keys (MinHash is order-independent over the set), so on a dense
     // (≤ 64-word) vocabulary the bucket membership collapses to DISTINCT
     // MASKS per bucket and q39's mask-group path runs on it — the duplicate-
-    // heavy corpus never expands its doc-level buckets quadratically. The
-    // streamed `key` hashes the band index, exactly as q39's `band` does, so
-    // a (band, key) bucket is a q39 bucket. A general vocabulary takes
-    // q39's general verify.
+    // heavy corpus never expands its doc-level buckets quadratically. A
+    // general vocabulary takes q39's general verify on exact token ids.
     val members = streamedBandMembers(spark, dir)
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), array_distinct(TextFunctions.words(col("text"))).as("ws0"))
@@ -133,16 +132,18 @@ object DocsStream {
         val docMask = docs.select(col("doc_id"), DedupOps.maskExpr(vocab, col("ws0")).as("mask"))
         val bucketMasks = members
           .join(broadcast(docMask), "doc_id")
-          .select(col("band"), col("key"), col("mask"))
-          .dropDuplicates("band", "key", "mask")
+          .select(col("band"), col("mask"))
+          .dropDuplicates("band", "mask")
         DedupOps.lshMaskPairs(bucketMasks, DedupOps.maskGroups(docMask), DedupOps.NearDupThreshold)
       case None =>
-        DedupOps.lshGeneralPairs(members, DedupOps.lshTokenIds(docs), DedupOps.NearDupThreshold)
+        DedupOps.lshGeneralPairs(members, DedupOps.rarityTokenIds(docs), DedupOps.NearDupThreshold)
     }
   }
 
   /** The streamed half of [[lshNearDupStreaming]]: the drained band buckets
-    * with ≥ 2 members, one `(band, key, doc_id)` row per member.
+    * with ≥ 2 members, one `(band, doc_id)` row per member. `band` is a
+    * [[graft.ops.DedupOps.bandKeys]] key, which hashes the band index with
+    * the band's signature slice, so a streamed bucket is a q39 bucket.
     */
   private[graft] def streamedBandMembers(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.{DedupOps, TextFunctions}
@@ -154,11 +155,11 @@ object DocsStream {
         .schema(docSchema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
-        .select(col("doc_id"), posexplode(DedupOps.bandKeys(hashes)).as(Seq("band", "key")))
-        .groupBy(col("band"), col("key"))
+        .select(col("doc_id"), explode(DedupOps.bandKeys(hashes)).as("band"))
+        .groupBy(col("band"))
         .agg(collect_set(col("doc_id")).as("ids"))
     }
     drained.filter(size(col("ids")) >= 2)
-      .select(col("band"), col("key"), explode(col("ids")).as("doc_id"))
+      .select(col("band"), explode(col("ids")).as("doc_id"))
   }
 }

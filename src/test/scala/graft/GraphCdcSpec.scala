@@ -337,12 +337,55 @@ class GraphCdcSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard")))
     val members = graft.streaming.DocsStream.streamedBandMembers(spark, sf)
-    val streamed = pairs(DedupOps.lshGeneralPairs(members, DedupOps.lshTokenIds(docs),
+    val streamed = pairs(DedupOps.lshGeneralPairs(members, DedupOps.rarityTokenIds(docs),
       DedupOps.NearDupThreshold))
     val batch = pairs(DedupOps.lshNearDupGeneral(docs, DedupOps.NearDupThreshold))
     assert(streamed.length === streamed.distinct.length)
     assert(streamed.toSet == batch.toSet,
       s"${(streamed.toSet diff batch.toSet).size} extra, ${(batch.toSet diff streamed.toSet).size} missing")
     assert(streamed.nonEmpty)
+  }
+
+  test("q39 and q170 general-vocabulary verify is exact when two word hashes collide") {
+    import graft.ops.{DedupOps, TextFunctions}
+    // "aaaaa" and "bcrsf" share one TextFunctions.wordHash value, so docs 1
+    // and 2 have identical hash sets (every band key agrees) but different
+    // word sets: exact Jaccard 20/22, not 1. Filler docs push the
+    // vocabulary past 64 words onto the general path.
+    val common = (0 until 20).map(i => s"w$i")
+    val corpus = Seq(
+      1L -> (common :+ "aaaaa"), 2L -> (common :+ "bcrsf"), 3L -> common,
+      4L -> (0 until 30).map(i => s"f$i"), 5L -> (0 until 30).map(i => s"g$i"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_collide").toString
+    try {
+      spark.createDataFrame(corpus.map { case (id, ws) => (id, ws.mkString(" ")) })
+        .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+      val h = Seq("aaaaa", "bcrsf").map(w =>
+        spark.range(1).select(TextFunctions.wordHash(lit(w))).head.getLong(0))
+      assert(h(0) == h(1), "the two words no longer collide; pick another pair")
+      val docs = Tables.documents(spark, tmp)
+        .select(col("doc_id"), array_distinct(TextFunctions.words(col("text"))).as("ws0"))
+      assert(DedupOps.smallVocab(docs).isEmpty)
+
+      val sets = corpus.toMap.map { case (id, ws) => id -> ws.toSet }
+      def exact(a: Long, b: Long): Double = {
+        val (x, y) = (sets(a), sets(b))
+        (x intersect y).size.toDouble / (x union y).size
+      }
+      for ((name, df) <- Seq(
+          "q39" -> DedupOps.lshNearDupPairs(spark, tmp),
+          "q170" -> graft.streaming.DocsStream.lshNearDupStreaming(spark, tmp))) {
+        val rows = df.collect()
+          .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard")))
+        assert(rows.exists(r => r._1 == 1L && r._2 == 2L), s"$name lost the colliding pair")
+        rows.foreach { case (a, b, j) =>
+          assert(math.abs(j - exact(a, b)) < 1e-4, s"$name ($a, $b): $j, exact ${exact(a, b)}")
+        }
+      }
+    } finally {
+      val landing = scala.util.Try(graft.streaming.DocsStream.stageDocsDirMulti(spark, tmp, nFiles = 2))
+      for (d <- landing.toOption.toSeq :+ tmp)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+    }
   }
 }

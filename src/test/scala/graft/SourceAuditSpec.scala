@@ -175,7 +175,7 @@ class SourceAuditSpec extends AnyFunSuite {
         // (a single-bit test such as `shiftright(mask, b) & 1` is not one)
         "bit-band shiftright split (Banding.explodeBits)" ->
           raw"shiftright\(.*(& *(\$$\{|\d{2,})|bitwiseAND\(lit\(0x)",
-        "Column-side bit_count (Banding.popcount)" -> raw"bit_count\((?!xor\()|\"bit_count\"",
+        "Column-side XOR Hamming (Banding.hamming)" -> raw"bitwiseXOR\(|bit_count\([^)]*\^",
         "mask Jaccard (Banding.maskJaccard)" -> raw"bitwiseAND\(.*\)\.cast\(\"double\"\)",
         "MinHash band slice (Banding.minhashBands)" -> raw"slice\([^,]+, [^,]*\* *(rows|LshRows)",
         "mask-group expansion (DedupOps.maskGroupDocPairs)" ->
