@@ -64,8 +64,4 @@ object PlanAudit {
     Audit(unpartitionedWindows(qe.optimizedPlan.toString),
       qe.executedPlan.toString.contains("CartesianProduct"))
   }
-
-  /** Back-compat shim for the window-only view. */
-  def offendingWindows(spark: SparkSession, name: String, sfDir: String): Seq[String] =
-    auditQuery(spark, name, sfDir).unpartWindows
 }

@@ -348,11 +348,10 @@ object CoreOps {
     * gated on the application side exceeding
     * `…applicationSideScanSizeThreshold` (10 GB default — exactly the
     * scale this engine targets); sf0.1 is below it, so the threshold is
-    * dropped to 0 and the plan materialized (persist + count) while the
-    * override is in effect, then the conf restored — lazy plans compile at
-    * action time, so a set-without-materialize would leak the override onto
-    * every later query in the session. Semantics are unchanged (bloom false
-    * positives re-verify at the join) ⇒ plain SQL oracle.
+    * dropped to 0 on a session of the query's own (`newSession`), never on
+    * the caller's, and the plan is materialized (persist + count) there.
+    * Semantics are unchanged (bloom false positives re-verify at the join)
+    * ⇒ plain SQL oracle.
     */
   def runtimeFilterJoin(spark: SparkSession, dir: String): DataFrame = {
     // Injection requires the join to look like a SHUFFLE join to the
@@ -360,17 +359,12 @@ object CoreOps {
     // `canBroadcastBySize`, even under an explicit merge hint — so the
     // broadcast threshold goes to -1 too (at the target scale both sides
     // exceed it naturally and only the scan-size threshold matters).
-    val keys = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val olds = keys.map { case (k, _) => k -> spark.conf.get(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val df = urgentLineRevenue(spark, dir)
-        .persistTracked()
-      df.count() // compile + run under the forced thresholds
-      df
-    } finally olds.foreach { case (k, v) => spark.conf.set(k, v) }
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val df = urgentLineRevenue(s, dir).persistTracked()
+    df.count() // compile + run under the forced thresholds
+    df
   }
 
   /** Approximate distinct counting (HyperLogLog++, rsd 2%) next to the
@@ -385,7 +379,7 @@ object CoreOps {
     * snapshot — matched keys take the update row, unmatched keep the base
     * row. Composed as `updates ∪ (base ⟕anti updates)`: one shuffle on the
     * key for the anti join (or zero if both sides are bucketed by key, see
-    * [[Bucketing]]), no driver-side diffing. This is how a 100 TB snapshot
+    * [[bucketedJoin]]), no driver-side diffing. This is how a 100 TB snapshot
     * absorbs a daily delta without rewriting unmatched partitions — pair
     * with partition pruning so only partitions containing changed keys are
     * read. The change set here is synthetic but derived deterministically
@@ -1813,6 +1807,11 @@ object CoreOps {
     * the write-side cost is paid once and amortized over every downstream
     * join on the same key (the same trade the streaming stagers make).
     *
+    * Each bucketed table is a stored artifact of [[Staging.ensure]] (rebuilt
+    * when its source table changes) and registered in the catalog under its
+    * stored name; a catalog that lacks the table or names another location
+    * (a fresh JVM, or a rebuild elsewhere) re-registers it from the files.
+    *
     * The join runs on a cloned session with auto-broadcast disabled so the
     * plan is the genuine big-big sort-merge shape at every SF (at test SFs
     * the optimizer would otherwise broadcast the small side and hide the
@@ -1821,27 +1820,31 @@ object CoreOps {
     * the join itself moves nothing.
     */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    // the staged-table identity encodes the SANITIZED sf dir name (collision-
-    // free across sf dirs, unlike a bare hashCode) and ensure() re-stages when
-    // the catalog entry survived but the tmp-dir backing files did not
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tO = s"graft_orders_bkt_$sfx"
-    val tL = s"graft_lineitem_bkt_$sfx"
     val s = spark.newSession() // shares the persistent catalog + context
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    def ensure(name: String, df: => DataFrame, key: String): Unit = {
-      val path = new java.io.File(sys.props("java.io.tmpdir"), s"graft_bkt_${sfx}_$name")
-      if (!s.catalog.tableExists(name) || !path.exists()) {
-        df.repartition(8, col(key)) // one file per bucket: scan stays sorted
+    def bucketed(table: String, src: => DataFrame, key: String, value: String): String = {
+      val name = Staging.storedName(s"bkt_$table", dir)
+      def rows = src.select(col(key), col(value))
+      val data = Staging.ensure(s, s"bkt_$table", dir, Seq(table), Seq("data")) { base =>
+        rows.repartition(8, col(key)) // one file per bucket: scan stays sorted
           .write.format("parquet")
           .bucketBy(8, key).sortBy(key)
-          .option("path", path.getAbsolutePath)
+          .option("path", base + "/data")
           .mode("overwrite")
           .saveAsTable(name)
+      } + "/data"
+      val registeredAt = org.apache.spark.sql.graftbridge.GraftSqlBridge.tableLocation(s, name)
+        .map(u => new java.io.File(u).getAbsolutePath)
+      if (!registeredAt.contains(new java.io.File(data).getAbsolutePath)) {
+        s.sql(s"DROP TABLE IF EXISTS $name")
+        s.sql(s"""CREATE TABLE $name (${rows.schema.toDDL}) USING parquet
+          |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
+          |LOCATION '$data'""".stripMargin)
       }
+      name
     }
-    ensure(tO, Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus")), "o_orderkey")
-    ensure(tL, Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice")), "l_orderkey")
+    val tO = bucketed("orders", Tables.orders(s, dir), "o_orderkey", "o_orderstatus")
+    val tL = bucketed("lineitem", Tables.lineitem(s, dir), "l_orderkey", "l_extendedprice")
     s.table(tL).join(s.table(tO), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_items"),

@@ -84,8 +84,7 @@ object EventOps {
     * round trip is lossless for the projected columns.
     */
   def jsonRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") + s"/graft_json_${math.abs(dir.hashCode)}"
-    Staging.ensure(spark, base, Seq("events_json")) {
+    val base = Staging.ensure(spark, "json", dir, Seq("events"), Seq("events_json")) { base =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").json(base + "/events_json")
@@ -111,8 +110,7 @@ object EventOps {
     * as shortest-roundtrip decimal). Staged once per sf dir.
     */
   def csvRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") + s"/graft_evcsv_${math.abs(dir.hashCode)}"
-    Staging.ensure(spark, base, Seq("events_csv")) {
+    val base = Staging.ensure(spark, "evcsv", dir, Seq("events"), Seq("events_csv")) { base =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.option("header", "true").mode("overwrite").csv(base + "/events_csv")
@@ -142,8 +140,7 @@ object EventOps {
     */
   def permissiveCsv(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val base = sys.props("java.io.tmpdir") + s"/graft_badcsv_${math.abs(dir.hashCode)}"
-    Staging.ensure(spark, base, Seq("events_bad_csv")) {
+    val base = Staging.ensure(spark, "badcsv", dir, Seq("events"), Seq("events_bad_csv")) { base =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .coalesce(4)
@@ -355,8 +352,7 @@ object EventOps {
     * for the projected columns. Staged once per sf dir.
     */
   def orcRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") + s"/graft_orc_${math.abs(dir.hashCode)}"
-    Staging.ensure(spark, base, Seq("events_orc")) {
+    val base = Staging.ensure(spark, "orc", dir, Seq("events"), Seq("events_orc")) { base =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").orc(base + "/events_orc")
@@ -379,8 +375,7 @@ object EventOps {
     * partition column.
     */
   def partitionedScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") + s"/graft_part_${math.abs(dir.hashCode)}"
-    Staging.ensure(spark, base, Seq("events_part")) {
+    val base = Staging.ensure(spark, "part", dir, Seq("events"), Seq("events_part")) { base =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("value"), col("ts"), col("event_type"))
         .write.partitionBy("event_type").mode("overwrite").parquet(base + "/events_part")
@@ -395,10 +390,12 @@ object EventOps {
 
   /** Dynamic partition overwrite — the day-level backfill every data lake
     * runs: write events day-partitioned, then re-write ONE day's rows with
-    * a correction (value doubled) under
+    * a correction (value doubled) with the writer option
     * `partitionOverwriteMode=dynamic`, which replaces exactly the
     * partitions present in the incoming frame and leaves all others
-    * untouched (static mode would wipe the whole table first). The final
+    * untouched (static mode would wipe the whole table first). The option
+    * scopes the mode to this one write; the caller's session conf is never
+    * touched. The final
     * aggregate proves the surgical scope: only 2024-01-05 changed, and the
     * oracle reproduces the corrected table directly from the source facts.
     * Fresh table per call (not Staging.ensure): the overwrite IS the
@@ -411,14 +408,10 @@ object EventOps {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
     ev.write.partitionBy("day").mode("overwrite").parquet(tbl)
-    val old = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      ev.filter(col("day") === "2024-01-05")
-        .withColumn("value", col("value") * 2)
-        .write.partitionBy("day").mode("overwrite").parquet(tbl)
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-      old.getOrElse("static"))
+    ev.filter(col("day") === "2024-01-05")
+      .withColumn("value", col("value") * 2)
+      .write.partitionBy("day").option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").parquet(tbl)
     spark.read.parquet(tbl)
       // partition-column type inference reads "2024-01-05" back as DATE;
       // cast to string for dtype parity with the oracle's strftime
@@ -2491,12 +2484,11 @@ object EventOps {
     * the oracle replays the vintage split from the source table.
     */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") + s"/graft_schema_evo_${math.abs(dir.hashCode)}"
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("user_id"), col("value"),
         date_trunc("day", col("ts")).as("day"))
-    val staged = graft.ops.Staging.ensure(spark, base,
-      Seq("vintage_old", "vintage_new")) {
+    val staged = Staging.ensure(spark, "schema_evo", dir, Seq("events"),
+      Seq("vintage_old", "vintage_new")) { base =>
       val maxDay = ev.agg(max(col("day")).as("max_day"))
       val tagged = ev.crossJoin(broadcast(maxDay))
       tagged.filter(col("day") < col("max_day"))

@@ -292,60 +292,32 @@ object SimilarityOps {
 
   /** Build-or-read the persisted "yesterday" cluster-label table for
     * [[semanticClustersIncremental]]: the even-id half of `dir`'s corpus
-    * solved to CC labels ONCE per corpus generation and stored as parquet
-    * (marker-last, the [[ensureBandIndex]] identity pattern — a
-    * [[corpusSnapshot]] mismatch or a torn write both read as "marker
-    * absent/stale" and trigger a rebuild). First build: band the even half
-    * against itself and solve with [[DedupOps.components]], whose labels
-    * come back cut from the pair lineage, so the parquet write that
-    * materializes them never re-runs the banding (the r12 lesson). Every
-    * later run is a single parquet read — the shape a scheduled nightly
-    * actually has, where yesterday's labels are yesterday's OUTPUT.
+    * solved to CC labels ONCE per corpus generation and stored as parquet,
+    * a stored artifact of [[Staging.ensureAndRead]] (rebuilt when the
+    * embeddings change; the build and the read both hold the lock, because
+    * `spark.read.parquet` captures the file listing eagerly). The kind
+    * carries the threshold and [[bandIndexConstantsFp]]: the labels are
+    * solved over [[annNearDupOn]]'s banding, so a sketch-constant change
+    * must invalidate them exactly as it invalidates the band indexes. First
+    * build: band the even half against itself and solve with
+    * [[DedupOps.components]], whose labels come back cut from the pair
+    * lineage, so the parquet write that materializes them never re-runs the
+    * banding (the r12 lesson). Every later run is a single parquet read —
+    * the shape a scheduled nightly actually has, where yesterday's labels
+    * are yesterday's OUTPUT.
     */
-  /** The exact on-disk location of the q338/q341 yesterday-labels table for
-    * `(dir, threshold)` — the single source of truth for the path formula,
-    * so diagnostics resolve the same file the operator writes
-    * instead of prefix-globbing the tmpdir (r14 advice: a glob can pick a
-    * stale pre-fingerprint dir or a leftover lock file).
-    */
-  private[graft] def yesterdayLabelsPath(dir: String, threshold: Double): java.io.File = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val thr = threshold.toString.replaceAll("[^0-9]", "_")
-    // [[bandIndexConstantsFp]] in the path (r13 advice): the labels are
-    // solved over [[annNearDupOn]]'s banding, so a sketch-constant change
-    // must invalidate them exactly as it invalidates the band indexes —
-    // the snapshot marker alone only covers the CORPUS, not the banding.
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ylab_${thr}_${bandIndexConstantsFp}_$sfx")
-  }
-
   private def ensureYesterdayLabels(spark: SparkSession, dir: String,
       threshold: Double): DataFrame = {
-    val path = yesterdayLabelsPath(dir, threshold)
-    val snap = corpusSnapshot(dir)
-    val markerF = new java.io.File(path, "_GRAFT_SNAPSHOT")
-    def markerOk = markerF.exists() &&
-      new String(java.nio.file.Files.readAllBytes(markerF.toPath), "UTF-8") == snap
-    // rebuild-check + write under the index lock (r13 advice: this was the
-    // one tmp-index mutator not serialized — two processes could overwrite
-    // or read the parquet mid-write); re-check under the lock so the loser
-    // of the race reads the winner's table instead of rebuilding it. The
-    // READ also happens inside the lock (r14 advice): `spark.read.parquet`
-    // captures the file listing eagerly, and doing that while holding the
-    // lock means a concurrent process whose marker mismatches cannot
-    // overwrite the parquet between a reader's validation and its listing.
-    withIndexLock(path) {
-      if (!markerOk) {
-        def even(c: Column): Column = c % 2 === 0
-        val evens = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding")).filter(even(col("vec_id")))
-        val oldNodes = evens.select(col("vec_id").as("doc_id")).distinct()
-        DedupOps.components(oldNodes, annNearDupOn(evens, threshold))
-          .write.mode("overwrite").parquet(path.getAbsolutePath)
-        java.nio.file.Files.write(markerF.toPath, snap.getBytes("UTF-8"))
-      }
-      spark.read.parquet(path.getAbsolutePath)
-    }
+    val thr = threshold.toString.replaceAll("[^0-9]", "_")
+    Staging.ensureAndRead(spark, s"ylab_${thr}_$bandIndexConstantsFp", dir,
+        Seq("embeddings"), Seq("labels")) { base =>
+      def even(c: Column): Column = c % 2 === 0
+      val evens = Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding")).filter(even(col("vec_id")))
+      val oldNodes = evens.select(col("vec_id").as("doc_id")).distinct()
+      DedupOps.components(oldNodes, annNearDupOn(evens, threshold))
+        .write.parquet(base + "/labels")
+    }(base => spark.read.parquet(base + "/labels"))
   }
 
   /** q341 — the incremental step COMPOSES across nights: two consecutive
@@ -2023,28 +1995,6 @@ object SimilarityOps {
     md.digest().take(4).map("%02x".format(_)).mkString
   }
 
-  /** Order-independent snapshot marker of the corpus an index was built
-    * from: (name, length, mtime) of the embeddings parquet file(s) —
-    * metadata only, never a data scan, so validating it at probe time costs
-    * one directory listing (the catalog-snapshot-id analog; at 100 TB this
-    * is what makes a per-probe staleness check affordable). Any in-place
-    * regeneration — even byte-identical — changes it, which errs in the
-    * safe direction: a spurious rebuild costs one ingest, a stale probe
-    * costs silently wrong candidate sets.
-    */
-  private[graft] def corpusSnapshot(dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).toSeq
-          .filterNot(_.getName.startsWith(".")).flatMap(walk)
-      else Seq(f)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    walk(new java.io.File(dir, "embeddings.parquet")).foreach { f =>
-      md.update(s"${f.getName}:${f.length}:${f.lastModified}\n".getBytes("UTF-8"))
-    }
-    md.digest().take(8).map("%02x".format(_)).mkString
-  }
-
   /** The probe half of [[indexProbeNearDup]] / [[indexMergeProbeNearDup]]:
     * today's batch banded against the stored index (64-bit Hamming gate
     * inside the band join, corpus side exchange-free), then the exact
@@ -2108,7 +2058,7 @@ object SimilarityOps {
     * subsequent bucket-pruned probe). The build constant is referenced only
     * when [[ensureBandIndex]] creates a version; every later writer inherits
     * whatever spec the index actually carries. Callers hold
-    * [[withIndexLock]] on the index root, and the catalog table is
+    * [[Staging.withLock]] on the index root, and the catalog table is
     * registered at `path` (which [[ensureBandIndex]] guarantees).
     */
   private[graft] def appendBandRows(s: SparkSession, rows: DataFrame,
@@ -2153,92 +2103,6 @@ object SimilarityOps {
     */
   val CompactTriggerFilesPerBucket = 3
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(); ()
-  }
-
-  /** Ceiling on waiting behind a LIVE lock holder. A large index rewrite
-    * can legitimately run for many minutes at scale, so the old flat 120 s
-    * deadline threw for any waiter queued behind a long compaction and its
-    * error told the operator to delete a lock that was in fact live (r12
-    * advice). Stale holders are now detected by PID liveness instead of
-    * elapsed time, so this bound only catches a holder that is alive but
-    * wedged — generous by design.
-    */
-  val IndexLockWaitMaxMs: Long = 60L * 60 * 1000
-
-  /** A lock file whose holder PID has not been stamped yet (the write races
-    * the waiter's read) is presumed live for this long; past it an empty
-    * lock is treated as debris from a holder that died between
-    * `createNewFile` and the stamp.
-    */
-  val IndexLockStampGraceMs: Long = 60L * 1000
-
-  /** Mutual exclusion between MUTATORS of one stored index root —
-    * [[ensureBandIndex]]'s build/re-register, [[mergeBatchOnce]]'s append,
-    * [[compactBandIndex]]'s rewrite + flip — and of the yesterday-labels
-    * table: `createNewFile` is atomic, the lock lives NEXT TO the guarded
-    * dir (`<dir>__lock`, never inside — the yesterday-labels write
-    * overwrites its dir, and a band-index build creates its root under the
-    * lock), and the file carries the holder's PID so waiters can
-    * DISTINGUISH a stale holder from a slow one (the r12 advice: a flat
-    * deadline is a heuristic that misfires exactly when compaction is
-    * doing its job on a big index):
-    *
-    *  - holder PID dead → the lock is debris from a crash; the waiter
-    *    breaks it by RENAMING it aside first (atomic steal — two waiters
-    *    racing the same stale lock cannot both win, and neither can delete
-    *    a fresh lock the other just created) and retries;
-    *  - holder PID alive → wait, up to [[IndexLockWaitMaxMs]]; the timeout
-    *    error names the holder PID and lock age instead of telling the
-    *    operator to delete a live lock.
-    *
-    * Readers never take it: a probe scans the version its catalog entry
-    * names, and a flip retains that version. Writers must: a merge racing
-    * a compaction would append into a version the flip is about to
-    * supersede — rows silently lost to every later probe.
-    */
-  private[graft] def withIndexLock[T](path: java.io.File)(body: => T): T = {
-    val lf = new java.io.File(path.getParentFile, path.getName + "__lock")
-    def acquire(): Boolean = lf.createNewFile() && {
-      java.nio.file.Files.write(lf.toPath,
-        s"${ProcessHandle.current().pid()}\n".getBytes("UTF-8"))
-      true
-    }
-    def holderPid(): Option[Long] =
-      try new String(java.nio.file.Files.readAllBytes(lf.toPath), "UTF-8")
-        .trim match {
-          case "" => None
-          case s  => scala.util.Try(s.toLong).toOption
-        }
-      catch { case _: java.io.IOException => None } // racing delete: retry
-    def stale(): Boolean = holderPid() match {
-      case Some(pid) => ProcessHandle.of(pid).isEmpty // holder process died
-      case None => // not stamped (yet?) — live within the stamp grace only
-        lf.exists() &&
-          System.currentTimeMillis() - lf.lastModified() > IndexLockStampGraceMs
-    }
-    val deadline = System.nanoTime() + IndexLockWaitMaxMs * 1000000L
-    while (!acquire()) {
-      if (stale()) {
-        // atomic steal: only one waiter's rename succeeds; the loser loops
-        val tomb = new java.io.File(lf.getParentFile,
-          lf.getName + ".stale." + System.nanoTime())
-        if (lf.renameTo(tomb)) { tomb.delete(); () }
-      } else {
-        if (System.nanoTime() > deadline)
-          throw new IllegalStateException(
-            s"band-index lock $lf held by LIVE pid ${holderPid().getOrElse("?")} " +
-              s"for over ${IndexLockWaitMaxMs / 60000} min (lock age " +
-              s"${(System.currentTimeMillis() - lf.lastModified()) / 1000} s) — " +
-              "holder wedged? Inspect that process before breaking the lock")
-        Thread.sleep(50)
-      }
-    }
-    try body finally { lf.delete(); () }
-  }
-
   /** q333 — the maintenance lifecycle CLOSED: build (quarter corpus) → three
     * daily merges ([[mergeBatchOnce]], one batch marker each) → COMPACT
     * ([[compactBandIndex]]: 8 build files + 24 merge files → 8, written as
@@ -2271,7 +2135,7 @@ object SimilarityOps {
     *
     * Layout: `<root>/_GRAFT_MANIFEST` is a one-line pointer naming the
     * ACTIVE version directory `<root>/v_NNNNNN/`, which holds the bucketed
-    * parquet files, the `_GRAFT_SNAPSHOT` corpus marker and the per-batch
+    * parquet files, the [[Staging.Marker]] corpus snapshot and the per-batch
     * `_GRAFT_MERGED_*` merge markers. Invariants:
     *
     *  - a version is flipped to only once it is COMPLETE (its snapshot
@@ -2281,7 +2145,7 @@ object SimilarityOps {
     *  - no data directory is ever renamed: a build ([[ensureBandIndex]])
     *    and a compaction ([[compactBandIndex]]) each write a NEW version
     *    and flip to it; a merge ([[mergeBatchOnce]]) appends into the
-    *    active version; all three hold [[withIndexLock]] on the root;
+    *    active version; all three hold [[Staging.withLock]] on the root;
     *  - a flip RETAINS the predecessor version until the next flip, so a
     *    reader that resolved the old pointer keeps reading intact files
     *    through a whole compaction; older versions and never-flipped dirs
@@ -2348,7 +2212,7 @@ object SimilarityOps {
     Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.matches("v_\\d{6}") &&
         !keep(f.getName))
-      .foreach(rmrf)
+      .foreach(Staging.rmrf)
 
   /** The (vec_id, srp, bk, bv) band rows of `dir`'s embeddings, optionally
     * `subset`-filtered: what a build writes and a merge appends.
@@ -2360,8 +2224,9 @@ object SimilarityOps {
 
   /** Resolve-or-build the stored bucketed band index over `dir`'s
     * embeddings (optionally `subset`-filtered). Index identity =
-    * [[bandIndexConstantsFp]] (in the table and root names) + the
-    * [[corpusSnapshot]] marker of the active version: a missing or
+    * [[bandIndexConstantsFp]] (in the table and root names, both
+    * [[Staging.storedName]]s of `dir`) + the [[Staging.snapshot]] of the
+    * embeddings in the [[Staging.Marker]] of the active version: a missing or
     * mismatched marker builds a NEW version and flips to it. A valid
     * active version is never rebuilt; if this session's catalog lacks the
     * table or has it at a superseded version (another process flipped
@@ -2372,37 +2237,30 @@ object SimilarityOps {
     */
   private[graft] def ensureBandIndex(s: SparkSession, dir: String,
       variant: String, subset: Option[Column]): (String, java.io.File, Boolean) = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tIdx = s"graft_band_${variant}_${bandIndexConstantsFp}_$sfx"
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_mfx_${variant}_${bandIndexConstantsFp}_$sfx")
-    withIndexLock(root) {
+    val tIdx = Staging.storedName(s"band_${variant}_$bandIndexConstantsFp", dir)
+    val root = new java.io.File(Staging.storedDir(s"mfx_${variant}_$bandIndexConstantsFp", dir))
+    Staging.withLock(root) {
       root.mkdirs()
-      val snap = corpusSnapshot(dir)
+      val snap = Staging.snapshot(s, dir, Seq("embeddings"))
       // planned only on the build and re-register paths: a warm probe whose
       // catalog already names the active version neither analyses the
       // sketch nor runs the corpus read's schema-inference job
       lazy val rows = bandRows(s, dir, subset)
-      val activeOk = activeVersionDir(root).filter { d =>
-        val m = new java.io.File(d, "_GRAFT_SNAPSHOT")
-        m.exists() && new String(
-          java.nio.file.Files.readAllBytes(m.toPath), "UTF-8") == snap
-      }
+      val activeOk = activeVersionDir(root).filter(Staging.isStaged(_, snap))
       val (vDir, built) = activeOk match {
         case Some(d) => (d, false)
         case None =>
           val prev = activeVersionDir(root).map(_.getName)
           val vName = nextVersionName(root)
           val d = new java.io.File(root, vName)
-          rmrf(d)
+          Staging.rmrf(d)
           if (s.catalog.tableExists(tIdx)) s.sql(s"DROP TABLE $tIdx")
           rows.repartition(BandIndexBuckets, col("bk"), col("bv"))
             .write.format("parquet")
             .bucketBy(BandIndexBuckets, "bk", "bv").sortBy("bk", "bv")
             .option("path", d.getAbsolutePath)
             .mode("overwrite").saveAsTable(tIdx)
-          java.nio.file.Files.write(
-            new java.io.File(d, "_GRAFT_SNAPSHOT").toPath, snap.getBytes("UTF-8"))
+          Staging.markStaged(d, snap)
           flipManifest(root, vName)
           gcVersions(root, Set(vName) ++ prev)
           (d, true)
@@ -2426,7 +2284,7 @@ object SimilarityOps {
 
   /** Merge one arriving batch — the band rows of `dir`'s embeddings that
     * pass `batchFilter` — into the active version EXACTLY ONCE: under
-    * [[withIndexLock]] on `root`, resolve the active version, return if its
+    * [[Staging.withLock]] on `root`, resolve the active version, return if its
     * `_GRAFT_MERGED_<batch>` marker exists, else [[appendBandRows]] and
     * write the marker after the rows. The marker belongs to the version, so
     * a rebuild starts without it and a compaction carries it forward. A
@@ -2435,7 +2293,7 @@ object SimilarityOps {
     */
   private def mergeBatchOnce(s: SparkSession, dir: String, tIdx: String,
       root: java.io.File, batch: String, batchFilter: Column): Unit =
-    withIndexLock(root) {
+    Staging.withLock(root) {
       val vDir = activeVersionDir(root).getOrElse(throw new IllegalStateException(
         s"no active version under $root — build before merging"))
       val marker = new java.io.File(vDir, s"_GRAFT_MERGED_$batch")
@@ -2464,7 +2322,7 @@ object SimilarityOps {
   private[graft] def compactBandIndex(s: SparkSession, tIdx: String,
       root: java.io.File,
       minFilesPerBucket: Int = CompactTriggerFilesPerBucket): Boolean =
-    withIndexLock(root) {
+    Staging.withLock(root) {
       val vDir = activeVersionDir(root).getOrElse(throw new IllegalStateException(
         s"no active version under $root — build before compacting"))
       val dataFiles = Option(vDir.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -2477,7 +2335,7 @@ object SimilarityOps {
       val ddl = s.table(tIdx).schema.toDDL
       val vName = nextVersionName(root)
       val next = new java.io.File(root, vName)
-      rmrf(next)
+      Staging.rmrf(next)
       val tTmp = tIdx + "_staging"
       if (s.catalog.tableExists(tTmp)) s.sql(s"DROP TABLE $tTmp")
       s.read.parquet(vDir.getAbsolutePath)
@@ -2492,7 +2350,7 @@ object SimilarityOps {
       // marks the version complete, so it must land after every data file
       Option(vDir.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(_.getName.startsWith("_GRAFT_"))
-        .sortBy(f => if (f.getName == "_GRAFT_SNAPSHOT") 1 else 0)
+        .sortBy(f => if (f.getName == Staging.Marker) 1 else 0)
         .foreach { m =>
           java.nio.file.Files.copy(m.toPath,
             new java.io.File(next, m.getName).toPath)

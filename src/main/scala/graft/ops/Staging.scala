@@ -1,16 +1,36 @@
 package graft.ops
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Idempotent scratch-dir staging with self-healing: a stage is valid only
-  * when its `_STAGED` marker AND every expected data path exist. A
-  * half-staged dir — marker without data or data without marker, left by a
-  * crashed run, tmp-space reclamation, or another process writing the same
-  * path — is wiped and rebuilt instead of silently poisoning every query
-  * that reads it (a marker-only check once turned the pipeline e2e into a
-  * 0-row result when an unrelated stage claimed its directory).
+/** Where scratch data lives, and the one lifecycle of every STORED artifact.
+  *
+  * Per-run scratch (streaming checkpoints, q100's sink, q130's overwrite
+  * table) is written fresh on every call under [[perRunRoot]].
+  *
+  * A stored artifact is built once and read by every later run: the
+  * pipeline's CSV shards, the streaming landing dirs, the format round-trip
+  * copies, the q338/q341 yesterday-label table, q177's bucketed tables and
+  * the band indexes. This object decides three things for all of them:
+  *
+  *  - name: [[storedDir]] = `java.io.tmpdir/graft_<kind>_<dir>_<digest>`,
+  *    where the digest hashes the full source dir, so two dirs never share
+  *    an artifact (a bare `hashCode` or a sanitized name alone collides);
+  *  - validity: the [[Marker]] file, written last, holds the [[snapshot]]
+  *    of the source tables the artifact was built from, so a regenerated
+  *    source, a half-written build and a crashed build all read as "not
+  *    staged" and are rebuilt;
+  *  - concurrency: builders of one artifact serialize on [[withLock]], in
+  *    one JVM or across processes, and the loser of a race re-checks and
+  *    reads the winner's build.
+  *
+  * Stored artifacts live in the local `java.io.tmpdir`: they persist
+  * across runs, which tmpfs does not.
   */
 object Staging {
 
@@ -19,9 +39,7 @@ object Staging {
     * the host offers it, else `java.io.tmpdir`. This is the one placement
     * decision for per-run scratch: an AvailableNow run commits a few small
     * checkpoint files per microbatch, and on a disk-backed tmpdir those
-    * writes set the microbatch floor. Idempotent STAGED dirs deliberately
-    * stay under `java.io.tmpdir`: they persist across runs and tmpfs does
-    * not.
+    * writes set the microbatch floor.
     */
   lazy val perRunRoot: String = {
     // Deployment knob (r14 verdict #8): per-run scratch placement is an
@@ -74,23 +92,188 @@ object Staging {
     root
   }
 
-  /** Run `write` unless `base` already holds a completed stage; returns
-    * `base`. `dataPaths` are base-relative paths that must exist for the
-    * stage to count as complete (the marker alone is not trusted).
+  // ================= stored artifacts =================
+
+  /** The validity marker of a stored artifact: written after its data, and
+    * holding the [[snapshot]] of the sources it was built from.
     */
-  def ensure(spark: SparkSession, base: String, dataPaths: Seq[String])
-            (write: => Unit): String = {
-    val basePath = new Path(base)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new Path(base + "/_STAGED")
-    val valid = fs.exists(done) &&
-      dataPaths.forall(p => fs.exists(new Path(base + "/" + p)))
-    if (!valid) {
-      fs.delete(basePath, true)
-      fs.mkdirs(basePath)
-      write
-      fs.create(done).close()
+  val Marker = "_GRAFT_SNAPSHOT"
+
+  private def hex(bytes: Array[Byte]): String = bytes.map("%02x".format(_)).mkString
+
+  /** The file and catalog name of the stored artifact `kind` built from the
+    * source dir `dir`: `graft_<kind>_<dir, sanitized>_<digest of dir>`. The
+    * sanitized dir keeps the name readable; the digest of the full path
+    * makes it injective (`a_b/c` and `a/b_c` sanitize alike). The name is
+    * a valid SQL identifier when `kind` is.
+    */
+  def storedName(kind: String, dir: String): String = {
+    val digest = hex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(UTF_8)).take(6))
+    s"graft_${kind}_${dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(64)}_$digest"
+  }
+
+  /** The directory of the stored artifact `kind` built from `dir`. */
+  def storedDir(kind: String, dir: String): String =
+    new File(sys.props("java.io.tmpdir"), storedName(kind, dir)).getPath
+
+  /** Order-independent snapshot of `dir`'s source `tables` (the
+    * `<table>.parquet` file or directory of each): name, length and mtime
+    * of every file — metadata only, never a data scan, so validating a
+    * stored artifact costs one listing per table. Any in-place
+    * regeneration, even a byte-identical one, changes it, which errs in the
+    * safe direction: a spurious rebuild costs one build, a stale artifact
+    * costs silently wrong answers.
+    */
+  def snapshot(spark: SparkSession, dir: String, tables: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    tables.foreach { t =>
+      val root = new Path(s"$dir/$t.parquet")
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def walk(p: Path): Seq[FileStatus] =
+        fs.listStatus(p).toSeq.filterNot(_.getPath.getName.startsWith("."))
+          .sortBy(_.getPath.getName)
+          .flatMap(f => if (f.isDirectory) walk(f.getPath) else Seq(f))
+      val files = if (fs.exists(root)) walk(root) else Nil
+      md.update(s"$t:${files.size}\n".getBytes(UTF_8))
+      files.foreach { f =>
+        md.update(s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}\n".getBytes(UTF_8))
+      }
     }
-    base
+    hex(md.digest().take(8))
+  }
+
+  /** True when `base` holds a complete build of the sources `snap`: its
+    * [[Marker]] carries `snap` and every base-relative `dataPaths` entry
+    * exists (the marker alone is not trusted: tmp-space reclamation can
+    * take the data and leave it).
+    */
+  private[graft] def isStaged(base: File, snap: String, dataPaths: Seq[String] = Nil): Boolean = {
+    val m = new File(base, Marker)
+    m.exists() && new String(Files.readAllBytes(m.toPath), UTF_8) == snap &&
+      dataPaths.forall(p => new File(base, p).exists())
+  }
+
+  /** Mark `base` as a complete build of the sources `snap`. Call it last. */
+  private[graft] def markStaged(base: File, snap: String): Unit = {
+    Files.write(new File(base, Marker).toPath, snap.getBytes(UTF_8))
+    ()
+  }
+
+  /** Under the lock: rebuild `base` unless the re-check finds it staged. */
+  private def stageLocked(base: File, snap: String, dataPaths: Seq[String])
+                         (build: String => Unit): Unit =
+    if (!isStaged(base, snap, dataPaths)) {
+      rmrf(base)
+      base.mkdirs()
+      build(base.getPath)
+      markStaged(base, snap)
+    }
+
+  /** Resolve-or-build the stored artifact `kind` of `dir` from its source
+    * `tables`, and return its directory: check, and when it is not
+    * [[isStaged]], take [[withLock]], re-check, wipe, `build` (given the
+    * directory) and write the marker last. `dataPaths` are base-relative
+    * paths a complete build must hold.
+    */
+  def ensure(spark: SparkSession, kind: String, dir: String, tables: Seq[String],
+             dataPaths: Seq[String])(build: String => Unit): String = {
+    val base = new File(storedDir(kind, dir))
+    val snap = snapshot(spark, dir, tables)
+    if (!isStaged(base, snap, dataPaths)) withLock(base)(stageLocked(base, snap, dataPaths)(build))
+    base.getPath
+  }
+
+  /** [[ensure]], then `read` the artifact, all under [[withLock]]: for an
+    * artifact whose readers capture a file listing (`spark.read.parquet`
+    * lists eagerly), so a concurrent rebuild cannot replace the files
+    * between the validation and the listing.
+    */
+  def ensureAndRead[T](spark: SparkSession, kind: String, dir: String, tables: Seq[String],
+                       dataPaths: Seq[String])(build: String => Unit)(read: String => T): T = {
+    val base = new File(storedDir(kind, dir))
+    val snap = snapshot(spark, dir, tables)
+    withLock(base) {
+      stageLocked(base, snap, dataPaths)(build)
+      read(base.getPath)
+    }
+  }
+
+  private[graft] def rmrf(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
+    f.delete(); ()
+  }
+
+  /** Ceiling on waiting behind a LIVE lock holder. A large index rewrite
+    * can legitimately run for many minutes at scale, so the old flat 120 s
+    * deadline threw for any waiter queued behind a long compaction and its
+    * error told the operator to delete a lock that was in fact live (r12
+    * advice). Stale holders are now detected by PID liveness instead of
+    * elapsed time, so this bound only catches a holder that is alive but
+    * wedged — generous by design.
+    */
+  val LockWaitMaxMs: Long = 60L * 60 * 1000
+
+  /** A lock file whose holder PID has not been stamped yet (the write races
+    * the waiter's read) is presumed live for this long; past it an empty
+    * lock is treated as debris from a holder that died between
+    * `createNewFile` and the stamp.
+    */
+  val LockStampGraceMs: Long = 60L * 1000
+
+  /** Mutual exclusion between the writers of one stored artifact — a
+    * [[ensure]] build, and a band index's build, merge and compaction:
+    * `createNewFile` is atomic, the lock lives NEXT TO the guarded dir
+    * (`<dir>__lock`, never inside — a build wipes its dir), and the file
+    * carries the holder's PID so waiters can DISTINGUISH a stale holder from
+    * a slow one (the r12 advice: a flat deadline is a heuristic that
+    * misfires exactly when compaction is doing its job on a big index):
+    *
+    *  - holder PID dead → the lock is debris from a crash; the waiter
+    *    breaks it by RENAMING it aside first (atomic steal — two waiters
+    *    racing the same stale lock cannot both win, and neither can delete
+    *    a fresh lock the other just created) and retries;
+    *  - holder PID alive → wait, up to [[LockWaitMaxMs]]; the timeout
+    *    error names the holder PID and lock age instead of telling the
+    *    operator to delete a live lock.
+    *
+    * Two threads of one JVM exclude each other too (the holder PID is live).
+    * The lock is not reentrant.
+    */
+  private[graft] def withLock[T](path: File)(body: => T): T = {
+    val lf = new File(path.getParentFile, path.getName + "__lock")
+    def acquire(): Boolean = lf.createNewFile() && {
+      Files.write(lf.toPath, s"${ProcessHandle.current().pid()}\n".getBytes(UTF_8))
+      true
+    }
+    def holderPid(): Option[Long] =
+      try new String(Files.readAllBytes(lf.toPath), UTF_8).trim match {
+          case "" => None
+          case s  => scala.util.Try(s.toLong).toOption
+        }
+      catch { case _: java.io.IOException => None } // racing delete: retry
+    def stale(): Boolean = holderPid() match {
+      case Some(pid) => ProcessHandle.of(pid).isEmpty // holder process died
+      case None => // not stamped (yet?) — live within the stamp grace only
+        lf.exists() &&
+          System.currentTimeMillis() - lf.lastModified() > LockStampGraceMs
+    }
+    val deadline = System.nanoTime() + LockWaitMaxMs * 1000000L
+    while (!acquire()) {
+      if (stale()) {
+        // atomic steal: only one waiter's rename succeeds; the loser loops
+        val tomb = new File(lf.getParentFile, lf.getName + ".stale." + System.nanoTime())
+        if (lf.renameTo(tomb)) { tomb.delete(); () }
+      } else {
+        if (System.nanoTime() > deadline)
+          throw new IllegalStateException(
+            s"stored-artifact lock $lf held by LIVE pid ${holderPid().getOrElse("?")} " +
+              s"for over ${LockWaitMaxMs / 60000} min (lock age " +
+              s"${(System.currentTimeMillis() - lf.lastModified()) / 1000} s) — " +
+              "holder wedged? Inspect that process before breaking the lock")
+        Thread.sleep(50)
+      }
+    }
+    try body finally { lf.delete(); () }
   }
 }

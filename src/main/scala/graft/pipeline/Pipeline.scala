@@ -135,11 +135,9 @@ object Pipeline {
     * Idempotent per scale-factor dir; done once, driver-side rename only.
     */
   def stageVacancyCsvs(spark: SparkSession, sfDir: String): String = {
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_csv_${math.abs(sfDir.hashCode)}"
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.ops.Staging.ensure(spark, base,
-      (0 until 6).map(i => f"vacancies_00$i.csv")) {
+    graft.ops.Staging.ensure(spark, "csv", sfDir, Seq("part"),
+      (0 until 6).map(i => f"vacancies_00$i.csv")) { base =>
+      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val src = graft.Tables.part(spark, sfDir).select(
         col("p_partkey").as("id"),
         col("p_name").as("title"),

@@ -96,8 +96,8 @@ object GraftSinkQueries {
   import org.apache.spark.sql.functions._
 
   def sinkRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") + s"/graft_sink_${math.abs(dir.hashCode)}"
-    graft.ops.Staging.ensure(spark, base, Seq("out/_GRAFT_COMMITTED")) {
+    val base = graft.ops.Staging.ensure(spark, "sink", dir, Seq("orders"),
+        Seq("out/_GRAFT_COMMITTED")) { base =>
       val df = graft.Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderpriority"))
       df.write.format("graft.sources.GraftCommitSink")

@@ -28,9 +28,7 @@ object DocsStream {
     */
   private[graft] def stageDocsDirMulti(spark: SparkSession, dir: String,
                                        nFiles: Int = 2): String = {
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_stream_docs_${math.abs(dir.hashCode)}_$nFiles"
-    EventsStream.stageLanding(spark, base, "docs", nFiles) {
+    EventsStream.stageLanding(spark, s"stream_docs_$nFiles", dir, "documents", nFiles) {
       val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       (0 until nFiles).map(k => docs.filter(pmod(col("doc_id"), lit(nFiles)) === k))
     }

@@ -36,9 +36,7 @@ object EmbeddingStream {
     * mtimes — two genuine microbatches under maxFilesPerTrigger=1).
     */
   private[graft] def stageDeltaDir(spark: SparkSession, dir: String): String = {
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_stream_emb_${math.abs(dir.hashCode)}"
-    EventsStream.stageLanding(spark, base, "emb", 2) {
+    EventsStream.stageLanding(spark, "stream_emb", dir, "embeddings", 2) {
       val d = SimilarityOps.perturbedDelta(spark, dir)
       (0 until 2).map(k => d.filter(pmod(col("vec_id"), lit(2)) === k))
     }

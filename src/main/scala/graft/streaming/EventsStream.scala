@@ -35,29 +35,28 @@ object EventsStream {
   private def canonicalEvents(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.events(spark, dir).withColumn("ts", unix_micros(col("ts")))
 
-  /** Stage a landing dir at `base`: part k of `parts` becomes the single
-    * parquet file `<prefix>_kk.parquet` (FileStreamSource treats each file as
-    * one arrival) with modification time 1000·(k+1), so the files arrive in
-    * order under `latestFirst=false`. Marker-validated via
-    * [[graft.ops.Staging.ensure]] so a half-staged dir (crashed run, tmp
-    * reclamation) self-heals instead of poisoning reads; `parts` is only
-    * evaluated when the dir has to be (re)written, and must hold `nFiles`
-    * frames.
+  /** Stage the landing dir `kind` of `dir`'s `source` table: part k of
+    * `parts` becomes the single parquet file `<source>_kk.parquet`
+    * (FileStreamSource treats each file as one arrival) with modification
+    * time 1000·(k+1), so the files arrive in order under
+    * `latestFirst=false`. A stored artifact of [[graft.ops.Staging.ensure]]:
+    * a half-staged dir or a regenerated source is rebuilt, and concurrent
+    * stagers build it once; `parts` is only evaluated when the dir has to
+    * be (re)written, and must hold `nFiles` frames.
     */
-  private[streaming] def stageLanding(spark: SparkSession, base: String, prefix: String, nFiles: Int)
+  private[streaming] def stageLanding(spark: SparkSession, kind: String, dir: String,
+                                      source: String, nFiles: Int)
                                      (parts: => Seq[DataFrame]): String = {
-    val names = (0 until nFiles).map(k => f"${prefix}_$k%02d.parquet")
-    graft.ops.Staging.ensure(spark, base, names) {
+    val names = (0 until nFiles).map(k => f"${source}_$k%02d.parquet")
+    graft.ops.Staging.ensure(spark, kind, dir, Seq(source), names) { base =>
       val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
       for (((df, fileName), k) <- parts.zip(names).zipWithIndex) {
         val scratch = base + "/_tmp_" + fileName
         df.coalesce(1).write.mode("overwrite").parquet(scratch)
         val part = fs.globStatus(new Path(scratch + "/part-*.parquet"))(0).getPath
         val dst = new Path(base + "/" + fileName)
-        // rename returns false on failure (e.g. two stagers racing on the same
-        // tmp base — Staging.ensure is per-dir idempotent, not cross-thread
-        // atomic): abort LOUDLY before the _STAGED marker is written, or this
-        // run reads a missing landing file and only self-heals next call
+        // rename returns false on failure: abort LOUDLY before the marker
+        // is written, or this run reads a missing landing file
         require(fs.rename(part, dst), s"staging rename failed: $part -> $dst")
         fs.delete(new Path(scratch), true)
         fs.setTimes(dst, 1000L * (k + 1), -1)
@@ -70,8 +69,7 @@ object EventsStream {
     * re-encoded canonically — the shape a streaming ingest dir would have.
     */
   private[graft] def stageStreamDirShared(spark: SparkSession, dir: String): String =
-    stageLanding(spark, sys.props("java.io.tmpdir") + s"/graft_stream_us_${math.abs(dir.hashCode)}",
-      "events", 1)(Seq(canonicalEvents(spark, dir)))
+    stageLanding(spark, "stream_us", dir, "events", 1)(Seq(canonicalEvents(spark, dir)))
 
   /** Multi-file staging: the events table split into `nFiles` time-ordered
     * parquet files with strictly increasing modification times — the shape of
@@ -85,9 +83,7 @@ object EventsStream {
                                              nFiles: Int = 3,
                                              byTime: Boolean = true): String = {
     val mode = if (byTime) "time" else "hash"
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_stream_multi_us_${math.abs(dir.hashCode)}_${nFiles}_$mode"
-    stageLanding(spark, base, "events", nFiles) {
+    stageLanding(spark, s"stream_multi_us_${nFiles}_$mode", dir, "events", nFiles) {
       val ev = canonicalEvents(spark, dir) // ts = long micros
       // byTime: in-order arrival (well-formed landing dir). byHash: events of
       // every user scattered across files regardless of time — deliberately

@@ -507,7 +507,7 @@ class ExtensionSpec extends AnyFunSuite {
 
   test("custom sink commit protocol exposes only committed files (q110)") {
     graft.sources.GraftSinkQueries.sinkRoundTrip(spark, sf).count() // stages once
-    val base = sys.props("java.io.tmpdir") + s"/graft_sink_${math.abs(sf.hashCode)}/out"
+    val base = graft.ops.Staging.storedDir("sink", sf) + "/out"
     val files = new java.io.File(base).listFiles().map(_.getName)
     assert(files.contains("_GRAFT_COMMITTED"))
     assert(!files.exists(_.startsWith("_staging")), "staging must vanish at job commit")

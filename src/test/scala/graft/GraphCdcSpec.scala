@@ -176,11 +176,35 @@ class GraphCdcSpec extends AnyFunSuite {
   }
 
   test("q177 bucketed join plans with zero join-side exchanges") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val df = graft.ops.CoreOps.bucketedJoin(spark, sf)
     val nHashEx = "Exchange hashpartitioning".r
       .findAllIn(df.queryExecution.executedPlan.toString).length
     // only the final aggregate repartitions; the SMJ reads bucketed scans
     assert(nHashEx == 1, s"expected 1 hash exchange (agg only), got $nHashEx")
+    val physical = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val smj = physical.collectFirst { case j: SortMergeJoinExec => j }
+    assert(smj.isDefined, s"bucketed sides must co-locate in a sort-merge join:\n$physical")
+    assert(smj.get.collect { case e: ShuffleExchangeLike => e }.isEmpty,
+      s"neither join side may shuffle:\n${smj.get}")
+    // a catalog without the tables (a fresh JVM) registers the stored
+    // files again, bucket spec included, instead of rebuilding them
+    val rows = df.collect().toSeq
+    Seq("orders", "lineitem").foreach { t =>
+      spark.sql(s"DROP TABLE ${graft.ops.Staging.storedName(s"bkt_$t", sf)}")
+    }
+    val sentinel = new java.io.File(graft.ops.Staging.storedDir("bkt_orders", sf), "_sentinel")
+    assert(sentinel.createNewFile())
+    val again = graft.ops.CoreOps.bucketedJoin(spark, sf)
+    assert("Exchange hashpartitioning".r
+      .findAllIn(again.queryExecution.executedPlan.toString).length == 1)
+    assert(again.collect().toSeq === rows)
+    assert(sentinel.delete(), "a valid stage must be registered, not rebuilt")
     // the same join from raw parquet (broadcast disabled) shuffles BOTH sides
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

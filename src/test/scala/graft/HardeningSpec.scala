@@ -342,14 +342,100 @@ class HardeningSpec extends AnyFunSuite {
       === Tables.events(spark, sf).count())
   }
 
+  /** Scratch source dirs, siblings under one root, each holding `sf`'s
+    * events (or the given frame), and a cleanup that removes them and the
+    * stored artifacts `kinds` built from them.
+    */
+  private def withEventsCopies[T](kinds: Seq[String],
+      copies: (String, Option[org.apache.spark.sql.DataFrame])*)(body: Seq[String] => T): T = {
+    import graft.ops.Staging
+    val root = java.nio.file.Files.createTempDirectory("graft_src").toFile
+    val dirs = copies.map { case (name, events) =>
+      val d = new java.io.File(root, name)
+      d.mkdirs()
+      val dst = new java.io.File(d, "events.parquet")
+      events match {
+        case Some(ev) => ev.write.parquet(dst.getPath)
+        case None => java.nio.file.Files.copy(new java.io.File(sf, "events.parquet").toPath, dst.toPath)
+      }
+      d.getPath
+    }
+    try body(dirs)
+    finally {
+      for (k <- kinds; d <- dirs) Staging.rmrf(new java.io.File(Staging.storedDir(k, d)))
+      Staging.rmrf(root)
+    }
+  }
+
+  test("stored artifacts of colliding dir names stay apart: q60 answers each dir from its own events") {
+    import graft.ops.{EventOps, Staging}
+    // sibling dirs `Aa` and `BB` have one String.hashCode; `a_b/c` and
+    // `a/b_c` sanitize to one name
+    assert(Staging.storedName("json", "a_b/c") !== Staging.storedName("json", "a/b_c"))
+    def direct(dir: String) = Tables.events(spark, dir)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .orderBy(col("event_type")).collect().toSeq
+    val odd = Tables.events(spark, sf).filter(col("event_id") % 2 === 1)
+    withEventsCopies(Seq("json"), "Aa" -> None, "BB" -> Some(odd)) { case Seq(aa, bb) =>
+      assert(aa.hashCode === bb.hashCode)
+      assert(Staging.storedDir("json", aa) !== Staging.storedDir("json", bb))
+      val rAa = EventOps.jsonRoundTrip(spark, aa).collect().toSeq
+      val rBb = EventOps.jsonRoundTrip(spark, bb).collect().toSeq
+      assert(rAa === direct(aa))
+      assert(rBb === direct(bb))
+      assert(rAa !== rBb, "the two dirs hold different events")
+    }
+  }
+
+  test("an in-place mtime bump of the source table rebuilds a stage") {
+    import graft.ops.Staging
+    import org.apache.hadoop.fs.Path
+    withEventsCopies(Seq("stream_us"), "mtime" -> None) { case Seq(d) =>
+      val staged = EventsStream.stageStreamDirShared(spark, d)
+      val sentinel = new java.io.File(staged, "_sentinel")
+      assert(sentinel.createNewFile())
+      // unchanged source: the stage is resolved, not rebuilt
+      assert(EventsStream.stageStreamDirShared(spark, d) === staged)
+      assert(sentinel.exists(), "an unchanged source must not rebuild the stage")
+      val src = new java.io.File(d, "events.parquet")
+      assert(src.setLastModified(src.lastModified() + 2000))
+      assert(EventsStream.stageStreamDirShared(spark, d) === staged)
+      assert(!sentinel.exists(), "a regenerated source must rebuild the stage")
+      val marker = new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(staged, Staging.Marker).toPath), "UTF-8")
+      assert(marker === Staging.snapshot(spark, d, Seq("events")))
+      assert(spark.read.schema(SessionStream.rawSchema).parquet(staged).count()
+        === Tables.events(spark, d).count())
+      assert(new Path(staged).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(new Path(staged + "/events_00.parquet")))
+    }
+  }
+
+  test("two threads staging one fresh landing dir both read a complete stage") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    withEventsCopies(Seq("stream_multi_us_2_time"), "race" -> None) { case Seq(d) =>
+      val expected = Tables.events(spark, d).count()
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val runs = (1 to 2).map { _ =>
+        Future {
+          go.await()
+          val staged = EventsStream.stageStreamDirMulti(spark, d, nFiles = 2)
+          spark.read.schema(SessionStream.rawSchema).parquet(staged).count()
+        }
+      }
+      go.countDown()
+      assert(runs.map(Await.result(_, 5.minutes)) === Seq(expected, expected))
+    }
+  }
+
   test("two streaming queries interleave in one session, both correct") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // stage both landing dirs serially first (Staging.ensure is per-dir
-    // idempotent, not cross-thread atomic)
-    EventsStream.stageStreamDirShared(spark, sf)
-    EventsStream.stageStreamDirMulti(spark, sf, nFiles = 2)
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     val f1 = Future(StreamJoinOps.streamStaticEnrich(spark, sf).collect().toSeq)
     val f2 = Future(StreamJoinOps.dedupStreaming(spark, sf).collect().toSeq)
@@ -610,7 +696,7 @@ class HardeningSpec extends AnyFunSuite {
       val v1 = SimilarityOps.activeVersionDir(root).get
 
       // --- crash AFTER a compaction wrote its next version (complete, with
-      // its _GRAFT_SNAPSHOT marker) but BEFORE the pointer flip: the
+      // its snapshot marker) but BEFORE the pointer flip: the
       // unflipped dir must be ignored — no rebuild, no re-registration
       val torn = new java.io.File(root, "v_000002")
       org.apache.commons.io.FileUtils.copyDirectory(v1, torn)
@@ -642,7 +728,7 @@ class HardeningSpec extends AnyFunSuite {
       val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val inLock = new java.util.concurrent.CountDownLatch(1)
       val t1 = new Thread(() => {
-        SimilarityOps.withIndexLock(root) {
+        graft.ops.Staging.withLock(root) {
           order.add("compact-start"); inLock.countDown()
           Thread.sleep(400)
           order.add("compact-end")
@@ -650,7 +736,7 @@ class HardeningSpec extends AnyFunSuite {
       })
       val t2 = new Thread(() => {
         inLock.await()
-        SimilarityOps.withIndexLock(root) { order.add("merge") }
+        graft.ops.Staging.withLock(root) { order.add("merge") }
       })
       t1.start(); t2.start(); t1.join(10000); t2.join(10000)
       assert(order.toArray.toSeq === Seq("compact-start", "compact-end", "merge"),
@@ -678,7 +764,7 @@ class HardeningSpec extends AnyFunSuite {
       assert(s.table(tIdx).count() === rowsBefore * 2) // append doubled the rows
       assert(new java.io.File(compacted, "_GRAFT_MERGED_swaptest").exists(),
         "merge markers must be carried to the new version")
-      assert(new java.io.File(compacted, "_GRAFT_SNAPSHOT").exists())
+      assert(new java.io.File(compacted, graft.ops.Staging.Marker).exists())
       // the bucket spec was DERIVED from the catalog, not re-hardcoded
       val spec = org.apache.spark.sql.graftbridge.GraftSqlBridge.bucketSpec(s, tIdx)
       assert(spec === Some((SimilarityOps.BandIndexBuckets, Seq("bk", "bv"), Seq("bk", "bv"))))
@@ -758,7 +844,7 @@ class HardeningSpec extends AnyFunSuite {
       assert(pinnedReader.count() === rowsBefore,
         "a reader that resolved the old pointer must survive the flip intact")
       assert(s.table(tIdx).count() === rowsBefore, "no row lost by the flip")
-      assert(new java.io.File(v2, "_GRAFT_SNAPSHOT").exists(),
+      assert(new java.io.File(v2, graft.ops.Staging.Marker).exists(),
         "version markers must be carried to the new version")
 
       // crash debris: a torn higher-numbered dir that was never flipped to
@@ -807,7 +893,7 @@ class HardeningSpec extends AnyFunSuite {
         .find(p => scala.util.Try(ProcessHandle.of(p).isPresent).toOption.contains(false)).get
       java.nio.file.Files.write(lf.toPath, s"$deadPid\n".getBytes("UTF-8"))
       val t0 = System.nanoTime()
-      val ran = SimilarityOps.withIndexLock(path) { "ran" }
+      val ran = graft.ops.Staging.withLock(path) { "ran" }
       assert(ran === "ran")
       assert((System.nanoTime() - t0) / 1e9 < 30, "stale break must not wait out a deadline")
       assert(!lf.exists(), "the broken + reacquired lock must be released")
@@ -817,20 +903,20 @@ class HardeningSpec extends AnyFunSuite {
       // race), past it it is debris and must be broken
       java.nio.file.Files.write(lf.toPath, Array.emptyByteArray)
       assert(lf.setLastModified(
-        System.currentTimeMillis() - SimilarityOps.IndexLockStampGraceMs - 5000))
-      assert(SimilarityOps.withIndexLock(path) { 42 } === 42)
+        System.currentTimeMillis() - graft.ops.Staging.LockStampGraceMs - 5000))
+      assert(graft.ops.Staging.withLock(path) { 42 } === 42)
       assert(!lf.exists())
 
       // a LIVE holder (this JVM's pid) must be waited on, never broken —
       // the second acquirer proceeds only once the holder releases
       val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val held = new java.util.concurrent.CountDownLatch(1)
-      val h = new Thread(() => SimilarityOps.withIndexLock(path) {
+      val h = new Thread(() => graft.ops.Staging.withLock(path) {
         held.countDown(); Thread.sleep(300); order.add("holder-end"); ()
       })
       val w = new Thread(() => {
         held.await()
-        SimilarityOps.withIndexLock(path) { order.add("waiter"); () }
+        graft.ops.Staging.withLock(path) { order.add("waiter"); () }
       })
       h.start(); w.start(); h.join(10000); w.join(10000)
       assert(order.toArray.toSeq === Seq("holder-end", "waiter"),
@@ -866,7 +952,7 @@ class HardeningSpec extends AnyFunSuite {
         .write.format("parquet").bucketBy(nB, "bk", "bv").sortBy("bk", "bv")
         .option("path", path.getAbsolutePath).saveAsTable(t4)
       val before = s.table(t4).count()
-      SimilarityOps.withIndexLock(path) {
+      graft.ops.Staging.withLock(path) {
         SimilarityOps.appendBandRows(s, bandRows(col("vec_id") % 2 === 1), t4, path)
       }
       // the append wrote ONE file per catalog bucket (4), not per the

@@ -501,10 +501,12 @@ class PlanSpec extends AnyFunSuite {
     // compaction is physical-only: the build(¼)+3-merges index yields the
     // same pair set as the probe of the one-shot full index (q327)
     assert(rows.toSeq === SimilarityOps.indexProbeNearDup(spark, sf).collect().toSeq)
-    // 32 data files (8 build + 3×8 merge) became exactly one per bucket
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_mfx_idxk_${SimilarityOps.bandIndexConstantsFp}_" +
-        sf.replaceAll("[^A-Za-z0-9]", "_"))
+    // 32 data files (8 build + 3×8 merge) became exactly one per bucket;
+    // the index resolves without a rebuild, and names its own root
+    val s2 = spark.newSession()
+    val (tIdx, root, built) = SimilarityOps.ensureBandIndex(
+      s2, sf, "idxk", Some(org.apache.spark.sql.functions.col("vec_id") % 4 === 0))
+    assert(!built)
     val active = SimilarityOps.activeVersionDir(root).get
     val dataFiles = active.listFiles().filter(_.getName.startsWith("part-"))
     assert(dataFiles.length === 8,
@@ -513,14 +515,10 @@ class PlanSpec extends AnyFunSuite {
     // restarted job must see the merges as done (exactly-once) and the
     // snapshot as current (no rebuild)
     val names = active.listFiles().map(_.getName).toSet
-    assert(names.contains("_GRAFT_SNAPSHOT"))
+    assert(names.contains(graft.ops.Staging.Marker))
     assert(Seq(1, 2, 3).forall(r => names.contains(s"_GRAFT_MERGED_q$r")))
     // idempotent: an already-compact index is returned untouched
-    val s2 = spark.newSession()
-    val (tIdx, root2, built) = SimilarityOps.ensureBandIndex(
-      s2, sf, "idxk", Some(org.apache.spark.sql.functions.col("vec_id") % 4 === 0))
-    assert(!built && root2 === root)
-    assert(!SimilarityOps.compactBandIndex(s2, tIdx, root2))
+    assert(!SimilarityOps.compactBandIndex(s2, tIdx, root))
   }
 
   test("band-index probes after a pointer flip and for k-NN keep the bucketed shape (q342, q343)") {
@@ -905,31 +903,6 @@ class PlanSpec extends AnyFunSuite {
       "NOT IN must use the null-aware anti build:\n" + p.take(1000))
     assert(p.contains("ExistenceJoin"),
       "NOT EXISTS under an aggregate must plan as ExistenceJoin")
-  }
-
-  test("bucketed fact tables join with zero shuffle (co-located sort-merge)") {
-    import org.apache.spark.sql.functions.col
-    // stale warehouse dirs from a previous JVM collide with the fresh
-    // in-memory catalog — clear locations before writing
-    Seq("orders_b", "lineitem_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(s"spark-warehouse/$t")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    Bucketing.writeBucketed(Tables.orders(spark, sf), "orders_b", "o_orderkey", 4)
-    Bucketing.writeBucketed(
-      Tables.lineitem(spark, sf).withColumnRenamed("l_orderkey", "lo_key"),
-      "lineitem_b", "lo_key", 4)
-    // force SMJ so the assertion is about bucketing, not broadcast; plan must
-    // be materialized inside the conf window (it's resolved lazily)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val p =
-      try Bucketing.bucketedJoin(spark, "orders_b", "lineitem_b", "o_orderkey", "lo_key")
-        .queryExecution.executedPlan.toString
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    assert(p.contains("SortMergeJoin"))
-    assert(!p.contains("Exchange"), "bucketed join must not shuffle:\n" + p.take(800))
   }
 
   test("near-dup verify broadcast is size-gated: degraded plan matches, shuffle candidate-bounded") {

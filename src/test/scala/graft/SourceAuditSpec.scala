@@ -35,7 +35,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * through one retry loop, never inside a Spark task. One streaming run
   * scaffold: `StreamJoinOps.runToCompletion` is the only memory-sink run,
   * and per-run scratch placement (tmpfs or not) is decided in `Staging`
-  * alone.
+  * alone. One stored-artifact lifecycle: only `Staging` names a build-once
+  * dir, and the lock and the source snapshot are written once. No operator
+  * sets conf on the caller's session.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -92,26 +94,28 @@ class SourceAuditSpec extends AnyFunSuite {
         s"$LookBack lines below — delete or move them):\n" + stale.mkString("\n"))
   }
 
-  test("no operator mutates the shared session's shuffle width") {
-    // Scoped shuffle-width overrides belong on a session CLONE
-    // (the DedupOps.components loop / StreamJoinOps.withStatePartitions): a
-    // set-and-restore on the caller's session silently rescopes any other
-    // query planned inside the window, and is unsafe the moment two queries
-    // share a session. Structural rule: the exact mutation call on a
-    // receiver named `spark` (the caller-session parameter convention
-    // throughout src/main) must not exist; clones are locally named `s`,
-    // `s2`, or `loop`.
+  test("no operator sets conf on the caller's session") {
+    // Scoped conf overrides belong on a session of the operator's own
+    // (`spark.newSession()`, or a `GraftSqlBridge.cloneSession` clone as the
+    // DedupOps.components loop and StreamJoinOps.withStatePartitions use) or
+    // on the writer (`.option(...)`): a set-and-restore on the caller's
+    // session silently rescopes any other query planned inside the window,
+    // and is unsafe the moment two queries share a session. Structural rule:
+    // no `spark.conf.set(` on a receiver named `spark` (the caller-session
+    // parameter convention throughout src/main; clones are locally named
+    // `s`, `s2` or `loop`). The one exemption is `Tables.events`' documented
+    // nanos retry, which must leave the conf set for its lazy plan.
     val offenders = for {
-      path <- mainSources
-      if !Set("PlanDigest.scala").contains(path.getFileName.toString)
+      path <- allMainSources
       lines = Files.readAllLines(path).asScala.toVector
       (line, idx) <- lines.zipWithIndex
-      if line.contains("spark.conf.set(\"spark.sql.shuffle.partitions\"") && !isComment(line)
+      if line.contains("spark.conf.set(") && !isComment(line)
+      if !(path.getFileName.toString == "Tables.scala" &&
+        line.contains("\"spark.sql.legacy.parquet.nanosAsLong\""))
     } yield s"$path:${idx + 1}: ${line.trim}"
     assert(offenders.isEmpty,
-      "\nShared-session shuffle-width mutation (use a session clone — " +
-        "GraftSqlBridge.cloneSession, as the DedupOps.components loop does — instead):\n" +
-        offenders.mkString("\n"))
+      "\nConf set on the caller's session (set it on a session of the operator's " +
+        "own, or as a writer option, instead):\n" + offenders.mkString("\n"))
   }
 
   private def allMainSources: Seq[Path] =
@@ -216,6 +220,25 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(calls.size == 1,
       s"\nExpected exactly one classifier call site (the retry loop), found ${calls.size}:\n" +
         calls.mkString("\n"))
+  }
+
+  test("one stored-artifact lifecycle: Staging names, validates and locks every build-once dir") {
+    val outside = allMainSources.filterNot(_.getFileName.toString == "Staging.scala")
+    for ((what, pattern) <- Seq(
+        "java.io.tmpdir path (Staging.storedDir)" -> "\"java\\.io\\.tmpdir\"",
+        "hashCode path naming (Staging.storedName)" -> raw"abs\([\w.]*hashCode\)")) {
+      val sites = matches(outside, pattern.r)
+      assert(sites.isEmpty, s"\nA $what outside Staging:\n" + sites.mkString("\n"))
+    }
+    for ((what, pattern) <- Seq(
+        "lock (Staging.withLock)" -> raw"def \w*[Ll]ock\[",
+        "source snapshot (Staging.snapshot)" -> raw"def \w*[Ss]napshot\(",
+        "atomic lock-file create (Staging.withLock)" -> raw"createNewFile\(")) {
+      val sites = matches(allMainSources, pattern.r)
+      assert(sites.size == 1 && sites.forall(_.contains("Staging.scala")),
+        s"\nExpected the $what exactly once, in Staging, found ${sites.size}:\n" +
+          sites.mkString("\n"))
+    }
   }
 
   test("one streaming run scaffold and one per-run scratch placement") {
