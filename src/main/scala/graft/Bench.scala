@@ -251,13 +251,12 @@ object Bench {
       val perExecBytes = firstRepBytes
       val warmCpu: Option[Double] =
         if (err || cpuReps.size < 2) None else Some(cpuReps.drop(1).min)
-      // drop operator-internal persisted intermediates between queries — a
-      // 250-query bench must not accumulate one cached frame per
-      // PrefixSum/dedup call (each rep rebuilds its DataFrame from scratch,
-      // so nothing released here is ever re-read). releaseAll (r15) also
-      // sweeps untrackable localCheckpoint RDDs: left to ContextCleaner
-      // (periodic GC default 30 min) they measurably throttled the late
-      // suite — q256 warm 1.45 s isolated vs 5.1 s after 300 queries.
+      // drop operator-internal persists and checkpoints between queries
+      // (each rep rebuilds its DataFrame from scratch, so nothing released
+      // here is ever re-read). Every one is enrolled in Caches: left to
+      // ContextCleaner (periodic GC default 30 min) the checkpoints
+      // measurably throttled the late suite — q256 warm 1.45 s isolated vs
+      // 5.1 s after 300 queries.
       graft.ops.Caches.releaseAll()
       (name, times.head, times(times.size / 2), err, perExecBytes, warmCpu)
     }

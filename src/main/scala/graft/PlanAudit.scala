@@ -58,7 +58,11 @@ object PlanAudit {
     */
   final case class Audit(unpartWindows: Seq[String], cartesian: Boolean)
 
-  /** Audit one query: build (never execute) and scan its plans. */
+  /** Audit one query: build its frame and scan its plans. The frame is
+    * never executed, but building it runs the operator's eager work: its
+    * checkpoints and counts, its stored-artifact builds (`Staging.ensure`),
+    * q338/q341's label solve.
+    */
   def auditQuery(spark: SparkSession, name: String, sfDir: String): Audit = {
     val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
     Audit(unpartitionedWindows(qe.optimizedPlan.toString),

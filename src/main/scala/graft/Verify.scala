@@ -67,9 +67,8 @@ object Verify {
           s"$name\t${e.getClass.getName}\t${oneLine(e.getMessage)}\n",
           StandardOpenOption.APPEND)
       }
-      // drop operator-internal persisted intermediates — a full-registry
-      // sweep must not accumulate one cached frame per PrefixSum/dedup call
-      // (releaseAll: localCheckpoint RDDs too, see Bench)
+      // drop operator-internal persists and checkpoints — a full-registry
+      // run must not accumulate one cached frame per PrefixSum/dedup call
       finally graft.ops.Caches.releaseAll()
     }
   }

@@ -1,23 +1,24 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.storage.StorageLevel
 
-/** Registry for operator-internal persisted intermediates (PrefixSum's
-  * range-partitioned pass, the dedup families' token-id tables, …) so a long
-  * sweep over the whole query registry doesn't accumulate corpus-sized cached
-  * datasets: Verify and Bench call [[releaseAll]] after each query's action
-  * completes.
+/** The one lifecycle of operator-internal intermediates: every persist and
+  * every checkpoint an operator or streaming run takes (PrefixSum's
+  * range-partitioned pass, the dedup families' token-id tables, the
+  * connected-components rounds, the streaming drain, the pipeline's deduped
+  * frame …) is enrolled here, together with the per-run scratch dirs a
+  * returned frame reads, and [[releaseAll]] frees all of them. Verify, Bench
+  * and perfbench call it after each query's action completes, so a sweep
+  * over the whole registry does not accumulate corpus-sized cached data.
   *
-  * Contract: a plan must not be executed after the frames it reads were
-  * released. A released `persist` only recomputes (for PrefixSum even that
-  * is exact: the offset CASE literals are pid-keyed against the exec's
-  * memoized shuffle, not re-sampled), but a released `localCheckpoint` (a
-  * [[trackCheckpoint]] frame, or one [[releaseAll]] sweeps, such as the
-  * [[DedupOps.components]] labels) has no lineage left and THROWS when
-  * re-read. Verify and Bench rebuild each query's DataFrame from scratch
-  * per execution, which honours this; specs that hold a frame across
-  * assertions simply don't call release mid-test.
+  * Contract: a frame derived from an enrolled intermediate is not executed
+  * after [[releaseAll]]. A released persist would only recompute, but a
+  * released checkpoint has no lineage left and a released dir no files, so
+  * such a frame throws. Verify and Bench rebuild each query's frame from
+  * scratch per execution; specs that hold a frame across assertions release
+  * only after their last action on it.
   */
 object Caches {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -25,39 +26,28 @@ object Caches {
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
   private val trackedDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  /** Enroll a `localCheckpoint()`ed frame's backing RDD for the next
-    * [[release]]: checkpoint blocks live outside the CacheManager, so
-    * `df.unpersist()` cannot reach them, and a warm bench loop (3 reps per
-    * query) would otherwise accumulate one persisted RDD per rep released
-    * only by GC — invisible to the cache-leak accounting (r14 advice).
-    * SHARPER contract than plain persist tracking: a released CHECKPOINT
-    * cannot be recomputed (the lineage was truncated), so the enrolled
-    * frame — and every plan derived from it — must never be executed after
-    * [[release]]. Both Verify and Bench rebuild each query's DataFrame from
-    * scratch per execution, which is exactly that.
-    */
-  def trackCheckpoint(df: DataFrame): DataFrame = {
-    org.apache.spark.sql.graftbridge.GraftSqlBridge.checkpointRdd(df)
-      .foreach(trackedRdds.add(_))
-    df
-  }
+  implicit class Tracked(private val df: DataFrame) extends AnyVal {
+    /** `df.persist(MEMORY_AND_DISK)`, enrolled: [[releaseAll]] unpersists it
+      * through the CacheManager, so a later persist of the same plan caches
+      * afresh. */
+    def persistTracked(): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      tracked.add(p)
+      p
+    }
 
-  /** `df.persist(MEMORY_AND_DISK)` + enrollment for the next [[release]]. */
-  def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    tracked.add(p)
-    p
-  }
-
-  /** `df.persistTracked()` suffix form for call-chain sites. */
-  implicit class TrackedPersist(private val df: DataFrame) extends AnyVal {
-    def persistTracked(): DataFrame = Caches.persistTracked(df)
+    /** Eager `df.localCheckpoint()`, enrolled: checkpoint blocks live outside
+      * the CacheManager, so only the backing RDD's handle can release them.
+      */
+    def checkpointTracked(): DataFrame = {
+      val c = df.localCheckpoint()
+      GraftSqlBridge.checkpointRdd(c).foreach(trackedRdds.add(_))
+      c
+    }
   }
 
   /** Enroll a per-run scratch dir ([[Staging.perRunDir]]) that a returned
-    * frame reads lazily — q100's sink output, q130's overwritten table — for
-    * deletion at the next [[release]]. Same contract as a checkpoint: the
-    * frame must not be executed after the release.
+    * frame reads lazily — q100's sink output, q130's overwritten table.
     */
   def deleteOnRelease(dir: String): String = {
     trackedDirs.add(dir)
@@ -68,11 +58,10 @@ object Caches {
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
 
-  /** Unpersist (non-blocking) everything enrolled since the last release,
-    * and delete the enrolled scratch dirs. A frame derived from a released
-    * checkpoint or dir cannot be executed again (see the contract above).
+  /** Unpersist (non-blocking) everything enrolled since the last call and
+    * delete the enrolled scratch dirs.
     */
-  def release(): Unit = {
+  def releaseAll(): Unit = {
     var d = tracked.poll()
     while (d != null) {
       d.unpersist(blocking = false)
@@ -93,26 +82,5 @@ object Caches {
       path.getFileSystem(conf).delete(path, true)
       dir = trackedDirs.poll()
     }
-  }
-
-  /** [[release]] plus a sweep of EVERY still-persisted RDD in the context —
-    * the between-queries form Bench and Verify use. Operator-internal
-    * `localCheckpoint`s (the [[DedupOps.components]] labels and loop
-    * rounds, PrefixSum passes…) persist RDDs that no unpersist call can
-    * reach once the operator returns: checkpoint blocks are outside the
-    * CacheManager, and ContextCleaner only reaps them after an organic GC
-    * collects the RDD object — with `spark.cleaner.periodicGC.interval`
-    * defaulting to 30 min, a multi-hundred-query session accumulates
-    * thousands of dead MEMORY_AND_DISK blocks that compete with execution
-    * memory (measured r15: q256 warm 1.45 s isolated vs 5.1 s late-suite).
-    * Safe exactly where the release contract already holds: both Bench and
-    * Verify rebuild every query's frame from scratch per execution, so
-    * nothing persisted by a FINISHED query is ever read again. Tests keep
-    * calling plain [[release]], which never touches frames they still hold.
-    */
-  def releaseAll(): Unit = {
-    release()
-    activeSession.foreach(_.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.ops.Caches.TrackedPersist
+import graft.ops.Caches.Tracked
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}

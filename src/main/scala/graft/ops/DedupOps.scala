@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.ops.Caches.TrackedPersist
+import graft.ops.Caches.Tracked
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1032,7 +1032,7 @@ object DedupOps {
         parent.keys.toArray.sorted.iterator.map(k => (k, find(k)))
       }
       .toDF("doc_id", "label")
-      .localCheckpoint()
+      .checkpointTracked()
   }
 
   /** Min-label propagation with pointer jumping over a symmetric edge set.
@@ -1058,7 +1058,7 @@ object DedupOps {
                                       maxRounds: Int): Option[DataFrame] = {
     var labels = reps
       .select(col("doc_id"), col("doc_id").as("label"))
-      .localCheckpoint()
+      .checkpointTracked()
     var round = 0
     while (round <= maxRounds) {
       val neighborMin = edges.join(labels, edges("src") === labels("doc_id"))
@@ -1070,7 +1070,7 @@ object DedupOps {
       val prop = labels.join(neighborMin, labels("doc_id") === neighborMin("dst"), "left")
         .select(labels("doc_id"), labels("label").as("old"),
           least(labels("label"), coalesce(col("nmin"), labels("label"))).as("label"))
-        .localCheckpoint()
+        .checkpointTracked()
       if (prop.filter(col("label") =!= col("old")).isEmpty) return Some(labels)
       if (round == maxRounds) return None // unconverged; don't pay a dead jump
       val p2 = prop.drop("old")
@@ -1078,7 +1078,7 @@ object DedupOps {
         .join(p2.select(col("doc_id").as("p_id"), col("label").as("p_label")),
           col("l.label") === col("p_id"))
         .select(col("l.doc_id").as("doc_id"), col("p_label").as("label"))
-        .localCheckpoint()
+        .checkpointTracked()
       labels = next
       round += 1
     }
@@ -1102,7 +1102,7 @@ object DedupOps {
     */
   private[graft] def starLabels(pairs: DataFrame): DataFrame = {
     var e = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .distinct().localCheckpoint()
+      .distinct().checkpointTracked()
     var done = e.isEmpty
     while (!done) {
       val sym = e.select(col("a").as("u"), col("b").as("v"))
@@ -1114,7 +1114,7 @@ object DedupOps {
         .select(col("v").as("x"), col("m").as("y"))
       val el = large.filter(col("x") =!= col("y"))
         .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-        .distinct().localCheckpoint()
+        .distinct().checkpointTracked()
       // small-star over the large-star output
       val sym2 = el.select(col("a").as("u"), col("b").as("v"))
         .union(el.select(col("b").as("u"), col("a").as("v")))
@@ -1125,7 +1125,7 @@ object DedupOps {
         .unionByName(mS.select(col("u").as("x"), col("m").as("y")))
       val es = small.filter(col("x") =!= col("y"))
         .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-        .distinct().localCheckpoint()
+        .distinct().checkpointTracked()
       // fixpoint = canonical edge set unchanged (count gate first: the
       // except() runs only on candidate-converged rounds, usually the last)
       val same = es.count() == e.count() && es.exceptAll(e).isEmpty

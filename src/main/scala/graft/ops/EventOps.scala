@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.ops.Caches.TrackedPersist
+import graft.ops.Caches.Tracked
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -172,7 +172,7 @@ object EventOps {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(schema)
       .csv(base + "/events_bad_csv")
-      .cache() // corrupt-record column requires referencing raw + derived together
+      .persistTracked() // corrupt-record column requires referencing raw + derived together
     val good = raw.filter(col("_corrupt_record").isNull)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -182,7 +182,7 @@ object EventOps {
         count(lit(1)).as("n"), lit(0.0).as("sum_value"))
     // eager localCheckpoint of the (tiny) aggregate lets the corrupt-record
     // cache be released NOW instead of leaking one cached scan per call
-    val out = good.unionByName(quarantine).localCheckpoint()
+    val out = good.unionByName(quarantine).checkpointTracked()
     raw.unpersist()
     out.orderBy(col("event_type"))
   }
@@ -400,7 +400,7 @@ object EventOps {
     * oracle reproduces the corrected table directly from the source facts.
     * Fresh table per call (not Staging.ensure): the overwrite IS the
     * operator; a cached mutated table would break re-runs. The table lives
-    * in a per-run dir, deleted at the next `Caches.release`.
+    * in a per-run dir, deleted at the next `Caches.releaseAll`.
     */
   def partitionOverwrite(spark: SparkSession, dir: String): DataFrame = {
     val tbl = Caches.deleteOnRelease(Staging.perRunDir("graft_dynpo")) + "/events_days"
@@ -1216,7 +1216,7 @@ object EventOps {
           .join(keep.withColumnRenamed("u", "doc_a"), Seq("doc_a"), "left_semi")
           .join(keep.withColumnRenamed("u", "doc_b"), Seq("doc_b"), "left_semi")
           .select(col("doc_a"), col("doc_b"))
-          .localCheckpoint()
+          .checkpointTracked()
         val (n, e) = measure(next)
         rows += ((r.toLong, n, e))
         if (e == rows(rows.length - 2)._3) stable = true
@@ -2121,7 +2121,7 @@ object EventOps {
         .join(contrib, col("node") === col("dst"), "left")
         .select(col("node"), col("deg"),
           (lit(teleport) + expr("(85 * coalesce(in_sum, 0L)) DIV 100")).as("rank"))
-        .localCheckpoint()
+        .checkpointTracked()
     }
     val total = ranks.agg(sum(col("rank")).as("total_rank"))
     ranks.crossJoin(broadcast(total))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import graft.ops.Caches.TrackedPersist
+import graft.ops.Caches.Tracked
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Caches.Tracked
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,11 +55,12 @@ object PrefixSum {
     // persisted via Caches so sweep harnesses can drop it once the consuming
     // query's action completes (a 250-query sweep otherwise accumulates one
     // cached range-partitioned frame per cumSums call)
-    val parts = Caches.persistTracked(df
+    val parts = df
       .select(col("*") +: valCols: _*)
       .repartitionByRange(nParts, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
-      .withColumn(pidCol, spark_partition_id()))
+      .withColumn(pidCol, spark_partition_id())
+      .persistTracked()
     val aggCols = sums.map { case (n, _) => sum(col(s"__ps_v_$n")).as(n) }
     // bounded-collect: one totals row per range partition — O(#partitions)
     val totalRows = parts.groupBy(col(pidCol))

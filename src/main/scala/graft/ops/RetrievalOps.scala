@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.ops.Caches.Tracked
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -480,7 +482,6 @@ object RetrievalOps {
     * recall is monotone in nprobe by construction (spec-pinned).
     */
   def ivfProbeCurve(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Caches.TrackedPersist
     val e = Tables.embeddings(spark, dir)
     val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -554,7 +555,6 @@ object RetrievalOps {
     * 10⁻⁸ units so the cross-vector mean is an exact-integer sum.
     */
   def sqRecallCurve(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Caches.TrackedPersist
     val e = Tables.embeddings(spark, dir)
     val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))

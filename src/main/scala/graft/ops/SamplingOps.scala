@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.ops.Caches.TrackedPersist
+import graft.ops.Caches.Tracked
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -709,7 +709,7 @@ object SamplingOps {
         (top.getLong(0), top.getSeq[Long](1).toArray, top.getLong(2))
       picks += ((k.toLong, vid, Some(radius)))
       md = md.select(col("vec_id"), col("eq"),
-        least(col("md"), d2(eqArr)).as("md")).localCheckpoint()
+        least(col("md"), d2(eqArr)).as("md")).checkpointTracked()
     }
     import spark.implicits._
     picks.toSeq.toDF("sel_rank", "vec_id", "radius_sq")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.ops.Caches.TrackedPersist
+import graft.ops.Caches.Tracked
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -351,10 +351,7 @@ object SimilarityOps {
         Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), threshold)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       .persistTracked()
-    // trackCheckpoint (r14 advice): the checkpointed RDD is outside the
-    // CacheManager, so without enrollment each warm rep leaked one persisted
-    // pair-set RDD until GC.
-    val pairs = Caches.trackCheckpoint(pairs0.localCheckpoint())
+    val pairs = pairs0.checkpointTracked()
     def m4(c: Column, r: Int): Column = c % 4 === r
     def arrivedByDay1(c: Column): Column = c % 2 === 0 || m4(c, 1)
     val d1Pairs = pairs.filter(
@@ -363,7 +360,7 @@ object SimilarityOps {
     val d2Pairs = pairs.filter(m4(col("doc_a"), 3) || m4(col("doc_b"), 3))
     val n1 = emb.filter(m4(col("vec_id"), 1)).select(col("vec_id").as("doc_id")).distinct()
     val n2 = emb.filter(m4(col("vec_id"), 3)).select(col("vec_id").as("doc_id")).distinct()
-    val l1 = DedupOps.incrementalCC(l0, n1, d1Pairs).localCheckpoint()
+    val l1 = DedupOps.incrementalCC(l0, n1, d1Pairs).checkpointTracked()
     val l2 = try DedupOps.incrementalCC(l1, n2, d2Pairs)
       finally pairs0.unpersist()
     l2.select(col("doc_id").as("vec_id"), col("label").as("cluster_id"))
@@ -838,7 +835,7 @@ object SimilarityOps {
             .as("cent2"))
       cents = cents.join(upd, Seq("cid"), "left")
         .select(col("cid"), coalesce(col("cent2"), col("cent")).as("cent"))
-        .localCheckpoint()
+        .checkpointTracked()
     }
     assign(cents)
       .select(col("vec_id"), col("cid").as("cluster"),
@@ -1169,7 +1166,6 @@ object SimilarityOps {
   val NearDupThresholds = Seq(0.30, 0.35, 0.40)
 
   def dedupThresholdCurve(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Caches.TrackedPersist
     val pairs = embeddingNearDup(spark, dir, NearDupThresholds.min)
       .select(col("id_a"), col("id_b"), col("sim"))
     val total = Tables.embeddings(spark, dir).agg(count(lit(1)).as("n_vectors"))
@@ -1298,13 +1294,13 @@ object SimilarityOps {
       // coalesce the tiny shuffle join.
       val w = sn.join(v, sn("j") === v("d"))
         .groupBy(col("i")).agg(sum(col("sn") * col("v")).as("w"))
-        .localCheckpoint()
+        .checkpointTracked()
       val wmax = w.agg(max(abs(col("w"))).as("wmax"))
       v = w.crossJoin(broadcast(wmax))
         .select(col("i").as("d"),
           OracleMath.tdiv(col("w"),
             greatest(OracleMath.tdiv(col("wmax"), lit(PcaScale)), lit(1L))).as("v"))
-        .localCheckpoint()
+        .checkpointTracked()
     }
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val t1 = sn.join(v, sn("j") === v("d"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.ops.Caches.TrackedPersist
+import graft.ops.Caches.Tracked
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -961,7 +961,7 @@ object TextOps {
     val base = base0
       .select(col("doc_id"), col("ws"), size(col("ws")).cast("long").as("n_tokens"),
         lit(0L).as("n_removed"), lit(0L).as("n_rounds_touched"))
-      .localCheckpoint()
+      .checkpointTracked()
     // one doc frame → its (doc_id, pos, gram) rows — the round's expensive
     // projection (per-doc explode + w-word concat)
     def gramsOf(df: DataFrame): DataFrame = df.filter(size(col("ws")) >= w)
@@ -1040,13 +1040,13 @@ object TextOps {
             (col("n_removed") + coalesce(col("rr"), lit(0L))).as("n_removed"),
             (col("n_rounds_touched") + when(col("rr").isNotNull, 1L).otherwise(0L))
               .as("n_rounds_touched"))
-          .localCheckpoint()
+          .checkpointTracked()
         cur = next
         // carry untouched docs' gram rows verbatim; re-derive only rebuilt
         // docs (their positions shifted) — these ARE the next frontier
         val touched = rem.select(col("doc_id"))
         val newGrams = gramsOf(cur.join(touched, Seq("doc_id"), "left_semi"))
-          .localCheckpoint()
+          .checkpointTracked()
         val prev = grams
         grams = prev.join(touched, Seq("doc_id"), "left_anti")
           .unionByName(newGrams)
@@ -2437,7 +2437,7 @@ object TextOps {
         .join(contrib, col("node") === col("dst"), "left")
         .select(col("node"), col("wdeg"),
           (lit(teleport) + expr("(85 * coalesce(in_sum, 0L)) DIV 100")).as("rank"))
-        .localCheckpoint()
+        .checkpointTracked()
     }
     val total = ranks.agg(sum(col("rank")).as("total_rank"))
     ranks.crossJoin(broadcast(total))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.enrich.{Enrichment, Rules}
+import graft.ops.Caches.Tracked
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -118,8 +119,7 @@ object Pipeline {
     */
   def run(spark: SparkSession, csvDir: String, out: Option[String] = None, latestK: Int = 4): DataFrame = {
     val files = discoverLatestCsvs(spark, csvDir, latestK)
-    val deduped = readAndDedup(spark, files)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val deduped = readAndDedup(spark, files).persistTracked()
     val enriched = withMeta(enrichAll(deduped))
     out.foreach(o => writeCsv(enriched, o))
     enriched

@@ -46,7 +46,7 @@ object EmbeddingStream {
   def deltaGatedNearDupStreaming(spark: SparkSession, dir: String): DataFrame = {
     val srcDir = stageDeltaDir(spark, dir)
     val drained = StreamJoinOps.runToCompletion(spark, "append", skipFinalize = true) { s =>
-      import graft.ops.Caches.TrackedPersist
+      import graft.ops.Caches.Tracked
       // static side, built once: skinny banded corpus for the gate join +
       // the corpus vectors for the verify join
       val corpus = SimilarityOps.withBandSketch64(

@@ -67,12 +67,7 @@ object LateSessionStream {
     }
 
     // last emission per user = counts over the complete buffer
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(desc("n_events"))
-    drained
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("n_sessions"), col("n_events"))
-      .orderBy(col("user_id"))
+    StreamJoinOps.lastEmission(drained, Seq("user_id"), "n_events",
+      Seq("user_id", "n_sessions", "n_events"))
   }
 }

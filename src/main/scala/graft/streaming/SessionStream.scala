@@ -86,14 +86,7 @@ object SessionStream {
         .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateState)
     }
 
-    // update-mode emits once per key per microbatch; AvailableNow over one
-    // directory yields the final value per key in the last emission
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(desc("n_events"))
-    drained
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("n_sessions"), col("n_events"))
-      .orderBy(col("user_id"))
+    StreamJoinOps.lastEmission(drained, Seq("user_id"), "n_events",
+      Seq("user_id", "n_sessions", "n_events"))
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.UUID
 import graft.ops.{Caches, Staging}
+import graft.ops.Caches.Tracked
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -68,10 +69,25 @@ object StreamJoinOps {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-      val out = s.table(name).localCheckpoint()
+      val out = s.table(name).checkpointTracked()
       s.catalog.dropTempView(name)
       out
     }
+
+  /** The final emission per key of an update-mode drain: a key emits once
+    * per microbatch, so its last emission is its row with the max of a
+    * monotone counter. Projected to `out`, ordered by the key.
+    */
+  private[graft] def lastEmission(drained: DataFrame, keys: Seq[String], counter: String,
+                                  out: Seq[String]): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(desc(counter))
+    drained
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(out.map(col): _*)
+      .orderBy(keys.map(col): _*)
+  }
 
   private val StatePartitions = 2
 
@@ -265,7 +281,7 @@ object StreamJoinOps {
     * (`maxFilesPerTrigger=1`), so the sink genuinely appends across batches;
     * reading the written files back and aggregating matches the plain batch
     * oracle over the source table. Sink and checkpoint live in a fresh
-    * per-run dir, deleted at the next `Caches.release` (the returned frame
+    * per-run dir, deleted at the next `Caches.releaseAll` (the returned frame
     * reads the sink lazily); the spec inspects batch provenance through the
     * frame's input files (batch count is staging-dependent, so it is
     * spec-checked, not oracled).

@@ -72,14 +72,8 @@ object TwsLastKStream {
         .transformWithState(new LastKProcessor, TimeMode.None(), OutputMode.Update())
     }
 
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(desc("n_purchases"))
-    drained
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("n_purchases"),
-        col("last_cents"), col("second_cents"), col("third_cents"))
-      .orderBy(col("user_id"))
+    StreamJoinOps.lastEmission(drained, Seq("user_id"), "n_purchases",
+      Seq("user_id", "n_purchases", "last_cents", "second_cents", "third_cents"))
   }
 
   val oracleSql: String =

@@ -78,13 +78,8 @@ object TwsMapStateStream {
         .transformWithState(new TypeProfileProcessor, TimeMode.None(), OutputMode.Update())
     }
 
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), col("event_type")).orderBy(desc("n_events"))
-    drained
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type"), col("n_events"), col("total_cents"))
-      .orderBy(col("user_id"), col("event_type"))
+    StreamJoinOps.lastEmission(drained, Seq("user_id", "event_type"), "n_events",
+      Seq("user_id", "event_type", "n_events", "total_cents"))
   }
 
   val oracleSql: String =

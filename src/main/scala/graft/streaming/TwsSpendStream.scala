@@ -74,13 +74,8 @@ object TwsSpendStream {
         .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Update())
     }
 
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(desc("n_events"))
-    drained
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("n_events"), col("total_cents"), col("max_cents"))
-      .orderBy(col("user_id"))
+    StreamJoinOps.lastEmission(drained, Seq("user_id"), "n_events",
+      Seq("user_id", "n_events", "total_cents", "max_cents"))
   }
 
   val oracleSql: String =

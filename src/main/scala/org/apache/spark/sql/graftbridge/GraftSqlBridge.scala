@@ -77,8 +77,8 @@ object GraftSqlBridge {
 
   /** The persisted RDD backing a `localCheckpoint()`ed frame, if any.
     * Checkpoint blocks live OUTSIDE the CacheManager (`df.unpersist()` cannot
-    * reach them), so releasing one requires the RDD handle itself — see
-    * [[graft.ops.Caches.trackCheckpoint]].
+    * reach them), so releasing one requires the RDD handle itself, which
+    * [[graft.ops.Caches.Tracked.checkpointTracked]] enrolls.
     */
   def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {

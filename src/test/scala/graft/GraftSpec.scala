@@ -364,30 +364,54 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("pipeline CSV sink round-trips (S5)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/out"
-    val df = graft.pipeline.Pipeline.pipelineQuery(spark, sf)
-    graft.pipeline.Pipeline.writeCsv(df.limit(10), out)
-    val back = spark.read.option("header", "true").csv(out)
-    assert(back.count() === 10)
-    assert(back.columns.contains("normalized_title"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toFile
+    val out = tmp.toString + "/out"
+    try {
+      val df = graft.pipeline.Pipeline.pipelineQuery(spark, sf)
+      graft.pipeline.Pipeline.writeCsv(df.limit(10), out)
+      val back = spark.read.option("header", "true").csv(out)
+      assert(back.count() === 10)
+      assert(back.columns.contains("normalized_title"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  test("the pipeline's deduped-frame cache holds blocks on a second run after releaseAll (q22)") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val q22 = SparkEntry.queries("q22_pipeline_e2e")
+    q22(spark, sf).collect()
+    Caches.releaseAll()
+    val again = q22(spark, sf)
+    again.collect()
+    try {
+      val caches = again.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      assert(caches.nonEmpty, "the deduped frame must be read through its cache")
+      val stored = spark.sparkContext.getRDDStorageInfo.filter(_.numCachedPartitions > 0).map(_.id).toSet
+      caches.foreach { r =>
+        assert(stored.contains(r.cacheBuilder.cachedColumnBuffers.id),
+          "the second run's cache holds no blocks: a dead CacheManager entry was reused")
+      }
+    } finally Caches.releaseAll()
   }
 
   test("utf-8-sig CSV sink: BOM prepended to every part file, content intact (S5, dag:830)") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_bom").toString + "/out"
-    val df = Seq((1L, "Python разработчик"), (2L, "Маркетолог")).toDF("id", "title")
-    graft.pipeline.Pipeline.writeCsv(df.repartition(2), out, bom = true)
-    val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
-    assert(parts.nonEmpty)
-    parts.foreach { f =>
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      assert(bytes.take(3).toSeq === Seq(0xEF.toByte, 0xBB.toByte, 0xBF.toByte),
-        s"${f.getName} must start with the UTF-8 BOM")
-    }
-    // content after the BOM is the same UTF-8 CSV (Cyrillic intact)
-    val back = spark.read.option("header", "true").csv(out).collect()
-    assert(back.length === 2)
-    assert(back.map(_.getString(1)).toSet === Set("Python разработчик", "Маркетолог"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sink_bom").toFile
+    val out = tmp.toString + "/out"
+    try {
+      val df = Seq((1L, "Python разработчик"), (2L, "Маркетолог")).toDF("id", "title")
+      graft.pipeline.Pipeline.writeCsv(df.repartition(2), out, bom = true)
+      val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.nonEmpty)
+      parts.foreach { f =>
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        assert(bytes.take(3).toSeq === Seq(0xEF.toByte, 0xBB.toByte, 0xBF.toByte),
+          s"${f.getName} must start with the UTF-8 BOM")
+      }
+      // content after the BOM is the same UTF-8 CSV (Cyrillic intact)
+      val back = spark.read.option("header", "true").csv(out).collect()
+      assert(back.length === 2)
+      assert(back.map(_.getString(1)).toSet === Set("Python разработчик", "Маркетолог"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 }
 
@@ -519,22 +543,25 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("custom sink abort leaves the target untouched") {
-    val target = java.nio.file.Files.createTempDirectory("graft_sink_abort").toString + "/out"
-    // a row-level assert_true fails the task mid-write: the job must abort,
-    // not half-commit
-    val failing = Tables.orders(spark, sf)
-      .select(col("o_orderkey"),
-        expr("assert_true(o_orderkey < 10)").as("guard")) // most keys violate -> task failure
-    intercept[Exception] {
-      failing.write.format("graft.sources.GraftCommitSink")
-        .option("path", target)
-        .option("ddl", "o_orderkey BIGINT, guard STRING")
-        .mode("append").save()
-    }
-    val out = new java.io.File(target)
-    val leftover = if (out.exists()) out.listFiles().map(_.getName).toSeq else Nil
-    assert(!leftover.contains("_GRAFT_COMMITTED"), "no commit manifest after abort")
-    assert(!leftover.exists(_.startsWith("part-")), s"no visible data after abort: $leftover")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sink_abort").toFile
+    val target = tmp.toString + "/out"
+    try {
+      // a row-level assert_true fails the task mid-write: the job must abort,
+      // not half-commit
+      val failing = Tables.orders(spark, sf)
+        .select(col("o_orderkey"),
+          expr("assert_true(o_orderkey < 10)").as("guard")) // most keys violate -> task failure
+      intercept[Exception] {
+        failing.write.format("graft.sources.GraftCommitSink")
+          .option("path", target)
+          .option("ddl", "o_orderkey BIGINT, guard STRING")
+          .mode("append").save()
+      }
+      val out = new java.io.File(target)
+      val leftover = if (out.exists()) out.listFiles().map(_.getName).toSeq else Nil
+      assert(!leftover.contains("_GRAFT_COMMITTED"), "no commit manifest after abort")
+      assert(!leftover.exists(_.startsWith("part-")), s"no visible data after abort: $leftover")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   test("sequence packing: packs are contiguous and budget-bounded (q102)") {

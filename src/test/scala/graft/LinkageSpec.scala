@@ -75,6 +75,6 @@ class LinkageSpec extends AnyFunSuite {
     // pairs dominate: most clusters are {A-original, B-reobservation}
     val pairs = g.count(r => r.getLong(1) == 2L && r.getLong(2) == 1L)
     assert(pairs * 2 > g.length, s"expected mostly A+B pairs, got $pairs of ${g.length}")
-    graft.ops.Caches.release()
+    graft.ops.Caches.releaseAll()
   }
 }

@@ -103,7 +103,7 @@ class PlanSpec extends AnyFunSuite {
     // drop the base run's cached token-id frame: its stored plan embeds the
     // broadcast hint and would satisfy (and pollute the printout of) the
     // gated run's lookup
-    graft.ops.Caches.release()
+    graft.ops.Caches.releaseAll()
     // forced-low gate (conf on a session CLONE) + size-based broadcast off:
     // the hint must be ABSENT and the dict join must degrade to a shuffle
     // join — the plan a 100M-term dictionary gets
@@ -118,7 +118,7 @@ class PlanSpec extends AnyFunSuite {
     assert(wordShuffle.findFirstIn(gp).isDefined,
       "expected the shuffle-join fallback on the dict key:\n" + gp.take(1500))
     assert(gatedRows === baseRows)
-    graft.ops.Caches.release()
+    graft.ops.Caches.releaseAll()
   }
 
   test("range-partitioned keyless interval join: bucket exchange per side, no broadcast (q310)") {
@@ -846,11 +846,35 @@ class PlanSpec extends AnyFunSuite {
       "q250_quality_percentiles" -> "percentile ranks over the 4-dp quality domain (<=10001 cells)",
       "q259_vocab_drift" -> "rank over the top-20 rows AFTER TakeOrderedAndProject",
       "q260_dataset_card" -> "token-median crossing over the distinct doc-length histogram (doc-length-domain-sized)")
+    // building a frame runs the operator's eager checkpoints and persists;
+    // after releaseAll nothing a query persisted may survive, in the
+    // context or in the CacheManager (data other suites left behind is
+    // cleared first or excluded by id, and each leak is reported once)
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    Caches.releaseAll()
+    spark.catalog.clearCache()
+    var known = spark.sparkContext.getPersistentRDDs.keySet
+    val leaks = scala.collection.mutable.ArrayBuffer[String]()
     val audits: Map[String, PlanAudit.Audit] =
       SparkEntry.queries.keys.toSeq.sorted.map { name =>
         try name -> PlanAudit.auditQuery(spark, name, sf)
-        finally Caches.release()
+        finally {
+          Caches.releaseAll()
+          val rdds = spark.sparkContext.getPersistentRDDs.keySet -- known
+          if (rdds.nonEmpty) {
+            leaks += s"$name: ${rdds.size} persisted RDD(s)"
+            known ++= rdds
+          }
+          if (!cacheManager.isEmpty) {
+            leaks += s"$name: CacheManager entries"
+            spark.catalog.clearCache()
+          }
+        }
       }.toMap
+    assert(leaks.isEmpty,
+      "\nPersisted data not enrolled in Caches (use persistTracked/checkpointTracked):\n" +
+        leaks.mkString("\n"))
     val offending = audits.view.mapValues(_.unpartWindows).toMap
     val unexplained = offending.filter { case (n, offs) =>
       offs.nonEmpty && !bounded.contains(n)

@@ -37,7 +37,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and per-run scratch placement (tmpfs or not) is decided in `Staging`
   * alone. One stored-artifact lifecycle: only `Staging` names a build-once
   * dir, and the lock and the source snapshot are written once. No operator
-  * sets conf on the caller's session.
+  * sets conf on the caller's session. One cache lifecycle: every persist and
+  * checkpoint goes through `Caches`, and nothing sweeps the context's
+  * persisted RDDs.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -239,6 +241,17 @@ class SourceAuditSpec extends AnyFunSuite {
         s"\nExpected the $what exactly once, in Staging, found ${sites.size}:\n" +
           sites.mkString("\n"))
     }
+  }
+
+  test("one cache lifecycle: every persist and checkpoint enrolls in Caches, and nothing sweeps") {
+    // Bench's untimed warm-up persists and checkpoints a throwaway frame
+    val outside = allMainSources.filterNot(p => Set("Caches.scala", "Bench.scala")(p.getFileName.toString))
+    val untracked = matches(outside, raw"\.localCheckpoint\(\)|\.persist\(|\.cache\(\)".r)
+    assert(untracked.isEmpty,
+      "\nA persist or checkpoint outside Caches (use persistTracked or checkpointTracked):\n" +
+        untracked.mkString("\n"))
+    val sweeps = matches(allMainSources, raw"getPersistentRDDs".r)
+    assert(sweeps.isEmpty, "\nA global persisted-RDD sweep:\n" + sweeps.mkString("\n"))
   }
 
   test("one streaming run scaffold and one per-run scratch placement") {
