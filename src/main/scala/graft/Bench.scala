@@ -44,12 +44,13 @@ object Bench {
       // graph query and the window family hit these paths first otherwise —
       // measured ~5 s of one-time setup absorbed by whichever query is first)
       locally {
+        import graft.ops.Caches.Tracked
         import org.apache.spark.sql.expressions.Window
-        val t = spark.range(10000).toDF("x").localCheckpoint()
+        val t = spark.range(10000).toDF("x").checkpointTracked()
         t.withColumn("r", row_number().over(Window.partitionBy(col("x") % 10).orderBy(col("x"))))
           .select(explode(array(col("x"), col("r"))).as("v"))
           .groupBy(col("v") % 7).count().count()
-        t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
+        t.persistTracked().count()
         t.unpersist()
       }
       // broadcast nested-loop join + array-collecting aggregate machinery

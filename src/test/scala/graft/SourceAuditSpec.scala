@@ -244,8 +244,7 @@ class SourceAuditSpec extends AnyFunSuite {
   }
 
   test("one cache lifecycle: every persist and checkpoint enrolls in Caches, and nothing sweeps") {
-    // Bench's untimed warm-up persists and checkpoints a throwaway frame
-    val outside = allMainSources.filterNot(p => Set("Caches.scala", "Bench.scala")(p.getFileName.toString))
+    val outside = allMainSources.filterNot(_.getFileName.toString == "Caches.scala")
     val untracked = matches(outside, raw"\.localCheckpoint\(\)|\.persist\(|\.cache\(\)".r)
     assert(untracked.isEmpty,
       "\nA persist or checkpoint outside Caches (use persistTracked or checkpointTracked):\n" +
