@@ -67,6 +67,10 @@ object PlanDigest {
       .replace(sfDir, "<sf>")
       .replaceAll("#\\d+", "#")
       .replaceAll("plan_id=\\d+", "plan_id=x")
+      // a checkpoint leaf prints its backing RDD's id and call site
+      // (`MapPartitionsRDD[130] at localCheckpoint at Caches.scala:43`): the
+      // id counts every RDD the JVM made before, the line moves with edits
+      .replaceAll("RDD\\[\\d+\\] at (\\w+) at ([\\w.$]+):\\d+", "RDD[<id>] at $1 at $2:<line>")
       .replaceAll("file:[^\\s\\],)\\]]*", "<path>")
       .replaceAll("Location: \\S+ \\[[^\\]]*\\]", "Location: <loc>")
       .replaceAll("WHEN \\(__ps_pid# = (\\d+)\\) THEN -?\\d+", "WHEN (__ps_pid# = $1) THEN <off>")
@@ -173,18 +177,26 @@ object PlanDigest {
 
 /** Regenerator main: rewrites the pinned snapshots from the CURRENT plans.
   * Run after an intentional plan change; review the git diff.
+  * `tools/run.sh graft.PlanDigestGen [sf] [out] [all]` writes `<query>.txt`
+  * under `out` (default the snapshot dir); `all` plans every registry query,
+  * so two commits' plans diff dir to dir. A query that throws gets its
+  * exception in place of a plan.
   */
 object PlanDigestGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val dir = new java.io.File(args.lift(1).getOrElse(PlanDigest.snapshotDir))
+    val names = if (args.lift(2).contains("all")) SparkEntry.queries.keys.toSeq.sorted
+                else PlanDigest.pinned
     val spark = PlanDigest.session()
-    val dir = new java.io.File(PlanDigest.snapshotDir)
     dir.mkdirs()
-    PlanDigest.pinned.foreach { name =>
-      val plan = PlanDigest.planFor(spark, name, sfDir)
+    names.foreach { name =>
+      val plan =
+        try PlanDigest.planFor(spark, name, sfDir)
+        catch { case e: Exception => s"<failed> ${e.getClass.getName}: ${e.getMessage}" }
+      graft.ops.Caches.releaseAll()
       val f = new java.io.File(dir, s"$name.txt")
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try w.write(plan) finally w.close()
+      java.nio.file.Files.writeString(f.toPath, plan)
       println(s"[plan-digest] wrote ${f.getPath} (${plan.length} chars)")
     }
     spark.stop()

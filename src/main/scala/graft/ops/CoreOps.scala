@@ -332,7 +332,7 @@ object CoreOps {
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
     Tables.lineitem(spark, dir)
-      .join(o.hint("merge"), col("l_orderkey") === col("o_orderkey"))
+      .join(o, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_items"),
         sum(dec4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).cast("double").as("revenue"))
@@ -348,7 +348,7 @@ object CoreOps {
     * gated on the application side exceeding
     * `…applicationSideScanSizeThreshold` (10 GB default — exactly the
     * scale this engine targets); sf0.1 is below it, so the threshold is
-    * dropped to 0 on a session of the query's own (`newSession`), never on
+    * dropped to 0 on a session of the query's own, never on
     * the caller's, and the plan is materialized (persist + count) there.
     * Semantics are unchanged (bloom false positives re-verify at the join)
     * ⇒ plain SQL oracle.
@@ -356,12 +356,12 @@ object CoreOps {
   def runtimeFilterJoin(spark: SparkSession, dir: String): DataFrame = {
     // Injection requires the join to look like a SHUFFLE join to the
     // optimizer: `isProbablyShuffleJoin` rejects any join whose either side
-    // `canBroadcastBySize`, even under an explicit merge hint — so the
-    // broadcast threshold goes to -1 too (at the target scale both sides
-    // exceed it naturally and only the scan-size threshold matters).
-    val s = spark.newSession()
+    // `canBroadcastBySize`, even under an explicit merge hint — so it runs
+    // on a scale-emulation session (at the target scale both sides exceed
+    // the broadcast threshold naturally and only the scan-size threshold
+    // matters), where sort-merge is the join Catalyst picks.
+    val s = Joins.scaleEmulationSession(spark)
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val df = urgentLineRevenue(s, dir).persistTracked()
     df.count() // compile + run under the forced thresholds
     df
@@ -1166,7 +1166,7 @@ object CoreOps {
       add_months(to_date(lit("1996-01-01")), (col("id") * 3 + 3).cast("int"))
         .cast("timestamp").as("hi"))
     val skip = col("mx") < col("lo") || col("mn") >= col("hi")
-    val audit = blocks.crossJoin(broadcast(quarters))
+    val audit = blocks.crossJoin(quarters)
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("n_blocks"),
         sum(when(skip, 1L).otherwise(0L)).as("n_skippable"),
@@ -1232,7 +1232,7 @@ object CoreOps {
     pairs
       .join(sup.select(col("part").as("part_a"), col("n").as("orders_a")), "part_a")
       .join(sup.select(col("part").as("part_b"), col("n").as("orders_b")), "part_b")
-      .crossJoin(broadcast(nOrders))
+      .crossJoin(nOrders)
       .select(col("part_a"), col("part_b"), col("pair_orders"),
         col("orders_a"), col("orders_b"),
         OracleMath.stableRound(
@@ -1820,8 +1820,7 @@ object CoreOps {
     * the join itself moves nothing.
     */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession() // shares the persistent catalog + context
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = Joins.scaleEmulationSession(spark)
     def bucketed(table: String, src: => DataFrame, key: String, value: String): String = {
       val name = Staging.storedName(s"bkt_$table", dir)
       def rows = src.select(col(key), col(value))
@@ -2123,7 +2122,7 @@ object CoreOps {
     val targetDf = spark.createDataset(targets)(org.apache.spark.sql.Encoders.scalaLong).toDF("t")
     val bounds = ranked.df
       .filter(col("cum_rn").isin(targets.distinct: _*))
-      .join(broadcast(targetDf), col("cum_rn") === col("t"))
+      .join(targetDf, col("cum_rn") === col("t"))
       .select(col("v").as("b"))
     val d = lit(DecileDriftSplitDate).cast("timestamp")
     val assigned = Tables.orders(spark, dir)

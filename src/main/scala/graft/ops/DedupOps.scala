@@ -191,59 +191,14 @@ object DedupOps {
       case None        => nearDupJaccardGeneral(spark, docs, threshold)
     }
 
-  /** Session conf key (bytes) gating the verify-join broadcast of the
-    * token-id table; overridable so specs can force the degraded plan.
-    */
-  val VerifyBroadcastConf = "graft.dedup.maxVerifyBroadcastBytes"
-
-  /** Default gate: well under Spark's 8 GB broadcast hard limit and executor
-    * memory, but far above the dictionary-sized sides this corpus produces.
-    */
-  val DefaultVerifyBroadcastBytes: Long = 256L << 20
-
-  /** Attach a per-doc array side to the candidate verify join. Small side →
-    * `broadcast` (no shuffle of the candidate multiset); large side → a
-    * shuffle hash join on doc_id whose volume scales with the CANDIDATE
-    * count plus one pass of the id table — partitioned work, never the 8 GB
-    * broadcast wall. The estimate is computed from the measured row/token
-    * counts of the id table (one cheap aggregate over the persisted frame),
-    * not guessed: ~4 B per int token + fixed per-row overhead.
-    */
-  private[ops] def gatedVerifySide(side: DataFrame, estBytes: Long): DataFrame = {
-    val gate = side.sparkSession.conf
-      .getOption(VerifyBroadcastConf).map(_.toLong).getOrElse(DefaultVerifyBroadcastBytes)
-    if (estBytes <= gate) broadcast(side) else side.hint("shuffle_hash")
-  }
-
-  /** Session conf key (rows) gating the dictionary-side `broadcast()` hint;
-    * overridable so specs can force the ungated fallback plan.
-    */
-  val DictBroadcastRowsConf = "graft.dedup.maxDictBroadcastRows"
-
-  /** Default gate: ~100 M terms ≈ 1–2 GB encoded — the documented ceiling
-    * where a forced dictionary broadcast stops being a win (still inside
-    * Spark's 8 GB hard limit, but already unfriendly to executor memory).
-    */
-  val DefaultDictBroadcastRows: Long = 100000000L
-
-  /** Dictionary-encode join side gate: below the MEASURED row threshold the
-    * vocabulary gets the explicit `broadcast()` hint (dictionaries are tiny
-    * relative to the corpus — don't make AQE re-derive that); past it the
-    * side goes UNHINTED so AQE's size-based choice decides — a forced hint
-    * there would march a multi-GB dictionary into every executor. The row
-    * count comes free from the rank's prefix-sum totals
-    * ([[PrefixSum.rarityRanksCounted]]), never from an extra job.
-    */
-  private[graft] def gatedDictSide(dict: DataFrame, rows: Long): DataFrame = {
-    val gate = dict.sparkSession.conf
-      .getOption(DictBroadcastRowsConf).map(_.toLong).getOrElse(DefaultDictBroadcastRows)
-    if (rows <= gate) broadcast(dict) else dict
-  }
+  /** Estimated bytes of one dictionary row (a short token and its int rank,
+    * plus [[estIdBytes]]' per-row overhead), to size a dictionary side. */
+  private[graft] val DictRowBytes = 64L
 
   /** Estimated in-memory bytes of a `(doc_id, ws, sz)` token-id table:
     * 4 B per token plus per-row object overhead.
     */
-  private def estIdBytes(ids: DataFrame): Long = {
+  private[graft] def estIdBytes(ids: DataFrame): Long = {
     val r = ids.agg(count(lit(1)), coalesce(sum(col("sz")), lit(0L))).head()
     r.getLong(1) * 4L + r.getLong(0) * 48L
   }
@@ -320,7 +275,7 @@ object DedupOps {
 
   /** Exact verify of candidate pairs `(a, b)` against the token-id table
     * `ids` = `(doc_id, ws, sz)`: `(a, b, jaccard)` with Jaccard ≥ `threshold`,
-    * once per pair, sorted. Verifies FIRST on the [[gatedVerifySide]]-attached
+    * once per pair, sorted. Verifies FIRST on the [[Joins.broadcastIfFits]]-attached
     * arrays and dedupes only the small passing set: a pair found k times
     * costs k kernel calls but the candidate multiset is never shuffled.
     */
@@ -329,7 +284,7 @@ object DedupOps {
     import graft.functions.VectorFunctions.sortedIntersectSize
     val est = estIdBytes(ids)
     def side(id: String) =
-      gatedVerifySide(ids.select(col("doc_id").as(id), col("ws").as(s"ws_$id"), col("sz").as(s"sz_$id")), est)
+      Joins.broadcastIfFits(ids.select(col("doc_id").as(id), col("ws").as(s"ws_$id"), col("sz").as(s"sz_$id")), est)
     cands.join(side(a), a).join(side(b), b)
       .withColumn("inter", sortedIntersectSize(col(s"ws_$a"), col(s"ws_$b")))
       .withColumn("j", col("inter").cast("double") / (col(s"sz_$a") + col(s"sz_$b") - col("inter")))
@@ -447,9 +402,9 @@ object DedupOps {
     // on the cached ids makes the choice deterministic at every SF.
     val est = estIdBytes(ids)
     cands
-      .join(gatedVerifySide(
+      .join(Joins.broadcastIfFits(
         ids.select(col("doc_id").as("doc_a"), col("ws").as("ws_a"), col("sz").as("sza")), est), "doc_a")
-      .join(gatedVerifySide(
+      .join(Joins.broadcastIfFits(
         ids.select(col("doc_id").as("doc_b"), col("ws").as("ws_b"), col("sz").as("szb")), est), "doc_b")
       .withColumn("inter", sortedIntersectSize(col("ws_a"), col("ws_b")).cast("long"))
       .filter(col("inter") * tDen >= col("sza") * tNum)
@@ -520,7 +475,7 @@ object DedupOps {
     val (ranks, vocabRows) = PrefixSum.rarityRanksCounted(
       docs.select(explode(col("ws0")).as("word")), "word")
     docs.select(col("doc_id"), explode(col("ws0")).as("word"))
-      .join(gatedDictSide(ranks, vocabRows), "word")
+      .join(Joins.broadcastIfFits(ranks, vocabRows * DictRowBytes), "word")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("tok"))).as("ws"), count(lit(1)).as("sz"))
       .persistTracked()
@@ -668,7 +623,7 @@ object DedupOps {
     spark.range(nBands).toDF("band")
       .join(perBandCand, Seq("band"), "left")
       .join(newPerBand, Seq("band"), "left")
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("band"),
         coalesce(col("n_cand"), lit(0L)).as("n_cand"),
         coalesce(col("n_new"), lit(0L)).as("n_new"),
@@ -780,17 +735,20 @@ object DedupOps {
     * sharing a bucket and passing the popcount Jaccard in the join condition
     * become group pairs, deduped before expansion through `groups`. Band
     * rows carry no id arrays (measured: arrays through the ~17M-candidate
-    * join cost as much as the whole query).
+    * join cost as much as the whole query). `groups` is read from files, so
+    * its member-id lists are sized by their scan estimate
+    * ([[Joins.scanEstimatedBytes]]), which grows with the corpus.
     */
   private[graft] def lshMaskPairs(bandMasks: DataFrame, groups: DataFrame,
                                   threshold: Double): DataFrame = {
+    val groupBytes = Joins.scanEstimatedBytes(groups)
     val groupPairs = bandMasks.as("a").join(bandMasks.as("b"),
         col("a.band") === col("b.band") && col("a.mask") < col("b.mask")
           && Banding.maskJaccard(col("a.mask"), col("b.mask")) >= lit(threshold))
       .select(col("a.mask").as("mask_a"), col("b.mask").as("mask_b"))
       .dropDuplicates("mask_a", "mask_b")
-      .join(broadcast(groups.select(col("mask").as("mask_a"), col("ids").as("ids_a"))), "mask_a")
-      .join(broadcast(groups.select(col("mask").as("mask_b"), col("ids").as("ids_b"))), "mask_b")
+      .join(Joins.broadcastIfFits(groups.select(col("mask").as("mask_a"), col("ids").as("ids_a")), groupBytes), "mask_a")
+      .join(Joins.broadcastIfFits(groups.select(col("mask").as("mask_b"), col("ids").as("ids_b")), groupBytes), "mask_b")
       .select(col("ids_a"), col("ids_b"), Banding.maskJaccard(col("mask_a"), col("mask_b")).as("j"))
     maskGroupDocPairs(groupPairs, groups)
   }
@@ -1192,7 +1150,7 @@ object DedupOps {
     val grams = names.select(col("name"), col("len"),
       explode(expr(s"array_distinct(transform(sequence(1, CAST(length(name) AS INT) - ${q - 1}), i -> substr(name, i, $q)))")).as("g"))
     val (ranks, vocabRows) = PrefixSum.rarityRanksCounted(grams.select(col("g")), "g")
-    val pref = grams.join(gatedDictSide(ranks, vocabRows), "g")
+    val pref = grams.join(Joins.broadcastIfFits(ranks, vocabRows * DictRowBytes), "g")
       .groupBy(col("name"), col("len"))
       .agg(sort_array(collect_list(col("tok"))).as("toks"))
       .select(col("name"), col("len"), explode(slice(col("toks"), 1, prefLen)).as("tok"))

@@ -909,7 +909,7 @@ object EventOps {
       .filter(col("next").isNull ||
         datediff(col("next"), col("day")) > GrowthWindowDays)
       .select((col("day") + expr(s"INTERVAL ${GrowthWindowDays + 1} DAYS")).as("day"))
-      .crossJoin(broadcast(horizon))
+      .crossJoin(horizon)
       .filter(col("day") <= col("h"))
       .groupBy(col("day")).agg(count(lit(1)).as("n_churned"))
     daily.join(churn, Seq("day"), "left")
@@ -1625,12 +1625,12 @@ object EventOps {
     val hT = (c: Column) => micros(-(c.cast("double") / col("n").cast("double")) *
       log(c.cast("double") / col("n").cast("double")))
     val mi = cells.join(broadcast(mx), Seq("x")).join(broadcast(my), Seq("y"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .agg(sum(miT).as("mi_u"))
-    val hx = mx.crossJoin(broadcast(tot)).agg(sum(hT(col("c_x"))).as("hx_u"))
-    val hy = my.crossJoin(broadcast(tot)).agg(sum(hT(col("c_y"))).as("hy_u"))
+    val hx = mx.crossJoin(tot).agg(sum(hT(col("c_x"))).as("hx_u"))
+    val hy = my.crossJoin(tot).agg(sum(hT(col("c_y"))).as("hy_u"))
     val M = lit(1000000.0)
-    tot.crossJoin(broadcast(mi)).crossJoin(broadcast(hx)).crossJoin(broadcast(hy))
+    tot.crossJoin(mi).crossJoin(hx).crossJoin(hy)
       .select(col("n"), col("n_cells"),
         OracleMath.stableRound(col("hx_u") / M, 6).as("h_type"),
         OracleMath.stableRound(col("hy_u") / M, 6).as("h_hour"),
@@ -2124,7 +2124,7 @@ object EventOps {
         .checkpointTracked()
     }
     val total = ranks.agg(sum(col("rank")).as("total_rank"))
-    ranks.crossJoin(broadcast(total))
+    ranks.crossJoin(total)
       .select(col("node").as("user_id"), col("deg").cast("long").as("degree"),
         col("rank").as("rank_scaled"),
         OracleMath.stableRound(col("rank") * lit(100.0) / col("total_rank"), 6)
@@ -2310,7 +2310,7 @@ object EventOps {
     val dim = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val maxDay = ev.agg(max(col("day")).as("max_day"))
-    val tagged = ev.crossJoin(broadcast(maxDay))
+    val tagged = ev.crossJoin(maxDay)
     def viewAgg(df: DataFrame): DataFrame = df
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
@@ -2490,7 +2490,7 @@ object EventOps {
     val staged = Staging.ensure(spark, "schema_evo", dir, Seq("events"),
       Seq("vintage_old", "vintage_new")) { base =>
       val maxDay = ev.agg(max(col("day")).as("max_day"))
-      val tagged = ev.crossJoin(broadcast(maxDay))
+      val tagged = ev.crossJoin(maxDay)
       tagged.filter(col("day") < col("max_day"))
         .select(col("event_id"), col("user_id"), col("value"))
         .coalesce(1).write.mode("overwrite").parquet(base + "/vintage_old")
@@ -2579,15 +2579,15 @@ object EventOps {
     val nRows = daily.agg(count(lit(1)).as("n_rows"))
     def medianOf(df: DataFrame, c: String): DataFrame = df
       .withColumn("rn", row_number().over(Window.orderBy(col(c))).cast("long"))
-      .crossJoin(broadcast(nRows))
+      .crossJoin(nRows)
       .filter(col("rn") === expr("(n_rows + 1) DIV 2") ||
         col("rn") === expr("(n_rows + 2) DIV 2"))
       .agg(avg(col(c)).as("m"))
     val med = medianOf(daily, "n").select(col("m").as("med"))
-    val dev = daily.crossJoin(broadcast(med))
+    val dev = daily.crossJoin(med)
       .withColumn("dev", abs(col("n") - col("med")))
     val mad = medianOf(dev.select(col("dev")), "dev").select(col("m").as("mad"))
-    dev.crossJoin(broadcast(mad))
+    dev.crossJoin(mad)
       .select(col("day"), col("n"), col("med"), col("mad"), col("dev"),
         (col("dev") > lit(4.4478) * col("mad")).as("flagged"))
       .orderBy(col("day"))

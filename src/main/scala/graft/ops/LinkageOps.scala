@@ -135,7 +135,7 @@ object LinkageOps {
     val score = Fields.map { f =>
       when(col(s"f_$f"), col(s"wa_$f")).otherwise(col(s"wd_$f"))
     }.reduce(_ + _).cast(d186)
-    cand.crossJoin(broadcast(weightsRow(cand)))
+    cand.crossJoin(weightsRow(cand))
       .select(col("uid_a"), col("uid_b"), col("is_true"), score.as("score"))
   }
 
@@ -204,7 +204,7 @@ object LinkageOps {
     */
   def linkageWeights(spark: SparkSession, dir: String): DataFrame = {
     val cand = candidates(spark, dir).persistTracked()
-    val c = weightCounts(cand).crossJoin(broadcast(weightsRow(cand)))
+    val c = weightCounts(cand).crossJoin(weightsRow(cand))
     val rows = Fields.map { f =>
       struct(lit(f).as("field"),
         col("nm").cast("long").as("n_match"),
@@ -390,7 +390,7 @@ object LinkageOps {
     val decision = when(col("score") >= lit(MatchThreshold).cast(d186), lit("match"))
       .when(col("score") <= lit(NonMatchThreshold).cast(d186), lit("non_match"))
       .otherwise(lit("possible"))
-    cand.crossJoin(broadcast(gradedWeightsRow(cand)))
+    cand.crossJoin(gradedWeightsRow(cand))
       .select(col("is_true"), col("lvl_addr"), score.as("score"))
       .groupBy(decision.as("decision"), col("is_true"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -465,7 +465,7 @@ object LinkageOps {
     val decision = when(col("score") >= lit(MatchThreshold).cast(d186), lit("match"))
       .when(col("score") <= lit(NonMatchThreshold).cast(d186), lit("non_match"))
       .otherwise(lit("possible"))
-    dc.crossJoin(broadcast(wts))
+    dc.crossJoin(wts)
       .select(col("is_true"), score.as("score"))
       .groupBy(decision.as("decision"), col("is_true"))
       .agg(count(lit(1)).as("n_pairs"))

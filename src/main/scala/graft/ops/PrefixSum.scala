@@ -120,9 +120,9 @@ object PrefixSum {
 
   /** [[rarityRanks]] plus the dictionary's MEASURED row count — free, because
     * the rank's two-pass prefix sum already collects per-partition totals
-    * whose grand total IS the vocabulary size. Consumers use it to size-gate
-    * their dictionary `broadcast()` hint ([[DedupOps.gatedDictSide]]) instead
-    * of hinting unconditionally.
+    * whose grand total IS the vocabulary size. Consumers use it to size
+    * their dictionary side for [[Joins.broadcastIfFits]] instead of hinting
+    * unconditionally.
     */
   def rarityRanksCounted(tokens: DataFrame, tokenCol: String): (DataFrame, Long) = {
     val freq = tokens.groupBy(col(tokenCol)).agg(count(lit(1)).as("df"))

@@ -93,7 +93,7 @@ object RetrievalOps {
 
     val scored = postings
       .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       .select(col("doc_id"), col("term"), score.as("score"))
 
     val perTerm = Bm25Terms.map { t =>
@@ -522,7 +522,7 @@ object RetrievalOps {
 
     cands.join(hits, Seq("nprobe"), "left")
       .na.fill(0L, Seq("n_hits"))
-      .crossJoin(broadcast(nq))
+      .crossJoin(nq)
       .select(col("nprobe"), col("nq").as("n_queries"),
         OracleMath.stableRound(
           col("n_cand").cast("double") / col("nq").cast("double"), 4).as("mean_candidates"),
@@ -604,7 +604,7 @@ object RetrievalOps {
 
     errs.join(hits, Seq("bits"), "left")
       .na.fill(0L, Seq("n_hits"))
-      .crossJoin(broadcast(nq))
+      .crossJoin(nq)
       .select(col("bits"), col("nq").as("n_queries"),
         OracleMath.stableRound(
           col("serrm").cast("double") / col("n_vecs").cast("double") / lit(1.0e8), 8)

@@ -53,7 +53,7 @@ object SamplingOps {
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tf").desc, col("df").asc, col("word").asc)
     tf.join(broadcast(dfreq), "word")
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("word").as("top_term"), col("tf"), col("df"),
@@ -342,14 +342,14 @@ object SamplingOps {
     val docs = Tables.documents(spark, dir)
     val sizes = docs.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val tot = docs.agg(count(lit(1)).as("total"))
-    val alloc0 = sizes.crossJoin(broadcast(tot))
+    val alloc0 = sizes.crossJoin(tot)
       .withColumn("base", expr(s"($budget * n) DIV total"))
       .withColumn("rem", expr(s"$budget * n - (($budget * n) DIV total) * total"))
     val leftover = alloc0.agg((lit(budget.toLong) - sum(col("base"))).as("leftover"))
     val alloc = alloc0
       // groups-sized table: the global (unpartitioned) window is fine HERE
       .withColumn("rk", row_number().over(Window.orderBy(col("rem").desc, col("source"))))
-      .crossJoin(broadcast(leftover))
+      .crossJoin(leftover)
       .select(col("source"), col("n").as("n_source"),
         (col("base") + when(col("rk") <= col("leftover"), 1L).otherwise(0L)).as("k_alloc"))
     val h = conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10).cast("long")
@@ -781,7 +781,7 @@ object SamplingOps {
         floor(sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")) + lit(0.5))
           .cast("long"))
     val totals = stats.agg(sum(col("wq")).as("w_tot"), sum(col("n")).as("n_tot"))
-    val alloc0 = stats.crossJoin(broadcast(totals))
+    val alloc0 = stats.crossJoin(totals)
       .withColumn("base", expr(s"($b * wq) DIV w_tot"))
       .withColumn("rem", expr(s"$b * wq - (($b * wq) DIV w_tot) * w_tot"))
       .withColumn("prop", expr(s"($b * n) DIV n_tot"))
@@ -789,7 +789,7 @@ object SamplingOps {
     alloc0
       // groups-sized table: the global (unpartitioned) window is fine HERE
       .withColumn("rk", row_number().over(Window.orderBy(col("rem").desc, col("source"))))
-      .crossJoin(broadcast(leftover))
+      .crossJoin(leftover)
       .select(col("source"), col("n"),
         OracleMath.stableRound(
           sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
@@ -864,7 +864,7 @@ object SamplingOps {
     cells
       .join(broadcast(langTot), Seq("lang"))
       .join(broadcast(foldTot), Seq("fold"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .groupBy(col("fold"))
       .agg(max(col("n_fold")).as("n_docs"),
         count(lit(1)).as("n_langs"),

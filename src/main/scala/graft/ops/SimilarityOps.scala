@@ -196,16 +196,16 @@ object SimilarityOps {
       .dropDuplicates("id_a", "id_b")
     // exact verify — identical math to [[embeddingNearDup]], so verified
     // pairs are a (recall-bounded) subset of the exact query's output.
-    // The vector sides are size-GATED (same machinery as the token near-dup
-    // verify join, [[DedupOps.gatedVerifySide]]): small table → broadcast
+    // The vector sides go through the operator broadcast gate
+    // ([[Joins.broadcastIfFits]]): small table → broadcast
     // (no shuffle of the candidate multiset); past the byte gate → shuffle
     // hash join on vec_id, whose volume scales with the candidate count —
     // never the 8 GB broadcast wall at 100× vector counts.
     val estBytes = knownRowCount.getOrElse(e.count()) * VecRowBytes
     val va = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
     val vb = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
-    cands.join(DedupOps.gatedVerifySide(va, estBytes), "id_a")
-      .join(DedupOps.gatedVerifySide(vb, estBytes), "id_b")
+    cands.join(Joins.broadcastIfFits(va, estBytes), "id_a")
+      .join(Joins.broadcastIfFits(vb, estBytes), "id_b")
       .withColumn("sim", dotp(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
       .filter(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), OracleMath.stableRound(col("sim"), 6).as("sim"))
@@ -540,7 +540,7 @@ object SimilarityOps {
       .orderBy(desc("csim"), col("c_label")).limit(nprobe)
       .select(col("c_label").as("probe_label"))
     e.join(assignTable(spark, dir).select(col("vec_id"), col("assigned")), "vec_id")
-      .join(broadcast(probed), col("assigned") === col("probe_label"), "left_semi")
+      .join(probed, col("assigned") === col("probe_label"), "left_semi")
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("label"),
@@ -1178,7 +1178,7 @@ object SimilarityOps {
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("id_b")).as("n_removed"))
     val aff = x.select(col("thr"), explode(array(col("id_a"), col("id_b"))).as("id"))
       .groupBy(col("thr")).agg(countDistinct(col("id")).as("n_affected"))
-    st.join(aff, Seq("thr")).crossJoin(broadcast(total))
+    st.join(aff, Seq("thr")).crossJoin(total)
       .select(col("thr"), col("n_pairs"), col("n_affected"), col("n_removed"),
         col("n_vectors"),
         OracleMath.stableRound(
@@ -1255,7 +1255,7 @@ object SimilarityOps {
         OracleMath.tdiv(col("sx"), col("n")).as("m")))).as("p"))
       .select(transform(col("p"), s => s.getField("m")).as("means"))
     // centered components: one 1-row broadcast, then purely row-local
-    val centered = rows.crossJoin(broadcast(meansArr))
+    val centered = rows.crossJoin(meansArr)
       .select(zip_with(col("xq"), col("means"), (a, b) => a - b).as("c"))
     // scatter matrix S = Σ c·cᵀ: two chained generators streaming into the
     // hash aggregate — but S is symmetric, so only the upper triangle's
@@ -1271,7 +1271,7 @@ object SimilarityOps {
       sUpper.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("s")))
     val smax = sMat.agg(max(abs(col("s"))).as("smax"))
-    val sn = sMat.crossJoin(broadcast(smax))
+    val sn = sMat.crossJoin(smax)
       .select(col("i"), col("j"),
         OracleMath.tdiv(col("s"),
           greatest(OracleMath.tdiv(col("smax"), lit(PcaScale)), lit(1L))).as("sn"))
@@ -1296,7 +1296,7 @@ object SimilarityOps {
         .groupBy(col("i")).agg(sum(col("sn") * col("v")).as("w"))
         .checkpointTracked()
       val wmax = w.agg(max(abs(col("w"))).as("wmax"))
-      v = w.crossJoin(broadcast(wmax))
+      v = w.crossJoin(wmax)
         .select(col("i").as("d"),
           OracleMath.tdiv(col("w"),
             greatest(OracleMath.tdiv(col("wmax"), lit(PcaScale)), lit(1L))).as("v"))
@@ -1309,7 +1309,7 @@ object SimilarityOps {
       .agg(sum(col("v").cast(d38) * col("t1").cast(d38)).as("num"),
         sum(col("v") * col("v")).as("den"))
     val trace = sn.filter(col("i") === col("j")).agg(sum(col("sn")).as("tr"))
-    v.crossJoin(broadcast(metrics)).crossJoin(broadcast(trace))
+    v.crossJoin(metrics).crossJoin(trace)
       .select(col("d").cast("long").as("dim"), col("v").as("eig_scaled"),
         OracleMath.stableRound(col("num").cast("double") / col("den").cast("double")
           / col("tr").cast("double"), 6).as("top1_share"))
@@ -1809,8 +1809,8 @@ object SimilarityOps {
     val estD = d.count() * VecRowBytes
     val vc = c.select(col("vec_id").as("id_c"), col("embedding").as("emb_c"), col("nrm").as("nrm_c"))
     val vd = d.select(col("vec_id").as("id_d"), col("embedding").as("emb_d"), col("nrm").as("nrm_d"))
-    cands.join(DedupOps.gatedVerifySide(vc, estC), "id_c")
-      .join(DedupOps.gatedVerifySide(vd, estD), "id_d")
+    cands.join(Joins.broadcastIfFits(vc, estC), "id_c")
+      .join(Joins.broadcastIfFits(vd, estD), "id_d")
       .withColumn("sim", dotp(col("emb_c"), col("emb_d")) / (col("nrm_c") * col("nrm_d")))
       .filter(col("sim") >= threshold)
       .select(col("id_c"), col("id_d"), OracleMath.stableRound(col("sim"), 6).as("sim"))
@@ -1962,8 +1962,7 @@ object SimilarityOps {
     * to ONE oracle.
     */
   def indexProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession() // shares the persistent catalog + context
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = Joins.scaleEmulationSession(spark)
     val (tIdx, _, _) = ensureBandIndex(s, dir, "idx", None)
     probeIndex(s, dir, tIdx)
   }
@@ -2039,8 +2038,7 @@ object SimilarityOps {
     * the next run merges into it.
     */
   def indexMergeProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = Joins.scaleEmulationSession(spark)
     val (tIdx, root, _) =
       ensureBandIndex(s, dir, "idxm", Some(col("vec_id") % 2 === 0))
     mergeBatchOnce(s, dir, tIdx, root, "oddhalf", col("vec_id") % 2 === 1)
@@ -2113,8 +2111,7 @@ object SimilarityOps {
     * ingest once, append daily, compact on a schedule, probe always cheap.
     */
   def indexCompactProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = Joins.scaleEmulationSession(spark)
     val (tIdx, root, _) =
       ensureBandIndex(s, dir, "idxk", Some(col("vec_id") % 4 === 0))
     Seq(1, 2, 3).foreach { r =>
@@ -2371,8 +2368,7 @@ object SimilarityOps {
     * misrouted by the pointer machinery fails the pair-set hash.
     */
   def indexManifestProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = Joins.scaleEmulationSession(spark)
     val (tIdx, root, _) =
       ensureBandIndex(s, dir, "mfx", Some(col("vec_id") % 2 === 0))
     mergeBatchOnce(s, dir, tIdx, root, "oddhalf", col("vec_id") % 2 === 1)
@@ -2412,8 +2408,7 @@ object SimilarityOps {
     * between Spark and DuckDB lives below the rounding scale.
     */
   def indexKnnDelta(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = Joins.scaleEmulationSession(spark)
     val (tIdx, _, _) = ensureBandIndex(s, dir, "knn", None)
     val cBands = s.table(tIdx).select(col("vec_id").as("id_c"),
       col("bk"), col("bv"))
@@ -2467,8 +2462,7 @@ object SimilarityOps {
     */
   def nightlyDedupPipeline(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val s = spark.newSession() // shares the persistent catalog + context
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = Joins.scaleEmulationSession(spark)
     val (tIdx, _, _) = ensureBandIndex(s, dir, "idx", None)
     val corpusDelta = probeIndex(s, dir, tIdx)
       .select(col("id_c").as("doc_a"), col("id_d").as("doc_b"))
@@ -2541,7 +2535,7 @@ object SimilarityOps {
         max(when(col("is_true"), col("hd"))).cast("long").as("max_true_h"))
     val nv = e.agg(count(lit(1)).as("n_vectors"))
     val nt = truth.agg(count(lit(1)).as("n_true"))
-    stats.crossJoin(broadcast(nv)).crossJoin(broadcast(nt))
+    stats.crossJoin(nv).crossJoin(nt)
       .select(col("n_vectors"), col("n_true"), col("n_true_caught"),
         OracleMath.stableRound(
           col("n_true_caught").cast("double") / col("n_true").cast("double"), 6)

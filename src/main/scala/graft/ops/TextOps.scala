@@ -149,7 +149,7 @@ object TextOps {
 
     def metric(ord: Int, name: String, v: Column): Column =
       struct(lit(ord.toLong).as("ord"), lit(name).as("metric"), v.cast("double").as("value"))
-    vol.crossJoin(broadcast(topLang)).crossJoin(broadcast(med))
+    vol.crossJoin(topLang).crossJoin(broadcast(med))
       .select(explode(array(
         metric(1, "n_docs", col("n_docs")),
         metric(2, "n_tokens", col("n_tok")),
@@ -342,7 +342,7 @@ object TextOps {
       (col("te") + col("tl")).cast("double")
     val chi2 = (col("e").cast("double") - expE) * (col("e").cast("double") - expE) / expE +
       (col("l").cast("double") - expL) * (col("l").cast("double") - expL) / expL
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .withColumn("chi2", chi2)
       .orderBy(col("chi2").desc, col("term"))
       .limit(VocabDriftTopK)
@@ -774,7 +774,7 @@ object TextOps {
     val total = grams.select(col("doc_id")).distinct().agg(count(lit(1)).as("n_docs"))
     val boiler = grams.distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .filter(col("df") * 10 > col("n_docs"))
       .select(col("g")).withColumn("hit", lit(1L))
     grams.join(broadcast(boiler), Seq("g"), "left")
@@ -1237,7 +1237,7 @@ object TextOps {
 
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(words(col("text"))).as("word"))
-      .join(DedupOps.gatedDictSide(encDict, encDict.count()), "word")
+      .join(Joins.broadcastIfFits(encDict, encDict.count() * DedupOps.DictRowBytes), "word")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
         sum(col("n_sub")).as("n_subwords"),
@@ -1584,7 +1584,7 @@ object TextOps {
       .withColumn("r", row_number()
         .over(Window.partitionBy(col("source")).orderBy(col("doc_id"))).cast("long"))
       .withColumn("n_src", count(lit(1)).over(Window.partitionBy(col("source"))))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .withColumn("slot_key", expr("(r * total) DIV n_src"))
     keyed.orderBy(col("slot_key"), col("source"), col("r")).limit(k)
       .groupBy(col("source"))
@@ -1736,7 +1736,7 @@ object TextOps {
     val tot = d.agg(count(lit(1)).as("n_docs"))
     val fw = d.select(col("doc_id"), explode(col("ws")).as("w"))
     val keep = fw.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .filter(col("df") * PairSupportDenom >= col("n_docs"))
     val fk = fw.join(broadcast(keep.select(col("w"))), Seq("w"), "left_semi")
     val pairs = fk.as("a").join(fk.as("b"),
@@ -1744,7 +1744,7 @@ object TextOps {
       .groupBy(col("a.w").as("w_a"), col("b.w").as("w_b"))
       .agg(count(lit(1)).as("support"))
     pairs
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .filter(col("support") * PairSupportDenom >= col("n_docs"))
       .join(broadcast(keep.select(col("w").as("w_a"), col("df").as("df_a"))), "w_a")
       .join(broadcast(keep.select(col("w").as("w_b"), col("df").as("df_b"))), "w_b")
@@ -1794,7 +1794,7 @@ object TextOps {
     val ttok = perSrc.agg(sum(col("tok")).as("ttok"))
     val epochs = col("ttok").cast("double") * lit(2.0) *
       (col("m").cast("double") / col("tm").cast("double")) / col("tok").cast("double")
-    rows.join(broadcast(totals), "alpha").crossJoin(broadcast(ttok))
+    rows.join(broadcast(totals), "alpha").crossJoin(ttok)
       .select(col("source"), col("alpha"), col("n_docs"), col("tok"),
         OracleMath.stableRound(col("m").cast("double") / col("tm").cast("double"), 6)
           .as("weight"),
@@ -2047,7 +2047,7 @@ object TextOps {
     vocab.crossJoin(broadcast(perSrc))
       .join(counts, Seq("source", "w"), "left")
       .na.fill(0L, Seq("c_sw"))
-      .crossJoin(broadcast(scalars))
+      .crossJoin(scalars)
       .select(col("source"),
         when(col("c_sw") > 0, 1L).otherwise(0L).as("present"),
         termMicros.as("tm"))
@@ -2113,7 +2113,7 @@ object TextOps {
     val totals = perSrc.agg(sum(col("n_docs")).as("t_docs"), sum(col("n_retained")).as("t_ret"))
     val rate = col("n_retained").cast("double") / col("n_docs").cast("double")
     val corpusRate = col("t_ret").cast("double") / col("t_docs").cast("double")
-    perSrc.crossJoin(broadcast(totals))
+    perSrc.crossJoin(totals)
       .select(col("source"), col("n_docs"), col("n_retained"),
         OracleMath.stableRound(rate, 6).as("retention"),
         OracleMath.stableRound(rate - corpusRate, 6).as("bias"))
@@ -2356,7 +2356,7 @@ object TextOps {
     big
       .join(uni.select(col("w").as("w_a"), col("c_w").as("c_a")), Seq("w_a"))
       .join(uni.select(col("w").as("w_b"), col("c_w").as("c_b")), Seq("w_b"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("w_a"), col("w_b"), col("c_ab"), col("c_a"), col("c_b"),
         scoreR.as("score"))
       .orderBy(desc("score"), col("w_a"), col("w_b"))
@@ -2440,7 +2440,7 @@ object TextOps {
         .checkpointTracked()
     }
     val total = ranks.agg(sum(col("rank")).as("total_rank"))
-    ranks.crossJoin(broadcast(total))
+    ranks.crossJoin(total)
       .select(col("node").as("word"), col("wdeg"), col("rank").as("rank_scaled"),
         OracleMath.stableRound(
           col("rank") * lit(100.0) / col("total_rank"), 6).as("share_pct"))
@@ -2781,7 +2781,7 @@ object TextOps {
     val head = wc.groupBy(col("w")).agg(sum(col("c")).as("ct"))
       .orderBy(col("ct").desc, col("w")).limit(SpearmanTopK)
       .select(col("w"))
-    val ranked = wc.join(broadcast(head), Seq("w"))
+    val ranked = wc.join(head, Seq("w"))
       .withColumn("r", row_number().over(
         // bounded: ≤ SpearmanTopK rows per source after the head semi-join
         Window.partitionBy(col("source")).orderBy(col("c").desc, col("w"))).cast("long"))
@@ -2849,7 +2849,7 @@ object TextOps {
       .select(col("n_chars").as("x_ref"))
     val totals = docs.agg(sum(col("n_chars")).as("chars_total"),
       count(lit(1)).as("n_docs"))
-    val tail = top.crossJoin(broadcast(ref))
+    val tail = top.crossJoin(ref)
       // drop the reference row itself: the k largest remain
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -2861,7 +2861,7 @@ object TextOps {
           .cast(d6)).as("sum_ln"),
         sum(col("n_chars")).as("chars_tail"),
         max(col("x_ref")).as("x_ref"))
-    tail.crossJoin(broadcast(totals))
+    tail.crossJoin(totals)
       .select(col("k_eff").as("k"), col("x_ref"), col("n_docs"),
         OracleMath.stableRound(col("sum_ln").cast("double"), 6).as("sum_ln_r"),
         when(col("sum_ln") === 0, lit(null).cast("double")).otherwise(

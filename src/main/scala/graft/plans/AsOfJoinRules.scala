@@ -1,8 +1,37 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+
+/** The shared core of the custom joins' filter pushdown rules: conjunct
+  * splitting comes from Catalyst's [[PredicateHelper]], and [[mirror]] is the
+  * one key mirror both rules apply.
+  */
+private[plans] trait KeyedFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
+
+  /** `key = lit` / `lit = key` / `key IN (lits)` on one of `keys`, mirrored
+    * onto the positionally-matching key of `onto`.
+    */
+  protected def mirror(keys: Seq[Expression], onto: Seq[Expression],
+                       c: Expression): Option[Expression] = {
+    def keyFor(k: Expression): Option[Expression] =
+      keys.zipWithIndex.collectFirst {
+        case (lk, i) if lk.semanticEquals(k) => onto(i)
+      }
+    c match {
+      case EqualTo(k, v: Literal) => keyFor(k).map(EqualTo(_, v))
+      case EqualTo(v: Literal, k) => keyFor(k).map(EqualTo(_, v))
+      case In(k, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        keyFor(k).map(In(_, vs))
+      case _ => None
+    }
+  }
+
+  /** `child` under the conjunction of `conds`, or `child` itself. */
+  protected def filtered(conds: Seq[Expression], child: LogicalPlan): LogicalPlan =
+    if (conds.isEmpty) child else Filter(conds.reduce(And), child)
+}
 
 /** Predicate pushdown through the custom [[AsOfJoinPlan]] node. Catalyst's
   * own `PushDownPredicates` only understands built-in nodes, so without this
@@ -35,29 +64,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * *which* right row is the latest-at-or-before candidate (post-join they
   * only drop already-matched rows), so they stay above the join.
   */
-object AsOfJoinFilterPushdown extends Rule[LogicalPlan] {
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other     => Seq(other)
-  }
-
-  /** `leftKey = lit` / `lit = leftKey` / `leftKey IN (lits)` mirrored onto
-    * the positionally-matching right key.
-    */
-  private def mirror(j: AsOfJoinPlan, c: Expression): Option[Expression] = {
-    def rightKeyFor(k: Expression): Option[Expression] =
-      j.leftKeys.zipWithIndex.collectFirst {
-        case (lk, i) if lk.semanticEquals(k) => j.rightKeys(i)
-      }
-    c match {
-      case EqualTo(k, v: Literal) => rightKeyFor(k).map(EqualTo(_, v))
-      case EqualTo(v: Literal, k) => rightKeyFor(k).map(EqualTo(_, v))
-      case In(k, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        rightKeyFor(k).map(In(_, vs))
-      case _ => None
-    }
-  }
+object AsOfJoinFilterPushdown extends KeyedFilterPushdown {
 
   /** A pushed UPPER bound on the left time mirrored onto the right time
     * (backward mode: `rightTime ≤ leftTime ≤ U` ⇒ `rightTime ≤ U`). Strict
@@ -81,17 +88,13 @@ object AsOfJoinFilterPushdown extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, j: AsOfJoinPlan) =>
-      val (leftOnly, rest) = conjuncts(cond).partition(c =>
+      val (leftOnly, rest) = splitConjunctivePredicates(cond).partition(c =>
         c.deterministic && c.references.subsetOf(j.left.outputSet))
       if (leftOnly.isEmpty) f
       else {
-        val mirrored = leftOnly.flatMap(mirror(j, _)) ++
+        val mirrored = leftOnly.flatMap(mirror(j.leftKeys, j.rightKeys, _)) ++
           leftOnly.flatMap(timeMirror(j, _))
-        val newLeft = Filter(leftOnly.reduce(And), j.left)
-        val newRight =
-          if (mirrored.isEmpty) j.right else Filter(mirrored.reduce(And), j.right)
-        val pushed = j.copy(left = newLeft, right = newRight)
-        if (rest.isEmpty) pushed else Filter(rest.reduce(And), pushed)
+        filtered(rest, j.copy(left = filtered(leftOnly, j.left), right = filtered(mirrored, j.right)))
       }
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -97,27 +97,7 @@ object GraftJoinColumnPruning extends Rule[LogicalPlan] {
   }
 }
 
-object IntervalJoinFilterPushdown extends Rule[LogicalPlan] {
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other     => Seq(other)
-  }
-
-  private def mirror(keys: Seq[Expression], onto: Seq[Expression],
-                     c: Expression): Option[Expression] = {
-    def keyFor(k: Expression): Option[Expression] =
-      keys.zipWithIndex.collectFirst {
-        case (lk, i) if lk.semanticEquals(k) => onto(i)
-      }
-    c match {
-      case EqualTo(k, v: Literal) => keyFor(k).map(EqualTo(_, v))
-      case EqualTo(v: Literal, k) => keyFor(k).map(EqualTo(_, v))
-      case In(k, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        keyFor(k).map(In(_, vs))
-      case _ => None
-    }
-  }
+object IntervalJoinFilterPushdown extends KeyedFilterPushdown {
 
   /** A pushed bound on the point time, re-expressed as the loosest interval
     * bound that still excludes nothing a surviving point could match.
@@ -139,7 +119,7 @@ object IntervalJoinFilterPushdown extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, j: IntervalJoinPlan) =>
-      val cs = conjuncts(cond)
+      val cs = splitConjunctivePredicates(cond)
       val leftPush = cs.filter(c => !j.keepRight && c.deterministic &&
         c.references.nonEmpty && c.references.subsetOf(j.left.outputSet))
       val rightPush = cs.filter(c => !j.keepLeft && c.deterministic &&
@@ -151,10 +131,7 @@ object IntervalJoinFilterPushdown extends Rule[LogicalPlan] {
           leftPush.flatMap(mirror(j.leftKeys, j.rightKeys, _)) ++
           leftPush.flatMap(timeMirror(j, _))
         val leftSide = leftPush ++ rightPush.flatMap(mirror(j.rightKeys, j.leftKeys, _))
-        val newLeft = if (leftSide.isEmpty) j.left else Filter(leftSide.reduce(And), j.left)
-        val newRight = if (rightSide.isEmpty) j.right else Filter(rightSide.reduce(And), j.right)
-        val pushed = j.copy(left = newLeft, right = newRight)
-        if (rest.isEmpty) pushed else Filter(rest.reduce(And), pushed)
+        filtered(rest, j.copy(left = filtered(leftSide, j.left), right = filtered(rightSide, j.right)))
       }
   }
 }

@@ -114,7 +114,7 @@ object DocsStream {
     * equality is covered by StreamScaleSpec for the events family).
     */
   def lshNearDupStreaming(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.{DedupOps, TextFunctions}
+    import graft.ops.{DedupOps, Joins, TextFunctions}
     // batch-side: the drained buckets go through batch q39's candidate-and-
     // verify code. Identical word sets have identical masks AND identical
     // band keys (MinHash is order-independent over the set), so on a dense
@@ -129,7 +129,7 @@ object DocsStream {
       case Some(vocab) =>
         val docMask = docs.select(col("doc_id"), DedupOps.maskExpr(vocab, col("ws0")).as("mask"))
         val bucketMasks = members
-          .join(broadcast(docMask), "doc_id")
+          .join(Joins.broadcastIfFits(docMask, Joins.scanEstimatedBytes(docMask)), "doc_id")
           .select(col("band"), col("mask"))
           .dropDuplicates("band", "mask")
         DedupOps.lshMaskPairs(bucketMasks, DedupOps.maskGroups(docMask), DedupOps.NearDupThreshold)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.enrich.{Classified, Classifier, Defaults, Enrichment}
-import graft.ops.{DedupOps, SimilarityOps}
+import graft.ops.{DedupOps, Joins, SimilarityOps}
 import graft.streaming.{EventsStream, SessionStream, StreamJoinOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -450,7 +450,7 @@ class HardeningSpec extends AnyFunSuite {
 
   test("ANN verify join degrades to shuffle-hash under a forced-low gate, same result") {
     val default = SimilarityOps.annNearDup(spark, sf).collect().toSeq
-    val key = DedupOps.VerifyBroadcastConf
+    val key = Joins.MaxBroadcastBytesConf
     try {
       spark.conf.set(key, "1") // nothing fits: every verify side must shuffle
       val df = SimilarityOps.annNearDup(spark, sf)

@@ -78,5 +78,12 @@ class PlanDigestSpec extends AnyFunSuite {
     val n3 = PlanDigest.normalize(wrapped, "/tmp/x")
     assert(!n3.contains(", 42)") && !n3.contains(", 3)"),
       s"an unterminated span must not leak int literals shaped like moduli: $n3")
+    // a checkpoint leaf's RDD id counts the RDDs the JVM made before it,
+    // and its call-site line moves with any edit above it: both scrub, the
+    // creating call and file stay
+    val leaf = "Arguments: [d#853, v#854L], MapPartitionsRDD[130] at localCheckpoint " +
+      "at Caches.scala:43, ExistingRDD, UnknownPartitioning(0)"
+    val n4 = PlanDigest.normalize(leaf, "/tmp/x")
+    assert(n4.contains("MapPartitionsRDD[<id>] at localCheckpoint at Caches.scala:<line>,"), n4)
   }
 }

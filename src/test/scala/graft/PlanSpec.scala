@@ -106,9 +106,9 @@ class PlanSpec extends AnyFunSuite {
     graft.ops.Caches.releaseAll()
     // forced-low gate (conf on a session CLONE) + size-based broadcast off:
     // the hint must be ABSENT and the dict join must degrade to a shuffle
-    // join — the plan a 100M-term dictionary gets
+    // join — the plan a dictionary past the gate's byte bound gets
     val s2 = GraftSqlBridge.cloneSession(spark)
-    s2.conf.set(DedupOps.DictBroadcastRowsConf, "0")
+    s2.conf.set(Joins.MaxBroadcastBytesConf, "0")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val gated = DedupOps.nearDupJaccard(s2, sf, forceGeneral = true)
     val gatedRows = gated.collect().toSeq
@@ -119,6 +119,37 @@ class PlanSpec extends AnyFunSuite {
       "expected the shuffle-join fallback on the dict key:\n" + gp.take(1500))
     assert(gatedRows === baseRows)
     graft.ops.Caches.releaseAll()
+  }
+
+  test("mask-group and doc-mask sides go through the size gate: gate 0 shuffles them, rows unchanged (q39, q170)") {
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    import graft.streaming.DocsStream
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    for ((name, build, keys) <- Seq[(String, org.apache.spark.sql.SparkSession => DataFrame, Seq[String])](
+        ("q39", s => DedupOps.lshNearDupPairs(s, sf), Seq("mask_a", "mask_b")),
+        ("q170", s => DocsStream.lshNearDupStreaming(s, sf), Seq("mask_a", "mask_b", "doc_id")))) {
+      val base = build(spark)
+      val baseRows = rows(base)
+      val bp = plan(base)
+      // the gate's default bound: every gated side broadcasts
+      keys.foreach { k =>
+        assert(s"BroadcastHashJoin \\[$k#".r.findFirstIn(bp).isDefined,
+          s"$name: the $k join must broadcast under the default gate:\n" + bp.take(3000))
+      }
+      Caches.releaseAll()
+      val s2 = GraftSqlBridge.cloneSession(spark)
+      s2.conf.set(Joins.MaxBroadcastBytesConf, "0")
+      val gated = build(s2)
+      val gatedRows = rows(gated)
+      val gp = plan(gated)
+      keys.foreach { k =>
+        assert(s"BroadcastHashJoin \\[$k#".r.findFirstIn(gp).isEmpty &&
+            s"(SortMergeJoin|ShuffledHashJoin) \\[$k#".r.findFirstIn(gp).isDefined,
+          s"$name: past the gate the $k join must shuffle:\n" + gp.take(3000))
+      }
+      assert(gatedRows === baseRows, s"$name: the shuffle fallback changed the rows")
+      Caches.releaseAll()
+    }
   }
 
   test("range-partitioned keyless interval join: bucket exchange per side, no broadcast (q310)") {
@@ -943,7 +974,16 @@ class PlanSpec extends AnyFunSuite {
     val (cands, ids) = DedupOps.ppjoinCandidates(spark, docs, 0.9)
     val nCands = cands.count()
     val nDocs = ids.count()
-    spark.conf.set(DedupOps.VerifyBroadcastConf, "0")
+    // one gate key sizes both the dictionary and the verify sides: set it
+    // between their estimates, so the dictionary still broadcasts and only
+    // the verify sides take the shuffle fallback
+    val (_, vocabRows) = PrefixSum.rarityRanksCounted(
+      docs.select(explode(col("ws0")).as("word")), "word")
+    val dictBytes = vocabRows * DedupOps.DictRowBytes
+    val verifyBytes = DedupOps.estIdBytes(ids)
+    assert(dictBytes < verifyBytes,
+      s"no gate value between the dictionary ($dictBytes B) and verify ($verifyBytes B) estimates")
+    spark.conf.set(Joins.MaxBroadcastBytesConf, dictBytes.toString)
     try {
       val degShuffle = Metrics.shuffleRecordsWritten(
         DedupOps.nearDupJaccard(spark, sf, 0.9, forceGeneral = true))
@@ -958,7 +998,7 @@ class PlanSpec extends AnyFunSuite {
       // blow far past this
       assert(degShuffle - baseShuffle <= 2 * nCands + 2 * nDocs + 4096,
         s"degraded verify shuffle not candidate-bounded: base=$baseShuffle deg=$degShuffle cands=$nCands docs=$nDocs")
-    } finally spark.conf.unset(DedupOps.VerifyBroadcastConf)
+    } finally spark.conf.unset(Joins.MaxBroadcastBytesConf)
   }
 
   test("salted join pins the shuffled plan and equals the plain join (q146)") {

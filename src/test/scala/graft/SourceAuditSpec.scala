@@ -39,7 +39,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * dir, and the lock and the source snapshot are written once. No operator
   * sets conf on the caller's session. One cache lifecycle: every persist and
   * checkpoint goes through `Caches`, and nothing sweeps the context's
-  * persisted RDDs.
+  * persisted RDDs. One broadcast decision: only `Joins` broadcasts a side on
+  * a condition or turns size-based broadcast off, and no per-family gate key
+  * is left.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -277,5 +279,22 @@ class SourceAuditSpec extends AnyFunSuite {
     val widths = matches(allMainSources, raw"withStatePartitions\(spark, \d".r)
     assert(widths.isEmpty,
       "\nA caller passes a state-partition count (it is a constant):\n" + widths.mkString("\n"))
+  }
+
+  test("one broadcast decision: one size gate and one scale-emulation session") {
+    val ops = allMainSources.filter(_.getParent.getFileName.toString == "ops")
+    for ((what, pattern) <- Seq(
+        "conditional broadcast (Joins.broadcastIfFits)" -> raw"\bif\b.*\bbroadcast\(",
+        "auto-broadcast switch (Joins.scaleEmulationSession)" ->
+          raw""""spark\.sql\.autoBroadcastJoinThreshold"""")) {
+      val sites = matches(ops, pattern.r)
+      assert(sites.size == 1 && sites.forall(_.contains("Joins.scala")),
+        s"\nExpected the $what exactly once, in Joins, found ${sites.size}:\n" +
+          sites.mkString("\n"))
+    }
+    val keys = matches(allMainSources, raw"graft\.dedup\.max".r)
+    assert(keys.isEmpty,
+      "\nA per-family broadcast gate key (use Joins.MaxBroadcastBytesConf):\n" +
+        keys.mkString("\n"))
   }
 }
