@@ -718,13 +718,7 @@ object SparkEntry {
         | date_trunc('minute', min(ts)) AS first_minute,
         | date_trunc('minute', max(ts)) AS last_minute
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q18_session_counts" ->
-      """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
-        | SELECT user_id, CASE WHEN prev_m IS NULL OR date_diff('second', prev_m, m) > 1800 THEN 1 ELSE 0 END AS new_session FROM (
-        |  SELECT user_id, date_trunc('minute', ts) AS m,
-        |   lag(date_trunc('minute', ts)) OVER (PARTITION BY user_id ORDER BY date_trunc('minute', ts), event_id) AS prev_m
-        |  FROM events))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    "q18_session_counts" -> EventOps.sessionCountsOracle,
   ) ++ EnrichOps.oracle ++ Map(
     "q22_pipeline_e2e" -> graft.pipeline.Pipeline.pipelineOracleSql,
   ) ++ TextOps.oracle ++ DedupOps.oracle ++ SimilarityOps.oracle ++
@@ -889,13 +883,7 @@ object SparkEntry {
         | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
         |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q80_streaming_timeout" ->
-      """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
-        | SELECT user_id, CASE WHEN prev_m IS NULL OR date_diff('second', prev_m, m) > 1800 THEN 1 ELSE 0 END AS new_session FROM (
-        |  SELECT user_id, date_trunc('minute', ts) AS m,
-        |   lag(date_trunc('minute', ts)) OVER (PARTITION BY user_id ORDER BY date_trunc('minute', ts), event_id) AS prev_m
-        |  FROM events))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    "q80_streaming_timeout" -> EventOps.sessionCountsOracle,
     "q81_correlated_subq" ->
       """SELECT c_mktsegment,
         | count(*) AS n_customers,
@@ -1303,13 +1291,7 @@ object SparkEntry {
     "q317_delta_linkage" -> LinkageOps.deltaLinkageOracle,
     "q320_graded_linkage" -> LinkageOps.gradedLinkageOracle,
     "q318_interval_filtered" -> CoreOps.intervalJoinFilteredOracle,
-    "q206_tws_timer_sessions" ->
-      """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
-        | SELECT user_id, CASE WHEN prev_m IS NULL OR date_diff('second', prev_m, m) > 1800 THEN 1 ELSE 0 END AS new_session FROM (
-        |  SELECT user_id, date_trunc('minute', ts) AS m,
-        |   lag(date_trunc('minute', ts)) OVER (PARTITION BY user_id ORDER BY date_trunc('minute', ts), event_id) AS prev_m
-        |  FROM events))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    "q206_tws_timer_sessions" -> EventOps.sessionCountsOracle,
     "q169_pagerank" -> EventOps.pageRankOracle,
     "q173_cms_counts" -> EventOps.cmsCountsOracle,
     "q174_markov_transitions" -> EventOps.markovTransitionsOracle,
@@ -1386,13 +1368,7 @@ object SparkEntry {
          |ORDER BY key_name""".stripMargin
     },
     // out-of-order ingestion must still converge to the batch sessionization
-    "q72_streaming_late" ->
-      """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
-        | SELECT user_id, CASE WHEN prev_m IS NULL OR date_diff('second', prev_m, m) > 1800 THEN 1 ELSE 0 END AS new_session FROM (
-        |  SELECT user_id, date_trunc('minute', ts) AS m,
-        |   lag(date_trunc('minute', ts)) OVER (PARTITION BY user_id ORDER BY date_trunc('minute', ts), event_id) AS prev_m
-        |  FROM events))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    "q72_streaming_late" -> EventOps.sessionCountsOracle,
     // stream-stream join must agree with the batch interval join
     "q87_stream_join" ->
       """SELECT p.event_id AS purchase_id, p.user_id, c.event_id AS click_id,
@@ -1464,12 +1440,6 @@ object SparkEntry {
         |    FROM events GROUP BY 1))
         |GROUP BY 1 ORDER BY 1""".stripMargin,
     // stateful streaming must agree with the batch sessionization oracle
-    "q51_streaming_sessions" ->
-      """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
-        | SELECT user_id, CASE WHEN prev_m IS NULL OR date_diff('second', prev_m, m) > 1800 THEN 1 ELSE 0 END AS new_session FROM (
-        |  SELECT user_id, date_trunc('minute', ts) AS m,
-        |   lag(date_trunc('minute', ts)) OVER (PARTITION BY user_id ORDER BY date_trunc('minute', ts), event_id) AS prev_m
-        |  FROM events))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    "q51_streaming_sessions" -> EventOps.sessionCountsOracle,
   )
 }

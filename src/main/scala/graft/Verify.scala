@@ -49,9 +49,9 @@ object Verify {
     */
   val FailuresFile = "verify_failures.tsv"
 
-  /** Write each query's result to `outDir/<name>`. A query that throws is
-    * reported on stderr, recorded in [[FailuresFile]], and the run goes on
-    * with the next query.
+  /** Write each query's result to `outDir/<name>`. A query that throws has
+    * its full stack trace (cause chain included) printed to stderr, is
+    * recorded in [[FailuresFile]], and the run goes on with the next query.
     */
   private[graft] def dumpQueries(spark: SparkSession, sfDir: String, outDir: String,
       queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Unit = {
@@ -62,7 +62,8 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed:")
+        e.printStackTrace(System.err)
         Files.writeString(failures,
           s"$name\t${e.getClass.getName}\t${oneLine(e.getMessage)}\n",
           StandardOpenOption.APPEND)

@@ -67,7 +67,7 @@ object DedupOps {
     */
   def dedupWordSet(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("ws", array_sort(array_distinct(words(col("text")))))
+      .withColumn("ws", wordSet(col("text")))
       .withColumn("wkey", xxhash64(array_join(col("ws"), " ")))
       .withColumn("set_size", size(col("ws")).cast("long"))
       .repartition(col("wkey"), col("set_size"))
@@ -313,7 +313,7 @@ object DedupOps {
   def deltaNearDup(spark: SparkSession, dir: String, threshold: Double = NearDupThreshold,
                    forceGeneral: Boolean = false): DataFrame = {
     val all = Tables.documents(spark, dir)
-      .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws0"))
+      .select(col("doc_id"), wordSet(col("text")).as("ws0"))
 
     // adaptive like [[nearDupJaccard]]: a ≤64-word vocabulary makes the
     // delta×corpus join a bitmask popcount — no dictionary window, no
@@ -374,7 +374,7 @@ object DedupOps {
   def containmentPairs(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.sortedIntersectSize
     val all = Tables.documents(spark, dir)
-      .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws0"))
+      .select(col("doc_id"), wordSet(col("text")).as("ws0"))
     // persisted, NOT localCheckpoint (r15, measured): a checkpoint leaf here
     // would cut ~0.8 s of driver re-analysis gaps, but it also erases the
     // id table's statistics — the candidate join re-planned against a
@@ -423,7 +423,7 @@ object DedupOps {
   }
 
   val containmentPairsOracle: String =
-    s"""WITH s AS (SELECT doc_id, list_sort(list_distinct(string_split(text, ' '))) AS ws,
+    s"""WITH s AS (SELECT doc_id, $wordSetSql AS ws,
        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS sz
        |  FROM documents),
        |pairs AS (
@@ -592,7 +592,7 @@ object DedupOps {
     import graft.functions.VectorFunctions.minhashSigs
     val k = nBands * LshRows
     val sigd = Tables.documents(spark, dir)
-      .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws"))
+      .select(col("doc_id"), wordSet(col("text")).as("ws"))
       .withColumn("sig", minhashSigs(transform(col("ws"), w => wordHash(w)), k))
       .persistTracked()
     val banded = sigd.select(col("doc_id"),
@@ -673,7 +673,7 @@ object DedupOps {
     }.mkString(" OR ")
     val jac = "CAST(len(list_intersect(ws_a, ws_b)) AS DOUBLE) / len(list_distinct(list_concat(ws_a, ws_b)))"
     s"""WITH ds AS (
-       |  SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) AS ws,
+       |  SELECT doc_id, $wordSetSql AS ws,
        |         list_transform(list_distinct(string_split(text,' ')), w -> ${wordHashSql("w")}) AS hs
        |  FROM documents),
        |sigs AS (SELECT doc_id, ws, $mhDefs FROM ds),
@@ -807,7 +807,7 @@ object DedupOps {
     // contraction collapses almost nothing (measured: 963k rep pairs
     // unsorted vs 29k sorted at sf0.1)
     val ds = Tables.documents(spark, dir)
-      .select(col("doc_id"), array_sort(array_distinct(words(col("text")))).as("ws0"))
+      .select(col("doc_id"), wordSet(col("text")).as("ws0"))
     val groups = ds.groupBy(col("ws0"))
       .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("ids"))
       .persistTracked()
@@ -1289,7 +1289,7 @@ object DedupOps {
     val nParts = math.max(2, spark.sparkContext.defaultParallelism / 4)
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), substring(col("text"), 1, SnPrefixLen).as("bk"),
-        array_sort(array_distinct(words(col("text")))).as("ws"))
+        wordSet(col("text")).as("ws"))
     val ranked = PrefixSum.cumSums(d, Seq(col("bk"), col("doc_id")),
         Seq("rn" -> lit(1L)), nParts).df
       .select(col("doc_id"), col("ws"), col("cum_rn").as("rn"),
@@ -1316,7 +1316,7 @@ object DedupOps {
     */
   val sortedNeighborhoodOracle: String =
     s"""WITH d AS (SELECT doc_id, substr(text, 1, $SnPrefixLen) AS bk,
-       |    list_sort(list_distinct(string_split(text, ' '))) AS ws FROM documents),
+       |    $wordSetSql AS ws FROM documents),
        |r AS (SELECT doc_id, ws, row_number() OVER (ORDER BY bk, doc_id) AS rn FROM d),
        |c AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |    CAST(b.rn - a.rn AS BIGINT) AS gap,
@@ -1353,8 +1353,8 @@ object DedupOps {
     // reachable node. Tractable because components are small; the Spark side
     // scales where this CTE cannot.
     "q101_dedup_clusters" ->
-      """WITH RECURSIVE ds AS (
-        |  SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) ws FROM documents),
+      s"""WITH RECURSIVE ds AS (
+        |  SELECT doc_id, $wordSetSql ws FROM documents),
         |pairs AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         |  FROM ds a JOIN ds b ON a.doc_id < b.doc_id
@@ -1373,9 +1373,9 @@ object DedupOps {
       """SELECT min(doc_id) AS rep_doc_id, count(*) AS group_size
         |FROM documents GROUP BY text ORDER BY rep_doc_id""".stripMargin,
     "q36_dedup_wordset" ->
-      """SELECT min(doc_id) AS rep_doc_id, count(*) AS group_size,
+      s"""SELECT min(doc_id) AS rep_doc_id, count(*) AS group_size,
         | CAST(len(ws) AS BIGINT) AS set_size
-        |FROM (SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) AS ws FROM documents)
+        |FROM (SELECT doc_id, $wordSetSql AS ws FROM documents)
         |GROUP BY ws ORDER BY rep_doc_id""".stripMargin,
     "q37_minhash_sigs" -> {
       val sigSelects = (0 until MinhashK).map { i =>
@@ -1426,7 +1426,7 @@ object DedupOps {
       // drop a true one (the final jac predicate decides membership)
       val lenBandPct = math.floor(NearDupThreshold * 100).toInt - 1
       s"""WITH ds AS (
-         |  SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) AS ws,
+         |  SELECT doc_id, $wordSetSql AS ws,
          |         list_transform(list_distinct(string_split(text,' ')), w -> ${wordHashSql("w")}) AS hs
          |  FROM documents),
          |sigs AS (SELECT doc_id, $mhDefs FROM ds),
@@ -1467,17 +1467,17 @@ object DedupOps {
     "q142_delta_neardup" ->
       s"""SELECT d.doc_id AS doc_delta, c.doc_id AS doc_corpus,
         | ${OracleMath.stableRoundSql("CAST(len(list_intersect(d.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(d.ws, c.ws)))", 4)} AS jaccard
-        |FROM (SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) ws
+        |FROM (SELECT doc_id, $wordSetSql ws
         |      FROM documents WHERE doc_id % 5 = 0) d
-        |JOIN (SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) ws
+        |JOIN (SELECT doc_id, $wordSetSql ws
         |      FROM documents WHERE doc_id % 5 <> 0) c
         |  ON CAST(len(list_intersect(d.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(d.ws, c.ws))) >= 0.9
         |ORDER BY doc_delta, doc_corpus""".stripMargin,
     "q38_neardup_jaccard" ->
       s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         | ${OracleMath.stableRoundSql("CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws)))", 4)} AS jaccard
-        |FROM (SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) ws FROM documents) a
-        |JOIN (SELECT doc_id, list_sort(list_distinct(string_split(text,' '))) ws FROM documents) b
+        |FROM (SELECT doc_id, $wordSetSql ws FROM documents) a
+        |JOIN (SELECT doc_id, $wordSetSql ws FROM documents) b
         |  ON a.doc_id < b.doc_id
         |WHERE CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws))) >= 0.9
         |ORDER BY doc_a, doc_b""".stripMargin,

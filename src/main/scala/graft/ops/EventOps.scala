@@ -463,9 +463,27 @@ object EventOps {
       .orderBy(col("zbucket"))
   }
 
+  /** The session rule q18 and the streaming sessionizers (q51, q72, q80,
+    * q206) share: on minute-truncated timestamps, an event opens a new
+    * session when it is its user's first or comes more than `SessionGapSec`
+    * after the user's previous event.
+    */
+  val SessionGapSec = 1800L
+
+  /** The session rule's new-session test on epoch-second minutes;
+    * `Long.MinValue` stands for "no previous event".
+    */
+  def newSession(lastMinute: Long, minute: Long): Boolean =
+    lastMinute == Long.MinValue || minute - lastMinute > SessionGapSec
+
+  /** Event-time deadline (ms) past which no event can extend a session whose
+    * last event fell in `lastMinute` — the streaming sessionizers' timer.
+    */
+  def sessionDeadlineMs(lastMinute: Long): Long = (lastMinute + SessionGapSec + 60L) * 1000L
+
   /** Sessionization-style window: for each user, order events by time and
-    * count session starts (gap > 30 min from previous event). `lag` over a
-    * per-user window; the minute-truncated gap keeps oracle parity.
+    * count session starts under the session rule ([[SessionGapSec]]). `lag`
+    * over a per-user window; the minute-truncated gap keeps oracle parity.
     */
   def sessionCounts(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -475,11 +493,23 @@ object EventOps {
       .withColumn("prev_m", lag(col("m"), 1).over(w))
       .withColumn("new_session",
         when(col("prev_m").isNull
-          || unix_timestamp(col("m")) - unix_timestamp(col("prev_m")) > 1800L, 1L).otherwise(0L))
+          || unix_timestamp(col("m")) - unix_timestamp(col("prev_m")) > SessionGapSec, 1L)
+          .otherwise(0L))
       .groupBy(col("user_id"))
       .agg(sum(col("new_session")).as("n_sessions"), count(lit(1)).as("n_events"))
       .orderBy(col("user_id"))
   }
+
+  /** Oracle twin of [[sessionCounts]] — the one SQL statement of the session
+    * rule, which the streaming sessionizers must equal too.
+    */
+  val sessionCountsOracle: String =
+    """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
+      | SELECT user_id, CASE WHEN prev_m IS NULL OR date_diff('second', prev_m, m) > 1800 THEN 1 ELSE 0 END AS new_session FROM (
+      |  SELECT user_id, date_trunc('minute', ts) AS m,
+      |   lag(date_trunc('minute', ts)) OVER (PARTITION BY user_id ORDER BY date_trunc('minute', ts), event_id) AS prev_m
+      |  FROM events))
+      |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Sliding-window aggregation: 1-hour windows sliding every 30 minutes —
     * each event lands in exactly two overlapping windows (the tumbling

@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 /** Two-pass distributed global prefix sums — the scale-safe replacement for
   * an unpartitioned `Window.orderBy(...)`, which collapses the whole input
   * into ONE task (the classic 100 TB plan killer: a single-executor sort of
-  * the full table). The pattern was proven by q102's sequence packing
-  * ([[TextOps.packSequences]]) and is promoted here so the exact-rank
-  * statistics family (q223 deciles, q233 KS, q234 Mann-Whitney, q235 RFM
-  * ntiles) shares one implementation:
+  * the full table). q102's sequence packing and q278's straddle curve
+  * ([[TextOps.cumTokens]]), the exact-rank statistics family (q223 deciles,
+  * q233 KS, q234 Mann-Whitney, q235 RFM ntiles) and the other global ranks
+  * share this one implementation:
   *
   *   1. range-partition the input on the order keys (RangePartitioner
   *      samples boundaries — fully parallel, preserves global order across
@@ -93,7 +93,7 @@ object PrefixSum {
     CumResult(cleaned, totals)
   }
 
-  /** Default partition count for the range pass, matching packSequences. */
+  /** Default partition count for the range pass. */
   def defaultParts(spark: org.apache.spark.sql.SparkSession): Int =
     math.max(2, spark.sparkContext.defaultParallelism / 4)
 

@@ -308,14 +308,25 @@ object RetrievalOps {
   // q159: embedding-space eval/train contamination check
   // ---------------------------------------------------------------------------
 
-  /** Deterministic eval-split predicate: ~`EvalPct`% of vectors by a
-    * multiplicative hash of vec_id (a DIFFERENT multiplier than q83's split
-    * and q103's mixture hashes, so the three stay statistically
-    * independent). At production key ranges this would be xxhash64; the
-    * small constant keeps the oracle arithmetic exactly reproducible in SQL.
+  /** Eval-split constants: ~`EvalPct`% of vectors by a multiplicative hash
+    * of vec_id (a DIFFERENT multiplier than q83's split and q103's mixture
+    * hashes, so the three stay statistically independent). At production
+    * key ranges this would be xxhash64; the small constant keeps the oracle
+    * arithmetic exactly reproducible in SQL.
     */
   val EvalHashMult = 2246822519L
   val EvalPct = 5L
+
+  /** The deterministic eval-split predicate over `vec_id`, shared by every
+    * eval/train query (q159, q161, q276, q279, q298, q306, q344); the train
+    * side is its negation.
+    */
+  def isEval: Column = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
+
+  /** Oracle twin of [[isEval]]: eval rows are `WHERE <evalSql>`, train rows
+    * `WHERE NOT (<evalSql>)`.
+    */
+  val evalSql: String = s"(vec_id * $EvalHashMult) % 100 < $EvalPct"
   val ContamThreshold = 0.30
 
   /** Embedding-space contamination check: which training vectors are
@@ -331,7 +342,6 @@ object RetrievalOps {
     */
   def embedContamination(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val eval  = e.filter(isEval).select(col("embedding").as("q_emb"))
     val train = e.filter(!isEval)
 
@@ -370,7 +380,7 @@ object RetrievalOps {
     */
   def clusterSafeSplit(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val wkey = md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
+    val wkey = TextFunctions.wordSetKey(col("text"))
     val naiveTrain = pmod(col("doc_id") * lit(SplitHashMultNaive), lit(100L)) < lit(SplitTrainPct)
 
     val groups = docs
@@ -418,7 +428,6 @@ object RetrievalOps {
     */
   def ivfRecall(spark: SparkSession, dir: String, nprobe: Int = IvfNProbe): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val train = e.filter(!isEval).select(col("vec_id"), col("embedding"))
 
@@ -483,7 +492,6 @@ object RetrievalOps {
     */
   def ivfProbeCurve(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val train = e.filter(!isEval).select(col("vec_id"), col("embedding"))
 
@@ -556,7 +564,6 @@ object RetrievalOps {
     */
   def sqRecallCurve(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val train = e.filter(!isEval).select(col("vec_id"), col("embedding"))
 
@@ -689,7 +696,6 @@ object RetrievalOps {
   def retrievalRankMetrics(spark: SparkSession, dir: String, nprobe: Int = IvfNProbe): DataFrame = {
     val d18 = org.apache.spark.sql.types.DecimalType(18, 6)
     val e = Tables.embeddings(spark, dir)
-    val isEval = pmod(col("vec_id") * lit(EvalHashMult), lit(100L)) < lit(EvalPct)
     val qs = e.filter(isEval).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val train = e.filter(!isEval).select(col("vec_id"), col("embedding"))
 
@@ -740,9 +746,9 @@ object RetrievalOps {
     }.mkString(" ")
     s"""WITH ${SimilarityOps.centCteSql},
        |ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-       |       WHERE (vec_id * $EvalHashMult) % 100 < $EvalPct),
+       |       WHERE $evalSql),
        |tr AS (SELECT vec_id, embedding FROM embeddings
-       |       WHERE NOT ((vec_id * $EvalHashMult) % 100 < $EvalPct)),
+       |       WHERE NOT ($evalSql)),
        |${SimilarityOps.assignCteSql},
        |probe AS (
        |  SELECT q_id, q_emb, c_label FROM (
@@ -820,9 +826,9 @@ object RetrievalOps {
          |FROM fused ORDER BY rrf DESC, id LIMIT $RrfTopK""".stripMargin,
     "q159_embed_contamination" ->
       s"""WITH ev AS (SELECT embedding AS q_emb FROM embeddings
-         |            WHERE (vec_id * $EvalHashMult) % 100 < $EvalPct),
+         |            WHERE $evalSql),
          |tr AS (SELECT vec_id, label, embedding FROM embeddings
-         |       WHERE NOT ((vec_id * $EvalHashMult) % 100 < $EvalPct)),
+         |       WHERE NOT ($evalSql)),
          |m AS (SELECT t.vec_id, t.label,
          |        max(${SimilarityOps.cosSql("t.embedding", "e.q_emb")}) AS max_sim
          |      FROM tr t CROSS JOIN ev e GROUP BY 1, 2)
@@ -833,9 +839,9 @@ object RetrievalOps {
     "q161_ivf_recall" ->
       s"""WITH ${SimilarityOps.centCteSql},
          |ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-         |       WHERE (vec_id * $EvalHashMult) % 100 < $EvalPct),
+         |       WHERE $evalSql),
          |tr AS (SELECT vec_id, embedding FROM embeddings
-         |       WHERE NOT ((vec_id * $EvalHashMult) % 100 < $EvalPct)),
+         |       WHERE NOT ($evalSql)),
          |${SimilarityOps.assignCteSql},
          |probe AS (
          |  SELECT q_id, q_emb, c_label FROM (
@@ -877,9 +883,9 @@ object RetrievalOps {
     "q279_sq_recall_curve" -> {
       val sc = "greatest((mx - mn) / lv, 1e-12)"
       s"""WITH ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-         |       WHERE (vec_id * $EvalHashMult) % 100 < $EvalPct),
+         |       WHERE $evalSql),
          |tr AS (SELECT vec_id, embedding FROM embeddings
-         |       WHERE NOT ((vec_id * $EvalHashMult) % 100 < $EvalPct)),
+         |       WHERE NOT ($evalSql)),
          |ex AS (SELECT vec_id, embedding, b.bits,
          |         CAST(list_min(embedding) AS DOUBLE) AS mn,
          |         CAST(list_max(embedding) AS DOUBLE) AS mx,
@@ -925,9 +931,9 @@ object RetrievalOps {
     "q276_ivf_probe_curve" ->
       s"""WITH ${SimilarityOps.centCteSql},
          |ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-         |       WHERE (vec_id * $EvalHashMult) % 100 < $EvalPct),
+         |       WHERE $evalSql),
          |tr AS (SELECT vec_id, embedding FROM embeddings
-         |       WHERE NOT ((vec_id * $EvalHashMult) % 100 < $EvalPct)),
+         |       WHERE NOT ($evalSql)),
          |${SimilarityOps.assignCteSql},
          |probe AS (
          |  SELECT q_id, q_emb, c_label, pr FROM (
@@ -970,7 +976,7 @@ object RetrievalOps {
          |ORDER BY c.nprobe""".stripMargin,
     "q160_cluster_safe_split" ->
       s"""WITH g AS (
-         |  SELECT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS wkey,
+         |  SELECT ${TextFunctions.wordSetKeySql} AS wkey,
          |    count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
          |    CAST(sum(CASE WHEN (doc_id * $SplitHashMultNaive) % 100 < $SplitTrainPct
          |             THEN 1 ELSE 0 END) AS BIGINT) AS n_naive_train

@@ -407,10 +407,8 @@ object SimilarityOps {
   def bandIndexRecall(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val isEval = pmod(col("vec_id") * lit(RetrievalOps.EvalHashMult), lit(100L)) <
-      lit(RetrievalOps.EvalPct)
-    val qsk = withBandSignature(e.filter(isEval))
-    val trn = withBandSignature(e.filter(!isEval)).persistTracked()
+    val qsk = withBandSignature(e.filter(RetrievalOps.isEval))
+    val trn = withBandSignature(e.filter(!RetrievalOps.isEval)).persistTracked()
     val qBands = explodeBands(qsk, Seq.empty)
       .select(col("vec_id").as("q_id"), col("bk"), col("bv"))
     val tBands = explodeBands(trn, Seq.empty)
@@ -1456,11 +1454,9 @@ object SimilarityOps {
     val d18 = org.apache.spark.sql.types.DecimalType(18, 6)
     val e = withSrpSketch(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding")))
-    val isEval = pmod(col("vec_id") * lit(RetrievalOps.EvalHashMult), lit(100L)) <
-      lit(RetrievalOps.EvalPct)
-    val qs = e.filter(isEval)
+    val qs = e.filter(RetrievalOps.isEval)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("srp").as("q_srp"))
-    val tr = e.filter(!isEval)
+    val tr = e.filter(!RetrievalOps.isEval)
     tr.crossJoin(broadcast(qs))
       .select(hamming(col("q_srp"), col("srp")).cast("long").as("h"),
         OracleMath.stableRound(cosine(col("embedding"), col("q_emb")), 6)
@@ -2636,9 +2632,9 @@ object SimilarityOps {
        |                 list(CASE WHEN dot >= 0 THEN 1 ELSE 0 END ORDER BY p) AS bits
        |               FROM dots GROUP BY 1) t USING (vec_id)),
        |ev AS (SELECT vec_id AS q_id, embedding AS q_emb, bits AS q_bits FROM b
-       |       WHERE (vec_id * ${RetrievalOps.EvalHashMult}) % 100 < ${RetrievalOps.EvalPct}),
+       |       WHERE ${RetrievalOps.evalSql}),
        |tr AS (SELECT * FROM b
-       |       WHERE NOT ((vec_id * ${RetrievalOps.EvalHashMult}) % 100 < ${RetrievalOps.EvalPct})),
+       |       WHERE NOT (${RetrievalOps.evalSql})),
        |cpairs AS (
        |  SELECT len(list_filter(range(1, ${SrpPlanes + 1}),
        |           p -> ev.q_bits[p] <> tr.bits[p])) AS h,
@@ -2776,9 +2772,9 @@ object SimilarityOps {
         s"  FROM sigs_q q JOIN sigs_t t ON q.bv$b = t.bv$b"
     }.mkString("\n  UNION\n  ")
     s"""WITH ev AS (SELECT vec_id, embedding FROM embeddings
-       |       WHERE (vec_id * ${RetrievalOps.EvalHashMult}) % 100 < ${RetrievalOps.EvalPct}),
+       |       WHERE ${RetrievalOps.evalSql}),
        |tr AS (SELECT vec_id, embedding FROM embeddings
-       |       WHERE NOT ((vec_id * ${RetrievalOps.EvalHashMult}) % 100 < ${RetrievalOps.EvalPct})),
+       |       WHERE NOT (${RetrievalOps.evalSql})),
        |sigs_q AS (SELECT vec_id AS q_id, $annBandColsSql FROM ev),
        |sigs_t AS (SELECT vec_id, $annBandColsSql FROM tr),
        |cand AS (

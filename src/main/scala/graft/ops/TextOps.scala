@@ -24,6 +24,21 @@ object TextFunctions {
 
   def words(text: Column): Column = split(text, " ")
 
+  /** A document's word set: its distinct words, sorted — the group identity
+    * of the word-set dedup (q36) and the set every set-similarity operator
+    * compares.
+    */
+  def wordSet(text: Column): Column = array_sort(array_distinct(words(text)))
+
+  /** md5 of the space-joined [[wordSet]]: a 32-byte shuffle key for the
+    * word-set group, never the text itself.
+    */
+  def wordSetKey(text: Column): Column = md5(array_join(wordSet(text), " "))
+
+  /** Oracle twins of [[wordSet]] and [[wordSetKey]] over the `text` column. */
+  val wordSetSql: String = "list_sort(list_distinct(string_split(text,' ')))"
+  val wordSetKeySql: String = s"md5(array_to_string($wordSetSql, ' '))"
+
   /** Polynomial char hash: fold chars, (acc*31 + ascii) % P. Matches the SQL
     * `list_reduce(list_prepend(0, list_transform(string_split(w,''), ascii)))`
     * fold exactly (verified bit-identical on both engines).
@@ -55,6 +70,40 @@ object TextOps {
   private val enStop = Seq("the", "a", "of", "and", "to", "in", "is")
   private val deStop = Seq("der", "die", "das", "und", "ist", "nicht")
   private val esStop = Seq("el", "la", "los", "de", "que", "es")
+
+  /** English stopword share of a word array — q32's `stopword_ratio`. */
+  private def stopRatio(ws: Column): Column =
+    size(filter(ws, w => w.isInCollection(enStop))).cast("double") / size(ws).cast("double")
+
+  /** q32's document quality score over a word array, the one definition
+    * every quality-ranked query (q32, q183, q210, q213, q218, q250, q260,
+    * q268, q273) shares: 0.4·min(n∕100, 1) + 0.3·stopword ratio +
+    * 0.3·min(mean word length∕8, 1), rounded to 4 dp in a fixed double
+    * arithmetic order for oracle parity. Callers add their own
+    * quantization (DECIMAL(12,4) cast, half-up `q4` integer) and alias.
+    */
+  private def quality(ws: Column): Column = {
+    val nTok = size(ws).cast("double")
+    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
+      .cast("double") / nTok
+    OracleMath.stableRound(
+      least(nTok / 100.0, lit(1.0)) * 0.4 + stopRatio(ws) * 0.3 +
+        least(meanLen / 8.0, lit(1.0)) * 0.3, 4)
+  }
+
+  /** Oracle twin of [[quality]]'s inputs, as select-list columns over a
+    * `documents` row: token count `n_tok`, English stopword hits `sw` and
+    * summed word length `wl`.
+    */
+  private val qualityColsSql: String =
+    s"""len(string_split(text,' ')) AS n_tok,
+       |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
+       |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl""".stripMargin
+
+  /** Oracle twin of [[quality]] over [[qualityColsSql]]'s columns. */
+  private val qualitySql: String = OracleMath.stableRoundSql(
+    "least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + " +
+      "least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)
 
   /** Token statistics: counts, type-token ratio, mean word length. One scan,
     * no shuffle (per-row arrays only).
@@ -113,14 +162,7 @@ object TextOps {
   def datasetCard(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
-    val qual = OracleMath.stableRound(
-      least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-        least(meanLen / 8.0, lit(1.0)) * 0.3, 4)
-      .cast(org.apache.spark.sql.types.DecimalType(12, 4))
+    val qual = quality(ws).cast(org.apache.spark.sql.types.DecimalType(12, 4))
 
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -129,7 +171,7 @@ object TextOps {
     val vol = base.agg(
       count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tok"),
       countDistinct(col("text")).as("d_text"),
-      countDistinct(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
+      countDistinct(array_join(wordSet(col("text")), " "))
         .as("d_ws"),
       sum(col("q")).as("q_sum"),
       countDistinct(col("source")).as("n_sources"),
@@ -169,21 +211,14 @@ object TextOps {
       .orderBy(col("ord"))
   }
 
-  val datasetCardOracle: String = {
-    val q4 = OracleMath.stableRoundSql(
-      "least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + " +
-        "least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)
+  val datasetCardOracle: String =
     s"""WITH base AS (SELECT doc_id, text, lang, source,
-       |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-       |    len(list_filter(string_split(text,' '),
-       |        w -> list_contains([${enStop.map("'" + _ + "'").mkString(", ")}], w))) AS sw,
-       |    list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl,
-       |    len(string_split(text,' ')) AS n_tok
+       |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens, $qualityColsSql
        |  FROM documents),
-       |b2 AS (SELECT *, CAST($q4 AS DECIMAL(12,4)) AS q FROM base),
+       |b2 AS (SELECT *, CAST($qualitySql AS DECIMAL(12,4)) AS q FROM base),
        |vol AS (SELECT count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tok,
        |    count(DISTINCT text) AS d_text,
-       |    count(DISTINCT array_to_string(list_sort(list_distinct(string_split(text,' '))), ' ')) AS d_ws,
+       |    count(DISTINCT array_to_string($wordSetSql, ' ')) AS d_ws,
        |    sum(q) AS q_sum,
        |    count(DISTINCT source) AS n_sources, count(DISTINCT lang) AS n_langs
        |  FROM b2),
@@ -212,7 +247,6 @@ object TextOps {
        |  UNION ALL SELECT 9, 'top_lang_share',
        |    ${OracleMath.stableRoundSql("CAST(top_lang_docs AS DOUBLE) / CAST(n_docs AS DOUBLE)", 6)} FROM vol CROSS JOIN toplang
        |) ORDER BY ord""".stripMargin
-  }
 
   /** Vocabulary-drift parameters: minimum total occurrences for a term to
     * be tested (rare terms produce noise chi-squares) and the report size.
@@ -430,16 +464,9 @@ object TextOps {
   def qualityPercentiles(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
     val scored = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        floor(OracleMath.stableRound(
-          least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-            least(meanLen / 8.0, lit(1.0)) * 0.3, 4) * 10000.0 + lit(0.5))
-          .cast("long").as("q4"))
+        floor(quality(ws) * 10000.0 + lit(0.5)).cast("long").as("q4"))
     val cells = scored.groupBy(col("q4")).agg(count(lit(1)).as("cnt"))
     val cw = Window.orderBy(col("q4")).rowsBetween(Window.unboundedPreceding, -1)
     val n = Window.partitionBy()
@@ -454,16 +481,10 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
-  val qualityPercentilesOracle: String = {
-    val q4 = OracleMath.stableRoundSql(
-      "least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + " +
-        "least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)
-    s"""WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS n_tok,
-       |       len(list_filter(string_split(text,' '),
-       |           w -> list_contains([${enStop.map("'" + _ + "'").mkString(", ")}], w))) AS sw,
-       |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl
+  val qualityPercentilesOracle: String =
+    s"""WITH base AS (SELECT doc_id, $qualityColsSql
        |      FROM documents),
-       |q AS (SELECT doc_id, CAST(floor($q4 * 10000.0 + 0.5) AS BIGINT) AS q4 FROM base),
+       |q AS (SELECT doc_id, CAST(floor($qualitySql * 10000.0 + 0.5) AS BIGINT) AS q4 FROM base),
        |cells AS (SELECT q4, count(*) AS cnt FROM q GROUP BY 1),
        |r AS (SELECT q4,
        |        CAST(coalesce(sum(cnt) OVER (ORDER BY q4
@@ -474,7 +495,6 @@ object TextOps {
        |  ${OracleMath.stableRoundSql("CAST(q.q4 AS DOUBLE) / 10000.0", 4)} AS quality_r,
        |  ${OracleMath.stableRoundSql("CAST(cum_before AS DOUBLE) / CAST(n - 1 AS DOUBLE)", 6)} AS pct_rank
        |FROM q JOIN r USING (q4) ORDER BY doc_id""".stripMargin
-  }
 
   val kappaLangIdOracle: String = {
     val labels = Seq("en", "de", "es")
@@ -505,22 +525,17 @@ object TextOps {
   }
 
   /** Quality scoring: composite of length, stopword ratio and word-shape
-    * signals (the filter stage of a training-data pipeline). Fixed double
-    * arithmetic order for oracle parity.
+    * signals (the filter stage of a training-data pipeline) — [[quality]]
+    * beside its stopword-ratio input.
     */
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _).cast("double") / nTok
     Tables.documents(spark, dir)
       .select(
         col("doc_id"),
         size(ws).cast("long").as("n_tokens"),
-        OracleMath.stableRound(swRatio, 4).as("stopword_ratio"),
-        OracleMath.stableRound(
-          least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 + least(meanLen / 8.0, lit(1.0)) * 0.3,
-          4).as("quality"))
+        OracleMath.stableRound(stopRatio(ws), 4).as("stopword_ratio"),
+        quality(ws).as("quality"))
       .orderBy(col("doc_id"))
   }
 
@@ -593,16 +608,8 @@ object TextOps {
     *
     * The interesting part at scale is the GLOBAL running sum: a naive
     * `Window.orderBy` with no partition key collapses the whole corpus into
-    * ONE task. This uses the standard two-pass distributed prefix-sum
-    * instead: range-partition by doc_id, take per-partition token totals
-    * (one row per partition — driver-tiny), turn them into per-partition
-    * prefix offsets, then a partition-LOCAL cumulative window plus the
-    * broadcast offset. Every pass is fully parallel; the only sequential
-    * state is the n_partitions-row offset table.
-    *
-    * The partitioned view is persisted before the offsets are collected so
-    * both passes observe the SAME range boundaries (RangePartitioner samples
-    * its bounds; collect-then-recompute could see a different partitioning).
+    * ONE task. This uses [[PrefixSum]]'s two-pass distributed prefix sum
+    * instead ([[cumTokens]]).
     */
   def packSequences(spark: SparkSession, dir: String, budget: Long = 512): DataFrame =
     cumTokens(spark, dir)
@@ -611,29 +618,16 @@ object TextOps {
       .orderBy(col("doc_id"))
 
   /** (doc_id, n_tokens, cum_before) with the GLOBAL doc_id-ordered running
-    * token count before each doc — the q102 two-pass prefix sum, shared
-    * with the q278 straddle curve.
+    * token count before each doc — the [[PrefixSum]] two-pass prefix sum
+    * (exclusive = inclusive − own tokens), shared by q102's packing and the
+    * q278 straddle curve.
     */
   private[ops] def cumTokens(spark: SparkSession, dir: String): DataFrame = {
-    val nParts = math.max(2, spark.sparkContext.defaultParallelism / 4)
-    val parts = Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), size(words(col("text"))).cast("long").as("n_tokens"))
-      .repartitionByRange(nParts, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .persistTracked()
-    // bounded-collect: one (pid, total) row per partition — O(#partitions)
-    val totals = parts.groupBy(col("pid")).agg(sum(col("n_tokens")).as("t"))
-      .orderBy(col("pid")).collect().map(r => (r.getInt(0), r.getLong(1)))
-    val offsets = totals.map(_._1).zip(totals.map(_._2).scanLeft(0L)(_ + _))
-    val offsetCol = offsets.foldLeft(lit(0L)) { case (acc, (pid, off)) =>
-      when(col("pid") === pid, lit(off)).otherwise(acc)
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("doc_id"))
-    parts.withColumn("cum_before",
-      sum(col("n_tokens")).over(w) - col("n_tokens") + offsetCol)
-      .select(col("doc_id"), col("n_tokens"), col("cum_before"))
+    PrefixSum.cumSums(docs, Seq(col("doc_id")), Seq("tok" -> col("n_tokens")),
+        PrefixSum.defaultParts(spark)).df
+      .select(col("doc_id"), col("n_tokens"), (col("cum_tok") - col("n_tokens")).as("cum_before"))
   }
 
   /** Intra-document repetition (Gopher-style quality signal): the fraction
@@ -1296,15 +1290,9 @@ object TextOps {
                  budget: Long = TrimBudgetTokens): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
     val scored = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), size(ws).cast("long").as("n_tokens"),
-        OracleMath.stableRound(
-          least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-            least(meanLen / 8.0, lit(1.0)) * 0.3, 4).as("quality_r"))
+        quality(ws).as("quality_r"))
     val w = Window.partitionBy(col("source"))
       .orderBy(col("quality_r").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1330,16 +1318,9 @@ object TextOps {
   def mixAllocation(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
     val perSource = Tables.documents(spark, dir)
       .select(col("source"), size(ws).cast("long").as("n_tokens"),
-        OracleMath.stableRound(
-          least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-            least(meanLen / 8.0, lit(1.0)) * 0.3, 4)
-          .cast(org.apache.spark.sql.types.DecimalType(12, 4)).as("q"))
+        quality(ws).cast(org.apache.spark.sql.types.DecimalType(12, 4)).as("q"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("avail_tokens"),
         sum(col("q")).as("q_sum"))
@@ -1364,12 +1345,10 @@ object TextOps {
   }
 
   val mixAllocationOracle: String =
-    s"""WITH base AS (SELECT source, len(string_split(text,' ')) AS n_tok,
-       |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
-       |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl
+    s"""WITH base AS (SELECT source, $qualityColsSql
        |      FROM documents),
        |q AS (SELECT source, n_tok,
-       |       CAST(${OracleMath.stableRoundSql("least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)} AS DECIMAL(12,4)) AS qr
+       |       CAST($qualitySql AS DECIMAL(12,4)) AS qr
        |      FROM base),
        |s AS (SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS avail_tokens,
        |        sum(qr) AS q_sum
@@ -1398,16 +1377,10 @@ object TextOps {
   def canonicalPick(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
-    val wkey = md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
+    val wkey = wordSetKey(col("text"))
     val scored = Tables.documents(spark, dir)
       .select(wkey.as("wkey"), col("doc_id"), size(ws).cast("long").as("n_tokens"),
-        OracleMath.stableRound(
-          least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-            least(meanLen / 8.0, lit(1.0)) * 0.3, 4).as("quality_r"))
+        quality(ws).as("quality_r"))
     val pick = Window.partitionBy(col("wkey")).orderBy(col("quality_r").desc, col("doc_id"))
     scored
       .withColumn("rn", row_number().over(pick))
@@ -1422,13 +1395,11 @@ object TextOps {
   }
 
   val canonicalPickOracle: String =
-    s"""WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS n_tok,
-       |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
-       |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl,
-       |       md5(array_to_string(list_sort(list_distinct(string_split(text,' '))), ' ')) AS wkey
+    s"""WITH base AS (SELECT doc_id, $qualityColsSql,
+       |       $wordSetKeySql AS wkey
        |      FROM documents),
        |q AS (SELECT wkey, doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
-       |       ${OracleMath.stableRoundSql("least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)} AS quality_r
+       |       $qualitySql AS quality_r
        |      FROM base),
        |r AS (SELECT *, row_number() OVER (PARTITION BY wkey ORDER BY quality_r DESC, doc_id) AS rn,
        |        count(*) OVER (PARTITION BY wkey) AS gsz
@@ -1453,18 +1424,11 @@ object TextOps {
   def paretoDocs(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
     val scored = Tables.documents(spark, dir)
       .select(col("doc_id"), size(ws).cast("long").as("n_tokens"),
         // floor(x·10⁴ + 0.5): Spark's long cast TRUNCATES and DuckDB's
         // ROUNDS — the explicit half-up floor is the one shape both agree on
-        floor(OracleMath.stableRound(
-          least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-            least(meanLen / 8.0, lit(1.0)) * 0.3, 4) * 10000.0 + lit(0.5))
-          .cast("long").as("q4"))
+        floor(quality(ws) * 10000.0 + lit(0.5)).cast("long").as("q4"))
     // dominance thresholds live on the BOUNDED q4 domain (4-dp quality in
     // [0,1] ⇒ ≤ 10001 distinct cells): per-q4 min length is one hash
     // aggregate over the corpus; the strict-preceding cumulative min then
@@ -1487,12 +1451,10 @@ object TextOps {
   }
 
   val paretoDocsOracle: String =
-    s"""WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS n_tok,
-       |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
-       |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl
+    s"""WITH base AS (SELECT doc_id, $qualityColsSql
        |      FROM documents),
        |q AS (SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
-       |       CAST(floor(${OracleMath.stableRoundSql("least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)} * 10000.0 + 0.5) AS BIGINT) AS q4
+       |       CAST(floor($qualitySql * 10000.0 + 0.5) AS BIGINT) AS q4
        |      FROM base),
        |m AS (SELECT *,
        |        min(n_tokens) OVER (ORDER BY q4 DESC
@@ -1624,7 +1586,7 @@ object TextOps {
     * WHO is duplicating WHOM.
     */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val wkey = md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
+    val wkey = wordSetKey(col("text"))
     val sk = Tables.documents(spark, dir)
       .select(col("source"), wkey.as("wkey")).distinct()
     val perSource = sk.groupBy(col("source")).agg(count(lit(1)).as("n_groups"))
@@ -1644,7 +1606,7 @@ object TextOps {
 
   val sourceOverlapOracle: String =
     s"""WITH sk AS (SELECT DISTINCT source,
-       |    md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS wkey
+       |    $wordSetKeySql AS wkey
        |  FROM documents),
        |ps AS (SELECT source, count(*) AS n_groups FROM sk GROUP BY 1),
        |sh AS (SELECT a.source AS source_a, b.source AS source_b, count(*) AS n_shared
@@ -1912,14 +1874,7 @@ object TextOps {
   def trimmedQuality(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
-    val qual = OracleMath.stableRound(
-      least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-        least(meanLen / 8.0, lit(1.0)) * 0.3, 4)
-      .cast(org.apache.spark.sql.types.DecimalType(12, 4))
+    val qual = quality(ws).cast(org.apache.spark.sql.types.DecimalType(12, 4))
     val w = Window.partitionBy(col("source")).orderBy(col("q"), col("doc_id"))
     Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"), qual.as("q"))
@@ -1942,12 +1897,10 @@ object TextOps {
   }
 
   val trimmedQualityOracle: String =
-    s"""WITH base AS (SELECT doc_id, source, len(string_split(text,' ')) AS n_tok,
-       |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
-       |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl
+    s"""WITH base AS (SELECT doc_id, source, $qualityColsSql
        |      FROM documents),
        |q AS (SELECT source, doc_id,
-       |       CAST(${OracleMath.stableRoundSql("least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)} AS DECIMAL(12,4)) AS q
+       |       CAST($qualitySql AS DECIMAL(12,4)) AS q
        |      FROM base),
        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source ORDER BY q, doc_id) AS BIGINT) AS rn,
        |        CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n,
@@ -2095,16 +2048,10 @@ object TextOps {
   def retentionBias(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = words(col("text"))
-    val nTok = size(ws).cast("double")
-    val swRatio = size(filter(ws, w => w.isInCollection(enStop))).cast("double") / nTok
-    val meanLen = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
-      .cast("double") / nTok
-    val wkey = md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
+    val wkey = wordSetKey(col("text"))
     val scored = Tables.documents(spark, dir)
       .select(wkey.as("wkey"), col("doc_id"), col("source"),
-        OracleMath.stableRound(
-          least(nTok / 100.0, lit(1.0)) * 0.4 + swRatio * 0.3 +
-            least(meanLen / 8.0, lit(1.0)) * 0.3, 4).as("quality_r"))
+        quality(ws).as("quality_r"))
     val pick = Window.partitionBy(col("wkey")).orderBy(col("quality_r").desc, col("doc_id"))
     val perSrc = scored
       .withColumn("kept", when(row_number().over(pick) === 1, 1L).otherwise(0L))
@@ -2121,13 +2068,11 @@ object TextOps {
   }
 
   val retentionBiasOracle: String =
-    s"""WITH base AS (SELECT doc_id, source, len(string_split(text,' ')) AS n_tok,
-       |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
-       |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl,
-       |       md5(array_to_string(list_sort(list_distinct(string_split(text,' '))), ' ')) AS wkey
+    s"""WITH base AS (SELECT doc_id, source, $qualityColsSql,
+       |       $wordSetKeySql AS wkey
        |      FROM documents),
        |q AS (SELECT wkey, doc_id, source,
-       |       ${OracleMath.stableRoundSql("least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)} AS quality_r
+       |       $qualitySql AS quality_r
        |      FROM base),
        |r AS (SELECT source,
        |        CASE WHEN row_number() OVER (PARTITION BY wkey ORDER BY quality_r DESC, doc_id) = 1
@@ -2979,12 +2924,10 @@ object TextOps {
     "q303_hill_tail" -> hillTailOracle,
     "q305_wasserstein_lengths" -> wassersteinLengthsOracle,
     "q183_budget_trim" ->
-      s"""WITH base AS (SELECT doc_id, source, len(string_split(text,' ')) AS n_tok,
-         |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
-         |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl
+      s"""WITH base AS (SELECT doc_id, source, $qualityColsSql
          |      FROM documents),
          |q AS (SELECT doc_id, source, n_tok,
-         |       ${OracleMath.stableRoundSql("least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)} AS quality_r
+         |       $qualitySql AS quality_r
          |      FROM base),
          |c AS (SELECT *, coalesce(sum(n_tok) OVER (PARTITION BY source
          |        ORDER BY quality_r DESC, doc_id
@@ -3242,10 +3185,8 @@ object TextOps {
     "q32_quality_score" ->
       s"""SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
          | ${OracleMath.stableRoundSql("sw / CAST(n_tok AS DOUBLE)", 4)} AS stopword_ratio,
-         | ${OracleMath.stableRoundSql("least(CAST(n_tok AS DOUBLE)/100.0, 1.0)*0.4 + (sw / CAST(n_tok AS DOUBLE))*0.3 + least((CAST(wl AS DOUBLE)/CAST(n_tok AS DOUBLE))/8.0, 1.0)*0.3", 4)} AS quality
-         |FROM (SELECT doc_id, len(string_split(text,' ')) AS n_tok,
-         |       CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) AS sw,
-         |       list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS wl
+         | $qualitySql AS quality
+         |FROM (SELECT doc_id, $qualityColsSql
          |      FROM documents)
          |ORDER BY doc_id""".stripMargin,
     "q33_fingerprint" ->

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.EventOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -25,15 +26,13 @@ object LateSessionStream {
 
   final case class BufState(events: Vector[(Long, Long)]) // (minute, event_id)
 
-  private val gapSeconds = 1800L
-
   /** Exact sessions from a complete (minute, event_id) multiset. */
   def sessionsOf(events: Seq[(Long, Long)]): (Long, Long) = {
     val sorted = events.sorted
     var sessions = 0L
     var lastMinute = Long.MinValue
     sorted.foreach { case (m, _) =>
-      if (lastMinute == Long.MinValue || m - lastMinute > gapSeconds) sessions += 1
+      if (EventOps.newSession(lastMinute, m)) sessions += 1
       lastMinute = m
     }
     (sessions, sorted.size.toLong)

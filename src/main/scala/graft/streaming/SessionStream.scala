@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.EventOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -38,8 +39,6 @@ object SessionStream {
     StructField("props", StringType),
   ))
 
-  private val gapSeconds = 1800L
-
   /** One state transition: events of a user within a microbatch, ordered by
     * (minute, event_id) — the same deterministic order the batch window uses.
     */
@@ -47,7 +46,7 @@ object SessionStream {
       state: GroupState[SessionState]): UserSessions = {
     var s = state.getOption.getOrElse(SessionState(Long.MinValue, 0L, 0L))
     events.toSeq.sortBy(e => (e.minute, e.event_id)).foreach { e =>
-      val newSession = s.lastMinute == Long.MinValue || e.minute - s.lastMinute > gapSeconds
+      val newSession = EventOps.newSession(s.lastMinute, e.minute)
       s = SessionState(e.minute,
         s.sessions + (if (newSession) 1L else 0L),
         s.events + 1L)

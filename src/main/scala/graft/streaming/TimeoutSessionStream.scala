@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.EventOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -43,8 +44,6 @@ object TimeoutSessionStream {
     */
   final case class TEv(user_id: Long, minute: Long, event_id: Long, ts: java.sql.Timestamp)
 
-  private val gapSeconds = 1800L
-
   def updateWithTimeout(userId: Long, events: Iterator[TEv],
       state: GroupState[IncState]): Iterator[IncEmit] = {
     if (state.hasTimedOut) {
@@ -55,14 +54,14 @@ object TimeoutSessionStream {
     } else {
       var s = state.getOption.getOrElse(IncState(-1L, Long.MinValue, 0L, 0L))
       events.toSeq.sortBy(e => (e.minute, e.event_id)).foreach { e =>
-        val newSession = s.lastMinute == Long.MinValue || e.minute - s.lastMinute > gapSeconds
+        val newSession = EventOps.newSession(s.lastMinute, e.minute)
         s = IncState(if (s.incMinute < 0L) e.minute else s.incMinute, e.minute,
           s.sessions + (if (newSession) 1L else 0L), s.events + 1L)
       }
       state.update(s)
       // strictly above the current watermark: in-order time-split arrival
       // means every event in this batch is >= watermark + delay
-      state.setTimeoutTimestamp((s.lastMinute + gapSeconds + 60L) * 1000L)
+      state.setTimeoutTimestamp(EventOps.sessionDeadlineMs(s.lastMinute))
       Iterator.single(IncEmit(userId, s.incMinute, s.sessions, s.events))
     }
   }

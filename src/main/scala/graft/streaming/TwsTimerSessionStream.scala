@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.EventOps
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
@@ -27,8 +28,6 @@ object TwsTimerSessionStream {
                             events: Long, timerMs: Long)
   final case class IncEmit(user_id: Long, inc_minute: Long, n_sessions: Long, n_events: Long)
 
-  private val gapSeconds = 1800L
-
   class SessionProcessor extends StatefulProcessor[Long, TEv, IncEmit] {
     @transient private var st: ValueState[IncState] = _
 
@@ -40,12 +39,12 @@ object TwsTimerSessionStream {
                                  timerValues: TimerValues): Iterator[IncEmit] = {
       var s = if (st.exists()) st.get() else IncState(-1L, Long.MinValue, 0L, 0L, -1L)
       rows.toSeq.sortBy(e => (e.minute, e.event_id)).foreach { e =>
-        val newSession = s.lastMinute == Long.MinValue || e.minute - s.lastMinute > gapSeconds
+        val newSession = EventOps.newSession(s.lastMinute, e.minute)
         s = IncState(if (s.incMinute < 0L) e.minute else s.incMinute, e.minute,
           s.sessions + (if (newSession) 1L else 0L), s.events + 1L, s.timerMs)
       }
       if (s.timerMs >= 0L) getHandle.deleteTimer(s.timerMs)
-      val t = (s.lastMinute + gapSeconds + 60L) * 1000L
+      val t = EventOps.sessionDeadlineMs(s.lastMinute)
       getHandle.registerTimer(t)
       st.update(s.copy(timerMs = t))
       Iterator.single(IncEmit(key, s.incMinute, s.sessions, s.events))

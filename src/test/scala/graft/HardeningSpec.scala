@@ -986,18 +986,32 @@ class HardeningSpec extends AnyFunSuite {
     assert(banded.toSet.subsetOf(exact.toSet))
   }
 
+  /** The throwing query of the Verify failure test: a named frame and a
+    * cause that the stderr report must keep. */
+  private def failingQuery(): Nothing =
+    throw new IllegalStateException("boom\tsecond\nline", new ArithmeticException("root cause"))
+
   test("Verify records a failed query in verify_failures.tsv and still writes the others") {
     val out = java.nio.file.Files.createTempDirectory("graft_verify_fail").toFile
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
     try {
       val queries = Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
         "qa_ok" -> ((s, _) => s.range(3).toDF("id")),
-        "qb_throws" -> ((_, _) => throw new IllegalStateException("boom\tsecond\nline")))
-      Verify.dumpQueries(spark, sf, out.getPath, queries)
+        "qb_throws" -> ((_, _) => failingQuery()))
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      try Verify.dumpQueries(spark, sf, out.getPath, queries)
+      finally System.setErr(stderr)
       assert(spark.read.parquet(new java.io.File(out, "qa_ok").getPath).count() === 3L)
       assert(!new java.io.File(out, "qb_throws").exists())
       val lines = java.nio.file.Files.readAllLines(
         new java.io.File(out, Verify.FailuresFile).toPath).toArray.toSeq
       assert(lines === Seq("qb_throws\tjava.lang.IllegalStateException\tboom second line"))
+      // stderr keeps the whole trace: the thrower's frame and the cause chain
+      val report = err.toString("UTF-8")
+      assert(report.contains("[verify] qb_throws failed"))
+      assert(report.contains("HardeningSpec.failingQuery"), report)
+      assert(report.contains("Caused by: java.lang.ArithmeticException: root cause"), report)
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

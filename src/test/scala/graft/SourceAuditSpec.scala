@@ -41,7 +41,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint goes through `Caches`, and nothing sweeps the context's
   * persisted RDDs. One broadcast decision: only `Joins` broadcasts a side on
   * a condition or turns size-based broadcast off, and no per-family gate key
-  * is left.
+  * is left. One definition per shared corpus rule: the q32 quality score,
+  * the word set and its md5 key, the eval split and the session rule are
+  * each written once in Spark and once in oracle SQL.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -279,6 +281,35 @@ class SourceAuditSpec extends AnyFunSuite {
     val widths = matches(allMainSources, raw"withStatePartitions\(spark, \d".r)
     assert(widths.isEmpty,
       "\nA caller passes a state-partition count (it is a constant):\n" + widths.mkString("\n"))
+  }
+
+  test("one definition per shared corpus rule") {
+    // each rule's own formula text, not its bare constants (1800L also
+    // names NearestWindowSec and DecayWindowSec)
+    for ((what, pattern) <- Seq(
+        "Spark quality score (TextOps.quality)" -> raw"least\(\w+ / 100\.0, lit\(1\.0\)\) \* 0\.4",
+        "Spark stopword ratio (TextOps.stopRatio)" ->
+          raw"isInCollection\(enStop\)\)\)\.cast\(\"double\"\)",
+        "oracle quality score (TextOps.qualitySql)" ->
+          raw"least\(CAST\(n_tok AS DOUBLE\)/100\.0, 1\.0\)\*0\.4",
+        "oracle stopword hits (TextOps.qualityColsSql)" -> raw"AS DOUBLE\) AS sw\b",
+        "Spark word set (TextFunctions.wordSet)" -> raw"array_sort\(array_distinct\((words|split)\(",
+        "Spark word-set key (TextFunctions.wordSetKey)" -> raw"md5\(array_join\(",
+        "oracle word set (TextFunctions.wordSetSql)" -> raw"list_sort\(list_distinct\(string_split\(",
+        "oracle word-set key (TextFunctions.wordSetKeySql)" -> raw"md5\(array_to_string\(",
+        "Spark eval split (RetrievalOps.isEval)" -> raw"pmod\(col\(\"vec_id\"\) \* lit\([\w.]*EvalHashMult",
+        "oracle eval split (RetrievalOps.evalSql)" -> raw"\(vec_id \* \$$\{?[\w.]*EvalHashMult",
+        "session gap (EventOps.SessionGapSec)" -> raw"SessionGapSec = |gapSeconds = ",
+        "new-session test (EventOps.newSession)" -> raw"- [\w.]*[lL]astMinute >",
+        "session timer deadline (EventOps.sessionDeadlineMs)" -> raw"[lL]astMinute \+ \w+ \+ 60L",
+        "q18 batch session column (EventOps.sessionCounts)" ->
+          raw"unix_timestamp\(col\(\"m\"\)\) - unix_timestamp\(col\(\"prev_m\"\)\)",
+        "oracle session rule (EventOps.sessionCountsOracle)" ->
+          raw"date_diff\('second', prev_m, m\) > ")) {
+      val sites = matches(allMainSources, pattern.r).filterNot(_.split(": ", 2)(1).startsWith("*"))
+      assert(sites.size == 1,
+        s"\nExpected the $what exactly once, found ${sites.size}:\n" + sites.mkString("\n"))
+    }
   }
 
   test("one broadcast decision: one size gate and one scale-emulation session") {
