@@ -2960,4 +2960,319 @@ object CoreOps {
       |FROM membership m LEFT JOIN spend s ON m.k = s.k
       |GROUP BY m.root
       |ORDER BY m.root""".stripMargin
+
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def pricingSummaryOracle: String =
+    """SELECT l_returnflag, l_linestatus,
+      | round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
+      | round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_base_price,
+      | CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+      | CAST(floor((CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*)) * 10000.0 + 0.5) AS DOUBLE) / 10000.0 AS avg_qty,
+      | CAST(floor((CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)) * 10000.0 + 0.5) AS DOUBLE) / 10000.0 AS avg_price,
+      | count(*) AS count_order
+      |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def priorityAggOracle: String =
+    """SELECT o_orderpriority, count(*) AS vacancy_count,
+      | CAST(floor((CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)) + 0.5) AS DOUBLE) AS avg_price
+      |FROM orders GROUP BY 1 ORDER BY vacancy_count DESC, o_orderpriority LIMIT 20""".stripMargin
+  def revenueByNationOracle: String =
+    """SELECT n_name,
+      | CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+      | count(*) AS n_items
+      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      | JOIN customer ON o_custkey = c_custkey
+      | JOIN nation ON c_nationkey = n_nationkey
+      | JOIN region ON n_regionkey = r_regionkey
+      |GROUP BY 1 ORDER BY n_items DESC, n_name""".stripMargin
+  def marketShareOracle: String =
+    """SELECT o_orderpriority, vacancy_count,
+      | CAST(floor((vacancy_count * CAST(100.0 AS DOUBLE) / sum(vacancy_count) OVER ()) * 10.0 + 0.5) AS DOUBLE) / 10.0 AS market_share_pct
+      |FROM (SELECT o_orderpriority, count(*) AS vacancy_count FROM orders
+      |      WHERE o_orderpriority NOT IN ('4-NOT SPECIFIED') GROUP BY 1)
+      |ORDER BY vacancy_count DESC, o_orderpriority""".stripMargin
+  def topkBrandPercentOracle: String =
+    """SELECT p_brand, cnt, CAST(floor((cnt * CAST(100.0 AS DOUBLE) / total) * 10.0 + 0.5) AS DOUBLE) / 10.0 AS pct
+      |FROM (SELECT p_brand, count(*) AS cnt, sum(count(*)) OVER () AS total FROM part GROUP BY 1)
+      |ORDER BY cnt DESC, p_brand LIMIT 10""".stripMargin
+  def conditionalRateOracle: String =
+    """SELECT o_orderstatus, count(*) AS total,
+      | CAST(sum(CASE WHEN o_orderpriority NOT IN ('3-MEDIUM','4-NOT SPECIFIED') THEN 1 ELSE 0 END) AS BIGINT) AS classified,
+      | CAST(floor((sum(CASE WHEN o_orderpriority NOT IN ('3-MEDIUM','4-NOT SPECIFIED') THEN 1 ELSE 0 END) * CAST(100.0 AS DOUBLE) / count(*)) * 10.0 + 0.5) AS DOUBLE) / 10.0 AS success_rate_pct
+      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
+  def failingExamplesOracle: String =
+    """SELECT p_partkey,
+      | CASE WHEN length(p_name) > 8 THEN substring(p_name, 1, 8) || '...' ELSE p_name END AS example
+      |FROM part WHERE p_type = 'ECONOMY' ORDER BY p_partkey LIMIT 10""".stripMargin
+  def rollupCountsOracle: String =
+    """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
+      |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+      |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin
+  def unionDedupOracle: String =
+    """SELECT l_returnflag, count(*) AS cnt
+      |FROM (SELECT DISTINCT * FROM (SELECT * FROM lineitem UNION ALL SELECT * FROM lineitem))
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  def dedupByKeyDeterministicOracle: String =
+    """SELECT l_orderkey, l_linenumber, l_partkey FROM (
+      | SELECT l_orderkey, l_linenumber, l_partkey,
+      |  row_number() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey, l_suppkey) AS rn
+      | FROM lineitem) WHERE rn = 1 ORDER BY l_orderkey""".stripMargin
+  def distinctKeysOracle: String =
+    """SELECT DISTINCT trim(p_name) AS key FROM part WHERE trim(p_name) <> '' ORDER BY key"""
+  def semiJoinOrdersOracle: String =
+    """SELECT o_orderkey, o_orderpriority FROM orders
+      |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity >= 49.0)
+      |ORDER BY o_orderkey""".stripMargin
+  def antiJoinCustomersOracle: String =
+    """SELECT c_custkey, c_name, c_mktsegment FROM customer
+      |WHERE NOT EXISTS (SELECT 1 FROM orders
+      |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+      |ORDER BY c_custkey""".stripMargin
+  def topOrdersPerPriorityOracle: String =
+    """SELECT o_orderpriority, rk, o_orderkey, o_totalprice FROM (
+      | SELECT o_orderpriority, o_orderkey, o_totalprice,
+      |  row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rk
+      | FROM orders) WHERE rk <= 3 ORDER BY o_orderpriority, rk""".stripMargin
+  def saltedAggOracle: String =
+    """SELECT o_orderpriority, count(*) AS cnt,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
+  def quantilesOracle: String =
+    s"""SELECT l_returnflag,
+       | ${graft.ops.OracleMath.stableRoundSql("quantile_cont(l_quantity, 0.5)", 4)} AS median_qty,
+       | ${graft.ops.OracleMath.stableRoundSql("quantile_cont(l_extendedprice, 0.9)", 4)} AS p90_price,
+       | count(*) AS n
+       |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
+  def monthlyOrdersOracle: String =
+    """SELECT date_trunc('month', o_orderdate) AS month, count(*) AS n_orders,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
+  def customerSetOpsOracle: String =
+    """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+      |INTERSECT
+      |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
+      |EXCEPT
+      |SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
+      |ORDER BY o_custkey""".stripMargin
+  def statsAggOracle: String =
+    s"""SELECT l_returnflag,
+       | ${graft.ops.OracleMath.stableRoundSql("corr(l_quantity, l_extendedprice)", 6)} AS qty_price_corr,
+       | ${graft.ops.OracleMath.stableRoundSql("stddev_samp(l_discount)", 6)} AS discount_stddev,
+       | count(*) AS n
+       |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
+  def pivotCountsOracle: String =
+    """SELECT o_orderpriority,
+      | CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
+      | CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
+      | CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
+      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
+  def runningCustomerSpendOracle: String =
+    """SELECT o_custkey, o_orderkey,
+      | CAST(row_number() OVER w AS BIGINT) AS seq,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS running_spend,
+      | coalesce(CAST(lag(CAST(o_totalprice AS DECIMAL(18,2)), 1) OVER w AS DOUBLE), 0.0) AS prev_price
+      |FROM orders
+      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+      |ORDER BY o_custkey, seq""".stripMargin
+  def rangeJoinMonthlyOracle: String =
+    """SELECT m AS month, count(*) AS n_orders,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+      |FROM generate_series(TIMESTAMP '1995-01-01', TIMESTAMP '2001-08-01', INTERVAL 1 MONTH) g(m)
+      |JOIN orders ON o_orderdate >= m AND o_orderdate < m + INTERVAL 1 MONTH
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  def cubeCountsOracle: String =
+    """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
+      |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+      |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin
+  def rankFunctionsOracle: String =
+    """SELECT o_orderpriority, o_orderkey,
+      | CAST(dense_rank() OVER w AS BIGINT) AS drk,
+      | percent_rank() OVER w AS prk,
+      | CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+      | first_value(o_orderkey) OVER w AS top_key
+      |FROM orders
+      |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey)
+      |QUALIFY drk <= 5
+      |ORDER BY o_orderpriority, drk, o_orderkey""".stripMargin
+  def fullOuterCustomerOrdersOracle: String =
+    """SELECT coalesce(c_custkey, o_custkey) AS custkey,
+      | CASE WHEN c_custkey IS NULL THEN 'missing' ELSE c_mktsegment END AS segment,
+      | coalesce(n_orders, 0) AS n_orders
+      |FROM customer
+      |FULL OUTER JOIN (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1) o
+      |  ON c_custkey = o_custkey
+      |ORDER BY custkey""".stripMargin
+  def multisetOpsOracle: String =
+    """SELECT o_custkey, count(*) AS n_surplus FROM (
+      | SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+      | EXCEPT ALL
+      | SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  def groupingSetsCountsOracle: String =
+    """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+      |FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
+      |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin
+  def correlatedSubqueriesOracle: String =
+    """SELECT c_mktsegment,
+      | count(*) AS n_customers,
+      | CAST(sum(CASE WHEN EXISTS (SELECT 1 FROM orders o
+      |                            WHERE o.o_custkey = c.c_custkey
+      |                              AND o.o_orderpriority = '1-URGENT')
+      |          THEN 1 ELSE 0 END) AS BIGINT) AS n_with_urgent,
+      | CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM orders o
+      |                                WHERE o.o_custkey = c.c_custkey)
+      |          THEN 1 ELSE 0 END) AS BIGINT) AS n_no_orders,
+      | CAST(sum((SELECT count(*) FROM orders o
+      |           WHERE o.o_custkey = c.c_custkey
+      |             AND o.o_totalprice > 0.5 * (SELECT max(o_totalprice) FROM orders)))
+      |   AS BIGINT) AS n_big_orders
+      |FROM customer c
+      |GROUP BY c_mktsegment
+      |ORDER BY c_mktsegment""".stripMargin
+  def unpivotMeasuresOracle: String =
+    """WITH a AS (SELECT o_orderstatus, CAST(count(*) AS DOUBLE) AS n_orders,
+      |             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
+      |             max(o_totalprice) AS max_price
+      |           FROM orders GROUP BY 1)
+      |SELECT o_orderstatus, measure, value FROM (
+      | SELECT o_orderstatus, 'n_orders' AS measure, n_orders AS value FROM a
+      | UNION ALL SELECT o_orderstatus, 'sum_price', sum_price FROM a
+      | UNION ALL SELECT o_orderstatus, 'max_price', max_price FROM a)
+      |ORDER BY o_orderstatus, measure""".stripMargin
+  def rollingSpendOracle: String =
+    """SELECT o_orderkey, o_custkey,
+      | CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+      |   OVER (PARTITION BY o_custkey
+      |         ORDER BY date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
+      |         RANGE BETWEEN 89 PRECEDING AND CURRENT ROW) AS DOUBLE) AS spend_90d
+      |FROM orders
+      |ORDER BY o_custkey, day, o_orderkey""".stripMargin
+  def runtimeFilterJoinOracle: String =
+    """SELECT l_returnflag, count(*) AS n_items,
+      | CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      |WHERE o_orderpriority = '1-URGENT'
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  // sketch-envelope oracles: the estimate's documented error bound is a
+  // boolean the SQL asserts TRUE; exact values hash-check alongside
+  def approxDistinctOracle: String =
+    """SELECT event_type, count(*) AS n,
+      | count(DISTINCT user_id) AS n_users_exact, TRUE AS approx_ok
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  def upsertOrdersOracle: String =
+    """WITH updates AS (
+      |  SELECT o_orderkey, 'X' AS o_orderstatus, o_totalprice * 1.1 AS o_totalprice
+      |  FROM orders WHERE o_orderkey % 100 = 0),
+      |merged AS (
+      |  SELECT * FROM updates
+      |  UNION ALL
+      |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
+      |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates))
+      |SELECT o_orderstatus, count(*) AS n,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+      |FROM merged GROUP BY 1 ORDER BY 1""".stripMargin
+  def approxQuantilesOracle: String =
+    s"""SELECT l_returnflag,
+       | ${graft.ops.OracleMath.stableRoundSql("quantile_cont(l_extendedprice, 0.5)", 4)} AS median_exact,
+       | TRUE AS approx_ok, count(*) AS n
+       |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
+  def scd2HistoryOracle: String =
+    """WITH ordered AS (
+      |  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
+      |         lag(o_orderpriority) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev
+      |  FROM orders),
+      |changes AS (SELECT * FROM ordered WHERE prev IS NULL OR prev <> o_orderpriority)
+      |SELECT o_custkey, o_orderpriority AS priority, o_orderdate AS valid_from,
+      |       lead(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS valid_to,
+      |       lead(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) IS NULL AS is_current
+      |FROM changes ORDER BY o_custkey, valid_from, priority""".stripMargin
+  // -1-before-+1 tie order in the sweep = half-open [ship, ship+7d)
+  def transitSweepOracle: String =
+    """WITH ev AS (
+      |  SELECT l_shipdate AS t, 1 AS delta FROM lineitem
+      |  UNION ALL SELECT l_shipdate + INTERVAL 7 DAY, -1 FROM lineitem),
+      |run AS (
+      |  SELECT date_trunc('month', t) AS month,
+      |         sum(delta) OVER (ORDER BY t, delta) AS conc
+      |  FROM ev)
+      |SELECT month, CAST(max(conc) AS BIGINT) AS max_in_transit
+      |FROM run GROUP BY 1 ORDER BY 1""".stripMargin
+  def columnProfileOracle: String = {
+    def prof(c: String, numeric: Boolean): String = {
+      val mn = if (numeric) s"CAST(CAST(min($c) AS DECIMAL(18,2)) AS VARCHAR)" else s"min($c)"
+      val mx = if (numeric) s"CAST(CAST(max($c) AS DECIMAL(18,2)) AS VARCHAR)" else s"max($c)"
+      s"SELECT '$c' AS col_name, count($c) AS n_nonnull, count(DISTINCT $c) AS n_distinct, $mn AS min_s, $mx AS max_s FROM orders"
+    }
+    Seq(prof("o_custkey", true), prof("o_orderkey", true),
+      prof("o_orderpriority", false), prof("o_orderstatus", false),
+      prof("o_totalprice", true))
+      .mkString("", "\nUNION ALL ", "\nORDER BY col_name")
+  }
+  def bigSpenderOrdersOracle: String =
+    """SELECT c_name, o_orderkey, o_totalprice, CAST(qty AS DOUBLE) AS sum_qty
+      |FROM (SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
+      |      FROM lineitem GROUP BY 1
+      |      HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 180) b
+      |JOIN orders ON o_orderkey = l_orderkey
+      |JOIN customer ON o_custkey = c_custkey
+      |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin
+  def argmaxPerGroupOracle: String =
+    """SELECT o_orderpriority,
+      | arg_max(o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) * 10000000000 + o_orderkey) AS top_key,
+      | arg_min(o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) * 10000000000 + o_orderkey) AS bottom_key,
+      | max(o_totalprice) AS max_price,
+      | min(o_totalprice) AS min_price,
+      | count(*) AS n
+      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
+  def lateralTopOrdersOracle: String =
+    """SELECT c_custkey, c_mktsegment, o_orderkey, o_totalprice
+      |FROM customer, LATERAL (
+      |  SELECT o_orderkey, o_totalprice FROM orders
+      |  WHERE o_custkey = c_custkey
+      |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
+      |WHERE c_custkey <= 100
+      |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin
+  def notInNullAwareOracle: String =
+    """SELECT c_mktsegment,
+      |       count(*) AS n_quiet,
+      |       CAST(sum(CASE WHEN not_exists_form THEN 1 ELSE 0 END) AS BIGINT) AS n_quiet_ne
+      |FROM (
+      |  SELECT c_mktsegment,
+      |         c_custkey NOT IN (SELECT o_custkey FROM orders
+      |                           WHERE o_orderpriority = '1-URGENT') AS not_in_form,
+      |         NOT EXISTS (SELECT 1 FROM orders
+      |                     WHERE o_custkey = c_custkey
+      |                       AND o_orderpriority = '1-URGENT') AS not_exists_form
+      |  FROM customer)
+      |WHERE not_in_form
+      |GROUP BY c_mktsegment
+      |ORDER BY c_mktsegment""".stripMargin
+  def tdigestQuantilesOracle: String =
+    """SELECT l_returnflag, TRUE AS ok50, TRUE AS ok90, count(*) AS n
+      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
+  def saltedJoinOracle: String =
+    """SELECT s_nationkey, count(*) AS n_items,
+      | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+      |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  def keySkewProfileOracle: String = {
+    def side(key: String) =
+      s"""SELECT '$key' AS key_name, count(*) AS n_keys, CAST(sum(cnt) AS BIGINT) AS n_rows,
+         |  max(cnt) AS max_cnt,
+         |  ${graft.ops.OracleMath.stableRoundSql("quantile_cont(cnt, 0.5)", 4)} AS p50_cnt,
+         |  ${graft.ops.OracleMath.stableRoundSql("quantile_cont(cnt, 0.99)", 4)} AS p99_cnt
+         |FROM (SELECT $key AS k, count(*) AS cnt FROM lineitem GROUP BY 1)""".stripMargin
+    s"""SELECT key_name, n_keys, n_rows, max_cnt, p50_cnt, p99_cnt,
+       | ${graft.ops.OracleMath.stableRoundSql("max_cnt * CAST(n_keys AS DOUBLE) / n_rows", 4)} AS skew_ratio,
+       | (max_cnt * n_keys + n_rows - 1) // n_rows AS salt_factor,
+       | ${graft.ops.OracleMath.stableRoundSql("max_cnt * CAST(32 AS DOUBLE) / n_rows", 4)} AS ref32_straggler_ratio,
+       | CASE WHEN max_cnt * 64 <= 3 * n_rows THEN 1
+       |      ELSE LEAST(64, (max_cnt * 32 + n_rows - 1) // n_rows) END AS ref32_auto_salt
+       |FROM (${side("l_suppkey")}
+       |UNION ALL
+       |${side("l_orderkey")})
+       |ORDER BY key_name""".stripMargin
+  }
+  def dqAuditOracle: String = dqAuditSql("orders", "lineitem")
 }

@@ -1328,158 +1328,159 @@ object DedupOps {
        |FROM c WHERE i * 5 >= u * 4
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  def oracle: Map[String, String] = Map(
-    "q40_simhash" ->
-      s"""WITH $simhashCteSql
-         |SELECT doc_id, simhash FROM sh ORDER BY doc_id""".stripMargin,
-    // pigeonhole pair join: Hamming ≤ 3 on 64 bits forces agreement on one
-    // of the 4 16-bit bands; the OR-band join emits each pair once, the
-    // popcount verify is exact — same dataflow as the Spark plan
-    "q59_simhash_neardup" -> {
-      val shareBand = (0 until 4).map { k =>
-        val div = java.math.BigInteger.valueOf(2).pow(16 * k).toString
-        s"(a.shu // $div) % 65536 = (b.shu // $div) % 65536"
-      }.mkString(" OR ")
-      s"""WITH $simhashCteSql
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id AND ($shareBand)
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    // connected components in SQL: reach(node, r) enumerates every node r
-    // reachable from node over the symmetric near-dup edge set (UNION, not
-    // UNION ALL — the dedup is the fixpoint guarantee); cluster id = min
-    // reachable node. Tractable because components are small; the Spark side
-    // scales where this CTE cannot.
-    "q101_dedup_clusters" ->
-      s"""WITH RECURSIVE ds AS (
-        |  SELECT doc_id, $wordSetSql ws FROM documents),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM ds a JOIN ds b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws))) >= 0.9),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT doc_id AS node, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT reach.node, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-        |cc AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node)
-        |SELECT doc_id, cluster_id, count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-        |FROM cc ORDER BY doc_id""".stripMargin,
-    "q35_dedup_exact" ->
-      """SELECT min(doc_id) AS rep_doc_id, count(*) AS group_size
-        |FROM documents GROUP BY text ORDER BY rep_doc_id""".stripMargin,
-    "q36_dedup_wordset" ->
-      s"""SELECT min(doc_id) AS rep_doc_id, count(*) AS group_size,
-        | CAST(len(ws) AS BIGINT) AS set_size
-        |FROM (SELECT doc_id, $wordSetSql AS ws FROM documents)
-        |GROUP BY ws ORDER BY rep_doc_id""".stripMargin,
-    "q37_minhash_sigs" -> {
-      val sigSelects = (0 until MinhashK).map { i =>
-        s"list_min(list_transform(hs, h -> (${2L * i + 3}*h + ${7L * i + 1}) % ${P})) AS mh$i"
-      }.mkString(",\n ")
-      s"""SELECT doc_id, $sigSelects
-         |FROM (SELECT doc_id, list_transform(list_distinct(string_split(text,' ')), w -> ${wordHashSql("w")}) AS hs
-         |      FROM documents)
-         |ORDER BY doc_id""".stripMargin
-    },
-    "q71_ngram_jaccard" ->
-      s"""WITH bs AS (
-         |  SELECT doc_id, list_sort(list_distinct(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1]))) AS bg
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
-         |  WHERE len(ws) >= 2)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         | ${OracleMath.stableRoundSql("CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) / len(list_distinct(list_concat(a.bg, b.bg)))", 4)} AS jaccard
-         |FROM bs a JOIN bs b ON a.doc_id < b.doc_id
-         |WHERE CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) / len(list_distinct(list_concat(a.bg, b.bg))) >= 0.8
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // MinHash-LSH pairs ARE oracle-expressible: the signature family already
-    // hash-matches (q37), band collision is tuple equality on signature
-    // slices (the Spark side compacts the tuple through xxhash64, which is
-    // injective-in-practice — a collision could only ADD a candidate, which
-    // must then still pass the exact-Jaccard verify), and the verify is the
-    // same set-Jaccard as q38. So q39 moves from rows-check to hash-match.
-    "q153_lsh_recall" -> {
-      val k = LshBands * LshRows
-      val mhDefs = (0 until k).map { i =>
-        s"list_min(list_transform(hs, h -> (${2L * i + 3}*h + ${7L * i + 1}) % ${P})) AS mh$i"
-      }.mkString(",\n ")
-      // candidate CTE: one hash-joinable equi-join per band (UNION ALL with
-      // a band tag) — the prior CROSS JOIN bands + CASE predicate forced a
-      // quadratic nested loop in DuckDB, which dominated the sf0.1 sweep
-      val bandJoins = (0 until LshBands).map { b =>
-        val eq = (0 until LshRows)
-          .map(r => s"a.mh${b * LshRows + r} = c.mh${b * LshRows + r}").mkString(" AND ")
-        s"SELECT $b AS band, a.doc_id AS doc_a, c.doc_id AS doc_b\n" +
-          s"  FROM sigs a JOIN sigs c ON $eq AND a.doc_id < c.doc_id"
-      }.mkString("\n  UNION ALL\n  ")
-      val jacF = "CAST(len(list_intersect(a.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, c.ws)))"
-      val jacS = "CAST(len(list_intersect(s.ws, u.ws)) AS DOUBLE) / len(list_distinct(list_concat(s.ws, u.ws)))"
-      // exact-truth denominator: collapse identical word sets first (their
-      // within-group pairs are jac=1 by definition), then pair DISTINCT sets
-      // under a lossless integer length band — jac >= t forces
-      // |A| >= t·|B| and |B| >= t·|A|; the 89/100 bound is t slightly
-      // loosened so float wobble can only ADD candidate set-pairs, never
-      // drop a true one (the final jac predicate decides membership)
-      val lenBandPct = math.floor(NearDupThreshold * 100).toInt - 1
-      s"""WITH ds AS (
-         |  SELECT doc_id, $wordSetSql AS ws,
-         |         list_transform(list_distinct(string_split(text,' ')), w -> ${wordHashSql("w")}) AS hs
-         |  FROM documents),
-         |sigs AS (SELECT doc_id, $mhDefs FROM ds),
-         |bands AS (SELECT unnest(range(${LshBands})) AS band),
-         |cand AS (
-         |  $bandJoins),
-         |pb AS (SELECT band, count(*) AS n_cand FROM cand GROUP BY 1),
-         |fb AS (SELECT doc_a, doc_b, min(band) AS band FROM cand GROUP BY 1, 2),
-         |fbj AS (SELECT fb.band, $jacF AS jac
-         |        FROM fb JOIN ds a ON a.doc_id = fb.doc_a
-         |                JOIN ds c ON c.doc_id = fb.doc_b),
-         |nb AS (SELECT band, count(*) AS n_new,
-         |         sum(CASE WHEN jac >= $NearDupThreshold THEN 1 ELSE 0 END) AS n_new_true
-         |       FROM fbj GROUP BY 1),
-         |sets AS (SELECT ws, count(*) AS m FROM ds GROUP BY ws),
-         |tot AS (SELECT (SELECT coalesce(sum(m * (m - 1) // 2), 0) FROM sets)
-         |             + (SELECT coalesce(sum(s.m * u.m), 0)
-         |                FROM sets s JOIN sets u
-         |                  ON s.ws < u.ws
-         |                 AND 100 * len(s.ws) >= $lenBandPct * len(u.ws)
-         |                 AND 100 * len(u.ws) >= $lenBandPct * len(s.ws)
-         |                 AND $jacS >= $NearDupThreshold) AS n_true_total),
-         |r AS (SELECT b.band AS band, coalesce(pb.n_cand, 0) AS n_cand,
-         |        coalesce(nb.n_new, 0) AS n_new, coalesce(nb.n_new_true, 0) AS n_new_true
-         |      FROM bands b LEFT JOIN pb USING (band) LEFT JOIN nb USING (band))
-         |SELECT CAST(band AS BIGINT) AS band, CAST(n_cand AS BIGINT) AS n_cand,
-         | CAST(n_new AS BIGINT) AS n_new, CAST(n_new_true AS BIGINT) AS n_new_true,
-         | CAST(n_true_total AS BIGINT) AS n_true_total,
-         | CAST(sum(n_new_true) OVER (ORDER BY band) AS BIGINT) AS cum_true,
-         | ${OracleMath.stableRoundSql("CAST(sum(n_new_true) OVER (ORDER BY band) AS DOUBLE) / n_true_total", 6)} AS recall
-         |FROM r, tot ORDER BY band""".stripMargin
-    },
-    "q39_lsh_neardup" -> lshPairsOracleSql,
-    // the streaming banded sweep must converge to the SAME pair set as the
-    // batch q39 (banding is deterministic; bucket-state OR across
-    // microbatches is order-independent) — one oracle, two execution models
-    "q170_stream_lsh_neardup" -> lshPairsOracleSql,
-    "q142_delta_neardup" ->
-      s"""SELECT d.doc_id AS doc_delta, c.doc_id AS doc_corpus,
-        | ${OracleMath.stableRoundSql("CAST(len(list_intersect(d.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(d.ws, c.ws)))", 4)} AS jaccard
-        |FROM (SELECT doc_id, $wordSetSql ws
-        |      FROM documents WHERE doc_id % 5 = 0) d
-        |JOIN (SELECT doc_id, $wordSetSql ws
-        |      FROM documents WHERE doc_id % 5 <> 0) c
-        |  ON CAST(len(list_intersect(d.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(d.ws, c.ws))) >= 0.9
-        |ORDER BY doc_delta, doc_corpus""".stripMargin,
-    "q38_neardup_jaccard" ->
-      s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        | ${OracleMath.stableRoundSql("CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws)))", 4)} AS jaccard
-        |FROM (SELECT doc_id, $wordSetSql ws FROM documents) a
-        |JOIN (SELECT doc_id, $wordSetSql ws FROM documents) b
-        |  ON a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws))) >= 0.9
-        |ORDER BY doc_a, doc_b""".stripMargin,
-  )
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def dedupExactOracle: String =
+    """SELECT min(doc_id) AS rep_doc_id, count(*) AS group_size
+      |FROM documents GROUP BY text ORDER BY rep_doc_id""".stripMargin
+  def dedupWordSetOracle: String =
+    s"""SELECT min(doc_id) AS rep_doc_id, count(*) AS group_size,
+      | CAST(len(ws) AS BIGINT) AS set_size
+      |FROM (SELECT doc_id, $wordSetSql AS ws FROM documents)
+      |GROUP BY ws ORDER BY rep_doc_id""".stripMargin
+  def minhashSignaturesOracle: String = {
+    val sigSelects = (0 until MinhashK).map { i =>
+      s"list_min(list_transform(hs, h -> (${2L * i + 3}*h + ${7L * i + 1}) % ${P})) AS mh$i"
+    }.mkString(",\n ")
+    s"""SELECT doc_id, $sigSelects
+       |FROM (SELECT doc_id, list_transform(list_distinct(string_split(text,' ')), w -> ${wordHashSql("w")}) AS hs
+       |      FROM documents)
+       |ORDER BY doc_id""".stripMargin
+  }
+  def nearDupJaccardOracle: String =
+    s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      | ${OracleMath.stableRoundSql("CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws)))", 4)} AS jaccard
+      |FROM (SELECT doc_id, $wordSetSql ws FROM documents) a
+      |JOIN (SELECT doc_id, $wordSetSql ws FROM documents) b
+      |  ON a.doc_id < b.doc_id
+      |WHERE CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws))) >= 0.9
+      |ORDER BY doc_a, doc_b""".stripMargin
+  def simhashOracle: String =
+    s"""WITH $simhashCteSql
+       |SELECT doc_id, simhash FROM sh ORDER BY doc_id""".stripMargin
+  def fuzzyKeyPairsOracle: String =
+    """SELECT a.p_name AS name_a, b.p_name AS name_b,
+      | CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
+      |FROM (SELECT DISTINCT p_name FROM part) a
+      |JOIN (SELECT DISTINCT p_name FROM part) b ON a.p_name < b.p_name
+      |WHERE levenshtein(a.p_name, b.p_name) <= 3
+      |ORDER BY name_a, name_b""".stripMargin
+  // pigeonhole pair join: Hamming ≤ 3 on 64 bits forces agreement on one
+  // of the 4 16-bit bands; the OR-band join emits each pair once, the
+  // popcount verify is exact — same dataflow as the Spark plan
+  def simhashNearDupOracle: String = {
+    val shareBand = (0 until 4).map { k =>
+      val div = java.math.BigInteger.valueOf(2).pow(16 * k).toString
+      s"(a.shu // $div) % 65536 = (b.shu // $div) % 65536"
+    }.mkString(" OR ")
+    s"""WITH $simhashCteSql
+       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+       |FROM sh a JOIN sh b ON a.doc_id < b.doc_id AND ($shareBand)
+       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+       |ORDER BY doc_a, doc_b""".stripMargin
+  }
+  def ngramJaccardOracle: String =
+    s"""WITH bs AS (
+       |  SELECT doc_id, list_sort(list_distinct(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1]))) AS bg
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
+       |  WHERE len(ws) >= 2)
+       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       | ${OracleMath.stableRoundSql("CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) / len(list_distinct(list_concat(a.bg, b.bg)))", 4)} AS jaccard
+       |FROM bs a JOIN bs b ON a.doc_id < b.doc_id
+       |WHERE CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE) / len(list_distinct(list_concat(a.bg, b.bg))) >= 0.8
+       |ORDER BY doc_a, doc_b""".stripMargin
+  // connected components in SQL: reach(node, r) enumerates every node r
+  // reachable from node over the symmetric near-dup edge set (UNION, not
+  // UNION ALL — the dedup is the fixpoint guarantee); cluster id = min
+  // reachable node. Tractable because components are small; the Spark side
+  // scales where this CTE cannot.
+  def dedupClustersOracle: String =
+    s"""WITH RECURSIVE ds AS (
+      |  SELECT doc_id, $wordSetSql ws FROM documents),
+      |pairs AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      |  FROM ds a JOIN ds b ON a.doc_id < b.doc_id
+      |  WHERE CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, b.ws))) >= 0.9),
+      |edges AS (
+      |  SELECT doc_a AS src, doc_b AS dst FROM pairs
+      |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+      |reach AS (
+      |  SELECT doc_id AS node, doc_id AS r FROM documents
+      |  UNION
+      |  SELECT reach.node, e.dst FROM reach JOIN edges e ON e.src = reach.r),
+      |cc AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node)
+      |SELECT doc_id, cluster_id, count(*) OVER (PARTITION BY cluster_id) AS cluster_size
+      |FROM cc ORDER BY doc_id""".stripMargin
+  def deltaNearDupOracle: String =
+    s"""SELECT d.doc_id AS doc_delta, c.doc_id AS doc_corpus,
+      | ${OracleMath.stableRoundSql("CAST(len(list_intersect(d.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(d.ws, c.ws)))", 4)} AS jaccard
+      |FROM (SELECT doc_id, $wordSetSql ws
+      |      FROM documents WHERE doc_id % 5 = 0) d
+      |JOIN (SELECT doc_id, $wordSetSql ws
+      |      FROM documents WHERE doc_id % 5 <> 0) c
+      |  ON CAST(len(list_intersect(d.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(d.ws, c.ws))) >= 0.9
+      |ORDER BY doc_delta, doc_corpus""".stripMargin
+  // MinHash-LSH pairs ARE oracle-expressible: the signature family already
+  // hash-matches (q37), band collision is tuple equality on signature
+  // slices (the Spark side compacts the tuple through xxhash64, which is
+  // injective-in-practice — a collision could only ADD a candidate, which
+  // must then still pass the exact-Jaccard verify), and the verify is the
+  // same set-Jaccard as q38. So q39 moves from rows-check to hash-match.
+  def lshRecallRollupOracle: String = {
+    val k = LshBands * LshRows
+    val mhDefs = (0 until k).map { i =>
+      s"list_min(list_transform(hs, h -> (${2L * i + 3}*h + ${7L * i + 1}) % ${P})) AS mh$i"
+    }.mkString(",\n ")
+    // candidate CTE: one hash-joinable equi-join per band (UNION ALL with
+    // a band tag) — the prior CROSS JOIN bands + CASE predicate forced a
+    // quadratic nested loop in DuckDB, which dominated the sf0.1 sweep
+    val bandJoins = (0 until LshBands).map { b =>
+      val eq = (0 until LshRows)
+        .map(r => s"a.mh${b * LshRows + r} = c.mh${b * LshRows + r}").mkString(" AND ")
+      s"SELECT $b AS band, a.doc_id AS doc_a, c.doc_id AS doc_b\n" +
+        s"  FROM sigs a JOIN sigs c ON $eq AND a.doc_id < c.doc_id"
+    }.mkString("\n  UNION ALL\n  ")
+    val jacF = "CAST(len(list_intersect(a.ws, c.ws)) AS DOUBLE) / len(list_distinct(list_concat(a.ws, c.ws)))"
+    val jacS = "CAST(len(list_intersect(s.ws, u.ws)) AS DOUBLE) / len(list_distinct(list_concat(s.ws, u.ws)))"
+    // exact-truth denominator: collapse identical word sets first (their
+    // within-group pairs are jac=1 by definition), then pair DISTINCT sets
+    // under a lossless integer length band — jac >= t forces
+    // |A| >= t·|B| and |B| >= t·|A|; the 89/100 bound is t slightly
+    // loosened so float wobble can only ADD candidate set-pairs, never
+    // drop a true one (the final jac predicate decides membership)
+    val lenBandPct = math.floor(NearDupThreshold * 100).toInt - 1
+    s"""WITH ds AS (
+       |  SELECT doc_id, $wordSetSql AS ws,
+       |         list_transform(list_distinct(string_split(text,' ')), w -> ${wordHashSql("w")}) AS hs
+       |  FROM documents),
+       |sigs AS (SELECT doc_id, $mhDefs FROM ds),
+       |bands AS (SELECT unnest(range(${LshBands})) AS band),
+       |cand AS (
+       |  $bandJoins),
+       |pb AS (SELECT band, count(*) AS n_cand FROM cand GROUP BY 1),
+       |fb AS (SELECT doc_a, doc_b, min(band) AS band FROM cand GROUP BY 1, 2),
+       |fbj AS (SELECT fb.band, $jacF AS jac
+       |        FROM fb JOIN ds a ON a.doc_id = fb.doc_a
+       |                JOIN ds c ON c.doc_id = fb.doc_b),
+       |nb AS (SELECT band, count(*) AS n_new,
+       |         sum(CASE WHEN jac >= $NearDupThreshold THEN 1 ELSE 0 END) AS n_new_true
+       |       FROM fbj GROUP BY 1),
+       |sets AS (SELECT ws, count(*) AS m FROM ds GROUP BY ws),
+       |tot AS (SELECT (SELECT coalesce(sum(m * (m - 1) // 2), 0) FROM sets)
+       |             + (SELECT coalesce(sum(s.m * u.m), 0)
+       |                FROM sets s JOIN sets u
+       |                  ON s.ws < u.ws
+       |                 AND 100 * len(s.ws) >= $lenBandPct * len(u.ws)
+       |                 AND 100 * len(u.ws) >= $lenBandPct * len(s.ws)
+       |                 AND $jacS >= $NearDupThreshold) AS n_true_total),
+       |r AS (SELECT b.band AS band, coalesce(pb.n_cand, 0) AS n_cand,
+       |        coalesce(nb.n_new, 0) AS n_new, coalesce(nb.n_new_true, 0) AS n_new_true
+       |      FROM bands b LEFT JOIN pb USING (band) LEFT JOIN nb USING (band))
+       |SELECT CAST(band AS BIGINT) AS band, CAST(n_cand AS BIGINT) AS n_cand,
+       | CAST(n_new AS BIGINT) AS n_new, CAST(n_new_true AS BIGINT) AS n_new_true,
+       | CAST(n_true_total AS BIGINT) AS n_true_total,
+       | CAST(sum(n_new_true) OVER (ORDER BY band) AS BIGINT) AS cum_true,
+       | ${OracleMath.stableRoundSql("CAST(sum(n_new_true) OVER (ORDER BY band) AS DOUBLE) / n_true_total", 6)} AS recall
+       |FROM r, tot ORDER BY band""".stripMargin
+  }
 }

@@ -56,21 +56,19 @@ object EnrichOps {
       .orderBy(desc("cnt"), col("normalized_name"))
   }
 
-  /** Oracle twins. */
-  def oracle: Map[String, String] = Map(
-    "q19_enrich_part_names" ->
-      s"""SELECT p_partkey, p_name, ${Rules.partNameCaseSql("p_name")} AS normalized_name
-         |FROM part ORDER BY p_partkey""".stripMargin,
-    "q20_enrich_part_types" ->
-      s"""SELECT p_partkey, p_type, ${Rules.partTypeCaseSql("p_type", spec = false)} AS category,
-         | ${Rules.partTypeCaseSql("p_type", spec = true)} AS specialization
-         |FROM part ORDER BY p_partkey""".stripMargin,
-    "q21_enrich_stats" ->
-      s"""SELECT normalized_name, cnt, ${graft.ops.OracleMath.stableRoundSql("cnt * CAST(100.0 AS DOUBLE) / total", 1)} AS pct,
-         | normalized_name NOT IN ('${Defaults.Unclassified}','${Defaults.NotSpecified}','${Defaults.Other}') AS is_success
-         |FROM (SELECT ${Rules.partNameCaseSql("p_name")} AS normalized_name, count(*) AS cnt,
-         |       sum(count(*)) OVER () AS total
-         |      FROM part GROUP BY 1)
-         |ORDER BY cnt DESC, normalized_name""".stripMargin,
-  )
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def enrichPartNamesOracle: String =
+    s"""SELECT p_partkey, p_name, ${Rules.partNameCaseSql("p_name")} AS normalized_name
+       |FROM part ORDER BY p_partkey""".stripMargin
+  def enrichPartTypesOracle: String =
+    s"""SELECT p_partkey, p_type, ${Rules.partTypeCaseSql("p_type", spec = false)} AS category,
+       | ${Rules.partTypeCaseSql("p_type", spec = true)} AS specialization
+       |FROM part ORDER BY p_partkey""".stripMargin
+  def enrichmentStatsOracle: String =
+    s"""SELECT normalized_name, cnt, ${graft.ops.OracleMath.stableRoundSql("cnt * CAST(100.0 AS DOUBLE) / total", 1)} AS pct,
+       | normalized_name NOT IN ('${Defaults.Unclassified}','${Defaults.NotSpecified}','${Defaults.Other}') AS is_success
+       |FROM (SELECT ${Rules.partNameCaseSql("p_name")} AS normalized_name, count(*) AS cnt,
+       |       sum(count(*)) OVER () AS total
+       |      FROM part GROUP BY 1)
+       |ORDER BY cnt DESC, normalized_name""".stripMargin
 }

@@ -3350,4 +3350,253 @@ object EventOps {
        |  ${OracleMath.stableRoundSql("CAST(sum(an) - sum(ao) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0", 6)} AS skill
        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin
   }
+
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def jsonPropsAggOracle: String =
+    """SELECT event_type, count(*) AS n,
+      | CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+      | CAST(floor((sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) * CAST(1.0 AS DOUBLE) / count(*)) * 10000.0 + 0.5) AS DOUBLE) / 10000.0 AS avg_k
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  def hourlyByTypeOracle: String =
+    """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+      | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def userActivityOracle: String =
+    """SELECT user_id, count(*) AS n_events, count(DISTINCT event_type) AS n_types,
+      | date_trunc('minute', min(ts)) AS first_minute,
+      | date_trunc('minute', max(ts)) AS last_minute
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  def safeJsonChainOracle: String =
+    """SELECT event_type, count(*) AS n_rows,
+      | CAST(2 * count(*) AS BIGINT) AS n_parsed,
+      | CAST(2 * sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  def jsonRoundTripOracle: String =
+    """SELECT event_type, count(*) AS n,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  // DuckDB has a native ASOF JOIN — a rare direct oracle for a custom op
+  def asofAttributionOracle: String =
+    """SELECT p.event_id AS purchase_id, p.user_id, v.event_id AS click_id,
+      | date_diff('second', v.ts, p.ts) AS lag_seconds
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') v
+      |  ON p.user_id = v.user_id AND p.ts >= v.ts
+      |ORDER BY purchase_id""".stripMargin
+  def orcRoundTripOracle: String =
+    """SELECT event_type, count(*) AS n, count(DISTINCT user_id) AS n_users,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  def asofAttributionOuterOracle: String =
+    """SELECT p.event_id AS purchase_id, p.user_id,
+      | coalesce(v.event_id, -1) AS click_id,
+      | coalesce(date_diff('second', v.ts, p.ts), -1) AS lag_seconds
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') v
+      |  ON p.user_id = v.user_id AND p.ts >= v.ts
+      |ORDER BY purchase_id""".stripMargin
+  def partitionedScanOracle: String =
+    """SELECT date_trunc('day', ts) AS day, count(*) AS n,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events WHERE event_type = 'click'
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  def slidingHourlyOracle: String =
+    """SELECT s AS wstart, event_type, count(*) AS n,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM (SELECT event_type, value,
+      |        unnest([time_bucket(INTERVAL '30 minutes', ts),
+      |                time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes']) AS s
+      |      FROM events)
+      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def sessionWindowsOracle: String =
+    """SELECT user_id, CAST(min(us) AS BIGINT) AS s_start_us, count(*) AS n_events FROM (
+      | SELECT user_id, us, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id) AS BIGINT) AS sid FROM (
+      |  SELECT user_id, event_id, epoch_us(ts) AS us,
+      |   CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
+      |        OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) >= 1800000000
+      |        THEN 1 ELSE 0 END AS new_s
+      |  FROM events))
+      |GROUP BY user_id, sid ORDER BY user_id, s_start_us""".stripMargin
+  def asofAttributionFilteredOracle: String =
+    """SELECT p.event_id AS purchase_id, p.user_id, v.event_id AS click_id,
+      | date_diff('second', v.ts, p.ts) AS lag_seconds
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') v
+      |  ON p.user_id = v.user_id AND p.ts >= v.ts
+      |WHERE p.user_id IN (1, 3, 7, 11, 13)
+      |ORDER BY purchase_id""".stripMargin
+  def typeMapAggOracle: String =
+    """SELECT user_id, event_type, count(*) AS cnt
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def funnelStagesOracle: String =
+    """SELECT CAST(stage AS BIGINT) AS stage, count(*) AS n_users FROM (
+      |  SELECT user_id,
+      |    CASE WHEN t_signup IS NOT NULL AND t_view > t_signup
+      |              AND t_click > t_view AND t_purchase > t_click THEN 4
+      |         WHEN t_signup IS NOT NULL AND t_view > t_signup
+      |              AND t_click > t_view THEN 3
+      |         WHEN t_signup IS NOT NULL AND t_view > t_signup THEN 2
+      |         WHEN t_signup IS NOT NULL THEN 1
+      |         ELSE 0 END AS stage
+      |  FROM (
+      |    SELECT user_id,
+      |      min(ts) FILTER (WHERE event_type = 'signup') AS t_signup,
+      |      min(ts) FILTER (WHERE event_type = 'view') AS t_view,
+      |      min(ts) FILTER (WHERE event_type = 'click') AS t_click,
+      |      min(ts) FILTER (WHERE event_type = 'purchase') AS t_purchase
+      |    FROM events GROUP BY 1))
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  // Morton spread ladder, one CTE per shift-or-mask step (same integer
+  // arithmetic as the Spark zspread fold)
+  def zorderStatsOracle: String =
+    """WITH b AS (SELECT user_id & 65535 AS x0, CAST(floor(value) AS BIGINT) & 65535 AS y0 FROM events),
+      |s1 AS (SELECT x0 AS x, y0 AS y,
+      |        ((x0 | (x0 << 8)) & 16711935) AS xs, ((y0 | (y0 << 8)) & 16711935) AS ys FROM b),
+      |s2 AS (SELECT x, y, ((xs | (xs << 4)) & 252645135) AS xs, ((ys | (ys << 4)) & 252645135) AS ys FROM s1),
+      |s3 AS (SELECT x, y, ((xs | (xs << 2)) & 858993459) AS xs, ((ys | (ys << 2)) & 858993459) AS ys FROM s2),
+      |s4 AS (SELECT x, y, ((xs | (xs << 1)) & 1431655765) AS xs, ((ys | (ys << 1)) & 1431655765) AS ys FROM s3)
+      |SELECT (xs | (ys << 1)) >> 12 AS zbucket, count(*) AS n,
+      | min(x) AS x_min, max(x) AS x_max, min(y) AS y_min, max(y) AS y_max
+      |FROM s4 GROUP BY 1 ORDER BY 1""".stripMargin
+  def forwardFillOracle: String =
+    """SELECT user_id, event_id,
+      | coalesce(last_value(v IGNORE NULLS)
+      |   OVER (PARTITION BY user_id ORDER BY date_trunc('microseconds', ts), event_id),
+      |   -1.0) AS last_click_value
+      |FROM (SELECT user_id, event_id, ts,
+      |        CASE WHEN event_type = 'click' THEN value END AS v
+      |      FROM events)
+      |ORDER BY user_id, event_id""".stripMargin
+  def gapfillDailyOracle: String =
+    """WITH ev AS (SELECT date_trunc('day', ts) AS day, user_id, event_type, value FROM events),
+      |sparse AS (SELECT * FROM ev WHERE event_type = 'purchase' AND user_id < 5),
+      |spine AS (SELECT unnest(generate_series(min(day), max(day), INTERVAL 1 DAY)) AS day FROM ev),
+      |users AS (SELECT DISTINCT user_id FROM sparse),
+      |daily AS (SELECT day, user_id, count(*) AS n,
+      |            sum(CAST(value AS DECIMAL(18,2))) AS rev
+      |          FROM sparse GROUP BY 1, 2)
+      |SELECT spine.day AS day, users.user_id AS user_id,
+      | coalesce(n, 0) AS n_purchases,
+      | coalesce(CAST(rev AS DOUBLE), 0.0) AS revenue
+      |FROM spine CROSS JOIN users
+      |LEFT JOIN daily ON daily.day = spine.day AND daily.user_id = users.user_id
+      |ORDER BY day, user_id""".stripMargin
+  def cohortRetentionOracle: String =
+    """WITH f AS (SELECT user_id, min(date_trunc('day', ts)) AS cohort_day
+      |           FROM events GROUP BY 1),
+      |a AS (SELECT DISTINCT e.user_id,
+      |        date_trunc('week', f.cohort_day) AS cohort_week,
+      |        CAST(floor(date_diff('day', f.cohort_day, date_trunc('day', e.ts)) / 7) AS BIGINT) AS week_offset
+      |      FROM events e JOIN f USING (user_id))
+      |SELECT cohort_week, week_offset, count(DISTINCT user_id) AS n_users
+      |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def aggMergeRollupOracle: String =
+    """SELECT date_trunc('month', ts) AS month, event_type,
+      | count(*) AS n,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+      | min(value) AS min_value,
+      | max(value) AS max_value
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def hllRollupOracle: String =
+    """SELECT date_trunc('month', ts) AS month, event_type,
+      | count(DISTINCT user_id) AS exact_users, TRUE AS est_ok
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def variantPropsOracle: String =
+    """SELECT event_type, count(*) AS n,
+      | CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+      | min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
+      | max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k,
+      | count(CAST(json_extract(props, '$.missing') AS BIGINT)) AS n_missing_present
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  def userGapStatsOracle: String = {
+    val round2 = graft.ops.OracleMath.stableRoundSql(
+      "CAST(sum(gap) AS DOUBLE) / (count(*) - 1)", 2)
+    s"""SELECT user_id, count(*) AS n_events,
+       | coalesce(max(gap), 0) AS max_gap_s,
+       | CASE WHEN count(*) > 1 THEN $round2 ELSE 0.0 END AS mean_gap_s
+       |FROM (SELECT user_id,
+       |        CAST(epoch(date_trunc('second', ts)) AS BIGINT)
+       |          - CAST(epoch(date_trunc('second', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) AS gap
+       |      FROM events)
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+  }
+  def partitionOverwriteOracle: String =
+    """SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS n,
+      | CAST(sum(CAST(CASE WHEN strftime(ts, '%Y-%m-%d') = '2024-01-05'
+      |                    THEN value * 2 ELSE value END AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+  def permissiveCsvOracle: String =
+    """SELECT event_type, count(*) AS n,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY 1
+      |UNION ALL SELECT '_quarantined', CAST(6 AS BIGINT), 0.0
+      |ORDER BY 1""".stripMargin
+  def hllSlidingOracle: String =
+    """WITH days AS (SELECT DISTINCT date_trunc('day', ts) AS day FROM events),
+      |wd AS (SELECT unnest(generate_series(day, day + INTERVAL 6 DAY, INTERVAL 1 DAY)) AS wend, day
+      |       FROM days),
+      |nd AS (SELECT wend, count(*) AS n_days FROM wd GROUP BY 1),
+      |ev AS (SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events),
+      |ex AS (SELECT wend, count(DISTINCT user_id) AS exact_users FROM
+      |  (SELECT unnest(generate_series(day, day + INTERVAL 6 DAY, INTERVAL 1 DAY)) AS wend, user_id
+      |   FROM ev) GROUP BY 1)
+      |SELECT nd.wend AS wend, n_days, exact_users, TRUE AS est_ok
+      |FROM nd JOIN ex USING (wend) JOIN days ON days.day = nd.wend
+      |ORDER BY wend""".stripMargin
+  def histQuantileMergeOracle: String = {
+    def qsel(src: String, sfx: String) =
+      s"""SELECT month, event_type,
+         | min(CASE WHEN CAST(cum AS DOUBLE) >= n * 0.5 THEN (bin+1)*4.0 END) AS p50_$sfx,
+         | min(CASE WHEN CAST(cum AS DOUBLE) >= n * 0.9 THEN (bin+1)*4.0 END) AS p90_$sfx
+         |FROM (SELECT month, event_type, bin,
+         |        sum(cnt) OVER (PARTITION BY month, event_type ORDER BY bin) AS cum,
+         |        sum(cnt) OVER (PARTITION BY month, event_type) AS n
+         |      FROM $src) GROUP BY 1, 2""".stripMargin
+    s"""WITH ev AS (SELECT date_trunc('day', ts) AS day, event_type,
+       |              CAST(least(floor(value / 4.0), 255) AS BIGINT) AS bin FROM events),
+       |daily AS (SELECT day, event_type, bin, count(*) AS cnt FROM ev GROUP BY 1, 2, 3),
+       |merged AS (SELECT date_trunc('month', day) AS month, event_type, bin, sum(cnt) AS cnt
+       |           FROM daily GROUP BY 1, 2, 3),
+       |fullh AS (SELECT date_trunc('month', day) AS month, event_type, bin, count(*) AS cnt
+       |          FROM ev GROUP BY 1, 2, 3),
+       |qm AS (${qsel("merged", "merged")}),
+       |qf AS (${qsel("fullh", "full")})
+       |SELECT qm.month, qm.event_type, p50_merged, p90_merged, p50_full, p90_full
+       |FROM qm JOIN qf ON qm.month = qf.month AND qm.event_type = qf.event_type
+       |ORDER BY 1, 2""".stripMargin
+  }
+  def bitmapRollupOracle: String =
+    """SELECT date_trunc('month', ts) AS month, event_type,
+      | count(DISTINCT user_id) AS users_merged,
+      | count(DISTINCT user_id) AS users_direct
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  // recursive-CTE closure over the capped co-occurrence projection — the
+  // user graph stays small (≤ distinct-user count) at every SF, so unlike
+  // q101 this oracle needs no gate-SF skip
+  def userCommunitiesOracle: String =
+    """WITH RECURSIVE au AS (SELECT DISTINCT event_type, date_trunc('minute', ts) AS m, user_id
+      |            FROM events),
+      |sz AS (SELECT event_type, m, count(*) AS asz FROM au GROUP BY 1, 2),
+      |capped AS (SELECT au.event_type, au.m, au.user_id
+      |           FROM au JOIN sz USING (event_type, m) WHERE asz BETWEEN 2 AND 8),
+      |pairs AS (SELECT DISTINCT a.user_id AS ua, b.user_id AS ub
+      |          FROM capped a JOIN capped b
+      |          ON a.event_type = b.event_type AND a.m = b.m AND a.user_id < b.user_id),
+      |edges AS (SELECT ua AS src, ub AS dst FROM pairs
+      |          UNION ALL SELECT ub, ua FROM pairs),
+      |users AS (SELECT DISTINCT user_id FROM events),
+      |reach AS (SELECT user_id AS node, user_id AS r FROM users
+      |  UNION SELECT reach.node, e.dst FROM reach JOIN edges e ON e.src = reach.r),
+      |cc AS (SELECT node AS user_id, min(r) AS community_id FROM reach GROUP BY node)
+      |SELECT user_id, community_id,
+      | count(*) OVER (PARTITION BY community_id) AS community_size
+      |FROM cc ORDER BY user_id""".stripMargin
+  def asofAttributionBoundedOracle: String =
+    """SELECT p.event_id AS purchase_id, p.user_id, v.event_id AS click_id,
+      | date_diff('second', v.ts, p.ts) AS lag_seconds
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') v
+      |  ON p.user_id = v.user_id AND p.ts >= v.ts
+      |WHERE p.ts <= TIMESTAMP '2024-01-15 00:00:00'
+      |ORDER BY purchase_id""".stripMargin
 }

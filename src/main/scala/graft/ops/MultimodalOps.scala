@@ -447,130 +447,129 @@ object MultimodalOps {
   def phashNearDup(spark: SparkSession, dir: String): DataFrame =
     Banding.hammingNearDup(phashes(spark, dir), "phash", PhashMaxHamming)
 
-  def oracle: Map[String, String] = Map(
-    "q190_scene_cuts" ->
-      """WITH d AS (SELECT doc_id, text, octet_length(encode(text)) // 40 AS nf
-        |          FROM documents WHERE octet_length(encode(text)) // 40 > 0),
-        |f AS (SELECT doc_id, text, unnest(range(0, nf)) AS f FROM d),
-        |fp AS (SELECT doc_id, f,
-        |         CAST(ascii(substring(text, CAST(f * 40 + 1 AS INT), 1)) AS BIGINT) AS fp
-        |       FROM f),
-        |dl AS (SELECT doc_id, f,
-        |         abs(fp - lag(fp) OVER (PARTITION BY doc_id ORDER BY f)) AS delta
-        |       FROM fp)
-        |SELECT doc_id, count(*) AS n_frames,
-        |       CAST(sum(CASE WHEN delta > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
-        |       CAST(coalesce(max(delta), 0) AS BIGINT) AS max_jump,
-        |       min(CASE WHEN delta > 64 THEN f END) AS first_cut
-        |FROM dl GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q187_phash_neardup" -> {
-      val bandJoins = (0 to 3).map { k =>
-        s"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.phash AS ph_a, b.phash AS ph_b\n" +
-          s"  FROM h a JOIN h b ON ((a.phash >> ${k * 16}) & 65535) = ((b.phash >> ${k * 16}) & 65535)\n" +
-          s"   AND a.doc_id < b.doc_id"
-      }.mkString("\n  UNION\n  ")
-      s"""WITH d AS (SELECT doc_id, text, CAST(octet_length(encode(text)) AS BIGINT) AS nb
-         |          FROM documents WHERE octet_length(encode(text)) > 0),
-         |g AS (SELECT doc_id,
-         |        list_transform(range(0, 64),
-         |          i -> CAST(ascii(substring(text, CAST((i * nb) // 64 AS INT) + 1, 1)) AS BIGINT)) AS bs
-         |      FROM d),
-         |h AS (SELECT doc_id,
-         |        -- bit 63 is the BIGINT sign bit: DuckDB range-checks 1<<63,
-         |        -- so emit the min-long value directly (Spark's shiftleft
-         |        -- wraps to the same two's-complement value)
-         |        CAST(list_sum(list_transform(range(0, 64),
-         |          i -> CASE WHEN bs[CAST(i AS INT) + 1] * 64 > list_sum(bs)
-         |               THEN (CASE WHEN i = 63 THEN (-9223372036854775807 - 1)
-         |                     ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END)
-         |               ELSE 0 END)) AS BIGINT) AS phash
-         |      FROM g),
-         |cand AS (
-         |  $bandJoins)
-         |SELECT doc_a, doc_b, CAST(bit_count(xor(ph_a, ph_b)) AS BIGINT) AS hamming
-         |FROM cand
-         |WHERE bit_count(xor(ph_a, ph_b)) <= $PhashMaxHamming
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    "q156_resize_exec" ->
-      // replay of the pixel walk over the doc's byte list: y = p DIV out_w,
-      // x = p MOD out_w; one list per doc is built once, then indexed per
-      // pixel — the twin of the executor-side nearest-neighbor loop
-      """WITH d AS (SELECT doc_id, text,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS nb,
-        |    CAST(octet_length(encode(text)) % 640 AS BIGINT) AS width,
-        |    CAST((octet_length(encode(text)) * 7) % 480 AS BIGINT) AS height
-        |  FROM documents
-        |  WHERE octet_length(encode(text)) % 640 > 0
-        |    AND (octet_length(encode(text)) * 7) % 480 > 0),
-        |g AS (SELECT doc_id, nb, width, height,
-        |    (width * 224) // greatest(width, height) AS out_w,
-        |    (height * 224) // greatest(width, height) AS out_h,
-        |    list_transform(range(1, nb + 1), i -> ascii(substring(text, CAST(i AS INT), 1))) AS bl
-        |  FROM d)
-        |SELECT doc_id, width, height, out_w, out_h,
-        | CAST((224 - out_w) // 2 AS BIGINT) AS pad_x,
-        | CAST((224 - out_h) // 2 AS BIGINT) AS pad_y,
-        | CAST(224 * 224 AS BIGINT) AS n_out_bytes,
-        | CAST(coalesce(list_sum(list_transform(range(out_w * out_h),
-        |   p -> bl[CAST(1 + (((p // out_w) * height // out_h) * width
-        |                     + (p % out_w) * width // out_w) % nb AS INT)])), 0) AS BIGINT) AS byte_sum
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "q154_image_resize" ->
-      """SELECT doc_id,
-        | CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,
-        | CAST((width * 224) // greatest(width, height) AS BIGINT) AS out_w,
-        | CAST((height * 224) // greatest(width, height) AS BIGINT) AS out_h,
-        | CAST((224 - (width * 224) // greatest(width, height)) // 2 AS BIGINT) AS pad_x,
-        | CAST((224 - (height * 224) // greatest(width, height)) // 2 AS BIGINT) AS pad_y,
-        | CAST((fb * 31 + ((width * 224) // greatest(width, height)) * 7
-        |       + (height * 224) // greatest(width, height)) % 256 AS BIGINT) AS stub_checksum
-        |FROM (SELECT doc_id,
-        |        CAST(ascii(substring(text, 1, 1)) AS BIGINT) AS fb,
-        |        octet_length(encode(text)) % 640 AS width,
-        |        (octet_length(encode(text)) * 7) % 480 AS height
-        |      FROM documents)
-        |WHERE width > 0 AND height > 0 ORDER BY doc_id""".stripMargin,
-    "q145_image_tiles" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(ascii(substring(text, 1, 1)) AS BIGINT) AS fb,
-        |    CAST(octet_length(encode(text)) % 640 AS BIGINT) AS width,
-        |    CAST((octet_length(encode(text)) * 7) % 480 AS BIGINT) AS height
-        |  FROM documents
-        |  WHERE octet_length(encode(text)) % 640 > 0
-        |    AND (octet_length(encode(text)) * 7) % 480 > 0),
-        |dx AS (SELECT doc_id, fb, width, height,
-        |         unnest(range(0, (width + 31) // 32)) AS tx FROM d),
-        |dxy AS (SELECT doc_id, fb, width, height, tx,
-        |          unnest(range(0, (height + 31) // 32)) AS ty FROM dx)
-        |SELECT doc_id, tx, ty,
-        | CAST(tx * 32 AS BIGINT) AS x0, CAST(ty * 32 AS BIGINT) AS y0,
-        | CAST(least(32, width - tx * 32) AS BIGINT) AS w,
-        | CAST(least(32, height - ty * 32) AS BIGINT) AS h,
-        | CAST((fb + tx * 31 + ty * 17 + width + height) % 256 AS BIGINT) AS luma
-        |FROM dxy ORDER BY doc_id, tx, ty""".stripMargin,
-    "q125_audio_chunks" ->
-      """SELECT doc_id, CAST(k AS BIGINT) AS chunk_idx,
-        | CAST(k * 80 AS BIGINT) AS start_byte,
-        | CAST(least(200, n_bytes - k * 80) AS BIGINT) AS chunk_bytes,
-        | CAST((ascii(substring(text, CAST(k * 80 + 1 AS INT), 1)) * 31
-        |       + least(200, n_bytes - k * 80)) % 256 AS BIGINT) AS stub_rms
-        |FROM (SELECT doc_id, text, octet_length(encode(text)) AS n_bytes,
-        |        unnest(range(0, (greatest(n_bytes - 200, 0) + 79) // 80 + 1)) AS k
-        |      FROM documents)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q69_frame_sample" ->
-      """SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
-        | CAST((ascii(substring(text, 1, 1)) + f * 31) % 256 AS BIGINT) AS luma
-        |FROM (SELECT doc_id, text, unnest(range(0, octet_length(encode(text)) // 40, 4)) AS f
-        |      FROM documents)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "q44_media_features" ->
-      """SELECT doc_id,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | CAST(ascii(substring(text, 1, 1)) AS BIGINT) AS first_byte,
-        | CAST(octet_length(encode(text)) % 640 AS BIGINT) AS width,
-        | CAST((octet_length(encode(text)) * 7) % 480 AS BIGINT) AS height
-        |FROM documents ORDER BY doc_id""".stripMargin,
-  )
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def mediaFeaturesOracle: String =
+    """SELECT doc_id,
+      | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+      | CAST(ascii(substring(text, 1, 1)) AS BIGINT) AS first_byte,
+      | CAST(octet_length(encode(text)) % 640 AS BIGINT) AS width,
+      | CAST((octet_length(encode(text)) * 7) % 480 AS BIGINT) AS height
+      |FROM documents ORDER BY doc_id""".stripMargin
+  def frameSampleOracle: String =
+    """SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
+      | CAST((ascii(substring(text, 1, 1)) + f * 31) % 256 AS BIGINT) AS luma
+      |FROM (SELECT doc_id, text, unnest(range(0, octet_length(encode(text)) // 40, 4)) AS f
+      |      FROM documents)
+      |ORDER BY doc_id, frame_idx""".stripMargin
+  def audioChunksOracle: String =
+    """SELECT doc_id, CAST(k AS BIGINT) AS chunk_idx,
+      | CAST(k * 80 AS BIGINT) AS start_byte,
+      | CAST(least(200, n_bytes - k * 80) AS BIGINT) AS chunk_bytes,
+      | CAST((ascii(substring(text, CAST(k * 80 + 1 AS INT), 1)) * 31
+      |       + least(200, n_bytes - k * 80)) % 256 AS BIGINT) AS stub_rms
+      |FROM (SELECT doc_id, text, octet_length(encode(text)) AS n_bytes,
+      |        unnest(range(0, (greatest(n_bytes - 200, 0) + 79) // 80 + 1)) AS k
+      |      FROM documents)
+      |ORDER BY doc_id, chunk_idx""".stripMargin
+  def imageTilesOracle: String =
+    """WITH d AS (SELECT doc_id,
+      |    CAST(ascii(substring(text, 1, 1)) AS BIGINT) AS fb,
+      |    CAST(octet_length(encode(text)) % 640 AS BIGINT) AS width,
+      |    CAST((octet_length(encode(text)) * 7) % 480 AS BIGINT) AS height
+      |  FROM documents
+      |  WHERE octet_length(encode(text)) % 640 > 0
+      |    AND (octet_length(encode(text)) * 7) % 480 > 0),
+      |dx AS (SELECT doc_id, fb, width, height,
+      |         unnest(range(0, (width + 31) // 32)) AS tx FROM d),
+      |dxy AS (SELECT doc_id, fb, width, height, tx,
+      |          unnest(range(0, (height + 31) // 32)) AS ty FROM dx)
+      |SELECT doc_id, tx, ty,
+      | CAST(tx * 32 AS BIGINT) AS x0, CAST(ty * 32 AS BIGINT) AS y0,
+      | CAST(least(32, width - tx * 32) AS BIGINT) AS w,
+      | CAST(least(32, height - ty * 32) AS BIGINT) AS h,
+      | CAST((fb + tx * 31 + ty * 17 + width + height) % 256 AS BIGINT) AS luma
+      |FROM dxy ORDER BY doc_id, tx, ty""".stripMargin
+  def imageResizeOracle: String =
+    """SELECT doc_id,
+      | CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,
+      | CAST((width * 224) // greatest(width, height) AS BIGINT) AS out_w,
+      | CAST((height * 224) // greatest(width, height) AS BIGINT) AS out_h,
+      | CAST((224 - (width * 224) // greatest(width, height)) // 2 AS BIGINT) AS pad_x,
+      | CAST((224 - (height * 224) // greatest(width, height)) // 2 AS BIGINT) AS pad_y,
+      | CAST((fb * 31 + ((width * 224) // greatest(width, height)) * 7
+      |       + (height * 224) // greatest(width, height)) % 256 AS BIGINT) AS stub_checksum
+      |FROM (SELECT doc_id,
+      |        CAST(ascii(substring(text, 1, 1)) AS BIGINT) AS fb,
+      |        octet_length(encode(text)) % 640 AS width,
+      |        (octet_length(encode(text)) * 7) % 480 AS height
+      |      FROM documents)
+      |WHERE width > 0 AND height > 0 ORDER BY doc_id""".stripMargin
+  // replay of the pixel walk over the doc's byte list: y = p DIV out_w,
+  // x = p MOD out_w; one list per doc is built once, then indexed per
+  // pixel — the twin of the executor-side nearest-neighbor loop
+  def imageResizeExecOracle: String =
+    """WITH d AS (SELECT doc_id, text,
+      |    CAST(octet_length(encode(text)) AS BIGINT) AS nb,
+      |    CAST(octet_length(encode(text)) % 640 AS BIGINT) AS width,
+      |    CAST((octet_length(encode(text)) * 7) % 480 AS BIGINT) AS height
+      |  FROM documents
+      |  WHERE octet_length(encode(text)) % 640 > 0
+      |    AND (octet_length(encode(text)) * 7) % 480 > 0),
+      |g AS (SELECT doc_id, nb, width, height,
+      |    (width * 224) // greatest(width, height) AS out_w,
+      |    (height * 224) // greatest(width, height) AS out_h,
+      |    list_transform(range(1, nb + 1), i -> ascii(substring(text, CAST(i AS INT), 1))) AS bl
+      |  FROM d)
+      |SELECT doc_id, width, height, out_w, out_h,
+      | CAST((224 - out_w) // 2 AS BIGINT) AS pad_x,
+      | CAST((224 - out_h) // 2 AS BIGINT) AS pad_y,
+      | CAST(224 * 224 AS BIGINT) AS n_out_bytes,
+      | CAST(coalesce(list_sum(list_transform(range(out_w * out_h),
+      |   p -> bl[CAST(1 + (((p // out_w) * height // out_h) * width
+      |                     + (p % out_w) * width // out_w) % nb AS INT)])), 0) AS BIGINT) AS byte_sum
+      |FROM g ORDER BY doc_id""".stripMargin
+  def phashNearDupOracle: String = {
+    val bandJoins = (0 to 3).map { k =>
+      s"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.phash AS ph_a, b.phash AS ph_b\n" +
+        s"  FROM h a JOIN h b ON ((a.phash >> ${k * 16}) & 65535) = ((b.phash >> ${k * 16}) & 65535)\n" +
+        s"   AND a.doc_id < b.doc_id"
+    }.mkString("\n  UNION\n  ")
+    s"""WITH d AS (SELECT doc_id, text, CAST(octet_length(encode(text)) AS BIGINT) AS nb
+       |          FROM documents WHERE octet_length(encode(text)) > 0),
+       |g AS (SELECT doc_id,
+       |        list_transform(range(0, 64),
+       |          i -> CAST(ascii(substring(text, CAST((i * nb) // 64 AS INT) + 1, 1)) AS BIGINT)) AS bs
+       |      FROM d),
+       |h AS (SELECT doc_id,
+       |        -- bit 63 is the BIGINT sign bit: DuckDB range-checks 1<<63,
+       |        -- so emit the min-long value directly (Spark's shiftleft
+       |        -- wraps to the same two's-complement value)
+       |        CAST(list_sum(list_transform(range(0, 64),
+       |          i -> CASE WHEN bs[CAST(i AS INT) + 1] * 64 > list_sum(bs)
+       |               THEN (CASE WHEN i = 63 THEN (-9223372036854775807 - 1)
+       |                     ELSE (CAST(1 AS BIGINT) << CAST(i AS INT)) END)
+       |               ELSE 0 END)) AS BIGINT) AS phash
+       |      FROM g),
+       |cand AS (
+       |  $bandJoins)
+       |SELECT doc_a, doc_b, CAST(bit_count(xor(ph_a, ph_b)) AS BIGINT) AS hamming
+       |FROM cand
+       |WHERE bit_count(xor(ph_a, ph_b)) <= $PhashMaxHamming
+       |ORDER BY doc_a, doc_b""".stripMargin
+  }
+  def sceneCutsOracle: String =
+    """WITH d AS (SELECT doc_id, text, octet_length(encode(text)) // 40 AS nf
+      |          FROM documents WHERE octet_length(encode(text)) // 40 > 0),
+      |f AS (SELECT doc_id, text, unnest(range(0, nf)) AS f FROM d),
+      |fp AS (SELECT doc_id, f,
+      |         CAST(ascii(substring(text, CAST(f * 40 + 1 AS INT), 1)) AS BIGINT) AS fp
+      |       FROM f),
+      |dl AS (SELECT doc_id, f,
+      |         abs(fp - lag(fp) OVER (PARTITION BY doc_id ORDER BY f)) AS delta
+      |       FROM fp)
+      |SELECT doc_id, count(*) AS n_frames,
+      |       CAST(sum(CASE WHEN delta > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
+      |       CAST(coalesce(max(delta), 0) AS BIGINT) AS max_jump,
+      |       min(CASE WHEN delta > 64 THEN f END) AS first_cut
+      |FROM dl GROUP BY doc_id ORDER BY doc_id""".stripMargin
 }

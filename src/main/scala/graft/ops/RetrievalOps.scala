@@ -791,202 +791,200 @@ object RetrievalOps {
        |ORDER BY q_id""".stripMargin
   }
 
-  def oracle: Map[String, String] = Map(
-    "q298_retrieval_ndcg" -> retrievalRankMetricsOracle,
-    "q157_bm25_topk" -> {
-      val roundedPer = Bm25Terms.map { t =>
-        s"${OracleMath.stableRoundSql(s"coalesce(s_$t, 0.0)", 4)} AS s_$t"
-      }.mkString(",\n | ")
-      s"""WITH $bm25CtesSql
-         |SELECT doc_id,
-         | $roundedPer,
-         | score_total,
-         | CAST(row_number() OVER (ORDER BY score_total DESC, doc_id) AS BIGINT) AS rnk
-         |FROM tot ORDER BY score_total DESC, doc_id LIMIT $Bm25TopK""".stripMargin
-    },
-    "q182_hybrid_rrf" ->
-      s"""WITH $bm25CtesSql,
-         |rb AS (SELECT doc_id AS id_b,
-         |         CAST(row_number() OVER (ORDER BY score_total DESC, doc_id) AS BIGINT) AS rb
-         |       FROM tot QUALIFY rb <= $RrfCandidates),
-         |q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-         |sims AS (SELECT e.vec_id,
-         |           ${OracleMath.stableRoundSql(SimilarityOps.cosSql("e.embedding", "q.q_emb"), 6)} AS sim
-         |         FROM embeddings e, q WHERE e.vec_id <> 0),
-         |rv AS (SELECT vec_id AS id_v,
-         |         CAST(row_number() OVER (ORDER BY sim DESC, vec_id) AS BIGINT) AS rv
-         |       FROM sims QUALIFY rv <= $RrfCandidates),
-         |fused AS (SELECT coalesce(id_b, id_v) AS id,
-         |            coalesce(rb, -1) AS rank_bm25, coalesce(rv, -1) AS rank_knn,
-         |            coalesce(1.0 / ($RrfK + rb), 0.0) + coalesce(1.0 / ($RrfK + rv), 0.0) AS rrf
-         |          FROM rb FULL OUTER JOIN rv ON id_b = id_v)
-         |SELECT id, rank_bm25, rank_knn,
-         | ${OracleMath.stableRoundSql("rrf", 8)} AS rrf_r,
-         | CAST(row_number() OVER (ORDER BY rrf DESC, id) AS BIGINT) AS rank
-         |FROM fused ORDER BY rrf DESC, id LIMIT $RrfTopK""".stripMargin,
-    "q159_embed_contamination" ->
-      s"""WITH ev AS (SELECT embedding AS q_emb FROM embeddings
-         |            WHERE $evalSql),
-         |tr AS (SELECT vec_id, label, embedding FROM embeddings
-         |       WHERE NOT ($evalSql)),
-         |m AS (SELECT t.vec_id, t.label,
-         |        max(${SimilarityOps.cosSql("t.embedding", "e.q_emb")}) AS max_sim
-         |      FROM tr t CROSS JOIN ev e GROUP BY 1, 2)
-         |SELECT label, count(*) AS n_train,
-         | CAST(sum(CASE WHEN max_sim >= $ContamThreshold THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
-         | ${OracleMath.stableRoundSql("max(max_sim)", 6)} AS max_sim
-         |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q161_ivf_recall" ->
-      s"""WITH ${SimilarityOps.centCteSql},
-         |ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-         |       WHERE $evalSql),
-         |tr AS (SELECT vec_id, embedding FROM embeddings
-         |       WHERE NOT ($evalSql)),
-         |${SimilarityOps.assignCteSql},
-         |probe AS (
-         |  SELECT q_id, q_emb, c_label FROM (
-         |    SELECT e.q_id, e.q_emb, c.c_label,
-         |      row_number() OVER (PARTITION BY e.q_id
-         |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("e.q_emb", "c.centroid"), 6)} DESC,
-         |                 c.c_label) AS rn
-         |    FROM ev e, cent c)
-         |  WHERE rn <= $IvfNProbe),
-         |cand AS (
-         |  SELECT p.q_id, t.vec_id,
-         |    ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "p.q_emb"), 6)} AS sim
-         |  FROM tr t JOIN assign a ON t.vec_id = a.vec_id
-         |  JOIN probe p ON a.assigned = p.c_label),
-         |ivftop AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT q_id, vec_id,
-         |      row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rn
-         |    FROM cand)
-         |  WHERE rn <= $IvfK),
-         |ncand AS (SELECT q_id, count(*) AS n_candidates FROM cand GROUP BY 1),
-         |exacttop AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT e.q_id, t.vec_id,
-         |      row_number() OVER (PARTITION BY e.q_id
-         |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "e.q_emb"), 6)} DESC,
-         |                 t.vec_id) AS rn
-         |    FROM tr t CROSS JOIN ev e)
-         |  WHERE rn <= $IvfK),
-         |hits AS (SELECT q_id, count(*) AS n_hits FROM exacttop JOIN ivftop USING (q_id, vec_id) GROUP BY 1)
-         |SELECT e.q_id AS q_id,
-         | CAST(coalesce(n_candidates, 0) AS BIGINT) AS n_candidates,
-         | CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
-         | ${OracleMath.stableRoundSql(s"CAST(coalesce(n_hits, 0) AS DOUBLE) / ${IvfK.toDouble}", 4)} AS recall
-         |FROM ev e
-         |LEFT JOIN ncand n ON e.q_id = n.q_id
-         |LEFT JOIN hits h ON e.q_id = h.q_id
-         |ORDER BY q_id""".stripMargin,
-    "q279_sq_recall_curve" -> {
-      val sc = "greatest((mx - mn) / lv, 1e-12)"
-      s"""WITH ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-         |       WHERE $evalSql),
-         |tr AS (SELECT vec_id, embedding FROM embeddings
-         |       WHERE NOT ($evalSql)),
-         |ex AS (SELECT vec_id, embedding, b.bits,
-         |         CAST(list_min(embedding) AS DOUBLE) AS mn,
-         |         CAST(list_max(embedding) AS DOUBLE) AS mx,
-         |         CASE b.bits WHEN 8 THEN 255.0 WHEN 4 THEN 15.0 ELSE 3.0 END AS lv
-         |       FROM tr, (SELECT CAST(unnest([${SqBitsCurve.mkString(", ")}]) AS BIGINT) AS bits) b),
-         |rc AS (SELECT vec_id, bits,
-         |         list_transform(embedding, x ->
-         |           mn + floor((CAST(x AS DOUBLE) - mn) / $sc + 0.5) * $sc) AS recon,
-         |         CAST(floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |             list_transform(embedding, x ->
-         |               abs(CAST(x AS DOUBLE) - (mn + floor((CAST(x AS DOUBLE) - mn) / $sc + 0.5) * $sc)))),
-         |             (a, v) -> a + v) / CAST(len(embedding) AS DOUBLE)) * 100000000.0 + 0.5) AS BIGINT) AS errm
-         |       FROM ex),
-         |qtop AS (
-         |  SELECT q_id, bits, vec_id FROM (
-         |    SELECT e.q_id, r.bits, r.vec_id,
-         |      row_number() OVER (PARTITION BY e.q_id, r.bits
-         |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("r.recon", "e.q_emb"), 6)} DESC,
-         |                 r.vec_id) AS rn
-         |    FROM rc r CROSS JOIN ev e)
-         |  WHERE rn <= $IvfK),
-         |exacttop AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT e.q_id, t.vec_id,
-         |      row_number() OVER (PARTITION BY e.q_id
-         |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "e.q_emb"), 6)} DESC,
-         |                 t.vec_id) AS rn
-         |    FROM tr t CROSS JOIN ev e)
-         |  WHERE rn <= $IvfK),
-         |hits AS (SELECT bits, CAST(count(*) AS BIGINT) AS n_hits
-         |         FROM qtop JOIN exacttop USING (q_id, vec_id) GROUP BY 1),
-         |errs AS (SELECT bits, CAST(count(*) AS BIGINT) AS n_vecs,
-         |           CAST(sum(errm) AS BIGINT) AS serrm FROM rc GROUP BY 1),
-         |nq AS (SELECT CAST(count(*) AS BIGINT) AS nq FROM ev)
-         |SELECT e.bits, nq.nq AS n_queries,
-         | ${OracleMath.stableRoundSql(
-            "CAST(serrm AS DOUBLE) / CAST(n_vecs AS DOUBLE) / 100000000.0", 8)} AS mean_abs_err,
-         | ${OracleMath.stableRoundSql(
-            s"CAST(coalesce(n_hits, 0) AS DOUBLE) / (CAST(nq AS DOUBLE) * ${IvfK.toDouble})", 4)} AS mean_recall
-         |FROM errs e LEFT JOIN hits h ON e.bits = h.bits CROSS JOIN nq
-         |ORDER BY e.bits""".stripMargin
-    },
-    "q276_ivf_probe_curve" ->
-      s"""WITH ${SimilarityOps.centCteSql},
-         |ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-         |       WHERE $evalSql),
-         |tr AS (SELECT vec_id, embedding FROM embeddings
-         |       WHERE NOT ($evalSql)),
-         |${SimilarityOps.assignCteSql},
-         |probe AS (
-         |  SELECT q_id, q_emb, c_label, pr FROM (
-         |    SELECT e.q_id, e.q_emb, c.c_label,
-         |      CAST(row_number() OVER (PARTITION BY e.q_id
-         |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("e.q_emb", "c.centroid"), 6)} DESC,
-         |                 c.c_label) AS BIGINT) AS pr
-         |    FROM ev e, cent c)
-         |  WHERE pr <= ${IvfProbeCurve.max}),
-         |expanded AS (
-         |  SELECT p.q_id, t.vec_id, p.pr, v.nprobe,
-         |    ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "p.q_emb"), 6)} AS sim
-         |  FROM tr t JOIN assign a ON t.vec_id = a.vec_id
-         |  JOIN probe p ON a.assigned = p.c_label
-         |  CROSS JOIN (SELECT CAST(unnest([${IvfProbeCurve.mkString(", ")}]) AS BIGINT) AS nprobe) v
-         |  WHERE p.pr <= v.nprobe),
-         |ivftop AS (
-         |  SELECT q_id, nprobe, vec_id FROM (
-         |    SELECT q_id, nprobe, vec_id,
-         |      row_number() OVER (PARTITION BY q_id, nprobe ORDER BY sim DESC, vec_id) AS rn
-         |    FROM expanded)
-         |  WHERE rn <= $IvfK),
-         |exacttop AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT e.q_id, t.vec_id,
-         |      row_number() OVER (PARTITION BY e.q_id
-         |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "e.q_emb"), 6)} DESC,
-         |                 t.vec_id) AS rn
-         |    FROM tr t CROSS JOIN ev e)
-         |  WHERE rn <= $IvfK),
-         |hits AS (SELECT nprobe, CAST(count(*) AS BIGINT) AS n_hits
-         |         FROM ivftop JOIN exacttop USING (q_id, vec_id) GROUP BY 1),
-         |cands AS (SELECT nprobe, CAST(count(*) AS BIGINT) AS n_cand FROM expanded GROUP BY 1),
-         |nq AS (SELECT CAST(count(*) AS BIGINT) AS nq FROM ev)
-         |SELECT c.nprobe, nq.nq AS n_queries,
-         | ${OracleMath.stableRoundSql("CAST(n_cand AS DOUBLE) / CAST(nq AS DOUBLE)", 4)} AS mean_candidates,
-         | ${OracleMath.stableRoundSql(
-            s"CAST(coalesce(n_hits, 0) AS DOUBLE) / (CAST(nq AS DOUBLE) * ${IvfK.toDouble})", 4)} AS mean_recall
-         |FROM cands c LEFT JOIN hits h ON c.nprobe = h.nprobe CROSS JOIN nq
-         |ORDER BY c.nprobe""".stripMargin,
-    "q160_cluster_safe_split" ->
-      s"""WITH g AS (
-         |  SELECT ${TextFunctions.wordSetKeySql} AS wkey,
-         |    count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-         |    CAST(sum(CASE WHEN (doc_id * $SplitHashMultNaive) % 100 < $SplitTrainPct
-         |             THEN 1 ELSE 0 END) AS BIGINT) AS n_naive_train
-         |  FROM documents GROUP BY 1)
-         |SELECT CASE WHEN ('0x' || substr(wkey, 1, 12))::BIGINT % 100 < $SplitTrainPct
-         |            THEN 'train' ELSE 'test' END AS split,
-         | count(*) AS n_groups, CAST(sum(n_docs) AS BIGINT) AS n_docs,
-         | CAST(sum(sum_chars) AS BIGINT) AS sum_chars,
-         | CAST(sum(CASE WHEN n_naive_train > 0 AND n_naive_train < n_docs
-         |          THEN 1 ELSE 0 END) AS BIGINT) AS naive_leaky_groups
-         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-  )
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def bm25TopKOracle: String = {
+    val roundedPer = Bm25Terms.map { t =>
+      s"${OracleMath.stableRoundSql(s"coalesce(s_$t, 0.0)", 4)} AS s_$t"
+    }.mkString(",\n | ")
+    s"""WITH $bm25CtesSql
+       |SELECT doc_id,
+       | $roundedPer,
+       | score_total,
+       | CAST(row_number() OVER (ORDER BY score_total DESC, doc_id) AS BIGINT) AS rnk
+       |FROM tot ORDER BY score_total DESC, doc_id LIMIT $Bm25TopK""".stripMargin
+  }
+  def embedContaminationOracle: String =
+    s"""WITH ev AS (SELECT embedding AS q_emb FROM embeddings
+       |            WHERE $evalSql),
+       |tr AS (SELECT vec_id, label, embedding FROM embeddings
+       |       WHERE NOT ($evalSql)),
+       |m AS (SELECT t.vec_id, t.label,
+       |        max(${SimilarityOps.cosSql("t.embedding", "e.q_emb")}) AS max_sim
+       |      FROM tr t CROSS JOIN ev e GROUP BY 1, 2)
+       |SELECT label, count(*) AS n_train,
+       | CAST(sum(CASE WHEN max_sim >= $ContamThreshold THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
+       | ${OracleMath.stableRoundSql("max(max_sim)", 6)} AS max_sim
+       |FROM m GROUP BY 1 ORDER BY 1""".stripMargin
+  def clusterSafeSplitOracle: String =
+    s"""WITH g AS (
+       |  SELECT ${TextFunctions.wordSetKeySql} AS wkey,
+       |    count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+       |    CAST(sum(CASE WHEN (doc_id * $SplitHashMultNaive) % 100 < $SplitTrainPct
+       |             THEN 1 ELSE 0 END) AS BIGINT) AS n_naive_train
+       |  FROM documents GROUP BY 1)
+       |SELECT CASE WHEN ('0x' || substr(wkey, 1, 12))::BIGINT % 100 < $SplitTrainPct
+       |            THEN 'train' ELSE 'test' END AS split,
+       | count(*) AS n_groups, CAST(sum(n_docs) AS BIGINT) AS n_docs,
+       | CAST(sum(sum_chars) AS BIGINT) AS sum_chars,
+       | CAST(sum(CASE WHEN n_naive_train > 0 AND n_naive_train < n_docs
+       |          THEN 1 ELSE 0 END) AS BIGINT) AS naive_leaky_groups
+       |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
+  def ivfRecallOracle: String =
+    s"""WITH ${SimilarityOps.centCteSql},
+       |ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
+       |       WHERE $evalSql),
+       |tr AS (SELECT vec_id, embedding FROM embeddings
+       |       WHERE NOT ($evalSql)),
+       |${SimilarityOps.assignCteSql},
+       |probe AS (
+       |  SELECT q_id, q_emb, c_label FROM (
+       |    SELECT e.q_id, e.q_emb, c.c_label,
+       |      row_number() OVER (PARTITION BY e.q_id
+       |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("e.q_emb", "c.centroid"), 6)} DESC,
+       |                 c.c_label) AS rn
+       |    FROM ev e, cent c)
+       |  WHERE rn <= $IvfNProbe),
+       |cand AS (
+       |  SELECT p.q_id, t.vec_id,
+       |    ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "p.q_emb"), 6)} AS sim
+       |  FROM tr t JOIN assign a ON t.vec_id = a.vec_id
+       |  JOIN probe p ON a.assigned = p.c_label),
+       |ivftop AS (
+       |  SELECT q_id, vec_id FROM (
+       |    SELECT q_id, vec_id,
+       |      row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rn
+       |    FROM cand)
+       |  WHERE rn <= $IvfK),
+       |ncand AS (SELECT q_id, count(*) AS n_candidates FROM cand GROUP BY 1),
+       |exacttop AS (
+       |  SELECT q_id, vec_id FROM (
+       |    SELECT e.q_id, t.vec_id,
+       |      row_number() OVER (PARTITION BY e.q_id
+       |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "e.q_emb"), 6)} DESC,
+       |                 t.vec_id) AS rn
+       |    FROM tr t CROSS JOIN ev e)
+       |  WHERE rn <= $IvfK),
+       |hits AS (SELECT q_id, count(*) AS n_hits FROM exacttop JOIN ivftop USING (q_id, vec_id) GROUP BY 1)
+       |SELECT e.q_id AS q_id,
+       | CAST(coalesce(n_candidates, 0) AS BIGINT) AS n_candidates,
+       | CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
+       | ${OracleMath.stableRoundSql(s"CAST(coalesce(n_hits, 0) AS DOUBLE) / ${IvfK.toDouble}", 4)} AS recall
+       |FROM ev e
+       |LEFT JOIN ncand n ON e.q_id = n.q_id
+       |LEFT JOIN hits h ON e.q_id = h.q_id
+       |ORDER BY q_id""".stripMargin
+  def hybridRetrievalOracle: String =
+    s"""WITH $bm25CtesSql,
+       |rb AS (SELECT doc_id AS id_b,
+       |         CAST(row_number() OVER (ORDER BY score_total DESC, doc_id) AS BIGINT) AS rb
+       |       FROM tot QUALIFY rb <= $RrfCandidates),
+       |q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
+       |sims AS (SELECT e.vec_id,
+       |           ${OracleMath.stableRoundSql(SimilarityOps.cosSql("e.embedding", "q.q_emb"), 6)} AS sim
+       |         FROM embeddings e, q WHERE e.vec_id <> 0),
+       |rv AS (SELECT vec_id AS id_v,
+       |         CAST(row_number() OVER (ORDER BY sim DESC, vec_id) AS BIGINT) AS rv
+       |       FROM sims QUALIFY rv <= $RrfCandidates),
+       |fused AS (SELECT coalesce(id_b, id_v) AS id,
+       |            coalesce(rb, -1) AS rank_bm25, coalesce(rv, -1) AS rank_knn,
+       |            coalesce(1.0 / ($RrfK + rb), 0.0) + coalesce(1.0 / ($RrfK + rv), 0.0) AS rrf
+       |          FROM rb FULL OUTER JOIN rv ON id_b = id_v)
+       |SELECT id, rank_bm25, rank_knn,
+       | ${OracleMath.stableRoundSql("rrf", 8)} AS rrf_r,
+       | CAST(row_number() OVER (ORDER BY rrf DESC, id) AS BIGINT) AS rank
+       |FROM fused ORDER BY rrf DESC, id LIMIT $RrfTopK""".stripMargin
+  def ivfProbeCurveOracle: String =
+    s"""WITH ${SimilarityOps.centCteSql},
+       |ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
+       |       WHERE $evalSql),
+       |tr AS (SELECT vec_id, embedding FROM embeddings
+       |       WHERE NOT ($evalSql)),
+       |${SimilarityOps.assignCteSql},
+       |probe AS (
+       |  SELECT q_id, q_emb, c_label, pr FROM (
+       |    SELECT e.q_id, e.q_emb, c.c_label,
+       |      CAST(row_number() OVER (PARTITION BY e.q_id
+       |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("e.q_emb", "c.centroid"), 6)} DESC,
+       |                 c.c_label) AS BIGINT) AS pr
+       |    FROM ev e, cent c)
+       |  WHERE pr <= ${IvfProbeCurve.max}),
+       |expanded AS (
+       |  SELECT p.q_id, t.vec_id, p.pr, v.nprobe,
+       |    ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "p.q_emb"), 6)} AS sim
+       |  FROM tr t JOIN assign a ON t.vec_id = a.vec_id
+       |  JOIN probe p ON a.assigned = p.c_label
+       |  CROSS JOIN (SELECT CAST(unnest([${IvfProbeCurve.mkString(", ")}]) AS BIGINT) AS nprobe) v
+       |  WHERE p.pr <= v.nprobe),
+       |ivftop AS (
+       |  SELECT q_id, nprobe, vec_id FROM (
+       |    SELECT q_id, nprobe, vec_id,
+       |      row_number() OVER (PARTITION BY q_id, nprobe ORDER BY sim DESC, vec_id) AS rn
+       |    FROM expanded)
+       |  WHERE rn <= $IvfK),
+       |exacttop AS (
+       |  SELECT q_id, vec_id FROM (
+       |    SELECT e.q_id, t.vec_id,
+       |      row_number() OVER (PARTITION BY e.q_id
+       |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "e.q_emb"), 6)} DESC,
+       |                 t.vec_id) AS rn
+       |    FROM tr t CROSS JOIN ev e)
+       |  WHERE rn <= $IvfK),
+       |hits AS (SELECT nprobe, CAST(count(*) AS BIGINT) AS n_hits
+       |         FROM ivftop JOIN exacttop USING (q_id, vec_id) GROUP BY 1),
+       |cands AS (SELECT nprobe, CAST(count(*) AS BIGINT) AS n_cand FROM expanded GROUP BY 1),
+       |nq AS (SELECT CAST(count(*) AS BIGINT) AS nq FROM ev)
+       |SELECT c.nprobe, nq.nq AS n_queries,
+       | ${OracleMath.stableRoundSql("CAST(n_cand AS DOUBLE) / CAST(nq AS DOUBLE)", 4)} AS mean_candidates,
+       | ${OracleMath.stableRoundSql(
+          s"CAST(coalesce(n_hits, 0) AS DOUBLE) / (CAST(nq AS DOUBLE) * ${IvfK.toDouble})", 4)} AS mean_recall
+       |FROM cands c LEFT JOIN hits h ON c.nprobe = h.nprobe CROSS JOIN nq
+       |ORDER BY c.nprobe""".stripMargin
+  def sqRecallCurveOracle: String = {
+    val sc = "greatest((mx - mn) / lv, 1e-12)"
+    s"""WITH ev AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
+       |       WHERE $evalSql),
+       |tr AS (SELECT vec_id, embedding FROM embeddings
+       |       WHERE NOT ($evalSql)),
+       |ex AS (SELECT vec_id, embedding, b.bits,
+       |         CAST(list_min(embedding) AS DOUBLE) AS mn,
+       |         CAST(list_max(embedding) AS DOUBLE) AS mx,
+       |         CASE b.bits WHEN 8 THEN 255.0 WHEN 4 THEN 15.0 ELSE 3.0 END AS lv
+       |       FROM tr, (SELECT CAST(unnest([${SqBitsCurve.mkString(", ")}]) AS BIGINT) AS bits) b),
+       |rc AS (SELECT vec_id, bits,
+       |         list_transform(embedding, x ->
+       |           mn + floor((CAST(x AS DOUBLE) - mn) / $sc + 0.5) * $sc) AS recon,
+       |         CAST(floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |             list_transform(embedding, x ->
+       |               abs(CAST(x AS DOUBLE) - (mn + floor((CAST(x AS DOUBLE) - mn) / $sc + 0.5) * $sc)))),
+       |             (a, v) -> a + v) / CAST(len(embedding) AS DOUBLE)) * 100000000.0 + 0.5) AS BIGINT) AS errm
+       |       FROM ex),
+       |qtop AS (
+       |  SELECT q_id, bits, vec_id FROM (
+       |    SELECT e.q_id, r.bits, r.vec_id,
+       |      row_number() OVER (PARTITION BY e.q_id, r.bits
+       |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("r.recon", "e.q_emb"), 6)} DESC,
+       |                 r.vec_id) AS rn
+       |    FROM rc r CROSS JOIN ev e)
+       |  WHERE rn <= $IvfK),
+       |exacttop AS (
+       |  SELECT q_id, vec_id FROM (
+       |    SELECT e.q_id, t.vec_id,
+       |      row_number() OVER (PARTITION BY e.q_id
+       |        ORDER BY ${OracleMath.stableRoundSql(SimilarityOps.cosSql("t.embedding", "e.q_emb"), 6)} DESC,
+       |                 t.vec_id) AS rn
+       |    FROM tr t CROSS JOIN ev e)
+       |  WHERE rn <= $IvfK),
+       |hits AS (SELECT bits, CAST(count(*) AS BIGINT) AS n_hits
+       |         FROM qtop JOIN exacttop USING (q_id, vec_id) GROUP BY 1),
+       |errs AS (SELECT bits, CAST(count(*) AS BIGINT) AS n_vecs,
+       |           CAST(sum(errm) AS BIGINT) AS serrm FROM rc GROUP BY 1),
+       |nq AS (SELECT CAST(count(*) AS BIGINT) AS nq FROM ev)
+       |SELECT e.bits, nq.nq AS n_queries,
+       | ${OracleMath.stableRoundSql(
+          "CAST(serrm AS DOUBLE) / CAST(n_vecs AS DOUBLE) / 100000000.0", 8)} AS mean_abs_err,
+       | ${OracleMath.stableRoundSql(
+          s"CAST(coalesce(n_hits, 0) AS DOUBLE) / (CAST(nq AS DOUBLE) * ${IvfK.toDouble})", 4)} AS mean_recall
+       |FROM errs e LEFT JOIN hits h ON e.bits = h.bits CROSS JOIN nq
+       |ORDER BY e.bits""".stripMargin
+  }
 }

@@ -891,93 +891,88 @@ object SamplingOps {
        |GROUP BY fold ORDER BY fold""".stripMargin
   }
 
-  def oracle: Map[String, String] = Map(
-    "q296_kcenter_coreset" -> kcenterCoresetOracle,
-    "q297_neyman_alloc" -> neymanAllocationOracle,
-    "q302_kfold_assign" -> kfoldAssignOracle,
-    "q304_kmv_rewrite_tuple" -> kmvRewriteTupleOracle,
-    "q168_weighted_sample" ->
-      s"""WITH s AS (SELECT doc_id, source, n_chars,
-        |    ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT + 0.5)
-        |       / $TwoPow48) / n_chars AS sel_key
-        |  FROM documents)
-        |SELECT CAST(row_number() OVER (ORDER BY sel_key DESC, doc_id) AS BIGINT) AS rank,
-        | doc_id, source, n_chars,
-        | ${OracleMath.stableRoundSql("sel_key", 8)} AS sel_key_r
-        |FROM s ORDER BY sel_key DESC, doc_id LIMIT 50""".stripMargin,
-    "q150_budget_sample" ->
-      """WITH sizes AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |tot AS (SELECT count(*) AS total FROM documents),
-        |alloc0 AS (SELECT source, n, (100 * n) // total AS base,
-        |                  100 * n - ((100 * n) // total) * total AS rem
-        |           FROM sizes, tot),
-        |lo AS (SELECT 100 - sum(base) AS leftover FROM alloc0),
-        |ranked AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rk FROM alloc0),
-        |alloc AS (SELECT source, n AS n_source,
-        |                 base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS k_alloc
-        |          FROM ranked, lo),
-        |scored AS (SELECT doc_id, source,
-        |             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS h
-        |           FROM documents),
-        |sel AS (SELECT doc_id, source,
-        |          CAST(row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS pick
-        |        FROM scored)
-        |SELECT s.doc_id, s.source, s.pick, CAST(a.k_alloc AS BIGINT) AS k_alloc, a.n_source
-        |FROM sel s JOIN alloc a USING (source)
-        |WHERE s.pick <= a.k_alloc ORDER BY s.doc_id""".stripMargin,
-    "q141_group_sample" ->
-      """WITH e AS (SELECT event_type, event_id,
-        |    ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 12))::BIGINT AS h
-        |  FROM events),
-        |r AS (SELECT event_type, event_id,
-        |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY h, event_id) AS BIGINT) AS rank,
-        |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_events
-        |  FROM e)
-        |SELECT event_type, rank, event_id, n_events
-        |FROM r WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin,
-    "q158_export_manifest" ->
-      """WITH d AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |            md5(CAST(doc_id AS VARCHAR)) AS h,
-        |            ('0x' || substr(md5(text), 1, 12))::BIGINT AS chk
-        |          FROM documents)
-        |SELECT CAST(strpos('0123456789abcdef', substr(h, 1, 1)) - 1 AS BIGINT) AS shard,
-        | count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-        | CAST(sum(chk) AS BIGINT) AS content_checksum
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q140_shard_shuffle" ->
-      """WITH d AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents),
-        |s AS (SELECT doc_id, h,
-        |        CAST(strpos('0123456789abcdef', substr(h, 1, 1)) - 1 AS BIGINT) AS shard
-        |      FROM d)
-        |SELECT shard,
-        | CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS BIGINT) AS pos,
-        | doc_id
-        |FROM s ORDER BY shard, pos""".stripMargin,
-    "q103_mixture_sample" ->
-      """SELECT source, count(*) AS n_total,
-        | CAST(sum(CASE WHEN (doc_id * 1103515245) % 100
-        |                    < 25 + 5 * (CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 10)
-        |               THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-        | CAST(min(25 + 5 * (CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 10)) AS BIGINT) AS rate_pct
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q83_train_test_split" ->
-      """SELECT split, lang, count(*) AS n_docs,
-        | CAST(sum(n_chars) AS DOUBLE) / count(*) AS mean_chars
-        |FROM (SELECT CASE WHEN (doc_id * 2654435761) % 100 < 80
-        |              THEN 'train' ELSE 'test' END AS split, lang, n_chars
-        |      FROM documents)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q84_tfidf_topterm" ->
-      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-        |tf AS (SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dfreq AS (SELECT word, count(*) AS df FROM (SELECT DISTINCT doc_id, word FROM toks) GROUP BY 1),
-        |total AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT doc_id, word AS top_term, tf, df,
-        | ${OracleMath.stableRoundSql("tf * ln(CAST(n_docs AS DOUBLE) / df)", 4)} AS tfidf
-        |FROM (SELECT t.doc_id, t.word, t.tf, d.df, n.n_docs,
-        |        row_number() OVER (PARTITION BY t.doc_id
-        |                           ORDER BY t.tf DESC, d.df ASC, t.word ASC) AS rn
-        |      FROM tf t JOIN dfreq d USING (word) CROSS JOIN total n)
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-  )
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def trainTestSplitOracle: String =
+    """SELECT split, lang, count(*) AS n_docs,
+      | CAST(sum(n_chars) AS DOUBLE) / count(*) AS mean_chars
+      |FROM (SELECT CASE WHEN (doc_id * 2654435761) % 100 < 80
+      |              THEN 'train' ELSE 'test' END AS split, lang, n_chars
+      |      FROM documents)
+      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  def tfidfTopTermsOracle: String =
+    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
+      |tf AS (SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY 1, 2),
+      |dfreq AS (SELECT word, count(*) AS df FROM (SELECT DISTINCT doc_id, word FROM toks) GROUP BY 1),
+      |total AS (SELECT count(*) AS n_docs FROM documents)
+      |SELECT doc_id, word AS top_term, tf, df,
+      | ${OracleMath.stableRoundSql("tf * ln(CAST(n_docs AS DOUBLE) / df)", 4)} AS tfidf
+      |FROM (SELECT t.doc_id, t.word, t.tf, d.df, n.n_docs,
+      |        row_number() OVER (PARTITION BY t.doc_id
+      |                           ORDER BY t.tf DESC, d.df ASC, t.word ASC) AS rn
+      |      FROM tf t JOIN dfreq d USING (word) CROSS JOIN total n)
+      |WHERE rn = 1 ORDER BY doc_id""".stripMargin
+  def mixtureSampleOracle: String =
+    """SELECT source, count(*) AS n_total,
+      | CAST(sum(CASE WHEN (doc_id * 1103515245) % 100
+      |                    < 25 + 5 * (CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 10)
+      |               THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
+      | CAST(min(25 + 5 * (CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 10)) AS BIGINT) AS rate_pct
+      |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
+  def shardShuffleOracle: String =
+    """WITH d AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents),
+      |s AS (SELECT doc_id, h,
+      |        CAST(strpos('0123456789abcdef', substr(h, 1, 1)) - 1 AS BIGINT) AS shard
+      |      FROM d)
+      |SELECT shard,
+      | CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS BIGINT) AS pos,
+      | doc_id
+      |FROM s ORDER BY shard, pos""".stripMargin
+  def uniformGroupSampleOracle: String =
+    """WITH e AS (SELECT event_type, event_id,
+      |    ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 12))::BIGINT AS h
+      |  FROM events),
+      |r AS (SELECT event_type, event_id,
+      |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY h, event_id) AS BIGINT) AS rank,
+      |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_events
+      |  FROM e)
+      |SELECT event_type, rank, event_id, n_events
+      |FROM r WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin
+  def budgetSampleOracle: String =
+    """WITH sizes AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
+      |tot AS (SELECT count(*) AS total FROM documents),
+      |alloc0 AS (SELECT source, n, (100 * n) // total AS base,
+      |                  100 * n - ((100 * n) // total) * total AS rem
+      |           FROM sizes, tot),
+      |lo AS (SELECT 100 - sum(base) AS leftover FROM alloc0),
+      |ranked AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rk FROM alloc0),
+      |alloc AS (SELECT source, n AS n_source,
+      |                 base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS k_alloc
+      |          FROM ranked, lo),
+      |scored AS (SELECT doc_id, source,
+      |             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS h
+      |           FROM documents),
+      |sel AS (SELECT doc_id, source,
+      |          CAST(row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS pick
+      |        FROM scored)
+      |SELECT s.doc_id, s.source, s.pick, CAST(a.k_alloc AS BIGINT) AS k_alloc, a.n_source
+      |FROM sel s JOIN alloc a USING (source)
+      |WHERE s.pick <= a.k_alloc ORDER BY s.doc_id""".stripMargin
+  def exportManifestOracle: String =
+    """WITH d AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+      |            md5(CAST(doc_id AS VARCHAR)) AS h,
+      |            ('0x' || substr(md5(text), 1, 12))::BIGINT AS chk
+      |          FROM documents)
+      |SELECT CAST(strpos('0123456789abcdef', substr(h, 1, 1)) - 1 AS BIGINT) AS shard,
+      | count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+      | CAST(sum(chk) AS BIGINT) AS content_checksum
+      |FROM d GROUP BY 1 ORDER BY 1""".stripMargin
+  def weightedSampleOracle: String =
+    s"""WITH s AS (SELECT doc_id, source, n_chars,
+      |    ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT + 0.5)
+      |       / $TwoPow48) / n_chars AS sel_key
+      |  FROM documents)
+      |SELECT CAST(row_number() OVER (ORDER BY sel_key DESC, doc_id) AS BIGINT) AS rank,
+      | doc_id, source, n_chars,
+      | ${OracleMath.stableRoundSql("sel_key", 8)} AS sel_key_r
+      |FROM s ORDER BY sel_key DESC, doc_id LIMIT 50""".stripMargin
 }

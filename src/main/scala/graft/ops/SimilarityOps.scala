@@ -2663,7 +2663,7 @@ object SimilarityOps {
     * (the sf0.1 sweep's ~105 s hot spot); embeddings re-attach AFTER the
     * dedup so each surviving pair's cosine is computed exactly once.
     */
-  private def annNearDupOracle: String =
+  def annNearDupOracle: String =
     s"""WITH sigs AS (SELECT vec_id, $annBandColsSql FROM embeddings),
        |$annCandSql,
        |ver AS (
@@ -3077,216 +3077,182 @@ object SimilarityOps {
          |FROM cc ORDER BY vec_id""".stripMargin
   }
 
-  def oracle: Map[String, String] = Map(
-    "q293_pca_power" -> pcaPowerOracle,
-    "q295_centroid_drift" -> centroidDriftOracle,
-    "q306_srp_calibration" -> srpCalibrationOracle,
-    "q171_kmeans" -> {
-      val off = KmOff
-      val q = s"${KmQ.toLong}.0"
-      def assignCte(k: Int, centCte: String) =
-        s"""d$k AS (SELECT v.vec_id, c.cid, ${dist2Sql("v.embedding", "c.cent")} AS dist
-           |        FROM v, $centCte c),
-           |s$k AS (SELECT vec_id, cid, dist FROM (
-           |          SELECT vec_id, cid, dist,
-           |                 row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-           |          FROM d$k) WHERE rn = 1)""".stripMargin
-      val roundCtes = (1 to KmRounds).map { k =>
-        s"""${assignCte(k, s"c${k - 1}")},
-           |u$k AS (SELECT s.cid, i.i AS dim,
-           |          (sum(CAST(floor(CAST(e.embedding[i.i] AS DOUBLE) * $q) AS BIGINT) + $off)
-           |           // count(*)) - $off AS ci
-           |        FROM s$k s JOIN v e USING (vec_id)
-           |        CROSS JOIN generate_series(1, 64) AS i(i)
-           |        GROUP BY 1, 2),
-           |c$k AS (SELECT p.cid, coalesce(u.cent, p.cent) AS cent
-           |        FROM c${k - 1} p LEFT JOIN (
-           |          SELECT cid, list(CAST(ci AS DOUBLE) / $q ORDER BY dim) AS cent
-           |          FROM u$k GROUP BY cid) u USING (cid))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-         |c0 AS (SELECT vec_id AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |       FROM v WHERE vec_id < $KmK),
-         |$roundCtes,
-         |${assignCte(KmRounds + 1, s"c$KmRounds")}
-         |SELECT vec_id, cid AS cluster, ${OracleMath.stableRoundSql("dist", 6)} AS dist_r
-         |FROM s${KmRounds + 1} ORDER BY vec_id""".stripMargin
-    },
-    "q45_ann_buckets" -> {
-      val bucket = (0 until 8).map(i => sigBitSql(i, 1L << i)).mkString(" + ")
-      s"""SELECT CAST($bucket AS BIGINT) AS bucket, count(*) AS n_vectors
-         |FROM embeddings GROUP BY 1 ORDER BY bucket""".stripMargin
-    },
-    "q135_ann_neardup" -> annNearDupOracle,
-    // q307 runs the SAME query with the SRP Hamming candidate gate armed:
-    // its oracle is q135's UNGATED twin on purpose — hash equality across
-    // engines at every SF is the proof that the gate is output-preserving.
-    "q307_srp_gated_neardup" -> annNearDupOracle,
-    "q308_srp_gate_report" -> srpGateReportOracle,
-    "q319_derived_neardup" -> derivedNearDupOracle,
-    "q321_srp64_gated_neardup" -> derivedNearDupOracle,
-    "q332_auto_gated_neardup" -> derivedNearDupOracle,
-    "q322_srp64_gate_report" -> srp64GateReportOracle,
-    "q324_delta_gated_neardup" -> deltaNearDupOracle,
-    "q325_stream_delta_neardup" -> deltaNearDupOracle, // streamed twin: batch-boundary-independent
-    "q327_band_index_probe" -> deltaNearDupOracle, // stored-index twin: same pair set
-    // probe-after-merge must equal the full recompute — the merge proof
-    "q330_band_index_merge" -> deltaNearDupOracle,
-    "q333_band_index_compact" -> deltaNearDupOracle,
-    // probe-after-flip: a compaction into a new version loses no row
-    "q342_manifest_index" -> deltaNearDupOracle,
-    "q343_index_knn" -> indexKnnOracle,
-    "q344_band_recall" -> bandRecallOracle,
-    "q329_srp_width_report" -> srpWidthReportOracle,
-    "q336_srp_width_decision" -> srpWidthDecisionReportOracle,
-    // the 16-bit auto-gated run must equal the UNGATED near-exact pair set —
-    // the q321 preservation proof at the width where the cheap sketch pays
-    "q337_near_exact_gated" -> nearExactNearDupOracle,
-    "q340_near_exact_srp64" -> nearExact998NearDupOracle,
-    "q149_semantic_clusters" -> semanticClustersOracle,
-    "q338_incremental_cc" -> semanticClustersOracle,
-    "q341_two_day_incremental" -> semanticClustersOracle,
-    "q339_nightly_dedup" -> nightlyDedupOracle,
-    "q109_sql_surface" ->
-      s"""SELECT label, vec_id, CAST(rnk AS BIGINT) AS rnk, l2
-         |FROM (SELECT label, vec_id,
-         |             row_number() OVER (PARTITION BY label ORDER BY l2 DESC, vec_id) AS rnk,
-         |             l2
-         |      FROM (SELECT label, vec_id,
-         |                   ${OracleMath.stableRoundSql(
-                               "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))", 6)} AS l2
-         |            FROM embeddings))
-         |WHERE rnk <= 3 ORDER BY label, rnk""".stripMargin,
-    "q107_pq_codes" -> {
-      val diff = "(CAST(v.subvec[i] AS DOUBLE) - c.cvec[i])"
-      s"""WITH sidx AS (SELECT unnest(range(4)) AS s),
-         |sv AS (
-         |  SELECT vec_id, label, s, list_slice(embedding, s*16 + 1, s*16 + 16) AS subvec
-         |  FROM embeddings CROSS JOIN sidx),
-         |cbd AS (
-         |  SELECT label AS c_label, s, d,
-         |   ${OracleMath.stableRoundSql("avg(CAST(subvec[d] AS DOUBLE))", 8)} AS cv
-         |  FROM sv CROSS JOIN (SELECT unnest(range(1, 17)) AS d)
-         |  GROUP BY 1, 2, 3),
-         |cb AS (SELECT c_label, s, list(cv ORDER BY d) AS cvec FROM cbd GROUP BY 1, 2),
-         |scored AS (
-         |  SELECT v.vec_id, v.s, c.c_label,
-         |   ${OracleMath.stableRoundSql(s"list_sum(list_transform(range(1, 17), i -> $diff * $diff))", 6)} AS dist2
-         |  FROM sv v JOIN cb c ON c.s = v.s),
-         |best AS (
-         |  SELECT vec_id, s, c_label, dist2,
-         |   row_number() OVER (PARTITION BY vec_id, s ORDER BY dist2, c_label) AS rn
-         |  FROM scored)
-         |SELECT vec_id,
-         | CAST(max(CASE WHEN s = 0 THEN c_label END) AS BIGINT) AS c0,
-         | CAST(max(CASE WHEN s = 1 THEN c_label END) AS BIGINT) AS c1,
-         | CAST(max(CASE WHEN s = 2 THEN c_label END) AS BIGINT) AS c2,
-         | CAST(max(CASE WHEN s = 3 THEN c_label END) AS BIGINT) AS c3,
-         | ${OracleMath.stableRoundSql(
-             "max(CASE WHEN s = 0 THEN dist2 END) + max(CASE WHEN s = 1 THEN dist2 END)"
-               + " + max(CASE WHEN s = 2 THEN dist2 END) + max(CASE WHEN s = 3 THEN dist2 END)", 6)} AS err
-         |FROM best WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""".stripMargin
-    },
-    "q108_pq_adc_knn" -> {
-      val diff = "(CAST(v.subvec[i] AS DOUBLE) - c.cvec[i])"
-      val qdiff = "(CAST(q.subvec[i] AS DOUBLE) - c.cvec[i])"
-      s"""WITH sidx AS (SELECT unnest(range(4)) AS s),
-         |sv AS (
-         |  SELECT vec_id, label, s, list_slice(embedding, s*16 + 1, s*16 + 16) AS subvec
-         |  FROM embeddings CROSS JOIN sidx),
-         |cbd AS (
-         |  SELECT label AS c_label, s, d,
-         |   ${OracleMath.stableRoundSql("avg(CAST(subvec[d] AS DOUBLE))", 8)} AS cv
-         |  FROM sv CROSS JOIN (SELECT unnest(range(1, 17)) AS d)
-         |  GROUP BY 1, 2, 3),
-         |cb AS (SELECT c_label, s, list(cv ORDER BY d) AS cvec FROM cbd GROUP BY 1, 2),
-         |best AS (
-         |  SELECT v.vec_id AS vec_id, v.s AS s, c.c_label AS c_label,
-         |   row_number() OVER (PARTITION BY v.vec_id, v.s ORDER BY
-         |     ${OracleMath.stableRoundSql(s"list_sum(list_transform(range(1, 17), i -> $diff * $diff))", 6)}, c.c_label) AS rn
-         |  FROM sv v JOIN cb c ON c.s = v.s),
-         |qdt AS (
-         |  SELECT c.s, c.c_label,
-         |   ${OracleMath.stableRoundSql(s"list_sum(list_transform(range(1, 17), i -> $qdiff * $qdiff))", 6)} AS qd
-         |  FROM (SELECT s, subvec FROM sv WHERE vec_id = 0) q JOIN cb c ON c.s = q.s)
-         |SELECT b.vec_id,
-         | ${OracleMath.stableRoundSql(
-             "max(CASE WHEN b.s = 0 THEN qd END) + max(CASE WHEN b.s = 1 THEN qd END)"
-               + " + max(CASE WHEN b.s = 2 THEN qd END) + max(CASE WHEN b.s = 3 THEN qd END)", 6)} AS adist
-         |FROM best b JOIN qdt ON qdt.s = b.s AND qdt.c_label = b.c_label
-         |WHERE b.rn = 1 AND b.vec_id <> 0
-         |GROUP BY b.vec_id ORDER BY adist, b.vec_id LIMIT 10""".stripMargin
-    },
-    "q90_vector_hof" ->
-      s"""SELECT vec_id,
-         | CAST(len(embedding) AS BIGINT) AS dim,
-         | CAST(len(list_filter(embedding, x -> x > 0)) AS BIGINT) AS n_pos,
-         | ${OracleMath.stableRoundSql("sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))", 6)} AS l2,
-         | ${OracleMath.stableRoundSql("list_sum(list_transform(list_zip(embedding, list_reverse(embedding)), p -> CAST(p[1] AS DOUBLE)*CAST(p[2] AS DOUBLE)))", 6)} AS rev_dot
-         |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q95_scalar_quantize" ->
-      s"""SELECT vec_id,
-         | ${OracleMath.stableRoundSql("mn", 6)} AS qmin,
-         | ${OracleMath.stableRoundSql("mx", 6)} AS qmax,
-         | CAST(floor((CAST(embedding[1] AS DOUBLE) - mn) / scale + 0.5) AS BIGINT) AS code0,
-         | ${OracleMath.stableRoundSql(
-             "list_sum(list_transform(embedding, x -> abs(CAST(x AS DOUBLE) - (mn + floor((CAST(x AS DOUBLE) - mn) / scale + 0.5) * scale)))) / len(embedding)", 8)} AS mean_abs_err
-         |FROM (SELECT vec_id, embedding,
-         |        CAST(list_min(embedding) AS DOUBLE) AS mn,
-         |        CAST(list_max(embedding) AS DOUBLE) AS mx,
-         |        greatest((CAST(list_max(embedding) AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE)) / 255.0, 1e-12) AS scale
-         |      FROM embeddings)
-         |ORDER BY vec_id""".stripMargin,
-    "q41_knn_cosine" ->
-      s"""SELECT e.vec_id, e.label, ${OracleMath.stableRoundSql(cosSql("e.embedding", "q.q_emb"), 6)} AS sim
-         |FROM embeddings e, (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0) q
-         |WHERE e.vec_id <> 0
-         |ORDER BY sim DESC, e.vec_id LIMIT 10""".stripMargin,
-    "q42_embed_neardup" ->
-      s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${OracleMath.stableRoundSql(cosSql("a.embedding", "b.embedding"), 6)} AS sim
-         |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q47_topk_per_label" ->
-      s"""SELECT label, CAST(rn AS BIGINT) AS rank, vec_id FROM (
-         | SELECT e.label, e.vec_id,
-         |  row_number() OVER (PARTITION BY e.label ORDER BY ${OracleMath.stableRoundSql(cosSql("e.embedding", "q.q_emb"), 6)} DESC, e.vec_id) AS rn
-         | FROM embeddings e, (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0) q
-         | WHERE e.vec_id <> 0)
-         |WHERE rn <= 3 ORDER BY label, rank""".stripMargin,
-    "q43_centroids" ->
-      """SELECT label, i - 1 AS dim, round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS centroid
-        |FROM embeddings, generate_series(1, 64) t(i)
-        |GROUP BY 1, 2 ORDER BY label, dim""".stripMargin,
-    "q76_ivf_knn" ->
-      s"""WITH $centCteSql,
-         |q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-         |probe AS (
-         |  SELECT c_label FROM (
-         |    SELECT c.c_label, ${OracleMath.stableRoundSql(cosSql("c.centroid", "q.q_emb"), 6)} AS csim
-         |    FROM cent c, q)
-         |  ORDER BY csim DESC, c_label LIMIT 3),
-         |$assignCteSql
-         |SELECT e.vec_id, e.label, ${OracleMath.stableRoundSql(cosSql("e.embedding", "q.q_emb"), 6)} AS sim
-         |FROM embeddings e
-         |JOIN assign a ON e.vec_id = a.vec_id
-         |CROSS JOIN q
-         |WHERE a.assigned IN (SELECT c_label FROM probe) AND e.vec_id <> 0
-         |ORDER BY sim DESC, e.vec_id LIMIT 10""".stripMargin,
-    "q56_ivf_assign" ->
-      s"""WITH cent AS (
-         |  SELECT c_label, list(cv ORDER BY dim) AS centroid FROM (
-         |    SELECT label AS c_label, i - 1 AS dim,
-         |      ${OracleMath.stableRoundSql("avg(CAST(embedding[i] AS DOUBLE))", 8)} AS cv
-         |    FROM embeddings, generate_series(1, 64) t(i) GROUP BY 1, 2)
-         |  GROUP BY 1),
-         |scored AS (
-         |  SELECT e.vec_id, e.label, c.c_label,
-         |    ${OracleMath.stableRoundSql(cosSql("e.embedding", "c.centroid"), 6)} AS sim
-         |  FROM embeddings e, cent c)
-         |SELECT vec_id, c_label AS assigned, label, c_label = label AS correct FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_label) AS rn
-         |  FROM scored)
-         |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-  )
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def knnBruteForceOracle: String =
+    s"""SELECT e.vec_id, e.label, ${OracleMath.stableRoundSql(cosSql("e.embedding", "q.q_emb"), 6)} AS sim
+       |FROM embeddings e, (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0) q
+       |WHERE e.vec_id <> 0
+       |ORDER BY sim DESC, e.vec_id LIMIT 10""".stripMargin
+  def embeddingNearDupOracle: String =
+    s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${OracleMath.stableRoundSql(cosSql("a.embedding", "b.embedding"), 6)} AS sim
+       |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+       |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35
+       |ORDER BY id_a, id_b""".stripMargin
+  def centroidsOracle: String =
+    """SELECT label, i - 1 AS dim, round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS centroid
+      |FROM embeddings, generate_series(1, 64) t(i)
+      |GROUP BY 1, 2 ORDER BY label, dim""".stripMargin
+  def annBucketsOracle: String = {
+    val bucket = (0 until 8).map(i => sigBitSql(i, 1L << i)).mkString(" + ")
+    s"""SELECT CAST($bucket AS BIGINT) AS bucket, count(*) AS n_vectors
+       |FROM embeddings GROUP BY 1 ORDER BY bucket""".stripMargin
+  }
+  def topkPerLabelOracle: String =
+    s"""SELECT label, CAST(rn AS BIGINT) AS rank, vec_id FROM (
+       | SELECT e.label, e.vec_id,
+       |  row_number() OVER (PARTITION BY e.label ORDER BY ${OracleMath.stableRoundSql(cosSql("e.embedding", "q.q_emb"), 6)} DESC, e.vec_id) AS rn
+       | FROM embeddings e, (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0) q
+       | WHERE e.vec_id <> 0)
+       |WHERE rn <= 3 ORDER BY label, rank""".stripMargin
+  def ivfAssignOracle: String =
+    s"""WITH cent AS (
+       |  SELECT c_label, list(cv ORDER BY dim) AS centroid FROM (
+       |    SELECT label AS c_label, i - 1 AS dim,
+       |      ${OracleMath.stableRoundSql("avg(CAST(embedding[i] AS DOUBLE))", 8)} AS cv
+       |    FROM embeddings, generate_series(1, 64) t(i) GROUP BY 1, 2)
+       |  GROUP BY 1),
+       |scored AS (
+       |  SELECT e.vec_id, e.label, c.c_label,
+       |    ${OracleMath.stableRoundSql(cosSql("e.embedding", "c.centroid"), 6)} AS sim
+       |  FROM embeddings e, cent c)
+       |SELECT vec_id, c_label AS assigned, label, c_label = label AS correct FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_label) AS rn
+       |  FROM scored)
+       |WHERE rn = 1 ORDER BY vec_id""".stripMargin
+  def ivfKnnOracle: String =
+    s"""WITH $centCteSql,
+       |q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
+       |probe AS (
+       |  SELECT c_label FROM (
+       |    SELECT c.c_label, ${OracleMath.stableRoundSql(cosSql("c.centroid", "q.q_emb"), 6)} AS csim
+       |    FROM cent c, q)
+       |  ORDER BY csim DESC, c_label LIMIT 3),
+       |$assignCteSql
+       |SELECT e.vec_id, e.label, ${OracleMath.stableRoundSql(cosSql("e.embedding", "q.q_emb"), 6)} AS sim
+       |FROM embeddings e
+       |JOIN assign a ON e.vec_id = a.vec_id
+       |CROSS JOIN q
+       |WHERE a.assigned IN (SELECT c_label FROM probe) AND e.vec_id <> 0
+       |ORDER BY sim DESC, e.vec_id LIMIT 10""".stripMargin
+  def vectorProfileOracle: String =
+    s"""SELECT vec_id,
+       | CAST(len(embedding) AS BIGINT) AS dim,
+       | CAST(len(list_filter(embedding, x -> x > 0)) AS BIGINT) AS n_pos,
+       | ${OracleMath.stableRoundSql("sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))", 6)} AS l2,
+       | ${OracleMath.stableRoundSql("list_sum(list_transform(list_zip(embedding, list_reverse(embedding)), p -> CAST(p[1] AS DOUBLE)*CAST(p[2] AS DOUBLE)))", 6)} AS rev_dot
+       |FROM embeddings ORDER BY vec_id""".stripMargin
+  def scalarQuantizeOracle: String =
+    s"""SELECT vec_id,
+       | ${OracleMath.stableRoundSql("mn", 6)} AS qmin,
+       | ${OracleMath.stableRoundSql("mx", 6)} AS qmax,
+       | CAST(floor((CAST(embedding[1] AS DOUBLE) - mn) / scale + 0.5) AS BIGINT) AS code0,
+       | ${OracleMath.stableRoundSql(
+           "list_sum(list_transform(embedding, x -> abs(CAST(x AS DOUBLE) - (mn + floor((CAST(x AS DOUBLE) - mn) / scale + 0.5) * scale)))) / len(embedding)", 8)} AS mean_abs_err
+       |FROM (SELECT vec_id, embedding,
+       |        CAST(list_min(embedding) AS DOUBLE) AS mn,
+       |        CAST(list_max(embedding) AS DOUBLE) AS mx,
+       |        greatest((CAST(list_max(embedding) AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE)) / 255.0, 1e-12) AS scale
+       |      FROM embeddings)
+       |ORDER BY vec_id""".stripMargin
+  def pqCodesOracle: String = {
+    val diff = "(CAST(v.subvec[i] AS DOUBLE) - c.cvec[i])"
+    s"""WITH sidx AS (SELECT unnest(range(4)) AS s),
+       |sv AS (
+       |  SELECT vec_id, label, s, list_slice(embedding, s*16 + 1, s*16 + 16) AS subvec
+       |  FROM embeddings CROSS JOIN sidx),
+       |cbd AS (
+       |  SELECT label AS c_label, s, d,
+       |   ${OracleMath.stableRoundSql("avg(CAST(subvec[d] AS DOUBLE))", 8)} AS cv
+       |  FROM sv CROSS JOIN (SELECT unnest(range(1, 17)) AS d)
+       |  GROUP BY 1, 2, 3),
+       |cb AS (SELECT c_label, s, list(cv ORDER BY d) AS cvec FROM cbd GROUP BY 1, 2),
+       |scored AS (
+       |  SELECT v.vec_id, v.s, c.c_label,
+       |   ${OracleMath.stableRoundSql(s"list_sum(list_transform(range(1, 17), i -> $diff * $diff))", 6)} AS dist2
+       |  FROM sv v JOIN cb c ON c.s = v.s),
+       |best AS (
+       |  SELECT vec_id, s, c_label, dist2,
+       |   row_number() OVER (PARTITION BY vec_id, s ORDER BY dist2, c_label) AS rn
+       |  FROM scored)
+       |SELECT vec_id,
+       | CAST(max(CASE WHEN s = 0 THEN c_label END) AS BIGINT) AS c0,
+       | CAST(max(CASE WHEN s = 1 THEN c_label END) AS BIGINT) AS c1,
+       | CAST(max(CASE WHEN s = 2 THEN c_label END) AS BIGINT) AS c2,
+       | CAST(max(CASE WHEN s = 3 THEN c_label END) AS BIGINT) AS c3,
+       | ${OracleMath.stableRoundSql(
+           "max(CASE WHEN s = 0 THEN dist2 END) + max(CASE WHEN s = 1 THEN dist2 END)"
+             + " + max(CASE WHEN s = 2 THEN dist2 END) + max(CASE WHEN s = 3 THEN dist2 END)", 6)} AS err
+       |FROM best WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""".stripMargin
+  }
+  def pqAdcKnnOracle: String = {
+    val diff = "(CAST(v.subvec[i] AS DOUBLE) - c.cvec[i])"
+    val qdiff = "(CAST(q.subvec[i] AS DOUBLE) - c.cvec[i])"
+    s"""WITH sidx AS (SELECT unnest(range(4)) AS s),
+       |sv AS (
+       |  SELECT vec_id, label, s, list_slice(embedding, s*16 + 1, s*16 + 16) AS subvec
+       |  FROM embeddings CROSS JOIN sidx),
+       |cbd AS (
+       |  SELECT label AS c_label, s, d,
+       |   ${OracleMath.stableRoundSql("avg(CAST(subvec[d] AS DOUBLE))", 8)} AS cv
+       |  FROM sv CROSS JOIN (SELECT unnest(range(1, 17)) AS d)
+       |  GROUP BY 1, 2, 3),
+       |cb AS (SELECT c_label, s, list(cv ORDER BY d) AS cvec FROM cbd GROUP BY 1, 2),
+       |best AS (
+       |  SELECT v.vec_id AS vec_id, v.s AS s, c.c_label AS c_label,
+       |   row_number() OVER (PARTITION BY v.vec_id, v.s ORDER BY
+       |     ${OracleMath.stableRoundSql(s"list_sum(list_transform(range(1, 17), i -> $diff * $diff))", 6)}, c.c_label) AS rn
+       |  FROM sv v JOIN cb c ON c.s = v.s),
+       |qdt AS (
+       |  SELECT c.s, c.c_label,
+       |   ${OracleMath.stableRoundSql(s"list_sum(list_transform(range(1, 17), i -> $qdiff * $qdiff))", 6)} AS qd
+       |  FROM (SELECT s, subvec FROM sv WHERE vec_id = 0) q JOIN cb c ON c.s = q.s)
+       |SELECT b.vec_id,
+       | ${OracleMath.stableRoundSql(
+           "max(CASE WHEN b.s = 0 THEN qd END) + max(CASE WHEN b.s = 1 THEN qd END)"
+             + " + max(CASE WHEN b.s = 2 THEN qd END) + max(CASE WHEN b.s = 3 THEN qd END)", 6)} AS adist
+       |FROM best b JOIN qdt ON qdt.s = b.s AND qdt.c_label = b.c_label
+       |WHERE b.rn = 1 AND b.vec_id <> 0
+       |GROUP BY b.vec_id ORDER BY adist, b.vec_id LIMIT 10""".stripMargin
+  }
+  def sqlSurfaceTopNormsOracle: String =
+    s"""SELECT label, vec_id, CAST(rnk AS BIGINT) AS rnk, l2
+       |FROM (SELECT label, vec_id,
+       |             row_number() OVER (PARTITION BY label ORDER BY l2 DESC, vec_id) AS rnk,
+       |             l2
+       |      FROM (SELECT label, vec_id,
+       |                   ${OracleMath.stableRoundSql(
+                             "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))", 6)} AS l2
+       |            FROM embeddings))
+       |WHERE rnk <= 3 ORDER BY label, rnk""".stripMargin
+  def kmeansOracle: String = {
+    val off = KmOff
+    val q = s"${KmQ.toLong}.0"
+    def assignCte(k: Int, centCte: String) =
+      s"""d$k AS (SELECT v.vec_id, c.cid, ${dist2Sql("v.embedding", "c.cent")} AS dist
+         |        FROM v, $centCte c),
+         |s$k AS (SELECT vec_id, cid, dist FROM (
+         |          SELECT vec_id, cid, dist,
+         |                 row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+         |          FROM d$k) WHERE rn = 1)""".stripMargin
+    val roundCtes = (1 to KmRounds).map { k =>
+      s"""${assignCte(k, s"c${k - 1}")},
+         |u$k AS (SELECT s.cid, i.i AS dim,
+         |          (sum(CAST(floor(CAST(e.embedding[i.i] AS DOUBLE) * $q) AS BIGINT) + $off)
+         |           // count(*)) - $off AS ci
+         |        FROM s$k s JOIN v e USING (vec_id)
+         |        CROSS JOIN generate_series(1, 64) AS i(i)
+         |        GROUP BY 1, 2),
+         |c$k AS (SELECT p.cid, coalesce(u.cent, p.cent) AS cent
+         |        FROM c${k - 1} p LEFT JOIN (
+         |          SELECT cid, list(CAST(ci AS DOUBLE) / $q ORDER BY dim) AS cent
+         |          FROM u$k GROUP BY cid) u USING (cid))""".stripMargin
+    }.mkString(",\n")
+    s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
+       |c0 AS (SELECT vec_id AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
+       |       FROM v WHERE vec_id < $KmK),
+       |$roundCtes,
+       |${assignCte(KmRounds + 1, s"c$KmRounds")}
+       |SELECT vec_id, cid AS cluster, ${OracleMath.stableRoundSql("dist", 6)} AS dist_r
+       |FROM s${KmRounds + 1} ORDER BY vec_id""".stripMargin
+  }
 }

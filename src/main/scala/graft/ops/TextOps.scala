@@ -2918,289 +2918,284 @@ object TextOps {
        |FROM grid a JOIN grid b ON a.v = b.v AND a.source < b.source
        |GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin
 
-  def oracle: Map[String, String] = Map(
-    "q294_chao1_vocab" -> chao1VocabOracle,
-    "q300_spearman_sources" -> spearmanSourcesOracle,
-    "q303_hill_tail" -> hillTailOracle,
-    "q305_wasserstein_lengths" -> wassersteinLengthsOracle,
-    "q183_budget_trim" ->
-      s"""WITH base AS (SELECT doc_id, source, $qualityColsSql
-         |      FROM documents),
-         |q AS (SELECT doc_id, source, n_tok,
-         |       $qualitySql AS quality_r
-         |      FROM base),
-         |c AS (SELECT *, coalesce(sum(n_tok) OVER (PARTITION BY source
-         |        ORDER BY quality_r DESC, doc_id
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-         |      FROM q)
-         |SELECT source, doc_id, quality_r, CAST(n_tok AS BIGINT) AS n_tokens,
-         | CAST(cum_before + n_tok AS BIGINT) AS cum_tokens
-         |FROM c WHERE cum_before < $TrimBudgetTokens
-         |ORDER BY source, quality_r DESC, doc_id""".stripMargin,
-    "q172_frequent_pairs" ->
-      s"""WITH d AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents),
-        |tot AS (SELECT count(*) AS n_docs FROM d),
-        |fw AS (SELECT doc_id, unnest(ws) AS w FROM d),
-        |keep AS (SELECT w, count(*) AS df FROM fw GROUP BY 1
-        |         HAVING count(*) * $PairSupportDenom >= (SELECT n_docs FROM tot)),
-        |fk AS (SELECT fw.doc_id, fw.w FROM fw JOIN keep USING (w)),
-        |p AS (SELECT a.w AS w_a, b.w AS w_b, count(*) AS support
-        |      FROM fk a JOIN fk b ON a.doc_id = b.doc_id AND a.w < b.w
-        |      GROUP BY 1, 2)
-        |SELECT w_a, w_b, support, ka.df AS df_a, kb.df AS df_b,
-        | ${OracleMath.stableRoundSql("CAST(support AS DOUBLE) * n_docs / (ka.df * kb.df)", 6)} AS lift_r
-        |FROM p JOIN keep ka ON ka.w = p.w_a JOIN keep kb ON kb.w = p.w_b, tot
-        |WHERE support * $PairSupportDenom >= n_docs
-        |ORDER BY support DESC, w_a, w_b""".stripMargin,
-    "q162_bpe_merges" ->
-      s"""WITH $bpeTrainCtes
-         |SELECT CAST(round AS BIGINT) AS round, sym_a, sym_b, merged, freq FROM (
-         |${(1 to BpeRounds).map { k =>
-               s"SELECT $k AS round, a AS sym_a, b AS sym_b, a || b AS merged, cnt AS freq FROM m$k"
-             }.mkString("\nUNION ALL\n")}
-         |) ORDER BY round""".stripMargin,
-    "q163_bpe_encode" ->
-      s"""WITH $bpeTrainCtes,
-         |enc AS (SELECT word, CAST(len(string_split(trim(r, '$M'), '$M$M')) AS BIGINT) AS n_sub
-         |        FROM d$BpeRounds),
-         |t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
-         |SELECT doc_id, count(*) AS n_words,
-         | CAST(sum(n_sub) AS BIGINT) AS n_subwords,
-         | CAST(sum(len(word)) AS BIGINT) AS n_chars,
-         | ${OracleMath.stableRoundSql("CAST(sum(len(word)) AS DOUBLE) / sum(n_sub)", 4)} AS chars_per_token
-         |FROM t JOIN enc USING (word)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q152_curation_funnel" ->
-      s"""WITH raw AS (SELECT doc_id, text, string_split(text, ' ') AS ws,
-        |                    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        |             FROM documents),
-        |d2 AS (SELECT doc_id, text, ws, n FROM (
-        |  SELECT *, min(doc_id) OVER (PARTITION BY text) AS m FROM raw) WHERE doc_id = m),
-        |d3 AS (SELECT doc_id, text, ws, n FROM (
-        |  SELECT *, min(doc_id) OVER (PARTITION BY list_sort(list_distinct(ws))) AS m FROM d2)
-        |  WHERE doc_id = m),
-        |d4 AS (SELECT doc_id, ws, n FROM d3
-        |       WHERE n BETWEEN 10 AND 2000 AND length(text) - (n - 1) <= 12 * n),
-        |g AS (SELECT doc_id, unnest(range(0, n - 7)) AS pos, ws FROM d4 WHERE n >= 8),
-        |g2 AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+8], ' ') AS gram FROM g),
-        |dup AS (SELECT gram FROM (
-        |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2 GROUP BY 1) WHERE df >= 2),
-        |hits AS (SELECT DISTINCT doc_id, idx FROM (
-        |  SELECT g2.doc_id, unnest(range(pos, pos + 8)) AS idx
-        |  FROM g2 JOIN dup USING (gram))),
-        |kept AS (SELECT d4.doc_id, d4.n - coalesce(h.c, 0) AS nk
-        |         FROM d4 LEFT JOIN (SELECT doc_id, count(*) AS c FROM hits GROUP BY 1) h
-        |         USING (doc_id))
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS BIGINT) AS stage_id, 'raw' AS stage,
-        |         count(*) AS n_units, CAST(sum(n) AS BIGINT) AS n_tokens FROM raw
-        |  UNION ALL SELECT 2, 'exact_dedup', count(*), CAST(sum(n) AS BIGINT) FROM d2
-        |  UNION ALL SELECT 3, 'wordset_dedup', count(*), CAST(sum(n) AS BIGINT) FROM d3
-        |  UNION ALL SELECT 4, 'quality_band', count(*), CAST(sum(n) AS BIGINT) FROM d4
-        |  UNION ALL SELECT 5, 'span_removal',
-        |    CAST(sum(CASE WHEN nk > 0 THEN 1 ELSE 0 END) AS BIGINT),
-        |    CAST(sum(nk) AS BIGINT) FROM kept
-        |  UNION ALL SELECT 6, 'packed_$PackSeqLen',
-        |    CAST((sum(nk) + ${PackSeqLen - 1}) // $PackSeqLen AS BIGINT),
-        |    CAST(sum(nk) AS BIGINT) FROM kept)
-        |ORDER BY stage_id""".stripMargin,
-    "q151_span_removal" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, unnest(range(0, len(ws))) AS idx, ws FROM toks),
-        |tok2 AS (SELECT doc_id, idx, ws[idx+1] AS word FROM tok),
-        |g AS (SELECT doc_id, unnest(range(0, len(ws) - 7)) AS pos, ws
-        |      FROM toks WHERE len(ws) >= 8),
-        |g2 AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+8], ' ') AS gram FROM g),
-        |dup AS (SELECT gram FROM (
-        |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2 GROUP BY 1) WHERE df >= 2),
-        |hits AS (SELECT DISTINCT doc_id, idx FROM (
-        |  SELECT g2.doc_id, unnest(range(pos, pos + 8)) AS idx
-        |  FROM g2 JOIN dup USING (gram))),
-        |isl AS (SELECT doc_id, count(DISTINCT grp) AS n_spans, count(*) AS n_removed FROM (
-        |  SELECT doc_id, idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp
-        |  FROM hits) GROUP BY 1),
-        |kept AS (SELECT t.doc_id, string_agg(t.word, ' ' ORDER BY t.idx) AS cleaned
-        |         FROM tok2 t ANTI JOIN hits h ON t.doc_id = h.doc_id AND t.idx = h.idx
-        |         GROUP BY 1)
-        |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
-        | coalesce(isl.n_removed, 0) AS n_removed,
-        | coalesce(isl.n_spans, 0) AS n_spans,
-        | md5(coalesce(k.cleaned, '')) AS cleaned_md5
-        |FROM toks t
-        |LEFT JOIN isl USING (doc_id)
-        |LEFT JOIN kept k USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-    // q155: the q151 round UNROLLED SpanFixpointRounds times — each round's
-    // CTE block is generated from the same constants as the Scala loop, and
-    // a converged round is the identity, so the unroll equals the Spark
-    // side's early-exited fixpoint whether or not convergence came early.
-    "q155_span_fixpoint" -> {
-      val w = 8
-      val rounds = (1 to SpanFixpointRounds).map { i =>
-        val prev = s"c${i - 1}"
-        s"""g$i AS (SELECT doc_id, unnest(range(0, len(ws) - ${w - 1})) AS pos, ws
-           |      FROM $prev WHERE len(ws) >= $w),
-           |g2_$i AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+$w], ' ') AS gram FROM g$i),
-           |dup$i AS (SELECT gram FROM (
-           |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2_$i GROUP BY 1) WHERE df >= 2),
-           |hits$i AS (SELECT DISTINCT doc_id, idx FROM (
-           |  SELECT g2_$i.doc_id, unnest(range(pos, pos + $w)) AS idx
-           |  FROM g2_$i JOIN dup$i USING (gram))),
-           |k$i AS (SELECT t.doc_id, list(t.word ORDER BY t.idx) AS ws
-           |        FROM (SELECT doc_id, idx, ws[idx+1] AS word FROM
-           |              (SELECT doc_id, unnest(range(0, len(ws))) AS idx, ws FROM $prev)) t
-           |        ANTI JOIN hits$i h ON t.doc_id = h.doc_id AND t.idx = h.idx
-           |        GROUP BY 1),
-           |c$i AS (SELECT p.doc_id, coalesce(k.ws, CAST([] AS VARCHAR[])) AS ws
-           |        FROM $prev p LEFT JOIN k$i k USING (doc_id))""".stripMargin
-      }.mkString(",\n")
-      val touched = (1 to SpanFixpointRounds)
-        .map(i => s"(CASE WHEN len(c$i.ws) < len(c${i - 1}.ws) THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      val joins = (1 to SpanFixpointRounds).map(i => s"JOIN c$i USING (doc_id)").mkString(" ")
-      val last = s"c$SpanFixpointRounds"
-      s"""WITH c0 AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |$rounds
-         |SELECT c0.doc_id, CAST(len(c0.ws) AS BIGINT) AS n_tokens,
-         | CAST(len(c0.ws) - len($last.ws) AS BIGINT) AS n_removed,
-         | CAST($touched AS BIGINT) AS n_rounds_touched,
-         | md5(coalesce(array_to_string($last.ws, ' '), '')) AS cleaned_md5
-         |FROM c0 $joins
-         |ORDER BY c0.doc_id""".stripMargin
-    },
-    "q148_dup_spans" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |g AS (SELECT doc_id, unnest(range(0, len(ws) - 7)) AS pos, ws
-         |      FROM toks WHERE len(ws) >= 8),
-         |g2 AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+8], ' ') AS gram FROM g),
-         |dup AS (SELECT gram FROM (
-         |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2 GROUP BY 1) WHERE df >= 2),
-         |hits AS (SELECT DISTINCT doc_id, idx FROM (
-         |  SELECT g2.doc_id, unnest(range(pos, pos + 8)) AS idx
-         |  FROM g2 JOIN dup USING (gram))),
-         |cov AS (SELECT doc_id, count(*) AS n_covered FROM hits GROUP BY 1)
-         |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
-         | coalesce(cov.n_covered, 0) AS n_covered,
-         | ${OracleMath.stableRoundSql("CAST(coalesce(cov.n_covered, 0) AS DOUBLE) / len(t.ws)", 4)} AS ratio
-         |FROM toks t LEFT JOIN cov USING (doc_id) ORDER BY t.doc_id""".stripMargin,
-    "q147_heavy_hitters" ->
-      """WITH toks AS (SELECT source, unnest(string_split(text, ' ')) AS word FROM documents),
-        |cnt AS (SELECT source, word, count(*) AS cnt_exact FROM toks GROUP BY 1, 2),
-        |top3 AS (SELECT source, word, cnt_exact FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY source ORDER BY cnt_exact DESC, word) AS rk
-        |  FROM cnt) WHERE rk <= 3)
-        |SELECT source, word, cnt_exact, TRUE AS mg_ok
-        |FROM top3 ORDER BY source, word""".stripMargin,
-    "q143_boilerplate" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
-         |              FROM documents WHERE len(string_split(text, ' ')) >= 3),
-         |grams AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)-1),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS g FROM toks),
-         |total AS (SELECT count(DISTINCT doc_id) AS n_docs FROM grams),
-         |boiler AS (SELECT g FROM
-         |  (SELECT g, count(DISTINCT doc_id) AS df FROM grams GROUP BY 1), total
-         |  WHERE df * 10 > n_docs)
-         |SELECT doc_id, count(*) AS n_grams, count(boiler.g) AS n_boiler,
-         | ${OracleMath.stableRoundSql("CAST(count(boiler.g) AS DOUBLE) / count(*)", 4)} AS ratio
-         |FROM grams LEFT JOIN boiler ON grams.g = boiler.g
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q139_contamination" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
-         |              FROM documents WHERE len(string_split(text, ' ')) >= 3),
-         |grams AS (SELECT DISTINCT doc_id, g FROM (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(ws)-1),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS g FROM toks)),
-         |train AS (SELECT DISTINCT g FROM grams WHERE doc_id % 10 <> 0),
-         |test AS (SELECT doc_id, g FROM grams WHERE doc_id % 10 = 0)
-         |SELECT test.doc_id AS doc_id, count(*) AS n_grams,
-         | count(train.g) AS n_contaminated,
-         | ${OracleMath.stableRoundSql("CAST(count(train.g) AS DOUBLE) / count(*)", 4)} AS ratio
-         |FROM test LEFT JOIN train ON test.g = train.g
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q134_explode_outer" ->
-      """SELECT d.doc_id, t.w
-        |FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) >= 8) AS l
-        |      FROM documents) d
-        |LEFT JOIN LATERAL (SELECT unnest(d.l) AS w) t ON true
-        |ORDER BY doc_id, w NULLS FIRST""".stripMargin,
-    "q115_repetition_ngrams" ->
-      s"""SELECT doc_id, n_tri, n_uniq,
-         | CASE WHEN n_tri = 0 THEN 0.0
-         |      ELSE ${OracleMath.stableRoundSql("1.0 - CAST(n_uniq AS DOUBLE) / n_tri", 4)} END AS dup_ratio
-         |FROM (SELECT doc_id,
-         |        CAST(len(tris) AS BIGINT) AS n_tri,
-         |        CAST(len(list_distinct(tris)) AS BIGINT) AS n_uniq
-         |      FROM (SELECT doc_id,
-         |              list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS tris
-         |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)))
-         |ORDER BY doc_id""".stripMargin,
-    "q116_redact_pii" ->
-      s"""WITH dirty AS (
-         |  SELECT doc_id,
-         |    text || ' reach user' || CAST(doc_id AS VARCHAR) || '@mail.example.com or +1555'
-         |         || CAST(n_chars AS VARCHAR) || ' see https://ex.example.com/d/' || CAST(doc_id AS VARCHAR) AS d
-         |  FROM documents),
-         |red AS (
-         |  SELECT doc_id, d,
-         |    regexp_replace(regexp_replace(regexp_replace(d,
-         |      'https?://[^ ]+', '<URL>', 'g'),
-         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-         |      '[0-9][0-9][0-9]+', '<NUM>', 'g') AS r
-         |  FROM dirty)
-         |SELECT doc_id,
-         | CAST(len(regexp_extract_all(d, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-         | CAST(len(regexp_extract_all(d, 'https?://[^ ]+')) AS BIGINT) AS n_url,
-         | CAST(len(regexp_extract_all(d, '[0-9][0-9][0-9]+')) AS BIGINT) AS n_num,
-         | CAST(length(r) AS BIGINT) AS red_len,
-         | substring(r, greatest(length(r) - 59, 1), 60) AS red_tail
-         |FROM red ORDER BY doc_id""".stripMargin,
-    "q102_pack_sequences" ->
-      """SELECT doc_id, n_tokens,
-        | CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT) AS pack_id
-        |FROM (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "q91_pos_tokens" ->
-      """SELECT doc_id, CAST(unnest(range(len(ws))) AS BIGINT) AS pos, unnest(ws) AS word
-        |FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q65_bigram_freq" ->
-      """SELECT ngram AS bigram, count(*) AS cnt
-        |FROM (SELECT unnest(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])) AS ngram
-        |      FROM (SELECT string_split(text, ' ') AS ws FROM documents))
-        |GROUP BY 1 ORDER BY cnt DESC, bigram LIMIT 20""".stripMargin,
-    "q30_token_stats" ->
-      s"""SELECT doc_id,
-        | CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-        | CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
-        | ${OracleMath.stableRoundSql("CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / len(string_split(text,' '))", 4)} AS ttr,
-        | ${OracleMath.stableRoundSql("CAST(list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS DOUBLE) / len(string_split(text,' '))", 4)} AS mean_wlen
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q31_lang_id" ->
-      s"""SELECT doc_id, lang,
-         | CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS BIGINT) AS s_en,
-         | CAST(len(list_filter(string_split(text,' '), w -> w IN (${deStop.map("'" + _ + "'").mkString(",")}))) AS BIGINT) AS s_de,
-         | CAST(len(list_filter(string_split(text,' '), w -> w IN (${esStop.map("'" + _ + "'").mkString(",")}))) AS BIGINT) AS s_es,
-         | CASE WHEN s_en >= s_de AND s_en >= s_es THEN 'en' WHEN s_de >= s_es THEN 'de' ELSE 'es' END AS lang_pred
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q32_quality_score" ->
-      s"""SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
-         | ${OracleMath.stableRoundSql("sw / CAST(n_tok AS DOUBLE)", 4)} AS stopword_ratio,
-         | $qualitySql AS quality
-         |FROM (SELECT doc_id, $qualityColsSql
-         |      FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-    "q33_fingerprint" ->
-      s"""SELECT doc_id,
-         | list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text,' '), w -> ${TextFunctions.wordHashSql("w")})), (acc,h) -> (acc*131+h) % ${P}) AS fp
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q34_word_freq" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(text,' ')) AS word FROM documents)
-        |GROUP BY 1 ORDER BY cnt DESC, word LIMIT 100""".stripMargin,
-    "q57_subword_tokens" ->
-      """SELECT doc_id,
-        | CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
-        | CAST(len(regexp_extract_all(text, '[^aeiou ]*[aeiou]+')) AS BIGINT) AS n_subwords
-        |FROM documents ORDER BY doc_id""".stripMargin,
-  )
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  def tokenStatsOracle: String =
+    s"""SELECT doc_id,
+      | CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
+      | CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
+      | ${OracleMath.stableRoundSql("CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / len(string_split(text,' '))", 4)} AS ttr,
+      | ${OracleMath.stableRoundSql("CAST(list_sum(list_transform(string_split(text,' '), w -> CAST(length(w) AS BIGINT))) AS DOUBLE) / len(string_split(text,' '))", 4)} AS mean_wlen
+      |FROM documents ORDER BY doc_id""".stripMargin
+  def langIdOracle: String =
+    s"""SELECT doc_id, lang,
+       | CAST(len(list_filter(string_split(text,' '), w -> w IN (${enStop.map("'" + _ + "'").mkString(",")}))) AS BIGINT) AS s_en,
+       | CAST(len(list_filter(string_split(text,' '), w -> w IN (${deStop.map("'" + _ + "'").mkString(",")}))) AS BIGINT) AS s_de,
+       | CAST(len(list_filter(string_split(text,' '), w -> w IN (${esStop.map("'" + _ + "'").mkString(",")}))) AS BIGINT) AS s_es,
+       | CASE WHEN s_en >= s_de AND s_en >= s_es THEN 'en' WHEN s_de >= s_es THEN 'de' ELSE 'es' END AS lang_pred
+       |FROM documents ORDER BY doc_id""".stripMargin
+  def qualityScoreOracle: String =
+    s"""SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
+       | ${OracleMath.stableRoundSql("sw / CAST(n_tok AS DOUBLE)", 4)} AS stopword_ratio,
+       | $qualitySql AS quality
+       |FROM (SELECT doc_id, $qualityColsSql
+       |      FROM documents)
+       |ORDER BY doc_id""".stripMargin
+  def fingerprintOracle: String =
+    s"""SELECT doc_id,
+       | list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text,' '), w -> ${TextFunctions.wordHashSql("w")})), (acc,h) -> (acc*131+h) % ${P}) AS fp
+       |FROM documents ORDER BY doc_id""".stripMargin
+  def wordFreqOracle: String =
+    """SELECT word, count(*) AS cnt
+      |FROM (SELECT unnest(string_split(text,' ')) AS word FROM documents)
+      |GROUP BY 1 ORDER BY cnt DESC, word LIMIT 100""".stripMargin
+  def subwordTokensOracle: String =
+    """SELECT doc_id,
+      | CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
+      | CAST(len(regexp_extract_all(text, '[^aeiou ]*[aeiou]+')) AS BIGINT) AS n_subwords
+      |FROM documents ORDER BY doc_id""".stripMargin
+  def bigramFreqOracle: String =
+    """SELECT ngram AS bigram, count(*) AS cnt
+      |FROM (SELECT unnest(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])) AS ngram
+      |      FROM (SELECT string_split(text, ' ') AS ws FROM documents))
+      |GROUP BY 1 ORDER BY cnt DESC, bigram LIMIT 20""".stripMargin
+  def posTokensOracle: String =
+    """SELECT doc_id, CAST(unnest(range(len(ws))) AS BIGINT) AS pos, unnest(ws) AS word
+      |FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
+      |ORDER BY doc_id, pos""".stripMargin
+  def packSequencesOracle: String =
+    """SELECT doc_id, n_tokens,
+      | CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT) AS pack_id
+      |FROM (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens FROM documents)
+      |ORDER BY doc_id""".stripMargin
+  def repetitionRatioOracle: String =
+    s"""SELECT doc_id, n_tri, n_uniq,
+       | CASE WHEN n_tri = 0 THEN 0.0
+       |      ELSE ${OracleMath.stableRoundSql("1.0 - CAST(n_uniq AS DOUBLE) / n_tri", 4)} END AS dup_ratio
+       |FROM (SELECT doc_id,
+       |        CAST(len(tris) AS BIGINT) AS n_tri,
+       |        CAST(len(list_distinct(tris)) AS BIGINT) AS n_uniq
+       |      FROM (SELECT doc_id,
+       |              list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS tris
+       |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)))
+       |ORDER BY doc_id""".stripMargin
+  def redactPiiOracle: String =
+    s"""WITH dirty AS (
+       |  SELECT doc_id,
+       |    text || ' reach user' || CAST(doc_id AS VARCHAR) || '@mail.example.com or +1555'
+       |         || CAST(n_chars AS VARCHAR) || ' see https://ex.example.com/d/' || CAST(doc_id AS VARCHAR) AS d
+       |  FROM documents),
+       |red AS (
+       |  SELECT doc_id, d,
+       |    regexp_replace(regexp_replace(regexp_replace(d,
+       |      'https?://[^ ]+', '<URL>', 'g'),
+       |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+       |      '[0-9][0-9][0-9]+', '<NUM>', 'g') AS r
+       |  FROM dirty)
+       |SELECT doc_id,
+       | CAST(len(regexp_extract_all(d, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
+       | CAST(len(regexp_extract_all(d, 'https?://[^ ]+')) AS BIGINT) AS n_url,
+       | CAST(len(regexp_extract_all(d, '[0-9][0-9][0-9]+')) AS BIGINT) AS n_num,
+       | CAST(length(r) AS BIGINT) AS red_len,
+       | substring(r, greatest(length(r) - 59, 1), 60) AS red_tail
+       |FROM red ORDER BY doc_id""".stripMargin
+  def explodeOuterTokensOracle: String =
+    """SELECT d.doc_id, t.w
+      |FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) >= 8) AS l
+      |      FROM documents) d
+      |LEFT JOIN LATERAL (SELECT unnest(d.l) AS w) t ON true
+      |ORDER BY doc_id, w NULLS FIRST""".stripMargin
+  def contaminationOracle: String =
+    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
+       |              FROM documents WHERE len(string_split(text, ' ')) >= 3),
+       |grams AS (SELECT DISTINCT doc_id, g FROM (
+       |  SELECT doc_id, unnest(list_transform(range(1, len(ws)-1),
+       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS g FROM toks)),
+       |train AS (SELECT DISTINCT g FROM grams WHERE doc_id % 10 <> 0),
+       |test AS (SELECT doc_id, g FROM grams WHERE doc_id % 10 = 0)
+       |SELECT test.doc_id AS doc_id, count(*) AS n_grams,
+       | count(train.g) AS n_contaminated,
+       | ${OracleMath.stableRoundSql("CAST(count(train.g) AS DOUBLE) / count(*)", 4)} AS ratio
+       |FROM test LEFT JOIN train ON test.g = train.g
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+  def boilerplateGramsOracle: String =
+    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
+       |              FROM documents WHERE len(string_split(text, ' ')) >= 3),
+       |grams AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)-1),
+       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS g FROM toks),
+       |total AS (SELECT count(DISTINCT doc_id) AS n_docs FROM grams),
+       |boiler AS (SELECT g FROM
+       |  (SELECT g, count(DISTINCT doc_id) AS df FROM grams GROUP BY 1), total
+       |  WHERE df * 10 > n_docs)
+       |SELECT doc_id, count(*) AS n_grams, count(boiler.g) AS n_boiler,
+       | ${OracleMath.stableRoundSql("CAST(count(boiler.g) AS DOUBLE) / count(*)", 4)} AS ratio
+       |FROM grams LEFT JOIN boiler ON grams.g = boiler.g
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+  def heavyHittersOracle: String =
+    """WITH toks AS (SELECT source, unnest(string_split(text, ' ')) AS word FROM documents),
+      |cnt AS (SELECT source, word, count(*) AS cnt_exact FROM toks GROUP BY 1, 2),
+      |top3 AS (SELECT source, word, cnt_exact FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY source ORDER BY cnt_exact DESC, word) AS rk
+      |  FROM cnt) WHERE rk <= 3)
+      |SELECT source, word, cnt_exact, TRUE AS mg_ok
+      |FROM top3 ORDER BY source, word""".stripMargin
+  def dupSpansOracle: String =
+    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       |g AS (SELECT doc_id, unnest(range(0, len(ws) - 7)) AS pos, ws
+       |      FROM toks WHERE len(ws) >= 8),
+       |g2 AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+8], ' ') AS gram FROM g),
+       |dup AS (SELECT gram FROM (
+       |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2 GROUP BY 1) WHERE df >= 2),
+       |hits AS (SELECT DISTINCT doc_id, idx FROM (
+       |  SELECT g2.doc_id, unnest(range(pos, pos + 8)) AS idx
+       |  FROM g2 JOIN dup USING (gram))),
+       |cov AS (SELECT doc_id, count(*) AS n_covered FROM hits GROUP BY 1)
+       |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
+       | coalesce(cov.n_covered, 0) AS n_covered,
+       | ${OracleMath.stableRoundSql("CAST(coalesce(cov.n_covered, 0) AS DOUBLE) / len(t.ws)", 4)} AS ratio
+       |FROM toks t LEFT JOIN cov USING (doc_id) ORDER BY t.doc_id""".stripMargin
+  def spanRemovalOracle: String =
+    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      |tok AS (SELECT doc_id, unnest(range(0, len(ws))) AS idx, ws FROM toks),
+      |tok2 AS (SELECT doc_id, idx, ws[idx+1] AS word FROM tok),
+      |g AS (SELECT doc_id, unnest(range(0, len(ws) - 7)) AS pos, ws
+      |      FROM toks WHERE len(ws) >= 8),
+      |g2 AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+8], ' ') AS gram FROM g),
+      |dup AS (SELECT gram FROM (
+      |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2 GROUP BY 1) WHERE df >= 2),
+      |hits AS (SELECT DISTINCT doc_id, idx FROM (
+      |  SELECT g2.doc_id, unnest(range(pos, pos + 8)) AS idx
+      |  FROM g2 JOIN dup USING (gram))),
+      |isl AS (SELECT doc_id, count(DISTINCT grp) AS n_spans, count(*) AS n_removed FROM (
+      |  SELECT doc_id, idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp
+      |  FROM hits) GROUP BY 1),
+      |kept AS (SELECT t.doc_id, string_agg(t.word, ' ' ORDER BY t.idx) AS cleaned
+      |         FROM tok2 t ANTI JOIN hits h ON t.doc_id = h.doc_id AND t.idx = h.idx
+      |         GROUP BY 1)
+      |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
+      | coalesce(isl.n_removed, 0) AS n_removed,
+      | coalesce(isl.n_spans, 0) AS n_spans,
+      | md5(coalesce(k.cleaned, '')) AS cleaned_md5
+      |FROM toks t
+      |LEFT JOIN isl USING (doc_id)
+      |LEFT JOIN kept k USING (doc_id)
+      |ORDER BY t.doc_id""".stripMargin
+  def curationFunnelOracle: String =
+    s"""WITH raw AS (SELECT doc_id, text, string_split(text, ' ') AS ws,
+      |                    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+      |             FROM documents),
+      |d2 AS (SELECT doc_id, text, ws, n FROM (
+      |  SELECT *, min(doc_id) OVER (PARTITION BY text) AS m FROM raw) WHERE doc_id = m),
+      |d3 AS (SELECT doc_id, text, ws, n FROM (
+      |  SELECT *, min(doc_id) OVER (PARTITION BY list_sort(list_distinct(ws))) AS m FROM d2)
+      |  WHERE doc_id = m),
+      |d4 AS (SELECT doc_id, ws, n FROM d3
+      |       WHERE n BETWEEN 10 AND 2000 AND length(text) - (n - 1) <= 12 * n),
+      |g AS (SELECT doc_id, unnest(range(0, n - 7)) AS pos, ws FROM d4 WHERE n >= 8),
+      |g2 AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+8], ' ') AS gram FROM g),
+      |dup AS (SELECT gram FROM (
+      |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2 GROUP BY 1) WHERE df >= 2),
+      |hits AS (SELECT DISTINCT doc_id, idx FROM (
+      |  SELECT g2.doc_id, unnest(range(pos, pos + 8)) AS idx
+      |  FROM g2 JOIN dup USING (gram))),
+      |kept AS (SELECT d4.doc_id, d4.n - coalesce(h.c, 0) AS nk
+      |         FROM d4 LEFT JOIN (SELECT doc_id, count(*) AS c FROM hits GROUP BY 1) h
+      |         USING (doc_id))
+      |SELECT * FROM (
+      |  SELECT CAST(1 AS BIGINT) AS stage_id, 'raw' AS stage,
+      |         count(*) AS n_units, CAST(sum(n) AS BIGINT) AS n_tokens FROM raw
+      |  UNION ALL SELECT 2, 'exact_dedup', count(*), CAST(sum(n) AS BIGINT) FROM d2
+      |  UNION ALL SELECT 3, 'wordset_dedup', count(*), CAST(sum(n) AS BIGINT) FROM d3
+      |  UNION ALL SELECT 4, 'quality_band', count(*), CAST(sum(n) AS BIGINT) FROM d4
+      |  UNION ALL SELECT 5, 'span_removal',
+      |    CAST(sum(CASE WHEN nk > 0 THEN 1 ELSE 0 END) AS BIGINT),
+      |    CAST(sum(nk) AS BIGINT) FROM kept
+      |  UNION ALL SELECT 6, 'packed_$PackSeqLen',
+      |    CAST((sum(nk) + ${PackSeqLen - 1}) // $PackSeqLen AS BIGINT),
+      |    CAST(sum(nk) AS BIGINT) FROM kept)
+      |ORDER BY stage_id""".stripMargin
+  // q155: the q151 round UNROLLED SpanFixpointRounds times — each round's
+  // CTE block is generated from the same constants as the Scala loop, and
+  // a converged round is the identity, so the unroll equals the Spark
+  // side's early-exited fixpoint whether or not convergence came early.
+  def spanRemovalFixpointOracle: String = {
+    val w = 8
+    val rounds = (1 to SpanFixpointRounds).map { i =>
+      val prev = s"c${i - 1}"
+      s"""g$i AS (SELECT doc_id, unnest(range(0, len(ws) - ${w - 1})) AS pos, ws
+         |      FROM $prev WHERE len(ws) >= $w),
+         |g2_$i AS (SELECT doc_id, pos, array_to_string(ws[pos+1:pos+$w], ' ') AS gram FROM g$i),
+         |dup$i AS (SELECT gram FROM (
+         |  SELECT gram, count(DISTINCT doc_id) AS df FROM g2_$i GROUP BY 1) WHERE df >= 2),
+         |hits$i AS (SELECT DISTINCT doc_id, idx FROM (
+         |  SELECT g2_$i.doc_id, unnest(range(pos, pos + $w)) AS idx
+         |  FROM g2_$i JOIN dup$i USING (gram))),
+         |k$i AS (SELECT t.doc_id, list(t.word ORDER BY t.idx) AS ws
+         |        FROM (SELECT doc_id, idx, ws[idx+1] AS word FROM
+         |              (SELECT doc_id, unnest(range(0, len(ws))) AS idx, ws FROM $prev)) t
+         |        ANTI JOIN hits$i h ON t.doc_id = h.doc_id AND t.idx = h.idx
+         |        GROUP BY 1),
+         |c$i AS (SELECT p.doc_id, coalesce(k.ws, CAST([] AS VARCHAR[])) AS ws
+         |        FROM $prev p LEFT JOIN k$i k USING (doc_id))""".stripMargin
+    }.mkString(",\n")
+    val touched = (1 to SpanFixpointRounds)
+      .map(i => s"(CASE WHEN len(c$i.ws) < len(c${i - 1}.ws) THEN 1 ELSE 0 END)")
+      .mkString(" + ")
+    val joins = (1 to SpanFixpointRounds).map(i => s"JOIN c$i USING (doc_id)").mkString(" ")
+    val last = s"c$SpanFixpointRounds"
+    s"""WITH c0 AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       |$rounds
+       |SELECT c0.doc_id, CAST(len(c0.ws) AS BIGINT) AS n_tokens,
+       | CAST(len(c0.ws) - len($last.ws) AS BIGINT) AS n_removed,
+       | CAST($touched AS BIGINT) AS n_rounds_touched,
+       | md5(coalesce(array_to_string($last.ws, ' '), '')) AS cleaned_md5
+       |FROM c0 $joins
+       |ORDER BY c0.doc_id""".stripMargin
+  }
+  def bpeMergesOracle: String =
+    s"""WITH $bpeTrainCtes
+       |SELECT CAST(round AS BIGINT) AS round, sym_a, sym_b, merged, freq FROM (
+       |${(1 to BpeRounds).map { k =>
+             s"SELECT $k AS round, a AS sym_a, b AS sym_b, a || b AS merged, cnt AS freq FROM m$k"
+           }.mkString("\nUNION ALL\n")}
+       |) ORDER BY round""".stripMargin
+  def bpeEncodeOracle: String =
+    s"""WITH $bpeTrainCtes,
+       |enc AS (SELECT word, CAST(len(string_split(trim(r, '$M'), '$M$M')) AS BIGINT) AS n_sub
+       |        FROM d$BpeRounds),
+       |t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
+       |SELECT doc_id, count(*) AS n_words,
+       | CAST(sum(n_sub) AS BIGINT) AS n_subwords,
+       | CAST(sum(len(word)) AS BIGINT) AS n_chars,
+       | ${OracleMath.stableRoundSql("CAST(sum(len(word)) AS DOUBLE) / sum(n_sub)", 4)} AS chars_per_token
+       |FROM t JOIN enc USING (word)
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+  def frequentPairsOracle: String =
+    s"""WITH d AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents),
+      |tot AS (SELECT count(*) AS n_docs FROM d),
+      |fw AS (SELECT doc_id, unnest(ws) AS w FROM d),
+      |keep AS (SELECT w, count(*) AS df FROM fw GROUP BY 1
+      |         HAVING count(*) * $PairSupportDenom >= (SELECT n_docs FROM tot)),
+      |fk AS (SELECT fw.doc_id, fw.w FROM fw JOIN keep USING (w)),
+      |p AS (SELECT a.w AS w_a, b.w AS w_b, count(*) AS support
+      |      FROM fk a JOIN fk b ON a.doc_id = b.doc_id AND a.w < b.w
+      |      GROUP BY 1, 2)
+      |SELECT w_a, w_b, support, ka.df AS df_a, kb.df AS df_b,
+      | ${OracleMath.stableRoundSql("CAST(support AS DOUBLE) * n_docs / (ka.df * kb.df)", 6)} AS lift_r
+      |FROM p JOIN keep ka ON ka.w = p.w_a JOIN keep kb ON kb.w = p.w_b, tot
+      |WHERE support * $PairSupportDenom >= n_docs
+      |ORDER BY support DESC, w_a, w_b""".stripMargin
+  def budgetTrimOracle: String =
+    s"""WITH base AS (SELECT doc_id, source, $qualityColsSql
+       |      FROM documents),
+       |q AS (SELECT doc_id, source, n_tok,
+       |       $qualitySql AS quality_r
+       |      FROM base),
+       |c AS (SELECT *, coalesce(sum(n_tok) OVER (PARTITION BY source
+       |        ORDER BY quality_r DESC, doc_id
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
+       |      FROM q)
+       |SELECT source, doc_id, quality_r, CAST(n_tok AS BIGINT) AS n_tokens,
+       | CAST(cum_before + n_tok AS BIGINT) AS cum_tokens
+       |FROM c WHERE cum_before < $TrimBudgetTokens
+       |ORDER BY source, quality_r DESC, doc_id""".stripMargin
 }

@@ -421,4 +421,69 @@ object StreamJoinOps {
       .agg(count(lit(1)).as("n_distinct_keys"))
       .orderBy(col("event_type"))
   }
+
+  // -- DuckDB oracle twins of the registry queries built here (SparkEntry.registry)
+  // stream-stream join must agree with the batch interval join
+  def clickAttributionStreamingOracle: String =
+    """SELECT p.event_id AS purchase_id, p.user_id, c.event_id AS click_id,
+      | date_diff('second', c.ts, p.ts) AS lag_seconds
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      |  ON p.user_id = c.user_id AND c.ts <= p.ts AND c.ts > p.ts - INTERVAL 5 MINUTES
+      |ORDER BY purchase_id, click_id""".stripMargin
+  // streaming dedup must agree with the batch DISTINCT (both variants)
+  def dedupStreamingOracle: String =
+    """SELECT event_type, count(*) AS n_distinct_keys
+      |FROM (SELECT DISTINCT user_id, event_type, date_trunc('minute', ts) FROM events)
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  def streamStaticEnrichOracle: String =
+    """SELECT c_mktsegment, count(*) AS n,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events JOIN customer ON user_id = c_custkey
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+  def clickAttributionOuterStreamingOracle: String =
+    """WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS p_ts
+      |          FROM events WHERE event_type = 'purchase'),
+      |c AS (SELECT event_id AS click_id, user_id AS c_user, ts AS c_ts
+      |      FROM events WHERE event_type = 'click'),
+      |wm AS (SELECT date_trunc('milliseconds',
+      |         least((SELECT max(p_ts) FROM p), (SELECT max(c_ts) FROM c)))
+      |         - INTERVAL 1 HOUR AS cutoff),
+      |j AS (SELECT p.purchase_id, p.user_id, c.click_id, p.p_ts,
+      |        date_diff('second', c.c_ts, p.p_ts) AS lag_seconds
+      |      FROM p LEFT JOIN c ON p.user_id = c.c_user
+      |        AND c.c_ts <= p.p_ts AND c.c_ts > p.p_ts - INTERVAL 5 MINUTES)
+      |SELECT purchase_id, user_id,
+      | coalesce(click_id, -1) AS click_id,
+      | coalesce(lag_seconds, -1) AS lag_seconds
+      |FROM j, wm
+      |WHERE click_id IS NOT NULL OR p_ts < cutoff
+      |ORDER BY purchase_id, click_id""".stripMargin
+  // unmatched-left emission is gated by the FINAL global watermark
+  // (min of both sides' max event time, ms-truncated as Spark tracks
+  // watermarks in milliseconds, minus the 1 h delay) — the q131
+  // append-cutoff discipline applied to outer-join state; matched pairs
+  // emit on match and need no cutoff (empirically pinned at sf0.001 and
+  // sf0.01: the emitted/missing boundary sits exactly at this watermark)
+  def clickAttributionFullOuterStreamingOracle: String =
+    """WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS p_ts
+      |          FROM events WHERE event_type = 'purchase'),
+      |c AS (SELECT event_id AS click_id, user_id AS c_user, ts AS c_ts
+      |      FROM events WHERE event_type = 'click'),
+      |wm AS (SELECT date_trunc('milliseconds',
+      |         least((SELECT max(p_ts) FROM p), (SELECT max(c_ts) FROM c)))
+      |         - INTERVAL 1 HOUR AS cutoff),
+      |j AS (SELECT p.purchase_id, p.user_id, c.click_id, c.c_user, p.p_ts, c.c_ts,
+      |        date_diff('second', c.c_ts, p.p_ts) AS lag_seconds
+      |      FROM p FULL JOIN c ON p.user_id = c.c_user
+      |        AND c.c_ts <= p.p_ts AND c.c_ts > p.p_ts - INTERVAL 5 MINUTES)
+      |SELECT coalesce(purchase_id, -1) AS purchase_id,
+      | coalesce(user_id, c_user) AS user_id,
+      | coalesce(click_id, -1) AS click_id,
+      | coalesce(lag_seconds, -1) AS lag_seconds
+      |FROM j, wm
+      |WHERE (purchase_id IS NOT NULL AND click_id IS NOT NULL)
+      |   OR (click_id IS NULL AND p_ts < cutoff)
+      |   OR (purchase_id IS NULL AND c_ts + INTERVAL 5 MINUTES < cutoff)
+      |ORDER BY purchase_id, click_id""".stripMargin
 }
