@@ -92,12 +92,7 @@ object Bench {
       }
     } catch { case _: Throwable => }
 
-    // Dev-only subset filter (driver never sets it): SPARK_GRAFT_ONLY=q38,q59
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected0 = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names.exists(n.startsWith) }
-      case None        => SparkEntry.queries
-    }
+    val selected0 = SparkEntry.selected()
     // Dev-only fault injection (driver never sets it): make the named
     // queries throw, to prove the err marker below actually surfaces — a
     // broken query must show up MARKED on the contract line, never as a

@@ -130,7 +130,7 @@ object SparkEntry {
     q("q50_streaming_hourly",  (s, d) => graft.streaming.EventsStream.hourlyByTypeStreaming(s, d),
       graft.streaming.EventsStream.oracleSql),
     // stateful streaming must agree with the batch sessionization oracle
-    q("q51_streaming_sessions",(s, d) => graft.streaming.SessionStream.sessionsStreaming(s, d),
+    q("q51_streaming_sessions", (s, d) => graft.streaming.SessionStream.sessionsStreaming(s, d),
       EventOps.sessionCountsOracle),
     // out-of-order ingestion must still converge to the batch sessionization
     q("q72_streaming_late",    (s, d) => graft.streaming.LateSessionStream.sessionsLateStreaming(s, d),
@@ -221,7 +221,7 @@ object SparkEntry {
     q("q113_scd2_history",     (s, d) => CoreOps.scd2History(s, d), CoreOps.scd2HistoryOracle),
     q("q114_transit_sweep",    (s, d) => CoreOps.transitSweep(s, d), CoreOps.transitSweepOracle),
     // -- intra-doc repetition quality + PII redaction (training-data prep) ----
-    q("q115_repetition_ngrams",(s, d) => TextOps.repetitionRatio(s, d), TextOps.repetitionRatioOracle),
+    q("q115_repetition_ngrams", (s, d) => TextOps.repetitionRatio(s, d), TextOps.repetitionRatioOracle),
     q("q116_redact_pii",       (s, d) => TextOps.redactPii(s, d), TextOps.redactPiiOracle),
     // -- column profiler, HAVING join-back (TPC-H Q18 shape), argmax aggs -----
     q("q117_column_profile",   (s, d) => CoreOps.columnProfile(s, d), CoreOps.columnProfileOracle),

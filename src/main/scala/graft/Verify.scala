@@ -16,30 +16,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (driver never sets it): SPARK_GRAFT_ONLY=q38,q59
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      // prefix match, same as Bench: SPARK_GRAFT_ONLY=q38,q59 selects the
-      // full registry names q38_neardup_jaccard / q59_simhash_neardup
-      case Some(names) => SparkEntry.queries.filter(kv => names.exists(kv._1.startsWith))
-      case None => SparkEntry.queries
-    }
-    dumpQueries(spark, sfDir, outDir, selected)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    dumpQueries(spark, sfDir, outDir, SparkEntry.selected())
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.bench.ContractLine.jsonObject(SparkEntry.oracleSql))
     spark.stop()
   }
 

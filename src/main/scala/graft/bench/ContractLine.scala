@@ -51,6 +51,15 @@ object ContractLine {
     mapper.writeValueAsString(root)
   }
 
+  /** `fields` as one JSON object in key order, serialized by Jackson (every
+    * string escaped, control characters included).
+    */
+  def jsonObject(fields: Map[String, String]): String = {
+    val root = mapper.createObjectNode()
+    fields.toSeq.sorted.foreach { case (k, v) => root.put(k, v) }
+    mapper.writeValueAsString(root)
+  }
+
   /** The line to print: `line` when it parses, else `fb`. */
   def ensureParseable(line: String, fb: => String): String =
     if (parseable(line)) line else fb

@@ -66,12 +66,18 @@ object LinkageOps {
       col("c_name").as("name"), col("c_acctbal").as("bal"),
       col("c_nationkey").as("nation"), col("c_mktsegment").as("seg"))
 
-  /** The B side: the perturbed re-observation. uid = 2·key + 1 (odd ⇒ B). */
-  private def sideB(spark: SparkSession, dir: String): DataFrame =
+  /** The re-observation rule every linkage side shares: the customers
+    * `keep` selects, tagged `src`, uid = 2·key + 1 (odd ⇒ not A), with a
+    * name typo (last char → 'X') on every 3rd key, a floored balance on
+    * every 5th, a nation shift on every 7th and an UNKNOWN segment on
+    * every 11th; `extra` columns follow. [[reobservedSql]] is its twin.
+    */
+  private def reobserved(spark: SparkSession, dir: String, keep: Column, src: String,
+      extra: Column*): DataFrame =
     Tables.customer(spark, dir)
-      .filter(col("c_custkey") % 10 =!= 9)
-      .select(
-        col("c_custkey").as("key"), lit("B").as("src"),
+      .filter(keep)
+      .select(Seq(
+        col("c_custkey").as("key"), lit(src).as("src"),
         (col("c_custkey") * 2 + 1).as("uid"),
         when(col("c_custkey") % 3 === 0,
           concat(expr("substr(c_name, 1, length(c_name) - 1)"), lit("X")))
@@ -81,7 +87,11 @@ object LinkageOps {
         when(col("c_custkey") % 7 === 0, (col("c_nationkey") + 1) % 25)
           .otherwise(col("c_nationkey")).as("nation"),
         when(col("c_custkey") % 11 === 0, lit("UNKNOWN"))
-          .otherwise(col("c_mktsegment")).as("seg"))
+          .otherwise(col("c_mktsegment")).as("seg")) ++ extra: _*)
+
+  /** The B side: the perturbed re-observation of 90 % of the keys. */
+  private def sideB(spark: SparkSession, dir: String): DataFrame =
+    reobserved(spark, dir, col("c_custkey") % 10 =!= 9, "B")
 
   /** One sorted-neighborhood pass over the A∪B record set: (uid_a, uid_b)
     * pairs with rank distance ≤ w in `bk`-order, one record from each side,
@@ -155,15 +165,17 @@ object LinkageOps {
     cand.agg(aggCols.head, aggCols.tail: _*)
   }
 
-  /** Smoothed log-weight: `ln((cntAgree+1)/(nGroup+2) ÷ (cntOther+1)/(nOther+2))`
+  /** Smoothed log-weight over `k` agreement categories (add-one smoothing,
+    * `+k` denominators): `ln((cntAgree+1)/(nGroup+k) ÷ (cntOther+1)/(nOther+k))`
     * written as ONE ln over exact integer cross-products (all counts ≤ 10⁶,
     * products exact in a double), 6-dp-rounded into DECIMAL(18,6). The SQL
-    * twin spells the identical expression.
+    * twin [[wSql]] spells the identical expression. k = 2 for a boolean
+    * field, 3 for the graded address.
     */
-  private def w(numCnt: Column, numN: Column, denCnt: Column, denN: Column): Column =
+  private def w(numCnt: Column, numN: Column, denCnt: Column, denN: Column, k: Int): Column =
     OracleMath.stableRound(
-      log(((numCnt + 1).cast("double") * (denN + 2).cast("double")) /
-        ((denCnt + 1).cast("double") * (numN + 2).cast("double"))), 6).cast(d186)
+      log(((numCnt + 1).cast("double") * (denN + k).cast("double")) /
+        ((denCnt + 1).cast("double") * (numN + k).cast("double"))), 6).cast(d186)
 
   /** The 8 decision weights (agree/disagree per field) as one broadcast row. */
   private def weightsRow(cand: DataFrame): DataFrame = {
@@ -172,8 +184,8 @@ object LinkageOps {
     val cols = Fields.flatMap { f =>
       val ma = col(s"ma_$f"); val ua = col(s"ua_$f")
       Seq(
-        w(ma, col("nm"), ua, nu).as(s"wa_$f"),
-        w(col("nm") - ma, col("nm"), nu - ua, nu).as(s"wd_$f"))
+        w(ma, col("nm"), ua, nu, 2).as(s"wa_$f"),
+        w(col("nm") - ma, col("nm"), nu - ua, nu, 2).as(s"wd_$f"))
     }
     c.select(cols: _*)
   }
@@ -279,23 +291,10 @@ object LinkageOps {
     * exist with exactly one of the two strings perturbed).
     */
   private def sideB2(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .filter(col("c_custkey") % 10 =!= 9)
-      .select(
-        col("c_custkey").as("key"), lit("B").as("src"),
-        (col("c_custkey") * 2 + 1).as("uid"),
-        when(col("c_custkey") % 3 === 0,
-          concat(expr("substr(c_name, 1, length(c_name) - 1)"), lit("X")))
-          .otherwise(col("c_name")).as("name"),
-        when(col("c_custkey") % 5 === 0, floor(col("c_acctbal")))
-          .otherwise(col("c_acctbal")).as("bal"),
-        when(col("c_custkey") % 7 === 0, (col("c_nationkey") + 1) % 25)
-          .otherwise(col("c_nationkey")).as("nation"),
-        when(col("c_custkey") % 11 === 0, lit("UNKNOWN"))
-          .otherwise(col("c_mktsegment")).as("seg"),
-        when(col("c_custkey") % 3 === 1,
-          concat(expr("substr(md5(CAST(c_custkey AS STRING)), 1, 31)"), lit("Q")))
-          .otherwise(md5(col("c_custkey").cast("string"))).as("addr"))
+    reobserved(spark, dir, col("c_custkey") % 10 =!= 9, "B",
+      when(col("c_custkey") % 3 === 1,
+        concat(expr("substr(md5(CAST(c_custkey AS STRING)), 1, 31)"), lit("Q")))
+        .otherwise(md5(col("c_custkey").cast("string"))).as("addr"))
 
   /** Candidates with the boolean flags + the GRADED address level:
     * 2 = exact, 1 = close (quantized JW ≥ [[JwCloseThreshold]]), 0 =
@@ -328,14 +327,6 @@ object LinkageOps {
 
   private val AddrLevels = Seq(0, 1, 2)
 
-  /** Graded log-weight: 3-category add-one smoothing (+3 denominators),
-    * same single-ln-over-integer-products discipline as [[w]].
-    */
-  private def w3(numCnt: Column, numN: Column, denCnt: Column, denN: Column): Column =
-    OracleMath.stableRound(
-      log(((numCnt + 1).cast("double") * (denN + 3).cast("double")) /
-        ((denCnt + 1).cast("double") * (numN + 3).cast("double"))), 6).cast(d186)
-
   /** One-row exact counts for the graded model: the q312 boolean counts +
     * per-level address counts among matches / non-matches.
     */
@@ -362,11 +353,11 @@ object LinkageOps {
     val bools = Fields.flatMap { f =>
       val ma = col(s"ma_$f"); val ua = col(s"ua_$f")
       Seq(
-        w(ma, col("nm"), ua, nu).as(s"wa_$f"),
-        w(col("nm") - ma, col("nm"), nu - ua, nu).as(s"wd_$f"))
+        w(ma, col("nm"), ua, nu, 2).as(s"wa_$f"),
+        w(col("nm") - ma, col("nm"), nu - ua, nu, 2).as(s"wd_$f"))
     }
     val lvls = AddrLevels.map { l =>
-      w3(col(s"ma_addr_$l"), col("nm"), col(s"ua_addr_$l"), nu).as(s"wa_addr_$l")
+      w(col(s"ma_addr_$l"), col("nm"), col(s"ua_addr_$l"), nu, 3).as(s"wa_addr_$l")
     }
     c.select(bools ++ lvls: _*)
   }
@@ -405,20 +396,7 @@ object LinkageOps {
     * corpus uids because those keys never produced a B record).
     */
   private def sideDelta(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .filter(col("c_custkey") % 10 === 9)
-      .select(
-        col("c_custkey").as("key"), lit("D").as("src"),
-        (col("c_custkey") * 2 + 1).as("uid"),
-        when(col("c_custkey") % 3 === 0,
-          concat(expr("substr(c_name, 1, length(c_name) - 1)"), lit("X")))
-          .otherwise(col("c_name")).as("name"),
-        when(col("c_custkey") % 5 === 0, floor(col("c_acctbal")))
-          .otherwise(col("c_acctbal")).as("bal"),
-        when(col("c_custkey") % 7 === 0, (col("c_nationkey") + 1) % 25)
-          .otherwise(col("c_nationkey")).as("nation"),
-        when(col("c_custkey") % 11 === 0, lit("UNKNOWN"))
-          .otherwise(col("c_mktsegment")).as("seg"))
+    reobserved(spark, dir, col("c_custkey") % 10 === 9, "D")
 
   /** q317 — INCREMENTAL linkage: today's delta batch linked against the
     * corpus with the FROZEN model (the m/u weights q313 estimated on the
@@ -477,11 +455,7 @@ object LinkageOps {
       .mkString(" + ")
     s"""WITH $linkageCtesSql,
        |dl AS (SELECT c_custkey AS key, c_custkey * 2 + 1 AS uid,
-       |    CASE WHEN c_custkey % 3 = 0
-       |         THEN substr(c_name, 1, length(c_name) - 1) || 'X' ELSE c_name END AS name,
-       |    CASE WHEN c_custkey % 5 = 0 THEN floor(c_acctbal) ELSE c_acctbal END AS bal,
-       |    CASE WHEN c_custkey % 7 = 0 THEN (c_nationkey + 1) % 25 ELSE c_nationkey END AS nation,
-       |    CASE WHEN c_custkey % 11 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
+       |$reobservedSql
        |  FROM customer WHERE c_custkey % 10 = 9),
        |ak AS (SELECT uid, key, name, bal, nation, seg,
        |         substr(name, 1, length(name) - 1) AS bk1, floor(bal) AS bk2 FROM a),
@@ -517,11 +491,7 @@ object LinkageOps {
        |    c_name AS name, c_acctbal AS bal, c_nationkey AS nation,
        |    c_mktsegment AS seg FROM customer),
        |b AS (SELECT c_custkey AS key, 'B' AS src, c_custkey * 2 + 1 AS uid,
-       |    CASE WHEN c_custkey % 3 = 0
-       |         THEN substr(c_name, 1, length(c_name) - 1) || 'X' ELSE c_name END AS name,
-       |    CASE WHEN c_custkey % 5 = 0 THEN floor(c_acctbal) ELSE c_acctbal END AS bal,
-       |    CASE WHEN c_custkey % 7 = 0 THEN (c_nationkey + 1) % 25 ELSE c_nationkey END AS nation,
-       |    CASE WHEN c_custkey % 11 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg
+       |$reobservedSql
        |  FROM customer WHERE c_custkey % 10 <> 9),
        |u AS MATERIALIZED (SELECT * FROM a UNION ALL SELECT * FROM b),
        |r1 AS (SELECT uid, src, row_number() OVER (ORDER BY name, uid) AS rn FROM u),
@@ -549,25 +519,26 @@ object LinkageOps {
        |  FROM cand),
        |wt AS (SELECT
        |${Fields.map { f =>
-          val wa = wSql(s"ma_$f", "nm", s"ua_$f", "(n - nm)")
-          val wd = wSql(s"(nm - ma_$f)", "nm", s"((n - nm) - ua_$f)", "(n - nm)")
+          val wa = wSql(s"ma_$f", "nm", s"ua_$f", "(n - nm)", 2)
+          val wd = wSql(s"(nm - ma_$f)", "nm", s"((n - nm) - ua_$f)", "(n - nm)", 2)
           s"    $wa AS wa_$f,\n    $wd AS wd_$f"
         }.mkString(",\n")}
        |  FROM cnt)""".stripMargin
   }
 
-  /** SQL twin of [[w]]: identical single-ln-over-integer-products form. */
-  private def wSql(numCnt: String, numN: String, denCnt: String, denN: String): String =
-    "CAST(" + OracleMath.stableRoundSql(
-      s"ln((CAST($numCnt + 1 AS DOUBLE) * CAST($denN + 2 AS DOUBLE)) / " +
-        s"(CAST($denCnt + 1 AS DOUBLE) * CAST($numN + 2 AS DOUBLE)))", 6) +
-      " AS DECIMAL(18,6))"
+  /** SQL twin of [[reobserved]]: its name, bal, nation and seg columns. */
+  private def reobservedSql: String =
+    """    CASE WHEN c_custkey % 3 = 0
+      |         THEN substr(c_name, 1, length(c_name) - 1) || 'X' ELSE c_name END AS name,
+      |    CASE WHEN c_custkey % 5 = 0 THEN floor(c_acctbal) ELSE c_acctbal END AS bal,
+      |    CASE WHEN c_custkey % 7 = 0 THEN (c_nationkey + 1) % 25 ELSE c_nationkey END AS nation,
+      |    CASE WHEN c_custkey % 11 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg""".stripMargin
 
-  /** SQL twin of [[w3]] (3-category smoothing). */
-  private def w3Sql(numCnt: String, numN: String, denCnt: String, denN: String): String =
+  /** SQL twin of [[w]]: identical single-ln-over-integer-products form. */
+  private def wSql(numCnt: String, numN: String, denCnt: String, denN: String, k: Int): String =
     "CAST(" + OracleMath.stableRoundSql(
-      s"ln((CAST($numCnt + 1 AS DOUBLE) * CAST($denN + 3 AS DOUBLE)) / " +
-        s"(CAST($denCnt + 1 AS DOUBLE) * CAST($numN + 3 AS DOUBLE)))", 6) +
+      s"ln((CAST($numCnt + 1 AS DOUBLE) * CAST($denN + $k AS DOUBLE)) / " +
+        s"(CAST($denCnt + 1 AS DOUBLE) * CAST($numN + $k AS DOUBLE)))", 6) +
       " AS DECIMAL(18,6))"
 
   /** Graded-model CTE prefix (q320): the q312 derivation + the md5 address
@@ -583,11 +554,7 @@ object LinkageOps {
        |    c_name AS name, c_acctbal AS bal, c_nationkey AS nation,
        |    c_mktsegment AS seg, md5(CAST(c_custkey AS VARCHAR)) AS addr FROM customer),
        |b AS (SELECT c_custkey AS key, 'B' AS src, c_custkey * 2 + 1 AS uid,
-       |    CASE WHEN c_custkey % 3 = 0
-       |         THEN substr(c_name, 1, length(c_name) - 1) || 'X' ELSE c_name END AS name,
-       |    CASE WHEN c_custkey % 5 = 0 THEN floor(c_acctbal) ELSE c_acctbal END AS bal,
-       |    CASE WHEN c_custkey % 7 = 0 THEN (c_nationkey + 1) % 25 ELSE c_nationkey END AS nation,
-       |    CASE WHEN c_custkey % 11 = 0 THEN 'UNKNOWN' ELSE c_mktsegment END AS seg,
+       |$reobservedSql,
        |    CASE WHEN c_custkey % 3 = 1
        |         THEN substr(md5(CAST(c_custkey AS VARCHAR)), 1, 31) || 'Q'
        |         ELSE md5(CAST(c_custkey AS VARCHAR)) END AS addr
@@ -624,12 +591,12 @@ object LinkageOps {
        |  FROM cand),
        |wt AS (SELECT
        |${Fields.map { f =>
-          val wa = wSql(s"ma_$f", "nm", s"ua_$f", "(n - nm)")
-          val wd = wSql(s"(nm - ma_$f)", "nm", s"((n - nm) - ua_$f)", "(n - nm)")
+          val wa = wSql(s"ma_$f", "nm", s"ua_$f", "(n - nm)", 2)
+          val wd = wSql(s"(nm - ma_$f)", "nm", s"((n - nm) - ua_$f)", "(n - nm)", 2)
           s"    $wa AS wa_$f,\n    $wd AS wd_$f"
         }.mkString(",\n")},
        |${AddrLevels.map { l =>
-          s"    ${w3Sql(s"ma_addr_$l", "nm", s"ua_addr_$l", "(n - nm)")} AS wa_addr_$l"
+          s"    ${wSql(s"ma_addr_$l", "nm", s"ua_addr_$l", "(n - nm)", 3)} AS wa_addr_$l"
         }.mkString(",\n")}
        |  FROM cnt)""".stripMargin
   }

@@ -350,17 +350,19 @@ class PipelineSpec extends AnyFunSuite {
 
   test("latest-K discovery: filter, lexicographic sort, take right (S4/O1/P1)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_disc").toString
-    Seq("vacancies_001.csv", "vacancies_003.csv", "vacancies_002.csv", "notes.txt", "x.csv")
-      .foreach(f => java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, f), "id\n"))
-    // the len>10 guard is on the full path, matching the reference's check on
-    // full S3 keys (dag:82) — so short *names* under a long dir still qualify,
-    // and lexicographic order puts "x.csv" last
-    val got = graft.pipeline.Pipeline.discoverLatestCsvs(spark, dir, k = 2)
-    assert(got.map(_.split('/').last) === Seq("vacancies_003.csv", "x.csv"))
-    assert(!got.exists(_.endsWith("notes.txt")))
-    val all = graft.pipeline.Pipeline.discoverLatestCsvs(spark, dir, k = 10)
-    assert(all.map(_.split('/').last) ===
-      Seq("vacancies_001.csv", "vacancies_002.csv", "vacancies_003.csv", "x.csv"))
+    try {
+      Seq("vacancies_001.csv", "vacancies_003.csv", "vacancies_002.csv", "notes.txt", "x.csv")
+        .foreach(f => java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, f), "id\n"))
+      // the len>10 guard is on the full path, matching the reference's check on
+      // full S3 keys (dag:82) — so short *names* under a long dir still qualify,
+      // and lexicographic order puts "x.csv" last
+      val got = graft.pipeline.Pipeline.discoverLatestCsvs(spark, dir, k = 2)
+      assert(got.map(_.split('/').last) === Seq("vacancies_003.csv", "x.csv"))
+      assert(!got.exists(_.endsWith("notes.txt")))
+      val all = graft.pipeline.Pipeline.discoverLatestCsvs(spark, dir, k = 10)
+      assert(all.map(_.split('/').last) ===
+        Seq("vacancies_001.csv", "vacancies_002.csv", "vacancies_003.csv", "x.csv"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("pipeline CSV sink round-trips (S5)") {
@@ -500,33 +502,37 @@ class ExtensionSpec extends AnyFunSuite {
 
   test("compaction collapses a many-small-files dir without losing rows") {
     val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val src = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_totalprice"))
-    src.repartition(20).write.mode("overwrite").parquet(base + "/small")
-    val before = new java.io.File(base + "/small").listFiles()
-      .count(f => f.getName.startsWith("part-"))
-    assert(before === 20)
-    val after = Compaction.compactParquet(spark, base + "/small", base + "/big",
-      targetBytes = Long.MaxValue)
-    assert(after === 1, s"expected one near-target file, got $after")
-    val a = spark.read.parquet(base + "/big").orderBy("o_orderkey").collect()
-    val b = src.orderBy("o_orderkey").collect()
-    assert(a.sameElements(b))
+    try {
+      val src = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_totalprice"))
+      src.repartition(20).write.mode("overwrite").parquet(base + "/small")
+      val before = new java.io.File(base + "/small").listFiles()
+        .count(f => f.getName.startsWith("part-"))
+      assert(before === 20)
+      val after = Compaction.compactParquet(spark, base + "/small", base + "/big",
+        targetBytes = Long.MaxValue)
+      assert(after === 1, s"expected one near-target file, got $after")
+      val a = spark.read.parquet(base + "/big").orderBy("o_orderkey").collect()
+      val b = src.orderBy("o_orderkey").collect()
+      assert(a.sameElements(b))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
 
   test("schema evolution: mergeSchema unions columns across file generations") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_evolve").toString
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v1")
-      .write.mode("overwrite").parquet(base + "/gen=1")
-    Seq((3L, "c", 9.5)).toDF("id", "v1", "v2")
-      .write.mode("overwrite").parquet(base + "/gen=2")
-    val merged = spark.read.option("mergeSchema", "true").parquet(base)
-    assert(merged.columns.toSet === Set("id", "v1", "v2", "gen"))
-    // old-generation rows surface the new column as null, not an error
-    assert(merged.filter(col("gen") === 1 && col("v2").isNull).count() === 2)
-    // per-file provenance for lineage (the reference tracked source files too)
-    val withFile = merged.select(input_file_name().as("f"), col("id"))
-    assert(withFile.filter(col("f").contains("gen=1")).count() === 2)
+    try {
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v1")
+        .write.mode("overwrite").parquet(base + "/gen=1")
+      Seq((3L, "c", 9.5)).toDF("id", "v1", "v2")
+        .write.mode("overwrite").parquet(base + "/gen=2")
+      val merged = spark.read.option("mergeSchema", "true").parquet(base)
+      assert(merged.columns.toSet === Set("id", "v1", "v2", "gen"))
+      // old-generation rows surface the new column as null, not an error
+      assert(merged.filter(col("gen") === 1 && col("v2").isNull).count() === 2)
+      // per-file provenance for lineage (the reference tracked source files too)
+      val withFile = merged.select(input_file_name().as("f"), col("id"))
+      assert(withFile.filter(col("f").contains("gen=1")).count() === 2)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
 
   test("custom sink commit protocol exposes only committed files (q110)") {

@@ -282,19 +282,21 @@ class HardeningSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     assert(!s2.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_nanos").toFile
-    val src = getClass.getResourceAsStream("/events_nanos.parquet")
-    assert(src != null, "events_nanos.parquet fixture missing from test resources")
-    java.nio.file.Files.copy(src, new java.io.File(tmp, "events.parquet").toPath)
-    val rows = Tables.events(s2, tmp.getAbsolutePath)
-      .orderBy(col("event_id"))
-      .select(col("ts").cast("string")).collect().map(_.getString(0))
-    // nanos 1704067200123456789 -> micro-truncated 2024-01-01 00:00:00.123456
-    assert(rows.toSeq === Seq(
-      "2024-01-01 00:00:00.123456",
-      "2024-01-01 00:00:01.987654",
-      "2024-01-01 01:00:00"))
-    assert(s2.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true",
-      "retry must leave the conf set so the lazy plan's scan schema is stable")
+    try {
+      val src = getClass.getResourceAsStream("/events_nanos.parquet")
+      assert(src != null, "events_nanos.parquet fixture missing from test resources")
+      java.nio.file.Files.copy(src, new java.io.File(tmp, "events.parquet").toPath)
+      val rows = Tables.events(s2, tmp.getAbsolutePath)
+        .orderBy(col("event_id"))
+        .select(col("ts").cast("string")).collect().map(_.getString(0))
+      // nanos 1704067200123456789 -> micro-truncated 2024-01-01 00:00:00.123456
+      assert(rows.toSeq === Seq(
+        "2024-01-01 00:00:00.123456",
+        "2024-01-01 00:00:01.987654",
+        "2024-01-01 01:00:00"))
+      assert(s2.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true",
+        "retry must leave the conf set so the lazy plan's scan schema is stable")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   test("staged streaming files decode to batch-identical times (unit-drift guard)") {
@@ -316,16 +318,18 @@ class HardeningSpec extends AnyFunSuite {
     import java.nio.file.Files
     val conf = spark.sparkContext.hadoopConfiguration
     val root = Files.createTempDirectory("graft_scratch_spec")
-    val missing = root.resolve("missing").toString
-    val plainFile = Files.createFile(root.resolve("plain")).toString
-    for (bad <- Seq(missing, plainFile)) {
-      val e = intercept[IllegalArgumentException](graft.ops.Staging.checkedScratch(bad, conf))
-      assert(e.getMessage.contains("SPARK_GRAFT_SCRATCH") && e.getMessage.contains(bad),
-        e.getMessage)
-    }
-    // a usable root passes and keeps no probe file
-    assert(graft.ops.Staging.checkedScratch(root.toString, conf) === root.toString)
-    assert(root.toFile.list().sorted.toSeq === Seq("plain"))
+    try {
+      val missing = root.resolve("missing").toString
+      val plainFile = Files.createFile(root.resolve("plain")).toString
+      for (bad <- Seq(missing, plainFile)) {
+        val e = intercept[IllegalArgumentException](graft.ops.Staging.checkedScratch(bad, conf))
+        assert(e.getMessage.contains("SPARK_GRAFT_SCRATCH") && e.getMessage.contains(bad),
+          e.getMessage)
+      }
+      // a usable root passes and keeps no probe file
+      assert(graft.ops.Staging.checkedScratch(root.toString, conf) === root.toString)
+      assert(root.toFile.list().sorted.toSeq === Seq("plain"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("shared streaming stage self-heals from a half-staged dir") {

@@ -43,7 +43,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * a condition or turns size-based broadcast off, and no per-family gate key
   * is left. One definition per shared corpus rule: the q32 quality score,
   * the word set and its md5 key, the eval split and the session rule are
-  * each written once in Spark and once in oracle SQL.
+  * each written once in Spark and once in oracle SQL, and so are the
+  * linkage re-observation rule and its smoothed log-weight. One query
+  * registry: each query is named once, in `SparkEntry.registry`, and no
+  * module keeps an oracle map of its own.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -310,6 +313,33 @@ class SourceAuditSpec extends AnyFunSuite {
       assert(sites.size == 1,
         s"\nExpected the $what exactly once, found ${sites.size}:\n" + sites.mkString("\n"))
     }
+  }
+
+  test("one linkage re-observation rule and one smoothed log-weight") {
+    for ((what, pattern) <- Seq(
+        "Spark re-observation (LinkageOps.reobserved)" ->
+          raw"""when\(col\("c_custkey"\) % 11 === 0, lit\("UNKNOWN"\)\)""",
+        "oracle re-observation (LinkageOps.reobservedSql)" ->
+          raw"CASE WHEN c_custkey % 11 = 0 THEN 'UNKNOWN'",
+        "Spark log-weight (LinkageOps.w)" -> raw"log\(\(\(numCnt \+ 1\)",
+        "oracle log-weight (LinkageOps.wSql)" -> raw"ln\(\(CAST\(\$$numCnt \+ 1")) {
+      val sites = matches(allMainSources, pattern.r)
+      assert(sites.size == 1,
+        s"\nExpected the $what exactly once, found ${sites.size}:\n" + sites.mkString("\n"))
+    }
+  }
+
+  test("one query registry: each name is declared once and no module keeps an oracle map") {
+    val maps = matches(allMainSources, raw"oracle: Map\[String, String\]".r)
+    assert(maps.isEmpty, "\nA second oracle route (add an oracle string to the registry row):\n" +
+      maps.mkString("\n"))
+    val entry = new String(Files.readAllBytes(Paths.get("src/main/scala/graft/SparkEntry.scala")))
+    val counts = SparkEntry.queries.keys.toSeq.sorted.map { n =>
+      n -> (entry.split(java.util.regex.Pattern.quote("\"" + n + "\""), -1).length - 1)
+    }
+    val off = counts.filter(_._2 != 1)
+    assert(off.isEmpty, "\nRegistry names not written exactly once in SparkEntry.scala:\n" +
+      off.map { case (n, c) => s"$n: $c" }.mkString("\n"))
   }
 
   test("one broadcast decision: one size gate and one scale-emulation session") {
