@@ -127,8 +127,9 @@ object SparkEntry {
     // -- n-gram (shingle) Jaccard: order-sensitive dedup, general PPJoin path -
     q("q71_ngram_jaccard",     (s, d) => DedupOps.ngramJaccard(s, d), DedupOps.ngramJaccardOracle),
     // -- structured streaming (G3): windowed agg + custom state ---------------
+    // streaming and batch hourly aggregates must agree exactly
     q("q50_streaming_hourly",  (s, d) => graft.streaming.EventsStream.hourlyByTypeStreaming(s, d),
-      graft.streaming.EventsStream.oracleSql),
+      EventOps.hourlyByTypeOracle),
     // stateful streaming must agree with the batch sessionization oracle
     q("q51_streaming_sessions", (s, d) => graft.streaming.SessionStream.sessionsStreaming(s, d),
       EventOps.sessionCountsOracle),

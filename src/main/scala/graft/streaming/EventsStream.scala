@@ -166,14 +166,6 @@ object EventsStream {
       |      <= (SELECT max(ts) FROM events) - INTERVAL 1 HOUR
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Oracle: identical to the batch hourly query — streaming and batch must
-    * agree exactly.
-    */
-  val oracleSql: String =
-    """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-      | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
-      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
   /** Declarative streaming sessionization with Spark's native
     * `session_window` aggregation — the API-surface complement to the three
     * imperative sessionizers (q51 mapGroupsWithState, q80 EventTimeTimeout,
