@@ -29,7 +29,7 @@ object SparkEntry {
   type Builder = (SparkSession, String) => DataFrame
 
   /** One registry row: the query's name, its Spark builder and its
-    * DuckDB-runnable oracle SQL (the driver's twin). The oracle is held by
+    * DuckDB-runnable oracle SQL (its reference twin). The oracle is held by
     * name, so reading the table or [[queries]] evaluates no oracle text and
     * initializes no ops object.
     */
@@ -733,7 +733,7 @@ object SparkEntry {
   /** The queries whose names start with one of the comma-separated prefixes
     * in `only` (so `q38,q59` selects q38_neardup_jaccard and
     * q59_simhash_neardup), or every query. The contract mains pass the
-    * dev-only `SPARK_GRAFT_ONLY`, which the driver never sets.
+    * dev-only `SPARK_GRAFT_ONLY`, which contract runs leave unset.
     */
   def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Map[String, Builder] =
     only match {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The query registry (`SparkEntry.registry`) and the contract surface the
-  * driver mains read from it: `queries` and `oracleSql` project one table,
+  * contract mains read from it: `queries` and `oracleSql` project one table,
   * `selected` is the one subset rule, and `oracle_sql.json` is written by
   * Jackson.
   */
